@@ -33,12 +33,14 @@ from __future__ import annotations
 import datetime as dt
 import re
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from clickhouse_learning_spark.functions.dialect import _split_args, translate
+from clickhouse_learning_spark.streaming.epochs import commit_epoch
 from clickhouse_learning_spark.tables import Table
 
 _SIMPLE_TYPES: dict[str, T.DataType] = {
@@ -774,10 +776,17 @@ class Deployment:
         ``count=False`` skips the counting jobs (the steady-state
         streaming path — two extra Spark jobs per micro-batch
         otherwise)."""
+        return self._ingest(
+            spark, source, batch, count, lambda t, df: self.tables[t].append(df)
+        )
+
+    def _ingest(self, spark, source: str, batch: DataFrame, count: bool, append):
+        """:meth:`ingest` with every table write going through
+        ``append(table_name, df)``."""
         source = self._resolve(source)
         spec = self.specs[source]
         full = spec.apply_defaults(batch)
-        self.tables[source].append(full)
+        append(source, full)
         counts = {source: full.count()} if count else {}
 
         # inside foreachBatch the batch belongs to the micro-batch
@@ -815,7 +824,7 @@ class Deployment:
                 if mv.columns:
                     states = states.toDF(*mv.columns)
                 target = self._resolve(mv.target)
-                self.tables[target].append(states)
+                append(target, states)
                 if count:
                     counts[target] = counts.get(target, 0) + states.count()
                 pending.append((target, states))
@@ -1139,22 +1148,30 @@ class Deployment:
         """The streaming form of :meth:`ingest` (reference T1: MVs are
         insert triggers and the micro-batch IS the insert batch): each
         micro-batch runs the same defaults → source append → MV fan-out
-        path. Checkpointing makes restarts idempotent at the
-        micro-batch level, the same guarantee StreamingMV documents."""
+        path, and every table it writes commits through
+        :func:`streaming.epochs.commit_epoch`, so a restart on the same
+        checkpoint appends a replayed micro-batch exactly once."""
         trigger = trigger or {"processingTime": "5 seconds"}
         return (
             stream.writeStream.outputMode("update")
-            .foreachBatch(
-                lambda batch, _eid: (
-                    None
-                    if batch.isEmpty()
-                    else self.ingest(spark, source, batch, count=False)
-                )
-            )
+            .foreachBatch(partial(self._stream_batch, spark, source, checkpoint))
             .option("checkpointLocation", checkpoint)
             .queryName(f"deploy_{self._resolve(source).replace('.', '_')}")
             .trigger(**trigger)
             .start()
+        )
+
+    def _stream_batch(
+        self, spark, source: str, checkpoint: str, batch: DataFrame, epoch: int
+    ) -> None:
+        """One epoch of :meth:`attach_stream` (its ``foreachBatch`` body)."""
+        commit_epoch(
+            checkpoint, epoch, batch,
+            lambda b, stage: self._ingest(
+                spark, source, b, False,
+                lambda t, df: stage.append(self.tables[t], df),
+            ),
+            merged=[t.path for t in self.tables.values()],
         )
 
 

@@ -1017,21 +1017,17 @@ class MinHashIndex:
 
     def admit(self, new_docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
         """Admission decision ONLY — no store mutation. The streaming
-        replay protocol (streaming/dedup.neardup_ingest) commits the
-        admitted set to the sink first, then persists the index rows
-        via :meth:`persist_admitted`; batch callers normally want
-        :meth:`append`, which fuses both."""
+        form (streaming/dedup.commit_batch) stages the admitted set and
+        its :meth:`persist_admitted` rows and publishes both together;
+        batch callers normally want :meth:`append`, which fuses both."""
         return self._admit(new_docs, text_col, id_col)[0]
 
     def persist_admitted(self, admitted_docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> None:
         """Append store rows for docs ALREADY admitted (no admission
-        check) — the recovery half of the streaming protocol: on a
-        replay whose sink write committed but whose store append was
-        interrupted, re-running admission would self-match against the
-        partially-appended store, so the caller recovers the admitted
-        set from the sink and persists it directly. Signatures/shingles
-        are deterministic, so recomputing them here reproduces the
-        exact rows the interrupted append would have written."""
+        check) — the store half of the streaming commit, which calls it
+        on a copy of the index rooted at the epoch's staging dir.
+        Signatures/shingles are deterministic, so these are the rows
+        :meth:`append` would have written."""
         spark = admitted_docs.sparkSession
         sigs = self._sigs(admitted_docs, text_col, id_col)
         sh = self._shingle_sets(admitted_docs, text_col, id_col)

@@ -648,7 +648,8 @@ def part_pair_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats AS (
       SELECT day, cents,
              sum(cents)         OVER w AS s,
-             sum(cents * cents) OVER w AS sq,
+             sum(CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0)))
+                                OVER w AS sq,
              count(*)           OVER w AS n
       FROM daily
       WINDOW w AS (ORDER BY day ROWS BETWEEN 28 PRECEDING AND 1 PRECEDING)),
@@ -669,8 +670,9 @@ def revenue_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived from exact integer window sums (Σx, Σx², n) with one
     identical double expression on both engines — never each engine's
     own stddev implementation (Welford vs two-pass would differ in the
-    last bits). Scale: the window runs over the daily rollup, not the
-    fact table."""
+    last bits). Σx² is DECIMAL(38,0) on both engines: at sf0.1 the
+    28-day sum of squared daily cents peaks near 8.4e19, past int64.
+    Scale: the window runs over the daily rollup, not the fact table."""
     from pyspark.sql.window import Window as W
 
     orders = load_table(spark, sf_dir, "orders")
@@ -678,11 +680,12 @@ def revenue_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(_money_cents(F.col("o_totalprice") * 100)).alias("cents")
     )
     w = W.orderBy("day").rowsBetween(-28, -1)
+    wide = F.col("cents").cast("decimal(38,0)")
     stats = daily.select(
         "day",
         "cents",
         F.sum("cents").over(w).alias("s"),
-        F.sum(F.col("cents") * F.col("cents")).over(w).alias("sq"),
+        F.sum(wide * wide).over(w).alias("sq"),
         F.count(F.lit(1)).over(w).alias("n"),
     ).filter(F.col("n") >= 14)
     var_num = F.col("sq").cast("double") - F.col("s").cast("double") * F.col("s") / F.col("n")

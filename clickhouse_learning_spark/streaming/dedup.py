@@ -29,6 +29,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from clickhouse_learning_spark.streaming.epochs import commit_epoch
+
 
 def with_fingerprint(
     df: DataFrame, text_col: str = "text", out_col: str = "fp"
@@ -67,34 +69,27 @@ def commit_batch(
     batch: DataFrame,
     epoch: int,
     sink_path: str,
+    checkpoint: str,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> None:
-    """One epoch of the near-dup ingest replay protocol (the
-    foreachBatch body of :func:`neardup_ingest`, module-level so the
-    crash windows are testable): sink-first commit with a store-side
-    epoch marker — see :func:`neardup_ingest` for the full protocol."""
-    import pathlib
+    """One epoch of :func:`neardup_ingest` (its ``foreachBatch`` body,
+    module-level so the crash windows are testable): admission against
+    the store, then the admitted docs (``sink_path/epoch=<N>``) and
+    their index rows (the store) commit together through
+    :func:`streaming.epochs.commit_epoch` — a replay never re-runs
+    admission against the epoch's own store rows."""
+    import copy
 
-    if batch.isEmpty():
-        return
-    spark = batch.sparkSession
-    marker = pathlib.Path(index.path) / "_epochs" / str(epoch)
-    epoch_dir = pathlib.Path(sink_path) / f"epoch={epoch}"
-    if marker.exists():
-        return  # fully committed; replay is a no-op
-    if not (epoch_dir / "_SUCCESS").exists():
-        index.admit(batch, text_col=text_col, id_col=id_col).write.mode(
-            "overwrite"
-        ).parquet(str(epoch_dir))
-    try:
-        admitted = spark.read.parquet(str(epoch_dir))
-    except Exception:
-        # committed-but-empty epoch (no part files to infer from)
-        admitted = spark.createDataFrame([], batch.schema)
-    index.persist_admitted(admitted, text_col=text_col, id_col=id_col)
-    marker.parent.mkdir(parents=True, exist_ok=True)
-    marker.touch()
+    def write(batch: DataFrame, stage) -> None:
+        admitted = index.admit(batch, text_col=text_col, id_col=id_col)
+        stage.written(admitted).write.parquet(stage.dir(sink_path))
+        staged = copy.copy(index)
+        staged.path = stage.dir(index.path)
+        staged.persist_admitted(admitted, text_col=text_col, id_col=id_col)
+
+    commit_epoch(checkpoint, epoch, batch, write,
+                 merged=[index.path], keyed=[sink_path])
 
 
 def neardup_ingest(
@@ -116,36 +111,15 @@ def neardup_ingest(
     corpus itself).
 
     Micro-batch = insert batch (the reference's T1 trigger semantics):
-    admission order follows micro-batch arrival order.
-
-    Replay protocol (exactly-once sink, ADVICE r3): Spark may REPLAY
-    the last uncommitted micro-batch after a crash, and the store
-    mutation must not race the sink write. Per epoch:
-
-    1. if the store-side epoch marker exists, the batch fully
-       committed — skip;
-    2. else if the sink epoch directory committed (``_SUCCESS``),
-       recover the admitted set FROM the sink (re-running admission
-       would self-match against partially appended store rows) and go
-       to 4;
-    3. else run admission against the store (unchanged — bucket rows,
-       the only probe entry point, commit last inside
-       ``_append_store``) and overwrite the per-epoch sink directory
-       ``sink_path/epoch=<n>`` (idempotent on replay);
-    4. append the admitted docs' index rows to the store
-       (``persist_admitted``), then touch the epoch marker.
-
-    A crash inside step 4 can leave duplicate store ROWS for the same
-    id after the replay re-appends — harmless for correctness (every
-    probe join dedups candidates) and bounded to one batch of storage
-    waste; the sink itself never loses or duplicates a document.
-    Reads of the corpus see an ``epoch`` partition column (= admitting
-    micro-batch id — ingestion provenance for free). Requires stable
-    ``id_col`` values across replays (deterministic ids, not
-    monotonically_increasing_id) and one stream per index store.
+    admission order follows micro-batch arrival order. Each epoch
+    commits through :func:`commit_batch`. Reads of the corpus see an
+    ``epoch`` partition column (= admitting micro-batch id — ingestion
+    provenance for free). Requires stable ``id_col`` values across
+    replays (deterministic ids, not monotonically_increasing_id) and
+    one stream per index store.
     """
     def _batch(batch: DataFrame, epoch: int) -> None:
-        commit_batch(index, batch, epoch, sink_path, text_col, id_col)
+        commit_batch(index, batch, epoch, sink_path, checkpoint, text_col, id_col)
 
     trigger = trigger or {"availableNow": True}
     return (

@@ -8,8 +8,10 @@ micro-batch IS the insert batch:
 
 - :class:`StreamingMV` attaches a MaterializedView to any streaming
   DataFrame: per micro-batch ``groupBy(dims).agg(partial states)`` →
-  append to the state table. Checkpointing gives the same effective
-  idempotence the reference gets from ClickHouse's insert dedup.
+  append to the state table. Each epoch commits through
+  :func:`streaming.epochs.commit_epoch`, so a replayed micro-batch adds
+  its states exactly once (the reference gets this from ClickHouse's
+  insert dedup).
 - No watermark is needed for correctness (T3): late rows land in their
   ``day`` partition as new state rows and merge at read time — the
   state table is append-only and merge-on-read, never an in-memory
@@ -30,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from clickhouse_learning_spark.mv.engine import MaterializedView
+from clickhouse_learning_spark.streaming.epochs import Stage, commit_epoch
 
 
 @dataclass
@@ -44,21 +47,25 @@ class StreamingMV:
     whose LIFETIME has lapsed re-reads its source INSIDE the running
     stream — new dimension rows take effect from the next micro-batch,
     exactly ClickHouse's dictionary-refresh-under-ingest behavior
-    (tested in tests/test_streaming.py)."""
+    (tested in tests/test_streaming.py).
+
+    A restart on the same ``checkpoint`` replays at most the last
+    uncommitted epoch; its states land once (``commit_epoch``)."""
 
     mv: MaterializedView
     checkpoint: str
     enrich: object | None = None
 
     def _process_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        if self.enrich is not None:
-            batch = self.enrich(batch)
-        states = self.mv.materialize_batch(batch)
-        # neutral-fill so several StreamingMVs can share one wide table
-        filled = self.mv.union_merge(states)
-        self.mv.storage.append(filled)
+        def write(batch: DataFrame, stage: Stage) -> None:
+            if self.enrich is not None:
+                batch = self.enrich(batch)
+            states = self.mv.materialize_batch(batch)
+            # neutral-fill so several StreamingMVs can share one wide table
+            stage.append(self.mv.storage, self.mv.union_merge(states))
+
+        commit_epoch(self.checkpoint, epoch_id, batch, write,
+                     merged=[self.mv.storage.path])
 
     def attach(
         self,

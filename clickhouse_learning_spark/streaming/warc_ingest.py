@@ -19,8 +19,10 @@ Per micro-batch of ``(path, start, end)`` chunk rows:
    ``is_dup = 1`` (the streaming seat of ``operators/dedup.exact_dedup``;
    the index store is the streaming state — durable and shared with
    batch jobs, O(admitted) like the corpus itself);
-4. append the batch's rows to the corpus sink and the NEW fingerprints
-   to the index.
+4. publish the batch's rows to the corpus sink and the NEW fingerprints
+   to the index, both as ``epoch=<N>`` directories committed together
+   through :func:`streaming.epochs.commit_epoch` — a replayed epoch is
+   never probed against its own index rows.
 
 Scale: every stage shuffles at most the micro-batch; the index probe
 is a broadcast-able join while the index is small and a keyed shuffle
@@ -38,12 +40,14 @@ from __future__ import annotations
 
 import os
 import re
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from clickhouse_learning_spark.sources.warc import WARC_SCHEMA, _rows_from_stream
+from clickhouse_learning_spark.streaming.epochs import commit_epoch
 
 CHUNK_SCHEMA = T.StructType([
     T.StructField("path", T.StringType()),
@@ -74,6 +78,45 @@ def extract_chunks(chunks: DataFrame) -> DataFrame:
     return chunks.mapInPandas(gen, WARC_SCHEMA)
 
 
+def warc_batch(batch: DataFrame, epoch: int, *, work_dir: str) -> None:
+    """One epoch of :func:`stream_warc_ingest` (its ``foreachBatch``
+    body): clean + probe the batch's chunks, stage the corpus rows, and
+    stage the index rows from the staged corpus (so clean + probe run
+    once without caching the batch)."""
+    from clickhouse_learning_spark.operators.text import fix_mojibake
+
+    sink = os.path.join(work_dir, "corpus")
+    index = os.path.join(work_dir, "fp_index")
+
+    def write(batch: DataFrame, stage) -> None:
+        docs = extract_chunks(batch).filter(
+            F.col("warc_error").isNull()
+        ).select("url", "text")
+        fixed = fix_mojibake(docs, out_col="text")
+        fixed = fixed.withColumn("fp", F.xxhash64("text"))
+        sess = batch.sparkSession
+        # only a missing index means "first batch"; any read failure
+        # (corrupt parquet, transient IO) fails the micro-batch instead
+        # of silently disabling cross-batch dedup
+        seen = (sess.read.schema("fp bigint").parquet(index)
+                if os.path.exists(index)
+                else sess.createDataFrame([], "fp bigint"))
+        probed = fixed.join(
+            seen.select("fp").distinct().withColumn("is_dup", F.lit(1)),
+            "fp", "left",
+        ).select(
+            "url", "text", "n_passes",
+            F.coalesce("is_dup", F.lit(0)).cast("long").alias("is_dup"),
+        )
+        stage.written(probed).write.parquet(stage.dir(sink))
+        sess.read.schema(probed.schema).parquet(stage.dir(sink)).filter(
+            F.col("is_dup") == 0
+        ).select(F.xxhash64("text").alias("fp")).write.parquet(stage.dir(index))
+
+    commit_epoch(os.path.join(work_dir, "ckpt"), epoch, batch, write,
+                 keyed=[sink, index])
+
+
 def stream_warc_ingest(
     spark: SparkSession,
     landing_dir: str,
@@ -83,72 +126,18 @@ def stream_warc_ingest(
     ``landing_dir`` (one file per announced WARC chunk wave), drain it
     with availableNow, and return the corpus sink as a DataFrame with
     columns (url, text, n_passes, is_dup)."""
-    from clickhouse_learning_spark.operators.text import fix_mojibake
-    from clickhouse_learning_spark.streaming.ingest import drain
+    from clickhouse_learning_spark.streaming.ingest import drain, parquet_stream
 
-    sink = os.path.join(work_dir, "corpus")
-    index = os.path.join(work_dir, "fp_index")
-
-    def _batch(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        docs = extract_chunks(batch).filter(
-            F.col("warc_error").isNull()
-        ).select("url", "text")
-        fixed = fix_mojibake(docs, out_col="text")
-        fixed = fixed.withColumn("fp", F.xxhash64("text"))
-        sess = batch.sparkSession
-        try:
-            seen = sess.read.parquet(index)
-        except Exception as e:  # noqa: BLE001 — see filter below
-            # ADVICE r7: ONLY "index does not exist yet" means first
-            # batch. Any other failure (corrupt parquet, transient IO)
-            # must fail the micro-batch — swallowing it would silently
-            # disable cross-batch dedup for this epoch.
-            msg = str(e)
-            if ("PATH_NOT_FOUND" not in msg
-                    and "Path does not exist" not in msg):
-                raise
-            seen = sess.createDataFrame([], "fp bigint")
-        probed = fixed.join(
-            seen.select("fp").distinct().withColumn("is_dup", F.lit(1)),
-            "fp", "left",
-        ).select(
-            "url", "text", "n_passes",
-            F.coalesce("is_dup", F.lit(0)).cast("long").alias("is_dup"),
-        )
-        # one batch, two sinks: cache so clean+probe runs once.
-        # Exactly-once (ADVICE r7): each epoch OVERWRITES its own
-        # partition directory (epoch=<N>), so a retried foreachBatch
-        # epoch replaces — never duplicates — both the corpus rows and
-        # the index rows it wrote on the failed attempt. The base-path
-        # reads above and below see epoch as a discovered partition
-        # column and ignore it.
-        probed = probed.persist()
-        try:
-            probed.write.mode("overwrite").parquet(
-                os.path.join(sink, f"epoch={epoch}"))
-            probed.filter(F.col("is_dup") == 0).select(
-                F.xxhash64("text").alias("fp")
-            ).write.mode("overwrite").parquet(
-                os.path.join(index, f"epoch={epoch}"))
-        finally:
-            probed.unpersist()
-
-    stream = (
-        spark.readStream.schema(CHUNK_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-    )
     q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(_batch)
+        parquet_stream(spark, landing_dir, CHUNK_SCHEMA)
+        .writeStream.outputMode("append")
+        .foreachBatch(partial(warc_batch, work_dir=work_dir))
         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     drain(q)
-    return spark.read.parquet(sink).select(
+    return spark.read.parquet(os.path.join(work_dir, "corpus")).select(
         "url", "text", "n_passes", "is_dup")
 
 

@@ -1,11 +1,25 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from clickhouse_learning_spark import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+
+
+def drop_last_commit(checkpoint: str) -> int:
+    """Delete the newest ``commits/<N>`` entry of a stream checkpoint —
+    the state a crash between the sink write and Spark's commit log
+    leaves — so a restart on it replays epoch N. Returns N."""
+    d = os.path.join(checkpoint, "commits")
+    n = max(int(f) for f in os.listdir(d) if f.isdigit())
+    for f in (str(n), f".{n}.crc"):
+        if os.path.exists(os.path.join(d, f)):
+            os.remove(os.path.join(d, f))
+    return n
 
 
 @pytest.fixture(scope="session")

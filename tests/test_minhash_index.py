@@ -193,13 +193,33 @@ def test_neardup_ingest_stream_equals_batch_appends(spark, tmp_path, split_batch
     assert admitted == expected
 
 
-def test_commit_batch_replay_windows(spark, tmp_path, split_batches):
+class Crash(Exception):
+    pass
+
+
+def _crash(plan):
+    raise Crash
+
+
+def _crashed_commit(monkeypatch, publish, *args):
+    """Run commit_batch with the epoch publish crashing in ``publish``."""
+    from clickhouse_learning_spark.streaming import epochs
+    from clickhouse_learning_spark.streaming.dedup import commit_batch
+
+    with monkeypatch.context() as m:
+        m.setattr(epochs, "_publish", publish)
+        with pytest.raises(Crash):
+            commit_batch(*args)
+
+
+def test_commit_batch_replay_windows(spark, tmp_path, split_batches, monkeypatch):
     """ADVICE r3 crash windows of the neardup ingest protocol:
     (a) admit() is pure — no store mutation;
     (b) replay after the sink epoch dir committed but before the store
-        append must NOT lose docs to self-matching — it recovers the
-        admitted set from the sink and persists it;
+        append must NOT lose docs to self-matching — it publishes the
+        admitted set's staged store rows;
     (c) replay after full commit (marker present) is a no-op."""
+    import os
     import pathlib
 
     from clickhouse_learning_spark.streaming.dedup import commit_batch
@@ -211,6 +231,7 @@ def test_commit_batch_replay_windows(spark, tmp_path, split_batches):
     ]
     idx.build(frames[0])
     sink = str(tmp_path / "sink5")
+    ck = str(tmp_path / "ck5")
     sigs_path = str(tmp_path / "mh5" / "sigs")
     n0 = spark.read.parquet(sigs_path).count()
 
@@ -219,25 +240,32 @@ def test_commit_batch_replay_windows(spark, tmp_path, split_batches):
     ids1 = {r.doc_id for r in admitted1.collect()}
     assert spark.read.parquet(sigs_path).count() == n0
 
-    # (b) crash between sink write and store append, then replay:
-    # the sink epoch dir is committed, the store never saw the batch
-    admitted1.write.mode("overwrite").parquet(sink + "/epoch=1")
-    commit_batch(idx, frames[1], 1, sink)
+    # (b) crash between sink write and store append, then replay: the
+    # publish moved the sink's files, the store never saw the batch
+    def publish_sink_only(plan):
+        for src, dst in plan["files"]:
+            if dst.startswith(sink + os.sep):
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.replace(src, dst)
+        raise Crash
+
+    _crashed_commit(monkeypatch, publish_sink_only, idx, frames[1], 1, sink, ck)
+    assert spark.read.parquet(sigs_path).count() == n0
+    commit_batch(idx, frames[1], 1, sink, ck)
     got = {r.doc_id for r in spark.read.parquet(sink + "/epoch=1").collect()}
     assert got == ids1  # nothing lost to self-match
     assert spark.read.parquet(sigs_path).count() == n0 + len(ids1)
-    assert (pathlib.Path(str(tmp_path / "mh5")) / "_epochs" / "1").exists()
+    assert (pathlib.Path(ck) / "epochs" / "1").exists()
 
     # (c) replay after full commit: store row counts stay put
-    commit_batch(idx, frames[1], 1, sink)
+    commit_batch(idx, frames[1], 1, sink, ck)
     assert spark.read.parquet(sigs_path).count() == n0 + len(ids1)
 
 
 def test_commit_batch_duplicate_store_rows_are_harmless(
-    spark, tmp_path, split_batches
+    spark, tmp_path, split_batches, monkeypatch
 ):
-    """Crash INSIDE the store append, then replay: the replayed epoch
-    re-appends index rows (duplicates allowed by the protocol) — future
+    """Duplicate index rows for the same ids, then a replay: future
     admission decisions must be unaffected."""
     from clickhouse_learning_spark.streaming.dedup import commit_batch
 
@@ -248,13 +276,15 @@ def test_commit_batch_duplicate_store_rows_are_harmless(
     ]
     idx.build(frames[0])
     sink = str(tmp_path / "sink6")
+    ck = str(tmp_path / "ck6")
 
-    # epoch 1: sink committed AND store fully appended, but the crash
-    # hit before the marker — the worst duplicate-producing replay
-    admitted1 = idx.admit(frames[1])
-    admitted1.write.mode("overwrite").parquet(sink + "/epoch=1")
-    idx.persist_admitted(admitted1)
-    commit_batch(idx, frames[1], 1, sink)  # replay: re-appends rows
+    # epoch 1 staged with its manifest when the crash hit, while the
+    # store already holds the same docs' rows (appended outside the
+    # epoch protocol): the roll-forward publishes them a second time —
+    # the worst duplicate-producing replay
+    _crashed_commit(monkeypatch, _crash, idx, frames[1], 1, sink, ck)
+    idx.persist_admitted(idx.admit(frames[1]))
+    commit_batch(idx, frames[1], 1, sink, ck)  # replay: re-appends rows
 
     # duplicates exist now…
     sigs = spark.read.parquet(str(tmp_path / "mh6" / "sigs"))
@@ -263,3 +293,22 @@ def test_commit_batch_duplicate_store_rows_are_harmless(
     admitted_all = {r.doc_id for r in idx.admit(frames[2]).collect()}
     expect = _oracle(split_batches) & {d for d, _ in split_batches[2]}
     assert admitted_all == expect
+
+
+def test_commit_batch_empty_batch_writes_nothing(spark, tmp_path, split_batches):
+    """The foreachBatch body runs whole on an empty epoch: no error, no
+    sink file, no store rows, no staging dir left in the store."""
+    import os
+
+    from clickhouse_learning_spark.streaming.dedup import commit_batch
+
+    idx = MinHashIndex(str(tmp_path / "mh7"), threshold=THRESH, shingle_k=K)
+    idx.build(spark.createDataFrame(split_batches[0], "doc_id long, text string"))
+    store = sorted(os.listdir(idx.path))
+    n0 = spark.read.parquet(idx.path + "/sigs").count()
+    sink = str(tmp_path / "sink7")
+    commit_batch(idx, spark.createDataFrame([], "doc_id long, text string"),
+                 0, sink, str(tmp_path / "ck7"))
+    assert not os.path.exists(sink) or os.listdir(sink) == []
+    assert sorted(os.listdir(idx.path)) == store
+    assert spark.read.parquet(idx.path + "/sigs").count() == n0

@@ -3,12 +3,15 @@ batch pipeline, idempotent restart behavior, and multi-writer fan-in."""
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import functions as F
 
 from clickhouse_learning_spark.mv.mainpage import mainpage_mv, prepare_events
 from clickhouse_learning_spark.streaming.ingest import StreamingMV, drain, parquet_stream
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, drop_last_commit
 
 EXACT_METRICS = ["view_cnt", "click_cnt", "value_sum", "event_cnt"]
 
@@ -34,6 +37,13 @@ def test_stream_equals_batch(spark, tmp_path):
         trigger={"availableNow": True},
     )
     drain(q)
+    # one scan per epoch: Spark's input count is the epoch's own rows
+    # (the ledger's observed rows_in), and sums to the landed rows
+    epochs = [p for p in q.recentProgress if p.numInputRows]
+    assert sum(p.numInputRows for p in epochs) == ev.count()
+    for p in epochs:
+        with open(tmp_path / "ckpt" / "epochs" / str(p.batchId)) as f:
+            assert p.numInputRows == json.load(f)["counts"]["rows_in"]
     # five micro-batches → several state rows per key, merged at read
     n_state = mv_s.storage.read(spark).count()
 
@@ -49,21 +59,31 @@ def test_stream_equals_batch(spark, tmp_path):
 
 def test_stream_restart_is_idempotent(spark, tmp_path):
     """Checkpointed restart over the same landing dir must not re-ingest
-    already-processed files (exactly-once per file)."""
+    already-processed files (exactly-once per file), and a restart that
+    replays the last epoch (its commit-log entry lost in a crash) must
+    not append its states twice."""
     ev = prepare_events(spark, SF_SMOKE).drop("insert_second")
     landing = str(tmp_path / "landing")
     ev.repartition(3).write.parquet(landing)
     mv = mainpage_mv(str(tmp_path / "state"))
     smv = StreamingMV(mv, str(tmp_path / "ckpt"))
 
+    def total():
+        return mv.merge_query(spark, ["day"], ["event_cnt"]).agg(
+            F.sum("event_cnt")).collect()[0][0]
+
     for _ in range(2):  # second run: nothing new to process
         q = smv.attach(
             parquet_stream(spark, landing, ev.schema), trigger={"availableNow": True}
         )
         drain(q)
+    assert total() == ev.count()
 
-    got = mv.merge_query(spark, ["day"], ["event_cnt"]).agg(F.sum("event_cnt")).collect()[0][0]
-    assert got == ev.count()
+    drop_last_commit(smv.checkpoint)
+    drain(smv.attach(
+        parquet_stream(spark, landing, ev.schema), trigger={"availableNow": True}
+    ))
+    assert total() == ev.count()
 
 
 def test_two_streams_one_wide_table(spark, tmp_path):
@@ -461,3 +481,78 @@ def test_dictionary_refresh_inside_running_stream(spark, tmp_path):
     # chunk 1: uid 3 was unknown (default); chunk 2: refreshed dict
     # resolves uid 3 → gamma, and beta accumulates across the batches
     assert got == {"alpha": 10, "unknown": 5, "gamma": 7, "beta": 4}
+
+
+DEPLOY_SCRIPT = """
+CREATE TABLE test.events (
+    day Date, uid UInt64, amount UInt64
+) ENGINE = MergeTree() PARTITION BY day ORDER BY uid;
+
+CREATE TABLE test.daily (
+    day Date, n UInt64, total UInt64
+) ENGINE = SummingMergeTree() PARTITION BY day ORDER BY day;
+
+CREATE MATERIALIZED VIEW test.daily_mv TO test.daily AS
+SELECT day, count() AS n, sum(amount) AS total FROM test.events GROUP BY day;
+"""
+DEPLOY_SCHEMA = "day date, uid long, amount long"
+
+
+def _deploy_totals(spark, dep):
+    raw = dep.tables["test.events"].read(spark)
+    return (
+        raw.count(),
+        {(str(r.day), r.n, r.total)
+         for r in dep.final_read(spark, "test.daily").collect()},
+    )
+
+
+def test_attach_stream_replay_appends_once(spark, tmp_path):
+    """Deployment.attach_stream (DDL-declared source + insert-trigger
+    MV): a restart that replays the last epoch leaves the source table
+    and the MV target unchanged."""
+    import datetime as dt
+    import time
+
+    from clickhouse_learning_spark import ddl
+
+    dep = ddl.deploy(spark, DEPLOY_SCRIPT, str(tmp_path / "tables"))
+    landing = str(tmp_path / "landing")
+    rows = [(dt.date(2024, 1, 1 + i % 3), i, 10 * i) for i in range(30)]
+    for k in range(3):
+        spark.createDataFrame(rows[k::3], DEPLOY_SCHEMA).coalesce(1).write.mode(
+            "append").parquet(landing)
+        time.sleep(0.2)  # ordered mtimes → one file per epoch
+    ckpt = str(tmp_path / "ckpt")
+
+    def run():
+        drain(dep.attach_stream(
+            spark, "test.events", parquet_stream(spark, landing, DEPLOY_SCHEMA),
+            ckpt, trigger={"availableNow": True},
+        ))
+
+    run()
+    want = (30, {(str(dt.date(2024, 1, 1 + d)), 10,
+                  sum(10 * i for i in range(d, 30, 3))) for d in range(3)})
+    assert _deploy_totals(spark, dep) == want
+    assert drop_last_commit(ckpt) == 2
+    run()
+    assert _deploy_totals(spark, dep) == want
+
+
+def test_empty_batch_bodies_write_nothing(spark, tmp_path):
+    """The foreachBatch bodies run no emptiness probe: an empty epoch
+    goes through the full body, raises nothing and publishes no file."""
+    from clickhouse_learning_spark import ddl
+
+    ev = prepare_events(spark, SF_SMOKE).drop("insert_second")
+    mv = mainpage_mv(str(tmp_path / "state"))
+    StreamingMV(mv, str(tmp_path / "ck_mv"))._process_batch(ev.limit(0), 0)
+    dep = ddl.deploy(spark, DEPLOY_SCRIPT, str(tmp_path / "tables"))
+    dep._stream_batch(spark, "test.events", str(tmp_path / "ck_dep"),
+                      spark.createDataFrame([], DEPLOY_SCHEMA), 0)
+    for root in (mv.storage.path, *(t.path for t in dep.tables.values())):
+        assert not os.path.exists(root) or os.listdir(root) == [], root
+    for ck in ("ck_mv", "ck_dep"):
+        with open(tmp_path / ck / "epochs" / "0") as f:
+            assert json.load(f)["counts"] == {"rows_in": 0, "rows_written": 0}

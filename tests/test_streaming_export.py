@@ -9,7 +9,7 @@ import os
 import pytest
 
 from clickhouse_learning_spark.streaming import export as EX
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, drop_last_commit
 
 
 def _key(t):
@@ -58,13 +58,19 @@ def test_stream_equals_batch(spark, landed, fmt):
     assert srows == brows
 
 
+def _files(out):
+    return sorted(os.path.join(d, f) for d, _, fs in os.walk(out) for f in fs)
+
+
 def test_retried_epoch_replaces(spark, landed):
-    """Exactly-once law: every epoch directory is CLEARED before its
-    files are written, so a retried foreachBatch epoch replaces rather
-    than duplicates. Simulated at full fidelity by re-running the
-    export into the SAME out_dir with a FRESH checkpoint: every epoch
-    re-fires against existing epoch directories (uuid part names would
-    double-count under append) and the readback must be unchanged."""
+    """Exactly-once law. A restart that replays the last epoch (its
+    commit-log entry lost in a crash) leaves the export untouched: the
+    epoch already committed, so not one file is rewritten. Re-running
+    the export into the SAME out_dir with a FRESH checkpoint re-fires
+    every epoch against existing epoch directories (uuid part names
+    would double-count under append): each epoch directory ends up
+    holding only the new attempt's files and the readback is
+    unchanged."""
     from clickhouse_learning_spark.sources import arrow_ipc as AR
 
     root, landing, ev = landed
@@ -73,23 +79,35 @@ def test_retried_epoch_replaces(spark, landed):
         spark, landing, ev.schema, out,
         fmt="arrow", checkpoint=f"{root}/ckpt_retry",
     ).count()
-    files_before = sorted(
-        os.path.join(d, f)
-        for d, _, fs in os.walk(out) for f in fs
+    files_before = _files(out)
+    drop_last_commit(f"{root}/ckpt_retry")
+    replayed = EX.stream_export(
+        spark, landing, ev.schema, out,
+        fmt="arrow", checkpoint=f"{root}/ckpt_retry",
     )
+    assert replayed.count() == n
+    assert _files(out) == files_before
     again = EX.stream_export(
         spark, landing, ev.schema, out,
         fmt="arrow", checkpoint=f"{root}/ckpt_retry2",
     )
-    files_after = sorted(
-        os.path.join(d, f)
-        for d, _, fs in os.walk(out) for f in fs
-    )
+    files_after = _files(out)
     assert again.count() == n
     # same number of part files, but every uuid part name was replaced
     assert len(files_after) == len(files_before)
     assert set(files_after).isdisjoint(files_before)
     assert AR.read_arrow(spark, os.path.join(out, "epoch=*")).count() == n
+
+
+@pytest.mark.parametrize("fmt", ["arrow", "avro"])
+def test_empty_batch_writes_nothing(spark, landed, tmp_path, fmt):
+    """The foreachBatch body runs whole on an empty epoch: no error, no
+    file."""
+    root, landing, ev = landed
+    out = str(tmp_path / "out")
+    EX.export_batch(spark.createDataFrame([], ev.schema), 0, out_dir=out,
+                    fmt=fmt, checkpoint=str(tmp_path / "ck"))
+    assert not os.path.exists(out) or _files(out) == []
 
 
 def test_unknown_format_rejected(spark, landed):

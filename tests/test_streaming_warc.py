@@ -79,37 +79,41 @@ def test_corrupt_index_fails_batch(spark, fixture_dirs, tmp_path):
 
 
 def test_epoch_overwrite_idempotent(spark, fixture_dirs):
-    """ADVICE r7 exactly-once law: each epoch writes its own
-    epoch=<N> partition with mode=overwrite, so a RETRIED epoch
-    replaces — never duplicates — its corpus and index rows. Re-running
-    the drained stream (same checkpoint, no new input) must leave the
-    sink unchanged, and per-epoch re-execution is simulated by
-    rewriting one epoch's partition and asserting global row count is
-    stable."""
+    """ADVICE r7 exactly-once law: re-running the drained stream (same
+    checkpoint, no new input) leaves the sink unchanged, and so does a
+    restart that replays the last epoch (its commit-log entry lost in a
+    crash) — the replayed epoch must not be probed against the index
+    rows it already published, which would flip its docs to is_dup."""
     import os
 
-    from pyspark.sql import functions as F
+    from tests.conftest import drop_last_commit
 
     warc_dir, landing, root = fixture_dirs
     work = root + "/run_idem"
-    out1 = WI.stream_warc_ingest(spark, landing, work)
-    n1 = out1.count()
+
+    def snapshot():
+        out = WI.stream_warc_ingest(spark, landing, work)
+        index = spark.read.parquet(os.path.join(work, "fp_index"))
+        return sorted(map(tuple, out.collect()), key=_key), index.count()
+
+    first = snapshot()
+    assert len(first[0]) == 200
     # drained re-run: checkpoint replays nothing, sink must not grow
-    out2 = WI.stream_warc_ingest(spark, landing, work)
-    assert out2.count() == n1 == 200
-    # simulate a retried epoch: overwrite one epoch partition with its
-    # own content (what a foreachBatch retry does under mode=overwrite)
+    assert snapshot() == first
     sink = os.path.join(work, "corpus")
     epochs = [d for d in os.listdir(sink) if d.startswith("epoch=")]
     assert len(epochs) >= 2, "expected multiple micro-batch epochs"
-    one = os.path.join(sink, epochs[0])
-    part = spark.read.parquet(one).persist()
-    rows_before = part.count()
-    part.write.mode("overwrite").parquet(one + "_retry")
-    # the retry directory holds exactly the same rows (idempotent form)
-    assert spark.read.parquet(one + "_retry").count() == rows_before
-    part.unpersist()
-    import shutil
+    drop_last_commit(os.path.join(work, "ckpt"))
+    assert snapshot() == first
 
-    shutil.rmtree(one + "_retry")
-    assert spark.read.parquet(sink).count() == n1
+
+def test_empty_batch_writes_nothing(spark, tmp_path):
+    """The foreachBatch body runs whole on an empty epoch: no error, no
+    file in the corpus or the index."""
+    import os
+
+    work = str(tmp_path / "work")
+    WI.warc_batch(spark.createDataFrame([], WI.CHUNK_SCHEMA), 0, work_dir=work)
+    for d in ("corpus", "fp_index"):
+        p = os.path.join(work, d)
+        assert not os.path.exists(p) or os.listdir(p) == []

@@ -172,3 +172,49 @@ def test_q20_semi_join_and_half_volume_rule(spark):
     # the rule is selective: far fewer than all suppliers qualify
     n_supp = load_table(spark, SF_ORACLE, "supplier").count()
     assert len(rows) < n_supp
+
+
+def test_revenue_anomaly_squared_sum_past_int64(spark, tmp_path):
+    """revenue_anomaly_days at the int64 boundary: ~2e9 cents a day keeps
+    every daily square inside int64 (4e18), but the 28-day window sum of
+    squares reaches ~1.1e20 (sf0.1 peaks at 8.4e19). Both engines must
+    return the exact-integer answer, not raise on overflow."""
+    import datetime as dt
+    import math
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from clickhouse_learning_spark.queries import ORACLES
+    from clickhouse_learning_spark.queries_tpch import revenue_anomaly_days
+
+    days = [dt.date(2024, 1, 1) + dt.timedelta(days=i) for i in range(40)]
+    cents = [2_000_000_000 + 7_919_000 * (i * 37 % 11) for i in range(40)]
+    cents[30] = 2_400_000_000  # the anomaly
+    pq.write_table(pa.table({
+        "o_orderdate": pa.array(
+            [dt.datetime.combine(d, dt.time()) for d in days], pa.timestamp("us")),
+        "o_totalprice": [c / 100 for c in cents],
+    }), str(tmp_path / "orders.parquet"))
+
+    want = []
+    for i, c in enumerate(cents):
+        win = cents[max(0, i - 28):i]
+        n, s, sq = len(win), sum(win), sum(x * x for x in win)
+        var_num = float(sq) - float(s) * float(s) / n if n else 0.0
+        if n >= 14 and var_num > 0:
+            z = (c - s / n) / math.sqrt(var_num / n)
+            if abs(z) > 2:
+                want.append((days[i], c, z))
+    assert want and max(
+        sum(x * x for x in cents[i - 28:i]) for i in range(28, 40)) > 2**63
+
+    spark_rows = [tuple(r) for r in revenue_anomaly_days(
+        spark, str(tmp_path)).collect()]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM '{tmp_path}/orders.parquet'")
+    duck_rows = con.execute(ORACLES["revenue_anomaly_days"]).fetchall()
+    for got in (spark_rows, duck_rows):
+        assert [(d, c) for d, c, _ in got] == [(d, c) for d, c, _ in want]
+        assert all(abs(z - w[2]) < 1e-3 for (_, _, z), w in zip(got, want))

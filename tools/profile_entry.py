@@ -73,11 +73,7 @@ def main():
                     F.lit(" common tail words"),
                 ).alias("text"),
             )
-            t("bigram_rows only", lambda: noop(
-                LM._bigram_rows(docs, "doc_id", "text")))
             from clickhouse_learning_spark.operators import kn_lm as KN
-            t("trigram_rows only", lambda: noop(
-                KN._trigram_rows(docs, "doc_id", "text")))
             def _train():
                 spark.catalog.clearCache()
                 m = LM.train_bigram_lm(docs)
