@@ -835,8 +835,10 @@ class Deployment:
         """One maintenance sweep straight from the DDL: every deployed
         table with a declared TTL drops its expired partitions
         (metadata-only when the TTL column is the partition column —
-        the reference's layout), then multi-file partitions coalesce.
-        Returns a per-table report. The MV-state analog with
+        the reference's layout), then the partitions the directory
+        listing shows with more than one file coalesce; single-file
+        partitions are neither read nor rewritten. Returns a per-table
+        report. The MV-state analog with
         re-merging lives in maintenance.Maintainer; this is the
         raw/dim-table sweep."""
         report: dict[str, dict] = {}
@@ -853,11 +855,9 @@ class Deployment:
                     spark, keep=spec.ttl, now=now, day_col=col
                 )
             if spec.partition_by:
-                stats = table.stats(spark).filter(F.col("files") > 1)
-                n = stats.count()
-                if n:
-                    table.compact(spark)
-                entry["partitions_coalesced"] = n
+                need = [p for p, fs in table.files().items() if len(fs) > 1]
+                table.compact(spark, partitions=need)
+                entry["partitions_coalesced"] = len(need)
             report[name] = entry
         return report
 

@@ -29,13 +29,15 @@ parallelize across the cluster.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import os
+from dataclasses import dataclass, replace
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_learning_spark.functions.metrics import MetricSpec
-from clickhouse_learning_spark.tables import Table
+from clickhouse_learning_spark.streaming.epochs import observed
+from clickhouse_learning_spark.tables import Table, expired, partition_key
 
 
 @dataclass
@@ -94,7 +96,9 @@ class MaterializedView:
         return df.groupBy(*group_by).agg(*[m.merge() for m in self.metrics])
 
     # -- maintenance ---------------------------------------------------------------
-    def compact(self, spark: SparkSession, partitions: list | None = None) -> None:
+    def compact(
+        self, spark: SparkSession, partitions: list | None = None
+    ) -> dict[tuple, tuple[dict, dict]]:
         """Re-merge equal-key rows in storage (background merge / OPTIMIZE
         FINAL). Per-partition re-aggregation; pure space optimization.
 
@@ -107,32 +111,27 @@ class MaterializedView:
         state tables / tests). Pick candidates with
         :meth:`partitions_needing_compaction`.
 
+        Returns, per compacted partition (keyed as in
+        :meth:`Table.files`), the totals seen entering the merge and
+        leaving it for the write: ``rows`` and every additive metric
+        (``sum``/``count`` states). Two ``Observation`` s collect them
+        inside the rewrite's own job, so they cost no extra job;
+        :meth:`Maintainer.run_once` reconciles them.
+
         Guard: refuses to run from a view definition older than the
         stored schema — compacting with a stale metric set would project
         away columns added by with_metric (data loss)."""
-        stored = self.storage.read(spark)
-        if partitions is not None:
-            if not partitions:
-                return
-            import functools
-            import operator as _op
-
-            pcols = self.storage.partition_by
-            tuples = [
-                tuple(p) if isinstance(p, (tuple, list)) else (p,)
-                for p in partitions
+        if partitions is None:
+            stored = self.storage.read(spark)
+            parts = list(self.storage.files())
+        else:
+            parts = [
+                p for p in map(partition_key, partitions)
+                if os.path.isdir(self.storage.partition_dir(p))
             ]
-            cond = functools.reduce(
-                _op.or_,
-                [
-                    functools.reduce(
-                        _op.and_,
-                        [F.col(c) == v for c, v in zip(pcols, t)],
-                    )
-                    for t in tuples
-                ],
-            )
-            stored = stored.filter(cond)
+            if not parts:
+                return {}
+            stored = self.storage.read(spark, parts)
         known = set(self.dims) | {m.name for m in self.metrics}
         unknown = [c for c in stored.columns if c not in known]
         if unknown:
@@ -141,9 +140,19 @@ class MaterializedView:
                 "definition — compact with the newest (evolved) view to avoid "
                 "dropping them"
             )
-        merged = self.merge_states(stored, list(self.dims))
+        # files written before with_metric / with_dimension lack the new
+        # column; the rewrite keeps lacking it, which readers see as the
+        # NULL (neutral) state, as before
+        view = replace(
+            self,
+            dims=tuple(d for d in self.dims if d in stored.columns),
+            metrics=tuple(m for m in self.metrics if m.name in stored.columns),
+        )
+        dims = list(view.dims)
+        stored, seen_in = view._observe_totals(stored, parts)
+        merged = view.merge_states(stored, dims)
         qnames = [
-            m.name for m in self.metrics if m.kind in ("quantile", "quantile_sketch")
+            m.name for m in view.metrics if m.kind in ("quantile", "quantile_sketch")
         ]
         if qnames:
             # quantile states also deduplicate by value here, shrinking
@@ -153,43 +162,66 @@ class MaterializedView:
                 compress_quantile_states,
             )
 
-            merged = compress_quantile_states(merged, list(self.dims), qnames)
-        tspecs = [m for m in self.metrics if m.kind == "topk"]
+            merged = compress_quantile_states(merged, dims, qnames)
+        tspecs = [m for m in view.metrics if m.kind == "topk"]
         if tspecs:
             # topk states re-sum per value and re-truncate to reserve
             from clickhouse_learning_spark.functions.metrics import (
                 compress_topk_states,
             )
 
-            merged = compress_topk_states(merged, list(self.dims), tspecs)
-        mspecs = [m for m in self.metrics if m.kind == "summap"]
+            merged = compress_topk_states(merged, dims, tspecs)
+        mspecs = [m for m in view.metrics if m.kind == "summap"]
         if mspecs:
             # summap states re-sum per key (one entry per distinct key)
             from clickhouse_learning_spark.functions.metrics import (
                 compress_summap_states,
             )
 
-            merged = compress_summap_states(merged, list(self.dims), mspecs)
-        if partitions is not None:
+            merged = compress_summap_states(merged, dims, mspecs)
+        merged, seen_out = view._observe_totals(merged, parts)
+        if partitions is None:
+            self.storage._rewrite(merged)
+        else:
             # dynamic overwrite: only the partitions present in `merged`
             # (= exactly the named ones) are replaced
             self.storage.overwrite_partitions(merged)
-        else:
-            self.storage._rewrite(merged)
+        got_in, got_out = seen_in(), seen_out()
+        return {p: (got_in[p], got_out[p]) for p in parts}
+
+    def _observe_totals(self, df: DataFrame, parts: list[tuple]):
+        """``df`` observed for, per partition in ``parts``, its row count
+        and the total of each additive metric; returns ``(df, read)``,
+        where ``read()`` (after ``df`` ran) gives partition → totals."""
+        names = [m.name for m in self.metrics if m.kind in ("sum", "count")]
+        exprs = []
+        for i, p in enumerate(parts):
+            inside = self.storage.where_partition(p)
+            exprs.append(F.count(F.when(inside, 1)).alias(f"{i}/rows"))
+            exprs += [F.sum(F.when(inside, F.col(n))).alias(f"{i}/{n}") for n in names]
+        obs = Observation()
+
+        def read() -> dict[tuple, dict]:
+            got = observed(obs)
+            return {
+                p: {"rows": got.get(f"{i}/rows", 0),
+                    **{n: got.get(f"{i}/{n}") for n in names}}
+                for i, p in enumerate(parts)
+            }
+
+        return df.observe(obs, *exprs), read
 
     def partitions_needing_compaction(
         self, spark: SparkSession, max_files: int = 1
     ) -> list[tuple]:
-        """Partition values whose file count exceeds ``max_files`` — the
-        MergeTree 'too many parts' trigger, from the parts-stats
-        metadata scan (no data read beyond file names)."""
-        rows = (
-            self.storage.stats(spark)
-            .filter(F.col("files") > max_files)
-            .select(*self.storage.partition_by)
-            .collect()
+        """Partition values (keyed as in :meth:`Table.files`) whose file
+        count exceeds ``max_files`` — the MergeTree 'too many parts'
+        trigger, from the directory listing alone: no Spark job, no
+        file opened."""
+        return sorted(
+            (p for p, fs in self.storage.files().items() if len(fs) > max_files),
+            key=str,
         )
-        return [tuple(r) for r in rows]
 
     # -- schema evolution (D5/D6) ---------------------------------------------
     def with_metric(self, spec: MetricSpec) -> "MaterializedView":
@@ -249,24 +281,25 @@ def rollup_ttl(
     schema stays stable for readers; NULL = the 'rolled-up' marker,
     exactly like with_dimension's backfill convention).
 
+    ``day_col`` must be a storage partition column: the expired
+    partitions come from the directory listing, not from a data scan.
     Returns the number of partitions rolled up.
     """
     import datetime as _dt
 
-    from pyspark.sql import functions as _F
-
     cutoff = (now or _dt.date.today()) - keep
-    stored = mv.storage.read(spark)
-    expired = stored.filter(_F.col(day_col) < _F.lit(cutoff))
-    parts = [r[0] for r in expired.select(day_col).distinct().collect()]
+    i = mv.storage.partition_by.index(day_col)
+    parts = [p for p in mv.storage.files() if expired(p[i], cutoff)]
     if not parts:
         return 0
+    stored = mv.storage.read(spark)
+    old = stored.filter(F.col(day_col) < F.lit(cutoff))
     group = coarse_dims if day_col in coarse_dims else [day_col, *coarse_dims]
-    merged = mv.merge_states(expired, group)
+    merged = mv.merge_states(old, group)
     # keep the schema stable: dropped fine dims come back as typed NULL
     types = dict(stored.dtypes)
     fine = [d for d in mv.dims if d not in group]
     for d in fine:
-        merged = merged.withColumn(d, _F.lit(None).cast(types[d]))
+        merged = merged.withColumn(d, F.lit(None).cast(types[d]))
     mv.storage.overwrite_partitions(merged.select(*stored.columns))
     return len(parts)

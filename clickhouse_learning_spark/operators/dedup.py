@@ -1008,7 +1008,7 @@ class MinHashIndex:
         agreement (debiased, same margin as minhash_lsh_pairs) prunes
         the background; exact Jaccard against the STORED shingle sets
         decides. One keyed join against the store, no corpus scan."""
-        admitted_docs, sigs_new = self._admit(new_docs, text_col, id_col)
+        admitted_docs, sigs_new = self.admit_with_sigs(new_docs, text_col, id_col)
         spark = new_docs.sparkSession
         admitted = admitted_docs.select(F.col(id_col).alias("id"))
         sh_admit = self._shingle_sets(admitted_docs, text_col, id_col)
@@ -1020,21 +1020,30 @@ class MinHashIndex:
         form (streaming/dedup.commit_batch) stages the admitted set and
         its :meth:`persist_admitted` rows and publishes both together;
         batch callers normally want :meth:`append`, which fuses both."""
-        return self._admit(new_docs, text_col, id_col)[0]
+        return self.admit_with_sigs(new_docs, text_col, id_col)[0]
 
-    def persist_admitted(self, admitted_docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> None:
+    def persist_admitted(
+        self,
+        admitted_docs: DataFrame,
+        sigs: DataFrame,
+        text_col: str = "text",
+        id_col: str = "doc_id",
+    ) -> None:
         """Append store rows for docs ALREADY admitted (no admission
         check) — the store half of the streaming commit, which calls it
         on a copy of the index rooted at the epoch's staging dir.
-        Signatures/shingles are deterministic, so these are the rows
+        ``sigs`` are the batch's signatures as :meth:`admit_with_sigs`
+        returned them (only the admitted ids' rows are stored), so they
+        are not computed a second time. These are the rows
         :meth:`append` would have written."""
         spark = admitted_docs.sparkSession
-        sigs = self._sigs(admitted_docs, text_col, id_col)
         sh = self._shingle_sets(admitted_docs, text_col, id_col)
         admitted = admitted_docs.select(F.col(id_col).alias("id"))
         self._append_store(spark, admitted, sigs, sh, "append")
 
-    def _admit(self, new_docs: DataFrame, text_col: str, id_col: str):
+    def admit_with_sigs(self, new_docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"):
+        """:meth:`admit`, also returning the batch's checkpointed
+        signatures ``(id, sig)`` for :meth:`persist_admitted`."""
         spark = new_docs.sparkSession
         sigs_new = self._sigs(new_docs, text_col, id_col).localCheckpoint(eager=True)
         rows_per_band = self.num_hashes // self.bands

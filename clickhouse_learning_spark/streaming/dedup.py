@@ -82,11 +82,11 @@ def commit_batch(
     import copy
 
     def write(batch: DataFrame, stage) -> None:
-        admitted = index.admit(batch, text_col=text_col, id_col=id_col)
+        admitted, sigs = index.admit_with_sigs(batch, text_col=text_col, id_col=id_col)
         stage.written(admitted).write.parquet(stage.dir(sink_path))
         staged = copy.copy(index)
         staged.path = stage.dir(index.path)
-        staged.persist_admitted(admitted, text_col=text_col, id_col=id_col)
+        staged.persist_admitted(admitted, sigs, text_col=text_col, id_col=id_col)
 
     commit_epoch(checkpoint, epoch, batch, write,
                  merged=[index.path], keyed=[sink_path])

@@ -56,18 +56,26 @@ from dataclasses import replace
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from clickhouse_learning_spark.tables import data_files
+
 
 def _counter(df: DataFrame) -> tuple[DataFrame, Observation]:
     obs = Observation()
     return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
+def observed(obs: Observation) -> dict:
+    """``obs``'s metrics by name, once the observed frame has run.
+
+    AQE replaces a stage whose input proved empty at run time, observed
+    node included; the observation then holds an empty row, which
+    ``Observation.get`` cannot convert. Empty means no rows were seen,
+    and gives ``{}``."""
+    return obs.get if obs._jo.getRow().length() else {}
+
+
 def _rows(obs: Observation) -> int:
-    # AQE replaces a stage whose input proved empty at run time, observed
-    # node included; the observation then holds an empty row, which
-    # ``Observation.get`` cannot convert. Empty means no rows were seen.
-    row = obs._jo.getRow()
-    return row.getLong(0) if row.length() else 0
+    return observed(obs).get("n", 0)
 
 
 class Stage:
@@ -90,15 +98,6 @@ class Stage:
     def append(self, table, df: DataFrame) -> None:
         """Stage a ``Table.append`` of ``df`` (same writer, staged path)."""
         replace(table, path=self.dir(table.path)).append(self.written(df))
-
-
-def _data_files(root: str) -> list[str]:
-    """Data files under ``root``: no ``_SUCCESS``, no ``.crc`` sidecars."""
-    out = []
-    for d, dirs, names in os.walk(root):
-        dirs[:] = [n for n in dirs if not n.startswith(("_", "."))]
-        out += [os.path.join(d, n) for n in names if not n.startswith(("_", "."))]
-    return sorted(out)
 
 
 def _publish(plan: dict) -> None:
@@ -164,7 +163,7 @@ def _stage(manifest, checkpoint, epoch, batch, write, merged, keyed) -> None:
     files = [
         [src, os.path.join(dest[r], os.path.relpath(src, stage.dir(r)))]
         for r in dest if counts["rows_written"]
-        for src in _data_files(stage.dir(r))
+        for src in sorted(data_files(stage.dir(r)))
     ]
     os.makedirs(os.path.dirname(manifest), exist_ok=True)
     with open(manifest + ".tmp", "w") as f:

@@ -19,22 +19,70 @@ Maps MergeTree physical-layout knobs (SURVEY.md §1.3) to Spark/Parquet:
 from __future__ import annotations
 
 import datetime as dt
+import functools
+import operator
+import os
 import shutil
 from dataclasses import dataclass, field
 from pathlib import Path
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# Hive's directory name for a NULL (or empty-string) partition value
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+# the characters Spark percent-escapes in partition directory names
+# (ExternalCatalogUtils.escapePathName)
+_ESCAPED = frozenset('"#%\'*/:=?\\\x7f{[]^') | {chr(i) for i in range(1, 32)}
 
 
 def _as_date(v) -> dt.date:
-    """Partition value → date (directory-derived values may come back as
-    date or ISO string depending on inference)."""
+    """Partition value → date (listed values are ISO strings; a
+    timestamp partition lists as ``YYYY-MM-DD hh:mm:ss``)."""
     if isinstance(v, dt.datetime):
         return v.date()
     if isinstance(v, dt.date):
         return v
-    return dt.date.fromisoformat(str(v))
+    return dt.datetime.fromisoformat(str(v)).date()
+
+
+def expired(v, cutoff: dt.date) -> bool:
+    """Whether TTL partition value ``v`` lies before ``cutoff``; a NULL
+    day never expires."""
+    return v is not None and _as_date(v) < cutoff
+
+
+def partition_key(p) -> tuple:
+    """A partition given as a tuple (or a scalar for a 1-column key) →
+    the listing's key: each value as its string, NULL as None."""
+    t = p if isinstance(p, (tuple, list)) else (p,)
+    return tuple(None if v is None else str(v) for v in t)
+
+
+def _escape(v) -> str:
+    if v is None or v == "":
+        return _DEFAULT_PARTITION
+    return "".join(f"%{ord(c):02X}" if c in _ESCAPED else c for c in str(v))
+
+
+def _unescape(v: str) -> str | None:
+    return None if v == _DEFAULT_PARTITION else unquote(v)
+
+
+def data_files(root: str) -> dict[str, int]:
+    """Data file → size in bytes under ``root``. Names starting with
+    ``_`` or ``.`` are skipped, as Spark's file index skips them: staging
+    dirs, ``_SUCCESS``, ``.crc`` sidecars, Spark's own ``.spark-staging``."""
+    out = {}
+    for d, dirs, names in os.walk(root):
+        dirs[:] = [n for n in dirs if not n.startswith(("_", "."))]
+        for n in names:
+            if not n.startswith(("_", ".")):
+                p = os.path.join(d, n)
+                out[p] = os.path.getsize(p)
+    return out
 
 
 @dataclass
@@ -74,14 +122,28 @@ class Table:
     codec: str | None = None
 
     # -- read ------------------------------------------------------------------
-    def read(self, spark: SparkSession) -> DataFrame:
+    def read(self, spark: SparkSession, partitions: list | None = None) -> DataFrame:
+        """The table, or only ``partitions`` (existing ones; tuples, or
+        scalars for a 1-column key): then Spark lists just their
+        directories and merges just their files' schemas, so the read's
+        fixed cost does not grow with the rest of the table."""
         # mergeSchema: files written before an ALTER ADD COLUMN lack the
         # new column; merged reads surface it as NULL (= neutral state,
         # SURVEY D5/D6). Footer-merge cost is per-file metadata only.
         reader = spark.read.option("mergeSchema", "true")
         if self.schema is not None:
             reader = reader.schema(self.schema)
-        return reader.parquet(self.path)
+        if partitions is None:
+            return reader.parquet(self.path)
+        return reader.option("basePath", self.path).parquet(
+            *map(self.partition_dir, partitions)
+        )
+
+    def partition_dir(self, p) -> str:
+        """The directory of partition ``p`` (Hive-escaped values)."""
+        return os.path.join(self.path, *(
+            f"{c}={_escape(v)}" for c, v in zip(self.partition_by, partition_key(p))
+        ))
 
     # -- write -----------------------------------------------------------------
     def _sorted(self, df: DataFrame) -> DataFrame:
@@ -159,12 +221,25 @@ class Table:
         shutil.rmtree(self.path, ignore_errors=True)
         Path(staging).rename(self.path)
 
-    def partition_values(self, spark: SparkSession) -> list[tuple]:
-        """Distinct partition-key tuples, from the directory listing only
-        (a metadata scan — no data files read; the projected columns are
-        all partition columns, so the parquet scan schema is empty)."""
-        rows = self.read(spark).select(*self.partition_by).distinct().collect()
-        return [tuple(r) for r in rows]
+    def files(self) -> dict[tuple, dict[str, int]]:
+        """The ``system.parts`` listing: partition → {data file: bytes},
+        from the directory tree alone — no Spark job, no file opened.
+        Keys are :func:`partition_key` tuples over every level of
+        ``partition_by`` (Hive escapes undone, the default partition as
+        None); an unpartitioned table lists under ``()``."""
+        out: dict[tuple, dict[str, int]] = {}
+        for p, size in data_files(self.path).items():
+            dirs = os.path.relpath(p, self.path).split(os.sep)[:-1]
+            key = tuple(_unescape(d.partition("=")[2]) for d in dirs)
+            out.setdefault(key, {})[p] = size
+        return out
+
+    def where_partition(self, p) -> Column:
+        """Filter selecting the rows of partition ``p`` (a tuple, or a
+        scalar for a 1-column key)."""
+        return functools.reduce(operator.and_, [
+            F.col(c).eqNullSafe(v) for c, v in zip(self.partition_by, partition_key(p))
+        ], F.lit(True))
 
     def drop_partitions(self, spark: SparkSession, values: list) -> int:
         """``ALTER TABLE ... DROP PARTITION`` — remove whole partition
@@ -175,9 +250,7 @@ class Table:
         the number of directories removed."""
         dropped = 0
         for v in values:
-            t = v if isinstance(v, (tuple, list)) else (v,)
-            sub = "/".join(f"{c}={x}" for c, x in zip(self.partition_by, t))
-            p = Path(self.path, sub)
+            p = Path(self.partition_dir(v))
             if p.exists():
                 shutil.rmtree(p)
                 dropped += 1
@@ -278,43 +351,59 @@ class Table:
         """TTL retention (ods.action_001_dis.sql:21): drop whole
         partitions older than ``now - keep``. When the TTL column IS the
         (leading) partition column — the reference's layout — this is a
-        pure metadata operation: expired partition values come from the
-        directory listing and their directories are dropped; surviving
-        data is never read or rewritten. Falls back to a partition-pruned
+        pure metadata operation: expired partition values come from
+        :meth:`files` and their directories are dropped; surviving data
+        is never read or rewritten. Falls back to a partition-pruned
         row-level delete when the table is not partitioned by the TTL
-        column. Returns the number of partitions kept."""
+        column. Returns the number of distinct ``day_col`` values kept —
+        from the listing when ``day_col`` is a partition column."""
         cutoff = (now or dt.date.today()) - keep
         if self.partition_by and self.partition_by[0] == day_col:
-            idx = 0
-            expired = [
-                v
-                for v in self.partition_values(spark)
-                if _as_date(v[idx]) < cutoff
-            ]
-            self.drop_partitions(spark, expired)
+            self.drop_partitions(
+                spark, [p for p in self.files() if expired(p[0], cutoff)]
+            )
         else:
             self.delete_where(spark, F.col(day_col) < F.lit(cutoff))
+        if day_col in self.partition_by:
+            i = self.partition_by.index(day_col)
+            return len({p[i] for p in self.files()})
         return self.read(spark).select(day_col).distinct().count()
 
-    def stats(self, spark: SparkSession) -> DataFrame:
+    def stats(self, partitions: list) -> dict[tuple, dict]:
         """system.parts-style introspection (SURVEY S8;
-        data_rebalance.py:116-205): per-partition row and file counts —
-        the reconciliation invariant the reference's rebalancer checks
-        before/after moving parts (data_rebalance.py:192-198)."""
-        df = self.read(spark)
-        return (
-            df.select(*self.partition_by, F.input_file_name().alias("file"))
-            .groupBy(*self.partition_by)
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.count_distinct("file").alias("files"),
-            )
-        )
+        data_rebalance.py:116-205): partition → ``{"rows", "files",
+        "bytes"}`` — the reconciliation invariant the reference's
+        rebalancer checks before/after moving parts
+        (data_rebalance.py:192-198). Metadata only, like
+        ``system.parts``: the listing of ``partitions`` only (tuples,
+        or scalars for a 1-column key; absent ones report zeros) plus
+        each file's parquet footer row count; no Spark job, no data page
+        read."""
+        out = {}
+        for k in map(partition_key, partitions):
+            fs = data_files(self.partition_dir(k))
+            out[k] = {"rows": sum(pq.read_metadata(f).num_rows for f in fs),
+                      "files": len(fs), "bytes": sum(fs.values())}
+        return out
 
-    def compact(self, spark: SparkSession, target_files_per_partition: int = 1) -> None:
+    def compact(
+        self,
+        spark: SparkSession,
+        target_files_per_partition: int = 1,
+        partitions: list | None = None,
+    ) -> None:
         """Background-merge analog (OPTIMIZE TABLE FINAL,
         docs/物化视图的实战经验分享.md:954): coalesce small files per
-        partition and restore the sort key. Correctness never depends on
-        this — all readers merge-on-read."""
-        df = self.read(spark).repartition(target_files_per_partition, *self.partition_by)
-        self._rewrite(df)
+        partition and restore the sort key. ``partitions`` rewrites only
+        those partitions (dynamic partition overwrite); ``None`` rewrites
+        the whole table. Correctness never depends on this — all readers
+        merge-on-read."""
+        if partitions is not None and not partitions:
+            return
+        df = self.read(spark, partitions).repartition(
+            target_files_per_partition, *self.partition_by
+        )
+        if partitions is not None:
+            self.overwrite_partitions(df)
+        else:
+            self._rewrite(df)

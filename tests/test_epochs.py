@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_learning_spark.streaming import epochs as E
-from clickhouse_learning_spark.tables import Table
+from clickhouse_learning_spark.tables import Table, data_files
 
 EPOCH = 3
 
@@ -21,7 +21,7 @@ class Crash(Exception):
 
 
 def _data(root):
-    return set(E._data_files(root))
+    return set(data_files(root))
 
 
 def _stages(*roots):

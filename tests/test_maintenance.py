@@ -1,17 +1,73 @@
-"""Maintainer sweep: TTL + compaction with reconciliation; multi-arg
-uniq tuple hashing."""
+"""Maintainer sweep: TTL + compaction with reconciliation, its job
+budget, and the reconciliation failing closed; multi-arg uniq tuple
+hashing."""
 
 from __future__ import annotations
 
 import datetime as dt
+import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_learning_spark.functions.metrics import MetricSpec, uniq_tuple
 from clickhouse_learning_spark.maintenance import Maintainer
+from clickhouse_learning_spark.mv.engine import MaterializedView
 from clickhouse_learning_spark.mv.mainpage import mainpage_mv, prepare_events
+from clickhouse_learning_spark.tables import Table
 
 from .conftest import SF_SMOKE
+
+D0 = dt.date(2024, 1, 1)
+# Spark jobs of one sweep that compacts one partition: the schema merge
+# of the partition's footers, the merge's two shuffle stages, the write
+JOBS_PER_SWEEP = 4
+
+
+def _events(spark, days: int, n: int):
+    return spark.range(n).selectExpr(
+        f"date_add(DATE'{D0}', CAST(id % {days} AS INT)) AS day",
+        "CAST(id % 3 AS INT) AS hour",
+        f"element_at(array('A', 'B'), CAST(id DIV {days} % 2 AS INT) + 1) AS segment",
+        "element_at(array('view', 'click', 'signup', 'purchase', 'error'),"
+        " CAST(id % 5 AS INT) + 1) AS event_type",
+        "id % 50 AS uid",
+        "CAST(id % 13 AS DOUBLE) AS value",
+    )
+
+
+def _history(spark, path, days: int):
+    """A state table of ``days`` single-file days whose last day gets a
+    second part, and a Maintainer whose TTL expires the first day when
+    it sweeps at the returned ``now``."""
+    mv = mainpage_mv(str(path))
+    ev = _events(spark, days, 100 * days)
+    mv.append_batch(ev)
+    mv.append_batch(ev.filter(F.col("day") == F.lit(D0 + dt.timedelta(days=days - 1))))
+    m = Maintainer()
+    m.register(mv, ttl=dt.timedelta(days=days - 1))
+    return mv, m, D0 + dt.timedelta(days=days)
+
+
+def _traced_sweep(spark, m: Maintainer, now):
+    """``m.run_once`` under its own job group → (report, Spark jobs,
+    rows the jobs read from data files)."""
+    sc = spark.sparkContext
+    group = f"sweep-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        report = m.run_once(spark, now=now)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = list(tracker.getJobIdsForGroup(group))
+    store = sc._jsc.sc().statusStore()
+    read = sum(
+        store.lastStageAttempt(s).inputRecords()
+        for j in jobs for s in tracker.getJobInfo(j).stageIds
+    )
+    return report, len(jobs), read
 
 
 def test_maintainer_sweep(spark, tmp_path):
@@ -40,6 +96,71 @@ def test_maintainer_sweep(spark, tmp_path):
         map(str, mv.merge_query(spark, ["day"], ["event_cnt", "value_sum"]).collect())
     )
     assert answers_before == answers_after  # maintenance never changes answers
+
+
+def test_sweep_job_budget_flat_in_history(spark, tmp_path):
+    """A sweep that expires one day and compacts one runs the same
+    Spark jobs over 4 and over 40 days of compacted history, and reads
+    only the compacted partition's rows: no whole-table re-merge, count
+    or stats scan."""
+    seen = {}
+    for days in (4, 40):
+        mv, m, now = _history(spark, tmp_path / f"d{days}", days)
+        report, jobs, read = _traced_sweep(spark, m, now)
+        entry = report[mv.name]
+        assert entry["partitions_compacted"] == 1
+        assert entry["ttl_partitions_kept"] == days - 1
+        assert read == entry["state_rows_before"]
+        seen[days] = jobs
+    assert seen[4] == seen[40] <= JOBS_PER_SWEEP, seen
+
+
+def _drop_one_state_row(self, df):
+    """Table.overwrite_partitions writing all but one state row."""
+    lost = (F.col("hour") == 0) & (F.col("segment") == "A")
+    return _overwrite(self, df.filter(~lost))
+
+
+def _skew_one_value_sum(self, df, group_by):
+    """MaterializedView.merge_states adding 1 to one row's value_sum."""
+    out = _merge_states(self, df, group_by)
+    one = (F.col("hour") == 0) & (F.col("segment") == "A")
+    return out.withColumn("value_sum", F.col("value_sum") + F.when(one, 1).otherwise(0))
+
+
+def _ttl_rewriting_a_survivor(self, spark, keep, now=None, day_col="day"):
+    """Table.apply_ttl that also rewrites its oldest surviving partition
+    (one compacted file) with the same rows."""
+    kept = _apply_ttl(self, spark, keep, now=now, day_col=day_col)
+    oldest = min(self.files())
+    _overwrite(self, self.read(spark, [oldest]))
+    return kept
+
+
+_overwrite = Table.overwrite_partitions
+_merge_states = MaterializedView.merge_states
+_apply_ttl = Table.apply_ttl
+
+
+@pytest.mark.parametrize(
+    "cls, name, fault, message",
+    [
+        (Table, "overwrite_partitions", _drop_one_state_row,
+         "compaction wrote != published footer rows"),
+        (MaterializedView, "merge_states", _skew_one_value_sum,
+         "compaction changed additive totals"),
+        (Table, "apply_ttl", _ttl_rewriting_a_survivor,
+         "TTL kept an expired partition or changed a surviving one"),
+    ],
+    ids=["compaction_drops_a_row", "compaction_changes_value_sum",
+         "ttl_rewrites_a_survivor"],
+)
+def test_sweep_reconciliation_fails_closed(spark, tmp_path, monkeypatch,
+                                           cls, name, fault, message):
+    _, m, now = _history(spark, tmp_path / "state", 4)
+    monkeypatch.setattr(cls, name, fault)
+    with pytest.raises(AssertionError, match=message):
+        m.run_once(spark, now=now)
 
 
 def test_uniq_tuple_multi_arg(spark):

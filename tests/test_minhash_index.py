@@ -283,7 +283,7 @@ def test_commit_batch_duplicate_store_rows_are_harmless(
     # epoch protocol): the roll-forward publishes them a second time —
     # the worst duplicate-producing replay
     _crashed_commit(monkeypatch, _crash, idx, frames[1], 1, sink, ck)
-    idx.persist_admitted(idx.admit(frames[1]))
+    idx.persist_admitted(*idx.admit_with_sigs(frames[1]))
     commit_batch(idx, frames[1], 1, sink, ck)  # replay: re-appends rows
 
     # duplicates exist now…

@@ -150,3 +150,38 @@ def test_parse_mutation_update(spark, tmp_path):
     got = t.read(spark)
     assert got.filter("g = 3").count() == 0
     assert got.filter("g = 4").count() > 0
+
+
+def test_listing_equals_spark_file_view(spark, tmp_path):
+    """Table.files is Spark's own view of the table, with no job: the
+    partitions and files ``input_file_name()`` reports, across a
+    two-level key with a NULL value and an escaped string value, while
+    a staged ``_stage-`` dir (hidden from readers) sits in the root.
+    drop_partitions accepts its keys as they are."""
+    from dataclasses import replace
+    from urllib.parse import unquote, urlparse
+
+    df = spark.createDataFrame(
+        [("2024-01-01", "a b/c:d=%e", 1), ("2024-01-01", None, 2),
+         ("2024-01-02", "x", 3), ("2024-01-02", "ü#?", 4)],
+        "day string, s string, v int",
+    ).withColumn("day", F.to_date("day"))
+    t = Table(str(tmp_path / "t"), ("day", "s"))
+    t.append(df)
+    t.append(df.filter("v > 2"))
+    replace(t, path=os.path.join(t.path, "_stage-0-1")).append(df)
+
+    seen: dict = {}
+    for r in t.read(spark).select("day", "s", F.input_file_name()).collect():
+        key = (str(r[0]), r[1])
+        seen.setdefault(key, set()).add(unquote(urlparse(r[2]).path))
+    listed = {k: set(fs) for k, fs in t.files().items()}
+    assert listed == seen
+    assert {k: len(fs) for k, fs in listed.items()} == {
+        ("2024-01-01", "a b/c:d=%e"): 1, ("2024-01-01", None): 1,
+        ("2024-01-02", "x"): 2, ("2024-01-02", "ü#?"): 2,
+    }
+    assert all(os.path.getsize(f) == n for fs in t.files().values() for f, n in fs.items())
+
+    assert t.drop_partitions(spark, [("2024-01-01", "a b/c:d=%e"), ("2024-01-01", None)]) == 2
+    assert sorted(r.v for r in t.read(spark).collect()) == [3, 3, 4, 4]
