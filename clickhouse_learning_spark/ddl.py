@@ -268,18 +268,6 @@ class TableSpec:
             out = out.withColumn(name, F.expr(expr))
         return out
 
-    def apply_ttl(self, spark, now: dt.date | None = None) -> int | None:
-        """Run the declared TTL against the physical table (no-op when
-        the DDL had none)."""
-        if self.ttl is None:
-            return None
-        col = self.ttl_column or (self.partition_by[0] if self.partition_by else "day")
-        raise NotImplementedError(
-            "call Table.apply_ttl(spark, keep=spec.ttl, day_col=...) on the "
-            f"instantiated table (ttl column {col!r}) — TableSpec does not "
-            "hold a path"
-        )
-
 
 @dataclass(frozen=True)
 class MutationSpec:
@@ -322,8 +310,9 @@ def parse_optimize(sql: str) -> tuple[str, str | None]:
     reference's manual merge trigger, docs/物化视图的实战经验分享.md:954).
     Returns ``(qualified_table, partition_or_None)``; execute with
     ``MaterializedView.compact(spark, partitions=[p] if p else None)``
-    (or ``Table.compact`` for non-aggregating tables). PARTITION-scoped
-    is the 100 TB form — the whole-table FINAL is for small state
+    (or ``Table.compact``, as ``Deployment.execute`` does). Both rewrite
+    only the named partition, through ``Table.rewrite``; PARTITION-
+    scoped is the 100 TB form — the whole-table FINAL is for small
     tables."""
     s = _strip_comments(sql).strip().rstrip(";")
     m = re.match(
@@ -1124,7 +1113,7 @@ class Deployment:
         if re.match(r"optimize\s+table", s, re.I):
             name, part = parse_optimize(s)
             table = self.tables[self._resolve(name)]
-            return table.compact(spark)
+            return len(table.compact(spark, None if part is None else [part]))
         tm = re.match(
             r"truncate\s+table\s+(?:if\s+exists\s+)?([\w.]+)", s, re.I
         )

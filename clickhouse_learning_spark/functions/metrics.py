@@ -941,10 +941,6 @@ def theta_and(a: Column, b: Column) -> Column:
     return F.theta_intersection(a, b)
 
 
-def theta_or(a: Column, b: Column) -> Column:
-    return F.theta_union(a, b)
-
-
 def theta_cardinality(a: Column) -> Column:
     return F.coalesce(F.round(F.theta_sketch_estimate(a)).cast("long"), F.lit(0))
 

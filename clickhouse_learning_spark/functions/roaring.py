@@ -46,7 +46,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, BinaryType, LongType
+from pyspark.sql.types import BinaryType, LongType
 
 _MAGIC = b"RB1\x00"
 _HDR = len(_MAGIC) + 4 + 8  # magic + uint32 n_containers + uint64 cardinality
@@ -261,12 +261,6 @@ def union_bytes(parts) -> bytes | None:
 def roaring_from_array(s: pd.Series) -> pd.Series:
     """array<long> id-set column → roaring bytes (NULL-preserving)."""
     return s.map(lambda a: None if a is None else serialize(a))
-
-
-@pandas_udf(ArrayType(LongType()))
-def roaring_to_array(s: pd.Series) -> pd.Series:
-    """Roaring bytes → sorted array<long> (interop / tests)."""
-    return s.map(lambda b: None if b is None else deserialize(b).astype(np.int64).tolist())
 
 
 @pandas_udf(BinaryType())

@@ -25,21 +25,6 @@ def round_half_away_long(v: Column) -> Column:
     return F.when(v >= 0, v + F.lit(0.5)).otherwise(v - F.lit(0.5)).cast("long")
 
 
-def to_date_(ts: str | Column) -> Column:
-    """F1 — ClickHouse ``toDate(second)``
-    (/root/reference/scripts/sql/ods.action_001_dis.sql:3)."""
-    return F.to_date(ts)
-
-
-def to_start_of_hour(ts: str | Column) -> Column:
-    """F2 — ``toStartOfHour(second)`` (ods.action_001_dis.sql:4)."""
-    return F.date_trunc("hour", ts)
-
-
-def to_start_of_day(ts: str | Column) -> Column:
-    return F.date_trunc("day", ts)
-
-
 def now() -> Column:
     """F3 — ``now()`` (ods.action_001_dis.sql:6)."""
     return F.current_timestamp()
@@ -50,16 +35,6 @@ def today() -> Column:
     return F.current_date()
 
 
-def to_uint64(c: str | Column) -> Column:
-    """F4 — ``toUInt64(x)`` (dim.dict_user_dim.sql:24). LongType per SURVEY §1.2."""
-    return F.col(c).cast("long") if isinstance(c, str) else c.cast("long")
-
-
-def to_string(c: str | Column) -> Column:
-    """F4 — ``toString(x)`` (data_rebalance.py:137)."""
-    return F.col(c).cast("string") if isinstance(c, str) else c.cast("string")
-
-
 def epoch_seconds(c: str | Column) -> Column:
     """Whole epoch seconds (floor) for TIMESTAMP *or* TIMESTAMP_NTZ
     columns. Spark 4 forbids a direct timestamp→BIGINT cast and
@@ -68,30 +43,6 @@ def epoch_seconds(c: str | Column) -> Column:
     session.py, so this matches DuckDB's ``floor(epoch(ts))``)."""
     c = F.col(c) if isinstance(c, str) else c
     return F.unix_seconds(F.to_utc_timestamp(c, "UTC"))
-
-
-def int_div_ms_to_s(c: str | Column) -> Column:
-    """F5 — ``toUInt64(show_time/1000)`` (dwm.mainpage_stat_mv_dis.sql:50):
-    float division wrapped back to integer seconds."""
-    c = F.col(c) if isinstance(c, str) else c
-    return F.floor(c / 1000).cast("long")
-
-
-def parse_datetime_best_effort_or_zero(c: str | Column) -> Column:
-    """F8 — ``parseDateTimeBestEffortOrZero(toString(p))``
-    (data_rebalance.py:137,149): lenient parse, epoch on failure."""
-    c = F.col(c) if isinstance(c, str) else c
-    return F.coalesce(
-        F.try_to_timestamp(c.cast("string")),
-        F.try_to_timestamp(c.cast("string"), F.lit("yyyyMMdd")),
-        F.to_timestamp(F.lit("1970-01-01 00:00:00")),
-    )
-
-
-def array_join_structs(*rows: Column) -> Column:
-    """F12 — ``ARRAY JOIN`` over tuple literals
-    (docs/物化视图的实战经验分享.md:345): build an array<struct> to explode."""
-    return F.array(*rows)
 
 
 def rand_shard() -> Column:

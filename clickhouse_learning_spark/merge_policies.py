@@ -1,7 +1,7 @@
 """MergeTree-family merge policies beyond AggregatingMergeTree.
 
 The reference uses AggregatingMergeTree (mv/engine.py is that, in
-full); the other two MergeTree merge semantics every ClickHouse
+full); the other MergeTree merge semantics every ClickHouse
 deployment leans on map onto the same append-only /
 merge-on-read design:
 
@@ -14,11 +14,14 @@ merge-on-read design:
   the FINAL-correct semantics, always.
 - **SummingMergeTree** — merges sum the numeric columns per sort key.
   :func:`summing_read` / :func:`compact_summing`.
+- **CollapsingMergeTree(sign)** — merges cancel +1/−1 row pairs per
+  sort key. :func:`collapsing_read` / :func:`compact_collapsing`.
 
-Both are one hash shuffle on the sort key; at 100 TB compaction runs
-partition-scoped (pass the pre-filtered frame or use
-Table.overwrite_partitions on the result) just like the MV engine's
-partition-scoped compact.
+Each policy is one frame function (:func:`replacing`, :func:`summing`,
+:func:`collapsing`), a hash shuffle on the sort key. ``*_read`` applies
+it to the table; ``compact_*`` hands it to :meth:`Table.rewrite`, which
+writes the result back partition by partition and drops the partitions
+it empties — the same path the MV engine's compact takes.
 """
 
 from __future__ import annotations
@@ -32,12 +35,7 @@ from pyspark.sql.window import Window
 from clickhouse_learning_spark.tables import Table
 
 
-def replacing_read(
-    table: Table,
-    spark: SparkSession,
-    key_cols: Sequence[str],
-    version_col: str | None,
-) -> DataFrame:
+def replacing(df: DataFrame, key_cols: Sequence[str], version_col: str | None) -> DataFrame:
     """ReplacingMergeTree(ver) FINAL semantics: latest version per sort
     key, ties broken deterministically (ClickHouse keeps the last
     physical row of the merge — nondeterministic; here the max-version
@@ -46,7 +44,6 @@ def replacing_read(
     ``ReplacingMergeTree()`` form: no declared version, so the
     deterministic-survivor rule alone picks one row per sort key (the
     largest remaining-column tuple)."""
-    df = table.read(spark)
     others = [c for c in df.columns if c not in key_cols and c != version_col]
     lead = [F.col(version_col).desc()] if version_col is not None else []
     order = [*lead, *[F.col(c).desc() for c in others]]
@@ -62,6 +59,16 @@ def replacing_read(
     )
 
 
+def replacing_read(
+    table: Table,
+    spark: SparkSession,
+    key_cols: Sequence[str],
+    version_col: str | None,
+) -> DataFrame:
+    """:func:`replacing` over the whole table (merge-on-read)."""
+    return replacing(table.read(spark), key_cols, version_col)
+
+
 def compact_replacing(
     table: Table,
     spark: SparkSession,
@@ -69,7 +76,19 @@ def compact_replacing(
     version_col: str,
 ) -> None:
     """Persist the replacing collapse (OPTIMIZE FINAL analog)."""
-    table._rewrite(replacing_read(table, spark, key_cols, version_col))
+    table.rewrite(spark, None, lambda df: replacing(df, key_cols, version_col))
+
+
+def summing(df: DataFrame, key_cols: Sequence[str], sum_cols: Sequence[str]) -> DataFrame:
+    """SummingMergeTree semantics: numeric columns summed per sort key.
+    Columns outside ``key_cols``/``sum_cols`` take ClickHouse's rule
+    ("an arbitrary value from the merged rows") — deterministically the
+    max, so results are engine-stable."""
+    others = [c for c in df.columns if c not in key_cols and c not in sum_cols]
+    aggs = [F.sum(c).alias(c) for c in sum_cols] + [
+        F.max(c).alias(c) for c in others
+    ]
+    return df.groupBy(*key_cols).agg(*aggs).select(*df.columns)
 
 
 def summing_read(
@@ -78,16 +97,8 @@ def summing_read(
     key_cols: Sequence[str],
     sum_cols: Sequence[str],
 ) -> DataFrame:
-    """SummingMergeTree semantics: numeric columns summed per sort key.
-    Columns outside ``key_cols``/``sum_cols`` take ClickHouse's rule
-    ("an arbitrary value from the merged rows") — deterministically the
-    max, so results are engine-stable."""
-    df = table.read(spark)
-    others = [c for c in df.columns if c not in key_cols and c not in sum_cols]
-    aggs = [F.sum(c).alias(c) for c in sum_cols] + [
-        F.max(c).alias(c) for c in others
-    ]
-    return df.groupBy(*key_cols).agg(*aggs).select(*df.columns)
+    """:func:`summing` over the whole table (merge-on-read)."""
+    return summing(table.read(spark), key_cols, sum_cols)
 
 
 def compact_summing(
@@ -96,15 +107,10 @@ def compact_summing(
     key_cols: Sequence[str],
     sum_cols: Sequence[str],
 ) -> None:
-    table._rewrite(summing_read(table, spark, key_cols, sum_cols))
+    table.rewrite(spark, None, lambda df: summing(df, key_cols, sum_cols))
 
 
-def collapsing_read(
-    table: Table,
-    spark: SparkSession,
-    key_cols: Sequence[str],
-    sign_col: str = "sign",
-) -> DataFrame:
+def collapsing(df: DataFrame, key_cols: Sequence[str], sign_col: str = "sign") -> DataFrame:
     """CollapsingMergeTree semantics: +1 rows assert a state, −1 rows
     cancel the previously-asserted one; a key whose signs balance out
     disappears, otherwise the surviving state row remains. Without a
@@ -112,7 +118,6 @@ def collapsing_read(
     here it is the maximum remaining-column tuple among the +1 rows
     (deterministic — use VersionedCollapsing/Replacing if you need
     explicit ordering)."""
-    df = table.read(spark)
     others = [c for c in df.columns if c not in key_cols and c != sign_col]
     w = Window.partitionBy(*key_cols).orderBy(*[F.col(c).desc() for c in others])
     balance = Window.partitionBy(*key_cols)
@@ -125,10 +130,20 @@ def collapsing_read(
     )
 
 
+def collapsing_read(
+    table: Table,
+    spark: SparkSession,
+    key_cols: Sequence[str],
+    sign_col: str = "sign",
+) -> DataFrame:
+    """:func:`collapsing` over the whole table (merge-on-read)."""
+    return collapsing(table.read(spark), key_cols, sign_col)
+
+
 def compact_collapsing(
     table: Table,
     spark: SparkSession,
     key_cols: Sequence[str],
     sign_col: str = "sign",
 ) -> None:
-    table._rewrite(collapsing_read(table, spark, key_cols, sign_col))
+    table.rewrite(spark, None, lambda df: collapsing(df, key_cols, sign_col))

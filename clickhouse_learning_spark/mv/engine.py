@@ -29,15 +29,19 @@ parallelize across the cluster.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from clickhouse_learning_spark.functions.metrics import MetricSpec
+from clickhouse_learning_spark.functions.metrics import (
+    MetricSpec,
+    compress_quantile_states,
+    compress_summap_states,
+    compress_topk_states,
+)
 from clickhouse_learning_spark.streaming.epochs import observed
-from clickhouse_learning_spark.tables import Table, expired, partition_key
+from clickhouse_learning_spark.tables import Table, expired
 
 
 @dataclass
@@ -97,19 +101,22 @@ class MaterializedView:
 
     # -- maintenance ---------------------------------------------------------------
     def compact(
-        self, spark: SparkSession, partitions: list | None = None
+        self, spark: SparkSession, partitions: list | None = None,
+        group: list[str] | None = None,
     ) -> dict[tuple, tuple[dict, dict]]:
         """Re-merge equal-key rows in storage (background merge / OPTIMIZE
-        FINAL). Per-partition re-aggregation; pure space optimization.
+        FINAL): a :meth:`Table.rewrite` of ``partitions`` (tuples, or
+        scalars for a 1-column key; ``None`` = every partition) —
+        ClickHouse's ``OPTIMIZE TABLE … PARTITION p``. At 100 TB this is
+        the only sane form: merges are per-partition (recent days churn,
+        history is already merged), so it reads and rewrites ONLY the
+        named partitions. Pick candidates with
+        :meth:`partitions_needing_compaction`. The merge re-sums and
+        re-truncates the value→count states (quantile, topk, summap).
 
-        ``partitions``: storage partition values (tuples, or scalars for
-        a 1-column key) to compact — ClickHouse's ``OPTIMIZE TABLE …
-        PARTITION p``. At 100 TB this is the only sane form: merges are
-        per-partition (recent days churn, history is already merged),
-        so the sweep reads and rewrites ONLY the named partitions via
-        dynamic partition overwrite. ``None`` = whole table (small
-        state tables / tests). Pick candidates with
-        :meth:`partitions_needing_compaction`.
+        ``group``: the dims to merge at (default: every dim), which must
+        include the partition columns; the other dims are written as
+        typed NULL. :func:`rollup_ttl` passes its coarse dims.
 
         Returns, per compacted partition (keyed as in
         :meth:`Table.files`), the totals seen entering the merge and
@@ -121,72 +128,52 @@ class MaterializedView:
         Guard: refuses to run from a view definition older than the
         stored schema — compacting with a stale metric set would project
         away columns added by with_metric (data loss)."""
-        if partitions is None:
-            stored = self.storage.read(spark)
-            parts = list(self.storage.files())
-        else:
-            parts = [
-                p for p in map(partition_key, partitions)
-                if os.path.isdir(self.storage.partition_dir(p))
-            ]
-            if not parts:
-                return {}
-            stored = self.storage.read(spark, parts)
-        known = set(self.dims) | {m.name for m in self.metrics}
-        unknown = [c for c in stored.columns if c not in known]
-        if unknown:
-            raise ValueError(
-                f"{self.name}: storage has columns {unknown} not in this view "
-                "definition — compact with the newest (evolved) view to avoid "
-                "dropping them"
-            )
-        # files written before with_metric / with_dimension lack the new
-        # column; the rewrite keeps lacking it, which readers see as the
-        # NULL (neutral) state, as before
-        view = replace(
-            self,
-            dims=tuple(d for d in self.dims if d in stored.columns),
-            metrics=tuple(m for m in self.metrics if m.name in stored.columns),
-        )
-        dims = list(view.dims)
-        stored, seen_in = view._observe_totals(stored, parts)
-        merged = view.merge_states(stored, dims)
-        qnames = [
-            m.name for m in view.metrics if m.kind in ("quantile", "quantile_sketch")
-        ]
-        if qnames:
-            # quantile states also deduplicate by value here, shrinking
-            # them to O(distinct values) — O(occupied buckets) for the
-            # sketch kind (metrics.compress_quantile_states)
-            from clickhouse_learning_spark.functions.metrics import (
-                compress_quantile_states,
-            )
+        parts = list(self.storage.files(partitions))
+        seen = {}
 
-            merged = compress_quantile_states(merged, dims, qnames)
-        tspecs = [m for m in view.metrics if m.kind == "topk"]
-        if tspecs:
-            # topk states re-sum per value and re-truncate to reserve
-            from clickhouse_learning_spark.functions.metrics import (
-                compress_topk_states,
+        def merge(stored: DataFrame) -> DataFrame:
+            known = set(self.dims) | {m.name for m in self.metrics}
+            unknown = [c for c in stored.columns if c not in known]
+            if unknown:
+                raise ValueError(
+                    f"{self.name}: storage has columns {unknown} not in this view "
+                    "definition — compact with the newest (evolved) view to avoid "
+                    "dropping them"
+                )
+            # files written before with_metric / with_dimension lack the
+            # new column; the rewrite keeps lacking it, which readers see
+            # as the NULL (neutral) state, as before
+            view = replace(
+                self,
+                dims=tuple(d for d in self.dims if d in stored.columns),
+                metrics=tuple(m for m in self.metrics if m.name in stored.columns),
             )
+            keys = [d for d in (self.dims if group is None else group)
+                    if d in stored.columns]
+            stored, seen["in"] = view._observe_totals(stored, parts)
+            merged = view.merge_states(stored, keys)
+            qnames = [m.name for m in view.metrics
+                      if m.kind in ("quantile", "quantile_sketch")]
+            if qnames:
+                # quantile states deduplicate by value, shrinking them to
+                # O(distinct values) — O(occupied buckets) for the sketch
+                merged = compress_quantile_states(merged, keys, qnames)
+            if tspecs := [m for m in view.metrics if m.kind == "topk"]:
+                # topk states re-sum per value and re-truncate to reserve
+                merged = compress_topk_states(merged, keys, tspecs)
+            if mspecs := [m for m in view.metrics if m.kind == "summap"]:
+                # summap states re-sum per key (one entry per distinct key)
+                merged = compress_summap_states(merged, keys, mspecs)
+            types = dict(stored.dtypes)
+            merged = merged.withColumns({
+                d: F.lit(None).cast(types[d]) for d in view.dims if d not in keys
+            }).select(*stored.columns)
+            merged, seen["out"] = view._observe_totals(merged, parts)
+            return merged
 
-            merged = compress_topk_states(merged, dims, tspecs)
-        mspecs = [m for m in view.metrics if m.kind == "summap"]
-        if mspecs:
-            # summap states re-sum per key (one entry per distinct key)
-            from clickhouse_learning_spark.functions.metrics import (
-                compress_summap_states,
-            )
-
-            merged = compress_summap_states(merged, dims, mspecs)
-        merged, seen_out = view._observe_totals(merged, parts)
-        if partitions is None:
-            self.storage._rewrite(merged)
-        else:
-            # dynamic overwrite: only the partitions present in `merged`
-            # (= exactly the named ones) are replaced
-            self.storage.overwrite_partitions(merged)
-        got_in, got_out = seen_in(), seen_out()
+        if not self.storage.rewrite(spark, parts, merge):
+            return {}
+        got_in, got_out = seen["in"](), seen["out"]()
         return {p: (got_in[p], got_out[p]) for p in parts}
 
     def _observe_totals(self, df: DataFrame, parts: list[tuple]):
@@ -269,13 +256,11 @@ def rollup_ttl(
     day_col: str = "day",
 ) -> int:
     """ClickHouse's ``TTL … GROUP BY k SET v = …`` — age-based ROLLUP
-    instead of deletion: state partitions older than ``now − keep``
-    are re-aggregated at ``coarse_dims`` (dropping the finer
-    dimensions' detail) and rewritten in place, so history keeps its
-    aggregate truth at a fraction of the rows. Recent partitions are
-    untouched — the sweep reads and rewrites ONLY expired partitions
-    (dynamic partition overwrite), the same scoping rule as
-    partition-scoped compaction.
+    instead of deletion: the state partitions older than ``now − keep``
+    are compacted at ``coarse_dims`` (``mv.compact(…, group=…)``),
+    dropping the finer dimensions' detail, so history keeps its
+    aggregate truth at a fraction of the rows. Only the expired
+    partitions are read and rewritten; recent ones are untouched.
 
     The dropped fine dimensions are retained as columns with NULL (the
     schema stays stable for readers; NULL = the 'rolled-up' marker,
@@ -290,16 +275,5 @@ def rollup_ttl(
     cutoff = (now or _dt.date.today()) - keep
     i = mv.storage.partition_by.index(day_col)
     parts = [p for p in mv.storage.files() if expired(p[i], cutoff)]
-    if not parts:
-        return 0
-    stored = mv.storage.read(spark)
-    old = stored.filter(F.col(day_col) < F.lit(cutoff))
     group = coarse_dims if day_col in coarse_dims else [day_col, *coarse_dims]
-    merged = mv.merge_states(old, group)
-    # keep the schema stable: dropped fine dims come back as typed NULL
-    types = dict(stored.dtypes)
-    fine = [d for d in mv.dims if d not in group]
-    for d in fine:
-        merged = merged.withColumn(d, F.lit(None).cast(types[d]))
-    mv.storage.overwrite_partitions(merged.select(*stored.columns))
-    return len(parts)
+    return len(mv.compact(spark, parts, group=group))

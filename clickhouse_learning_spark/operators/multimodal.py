@@ -69,15 +69,6 @@ MEDIA_SCHEMA = T.StructType(
 _MAGIC = b"FIMG"  # legacy fake image header (kept for old fixtures)
 
 
-def fake_image(media_id: int, width: int, height: int) -> bytes:
-    """Deterministic fake payload: header + pseudo-pixel bytes derived
-    from media_id. Stands in for a real JPEG in tests."""
-    header = _MAGIC + struct.pack(">II", width, height)
-    n = min(width * height, 256)
-    body = bytes(((media_id * 2654435761 + i * 40503) & 0xFF) for i in range(n))
-    return header + body
-
-
 def ppm_image(media_id: int, width: int, height: int) -> bytes:
     """A VALID binary PPM (P6) image with deterministic pixels derived
     from media_id — a real uncompressed format any image tool opens."""

@@ -25,7 +25,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from clickhouse_learning_spark.operators.similarity import train_centroids
@@ -61,15 +61,6 @@ def train_pq(
         )
         books.append([[round(float(x), 6) for x in c] for c in cents])
     return books
-
-
-def _sq_dist(a: Column, lit_vec: list[float]) -> Column:
-    arr = F.array(*[F.lit(float(x)) for x in lit_vec])
-    return F.aggregate(
-        F.zip_with(a, arr, lambda p, q: (p - q) * (p - q)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def encode_pq(

@@ -25,7 +25,7 @@ problem, same as any hot key.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -58,13 +58,3 @@ def point_in_interval_join(
         F.col(point_col).between(F.col(start_col), F.col(end_col))
     )
     return joined.drop("_rb")
-
-
-def overlap_ratio(intervals: DataFrame, start_col: str, end_col: str, bucket_width: int) -> Column:
-    """Diagnostic: average buckets per interval at this width (the
-    explode fan-out factor — keep it single-digit)."""
-    return F.avg(
-        F.floor(F.col(end_col) / F.lit(bucket_width))
-        - F.floor(F.col(start_col) / F.lit(bucket_width))
-        + 1
-    )

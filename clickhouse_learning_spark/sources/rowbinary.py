@@ -38,7 +38,6 @@ the repo-wide documented stand-in for CH's unsigned top half.
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import re
 import struct
@@ -545,19 +544,3 @@ def write_rowbinary(
 
     files = df.rdd.mapPartitions(write_part).collect()
     return len(files)
-
-
-def read_rowbinary_local(path_glob: str):
-    """Driver-side convenience for tests/tools: concatenated rows of
-    every matching file; returns (names, types, rows)."""
-    names = types = None
-    rows = []
-    for p in sorted(_glob.glob(path_glob)):
-        with open(p, "rb") as f:
-            n, t, r = parse_rowbinary(f.read())
-        if names is None:
-            names, types = n, t
-        elif t != types:
-            raise ValueError("mixed schemas in RowBinary directory")
-        rows.extend(r)
-    return names, types, rows

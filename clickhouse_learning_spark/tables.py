@@ -14,6 +14,10 @@ Maps MergeTree physical-layout knobs (SURVEY.md §1.3) to Spark/Parquet:
   :meth:`Table.apply_ttl` retention job.
 - ``DROP PARTITION`` + reinsert idempotent loads
   (make_user_dim_info_toch.py:40-63) → dynamic partition overwrite.
+- Part rewrites — background merges, ``OPTIMIZE … PARTITION``,
+  ``ALTER … DELETE/UPDATE`` mutations, ``TTL … GROUP BY`` rollups →
+  :meth:`Table.rewrite`, the one path that reads stored partitions,
+  transforms them and writes them back.
 """
 
 from __future__ import annotations
@@ -55,10 +59,14 @@ def expired(v, cutoff: dt.date) -> bool:
 
 
 def partition_key(p) -> tuple:
-    """A partition given as a tuple (or a scalar for a 1-column key) →
-    the listing's key: each value as its string, NULL as None."""
+    """A partition given as a tuple (or a scalar for a 1-column key),
+    e.g. a collected row → the listing's key: each value as the string
+    Spark names its directory with, NULL as None."""
     t = p if isinstance(p, (tuple, list)) else (p,)
-    return tuple(None if v is None else str(v) for v in t)
+    return tuple(
+        None if v is None else str(v).lower() if isinstance(v, bool) else str(v)
+        for v in t
+    )
 
 
 def _escape(v) -> str:
@@ -93,16 +101,6 @@ class Table:
     partition_by: tuple[str, ...] = ("day",)
     sort_key: tuple[str, ...] = ()
     schema: object | None = None  # optional StructType pin for reads
-    # max files per partition directory per write. Default 1 = the
-    # MergeTree "one part per insert" analog: without this, every write
-    # fans each upstream task across every partition dir (32 shuffle
-    # partitions × 30 days ≈ 960 KB-sized files per append — measured
-    # 2-3× slower on both the write and every later read). Raise for
-    # huge raw-log appends where one task per partition value would
-    # bottleneck the write: rows then spread over a deterministic
-    # row-hash salt (NOT rand() — nondeterministic partitioning
-    # duplicates/drops rows on stage retry).
-    files_per_partition: int = 1
     # ClickHouse skip-index analog (`INDEX x TYPE bloom_filter`): write
     # parquet bloom filters for these columns. Point-lookup filters on
     # them then skip whole row groups whose bloom excludes the value —
@@ -147,18 +145,14 @@ class Table:
 
     # -- write -----------------------------------------------------------------
     def _sorted(self, df: DataFrame) -> DataFrame:
-        """Co-locate each output partition's rows (file-count control),
-        then cluster by sort key for row-group min/max skipping."""
-        keys = [F.col(c) for c in self.partition_by]
-        if self.files_per_partition > 1:
-            rest = [c for c in df.columns if c not in self.partition_by]
-            salt = F.pmod(
-                F.xxhash64(*[F.col(c) for c in rest]),
-                F.lit(self.files_per_partition),
-            )
-            keys.append(salt)
-        if keys:
-            df = df.repartition(*keys)
+        """Co-locate each output partition's rows — one file per
+        partition per write, the MergeTree "one part per insert" analog
+        (without it every task writes into every partition dir: 32
+        shuffle partitions × 30 days ≈ 960 KB-sized files per append,
+        measured 2-3× slower to write and to read) — then cluster by
+        sort key for row-group min/max skipping."""
+        if self.partition_by:
+            df = df.repartition(*self.partition_by)
         if self.sort_key:
             return df.sortWithinPartitions(*self.sort_key)
         return df
@@ -185,14 +179,6 @@ class Table:
             .parquet(self.path)
         )
 
-    def overwrite(self, df: DataFrame) -> None:
-        (
-            self._write(df)
-            .mode("overwrite")
-            .partitionBy(*self.partition_by)
-            .parquet(self.path)
-        )
-
     def overwrite_partitions(self, df: DataFrame) -> None:
         """Dynamic partition overwrite — only partitions present in ``df``
         are replaced (the reference's DROP PARTITION + insert idempotent
@@ -206,27 +192,59 @@ class Table:
         )
 
     # -- maintenance -------------------------------------------------------------
-    def _rewrite(self, df: DataFrame) -> None:
-        """Full rewrite via staging dir + atomic swap (Spark cannot overwrite
-        a path it is lazily reading). On HDFS/S3-committers this is the
-        same write-then-rename pattern; with a real table format it would
-        be a metadata-only commit."""
-        staging = self.path.rstrip("/") + "__staging"
-        (
-            self._write(df)
-            .mode("overwrite")
-            .partitionBy(*self.partition_by)
-            .parquet(staging)
-        )
-        shutil.rmtree(self.path, ignore_errors=True)
-        Path(staging).rename(self.path)
+    def rewrite(self, spark: SparkSession, partitions: list | None, fn) -> list[tuple]:
+        """Rewrite stored partitions: the one path by which stored data
+        changes, as ClickHouse rewrites the parts of the affected
+        partitions for a merge, ``OPTIMIZE … PARTITION``, a mutation
+        or a ``TTL … GROUP BY`` rollup alike.
 
-    def files(self) -> dict[tuple, dict[str, int]]:
+        Reads only ``partitions`` (tuples, or scalars for a 1-column
+        key; absent ones are skipped; ``None`` = every partition in
+        :meth:`files`), writes ``fn(rows)`` by dynamic partition
+        overwrite, then drops each named partition whose file set the
+        write left unchanged: ``fn`` kept none of its rows, and dynamic
+        overwrite cannot express an empty partition. ``fn`` sees every
+        named partition in one frame and must keep each row in its
+        partition. Other partitions are neither read nor touched, and
+        the table never disappears mid-rewrite.
+
+        An unpartitioned table is written to a staging dir and swapped
+        in, as Spark cannot overwrite a path it is reading. Returns the
+        partitions read, keyed as in :meth:`files`."""
+        before = self.files(partitions)
+        if not before:
+            return []
+        rows = fn(self.read(spark, list(before)))
+        if self.partition_by:
+            # read alone, the NULL partition types its column as VOID,
+            # which Spark cannot write; a NULL string names the same dir
+            self.overwrite_partitions(rows.withColumns({
+                c: F.col(c).cast("string") for c, t in rows.dtypes
+                if c in self.partition_by and t == "void"
+            }))
+            self.drop_partitions(spark, [
+                p for p, fs in before.items()
+                if data_files(self.partition_dir(p)).keys() == fs.keys()
+            ])
+        else:
+            staging, old = (self.path.rstrip("/") + x for x in ("__staging", "__old"))
+            self._write(rows).mode("overwrite").parquet(staging)
+            Path(self.path).rename(old)
+            Path(staging).rename(self.path)
+            shutil.rmtree(old)
+        return list(before)
+
+    def files(self, partitions: list | None = None) -> dict[tuple, dict[str, int]]:
         """The ``system.parts`` listing: partition → {data file: bytes},
         from the directory tree alone — no Spark job, no file opened.
         Keys are :func:`partition_key` tuples over every level of
         ``partition_by`` (Hive escapes undone, the default partition as
-        None); an unpartitioned table lists under ``()``."""
+        None); an unpartitioned table lists under ``()``. ``partitions``
+        lists only those partitions' directories; absent or empty ones
+        are left out."""
+        if partitions is not None:
+            return {k: fs for k in map(partition_key, partitions)
+                    if (fs := data_files(self.partition_dir(k)))}
         out: dict[tuple, dict[str, int]] = {}
         for p, size in data_files(self.path).items():
             dirs = os.path.relpath(p, self.path).split(os.sep)[:-1]
@@ -256,40 +274,22 @@ class Table:
                 dropped += 1
         return dropped
 
-    def delete_where(self, spark: SparkSession, cond) -> int:
-        """Row-level DELETE (the reference's mutation analog) that
-        rewrites ONLY partitions containing matching rows: at 100 TB a
-        one-day delete touches one day's files, never the table. The
-        surviving rows of affected partitions are re-written via dynamic
-        partition overwrite; partitions left empty are dropped
-        (dynamic overwrite cannot express an empty partition). Returns
-        the number of partitions rewritten or dropped."""
+    def _mutate(self, spark: SparkSession, cond, change) -> int:
+        """A mutation: :meth:`rewrite` with ``change(rows, cond)`` only
+        the partitions holding a row that matches ``cond`` — at 100 TB
+        a one-day mutation touches one day's files, never the table.
+        One Spark job finds them. Returns their number."""
         cond = F.expr(cond) if isinstance(cond, str) else cond
-        df = self.read(spark)
-        if not self.partition_by:
-            # unpartitioned table: the only shape is a full rewrite
-            if df.filter(cond).isEmpty():
-                return 0
-            self._rewrite(df.filter(~cond))
-            return 1
-        affected = [
-            tuple(r)
-            for r in df.filter(cond).select(*self.partition_by).distinct().collect()
-        ]
-        if not affected:
-            return 0
-        spark_vals = spark.createDataFrame(affected, list(self.partition_by))
-        in_affected = df.join(F.broadcast(spark_vals), list(self.partition_by), "left_semi")
-        survivors = in_affected.filter(~cond)
-        kept_parts = {
-            tuple(r)
-            for r in survivors.select(*self.partition_by).distinct().collect()
-        }
-        if kept_parts:
-            self.overwrite_partitions(survivors)
-        emptied = [v for v in affected if v not in kept_parts]
-        self.drop_partitions(spark, emptied)
-        return len(affected)
+        hit = self.read(spark).filter(cond).select(*self.partition_by).distinct()
+        parts = [partition_key(tuple(r)) for r in hit.collect()]
+        return len(self.rewrite(spark, parts, lambda df: change(df, cond)))
+
+    def delete_where(self, spark: SparkSession, cond) -> int:
+        """Row-level DELETE (``ALTER TABLE … DELETE WHERE cond``): a
+        :meth:`_mutate` that keeps the other rows of the partitions
+        holding a match; a partition left empty is dropped. Returns the
+        number of partitions rewritten or dropped."""
+        return self._mutate(spark, cond, lambda df, c: df.filter(~c))
 
     def truncate(self) -> int:
         """``TRUNCATE TABLE`` — filesystem-only removal of every data
@@ -302,9 +302,8 @@ class Table:
     def update_where(
         self, spark: SparkSession, assignments: dict[str, str], cond
     ) -> int:
-        """Row-level UPDATE (``ALTER TABLE … UPDATE c = e WHERE cond``)
-        that rewrites ONLY partitions containing matching rows — the
-        same 100 TB-scoped shape as :meth:`delete_where`. All
+        """Row-level UPDATE (``ALTER TABLE … UPDATE c = e WHERE cond``):
+        a :meth:`_mutate`, scoped like :meth:`delete_where`. All
         assignment expressions read the OLD row (ClickHouse mutation
         semantics: simultaneous assignment), enforced by building every
         new column from one projection of the input frame. Key columns
@@ -317,29 +316,10 @@ class Table:
                 f"cannot UPDATE key column(s) {sorted(bad)} — partition and "
                 "sort-key columns are immutable (re-insert instead)"
             )
-        cond = F.expr(cond) if isinstance(cond, str) else cond
-        df = self.read(spark)
-        new_cols = {
-            c: F.when(cond, F.expr(e)).otherwise(F.col(c))
-            for c, e in assignments.items()
-        }
-        if not self.partition_by:
-            if df.filter(cond).isEmpty():
-                return 0
-            self._rewrite(df.withColumns(new_cols))
-            return 1
-        affected = [
-            tuple(r)
-            for r in df.filter(cond).select(*self.partition_by).distinct().collect()
-        ]
-        if not affected:
-            return 0
-        vals = spark.createDataFrame(affected, list(self.partition_by))
-        in_affected = df.join(
-            F.broadcast(vals), list(self.partition_by), "left_semi"
-        )
-        self.overwrite_partitions(in_affected.withColumns(new_cols))
-        return len(affected)
+        return self._mutate(spark, cond, lambda df, c: df.withColumns({
+            col: F.when(c, F.expr(e)).otherwise(F.col(col))
+            for col, e in assignments.items()
+        }))
 
     def apply_ttl(
         self,
@@ -386,24 +366,13 @@ class Table:
                       "files": len(fs), "bytes": sum(fs.values())}
         return out
 
-    def compact(
-        self,
-        spark: SparkSession,
-        target_files_per_partition: int = 1,
-        partitions: list | None = None,
-    ) -> None:
-        """Background-merge analog (OPTIMIZE TABLE FINAL,
-        docs/物化视图的实战经验分享.md:954): coalesce small files per
-        partition and restore the sort key. ``partitions`` rewrites only
-        those partitions (dynamic partition overwrite); ``None`` rewrites
-        the whole table. Correctness never depends on this — all readers
-        merge-on-read."""
-        if partitions is not None and not partitions:
-            return
-        df = self.read(spark, partitions).repartition(
-            target_files_per_partition, *self.partition_by
+    def compact(self, spark: SparkSession, partitions: list | None = None) -> list[tuple]:
+        """Background-merge analog (``OPTIMIZE TABLE … [PARTITION p]
+        FINAL``, docs/物化视图的实战经验分享.md:954): :meth:`rewrite`
+        ``partitions`` (``None`` = all) to one file each in sort-key
+        order; an unpartitioned table becomes one file. Correctness
+        never depends on this — all readers merge-on-read. Returns the
+        partitions rewritten."""
+        return self.rewrite(
+            spark, partitions, lambda df: df.repartition(1, *self.partition_by)
         )
-        if partitions is not None:
-            self.overwrite_partitions(df)
-        else:
-            self._rewrite(df)

@@ -647,6 +647,42 @@ def test_deployment_maintain_runs_declared_ttl(spark, tmp_path):
     assert report2["test.logline"]["partitions_coalesced"] == 0
 
 
+def test_optimize_partition_rewrites_only_that_partition(spark, tmp_path):
+    """``OPTIMIZE TABLE t PARTITION p`` coalesces partition p alone:
+    every other partition keeps its file paths and mtimes."""
+    import glob
+
+    script = """
+    CREATE TABLE test.parts (
+        day Date,
+        uid UInt64
+    ) ENGINE = MergeTree()
+    PARTITION BY day
+    ORDER BY uid
+    """
+    dep = ddl.deploy(spark, script, str(tmp_path))
+    for batch in (0, 10):
+        dep.execute(spark, "INSERT INTO test.parts VALUES " + ", ".join(
+            f"('2024-01-0{d}', {batch + d})" for d in range(1, 5)
+        ))
+    table = dep.tables["test.parts"]
+
+    def files():
+        return {f: os.stat(f).st_mtime_ns for f in glob.glob(table.path + "/day=*/*.parquet")}
+
+    def others(fs):
+        return {f: m for f, m in fs.items() if "/day=2024-01-02/" not in f}
+
+    before = files()
+    assert len(before) == 8
+    n = dep.execute(spark, "OPTIMIZE TABLE test.parts PARTITION '2024-01-02' FINAL")
+    after = files()
+    assert others(after) == others(before)
+    assert len(after) - len(others(after)) == 1
+    assert n == 1  # partitions rewritten
+    assert sorted(r.uid for r in table.read(spark).collect()) == [1, 2, 3, 4, 11, 12, 13, 14]
+
+
 def test_chained_mv_cascade(spark, tmp_path):
     """ADVICE r2: an MV reading another MV's target must fire when that
     target receives rows (ClickHouse cascades chained materialized
