@@ -244,8 +244,8 @@ class TableSpec:
             partition_by=self.partition_by,
             sort_key=self.order_by,
             # a derived partition column's type isn't declared in the
-            # DDL — leave the schema unpinned and let mergeSchema reads
-            # infer it from the directory layout
+            # DDL — leave the schema unpinned and let reads infer it from
+            # the directory layout
             schema=None if self.partition_exprs else self.schema(),
             bloom_filter_cols=self.bloom_index_cols,
             codec=self.codec,
@@ -934,7 +934,7 @@ class Deployment:
         """Re-pin the physical table's read schema after an ALTER
         ADD/DROP COLUMN. Tables with derived partition expressions
         (``PARTITION BY toYYYYMM(day)``) are created unpinned
-        (schema=None → mergeSchema reads), which made column mutations
+        (schema=None → footer-schema reads), which made column mutations
         silently ineffective on them (ADVICE r3): a dropped column kept
         surfacing from old files, an added column's lazy default never
         appeared. Rebuild the pin from the declared spec plus the
@@ -950,12 +950,7 @@ class Deployment:
         declared = {f.name for f in base.fields}
         extra = [c for c in spec.partition_by if c not in declared]
         try:
-            inferred = {
-                f.name: f.dataType
-                for f in spark.read.option("mergeSchema", "true")
-                .parquet(t.path)
-                .schema.fields
-            }
+            inferred = {f.name: f.dataType for f in t.read(spark).schema.fields}
         except Exception:
             return  # no files yet — keep unpinned
         if any(c not in inferred for c in extra):

@@ -29,8 +29,9 @@ parallelize across the cluster.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
+from dataclasses import dataclass, field, replace
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,12 +54,25 @@ class MaterializedView:
     dims: tuple[str, ...]
     metrics: tuple[MetricSpec, ...]
     storage: Table
+    # aggregate Columns per (MetricSpec method, metric names, JVM gateway):
+    # building the mainpage view's 17 takes about 150 py4j calls, which
+    # every query would otherwise pay. A Column is a handle into one JVM,
+    # hence the gateway. Every new view (with_metric, replace…) starts
+    # empty.
+    _aggs: dict = field(default_factory=dict, init=False, compare=False, repr=False)
 
     def metric(self, name: str) -> MetricSpec:
         for m in self.metrics:
             if m.name == name:
                 return m
         raise KeyError(f"{self.name}: no metric {name!r}")
+
+    def _aggregates(self, method: str, names: tuple[str, ...]) -> list[Column]:
+        """``MetricSpec.<method>()`` of the metrics ``names``, built once."""
+        key = (method, names, SparkContext._gateway)
+        if key not in self._aggs:
+            self._aggs[key] = [getattr(self.metric(n), method)() for n in names]
+        return self._aggs[key]
 
     # -- write path ------------------------------------------------------------
     def materialize_batch(self, batch: DataFrame) -> DataFrame:
@@ -86,18 +100,18 @@ class MaterializedView:
         re-merge states per requested grouping → finalize. Equivalent of
         ``SELECT dims, uniqCombinedMerge(uv), sum(cnt) FROM state GROUP BY
         dims`` (dwm.mainpage_stat_mv_dis.sql:60-70)."""
-        names = metric_names or [m.name for m in self.metrics]
+        names = tuple(metric_names or [m.name for m in self.metrics])
         df = self.storage.read(spark)
         if where is not None:
             df = df.filter(F.expr(where) if isinstance(where, str) else where)
-        aggs = [self.metric(n).merged_finalized() for n in names]
-        return df.groupBy(*group_by).agg(*aggs)
+        return df.groupBy(*group_by).agg(*self._aggregates("merged_finalized", names))
 
     def merge_states(self, df: DataFrame, group_by: list[str]) -> DataFrame:
         """Re-merge states WITHOUT finalizing (the -MergeState combinator,
         dwm.mainpage_stat_mv_dis.sql:282-287) — for funnel algebra over
         bitmap states or for compaction."""
-        return df.groupBy(*group_by).agg(*[m.merge() for m in self.metrics])
+        names = tuple(m.name for m in self.metrics)
+        return df.groupBy(*group_by).agg(*self._aggregates("merge", names))
 
     # -- maintenance ---------------------------------------------------------------
     def compact(
@@ -214,9 +228,10 @@ class MaterializedView:
     def with_metric(self, spec: MetricSpec) -> "MaterializedView":
         """ALTER TABLE ... ADD COLUMN for an aggregate metric
         (dwm.mainpage_stat_mv_dis.sql:83-85,128-153): returns a view with
-        the extra metric. Existing state files simply lack the column —
-        reads mergeSchema it in as NULL, which is every kind's neutral
-        state, so history needs no rewrite (neutral backfill)."""
+        the extra metric. Existing state files simply lack the column; their
+        footers then disagree with the new files', so reads merge the file
+        schemas (:meth:`Table.read`) and surface it as NULL, which is every
+        kind's neutral state: history needs no rewrite (neutral backfill)."""
         return MaterializedView(
             self.name, self.dims, (*self.metrics, spec), self.storage
         )
@@ -224,8 +239,10 @@ class MaterializedView:
     def with_dimension(self, dim: str) -> "MaterializedView":
         """ALTER ... ADD COLUMN dimension + MODIFY ORDER BY
         (dwm…sql:76-79): new batches aggregate at the finer grain; old
-        state rows carry NULL for the new dim (a distinct 'unknown'
-        group, exactly like ClickHouse's default-value backfill)."""
+        state rows lack the column — reads merge the disagreeing file
+        schemas (:meth:`Table.read`) — and carry NULL for the new dim (a
+        distinct 'unknown' group, exactly like ClickHouse's default-value
+        backfill)."""
         return MaterializedView(
             self.name, (*self.dims, dim), self.metrics, self.storage
         )

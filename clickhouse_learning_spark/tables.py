@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import datetime as dt
 import functools
+import json
 import operator
 import os
 import shutil
@@ -31,12 +32,19 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from urllib.parse import unquote
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Hive's directory name for a NULL (or empty-string) partition value
 _DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+# the footer key under which Spark stores the schema of the rows it wrote
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# the nullability flags of Spark's type JSON: of a field, an array
+# element and a map value
+_NULLABLE = ("nullable", "containsNull", "valueContainsNull")
 # the characters Spark percent-escapes in partition directory names
 # (ExternalCatalogUtils.escapePathName)
 _ESCAPED = frozenset('"#%\'*/:=?\\\x7f{[]^') | {chr(i) for i in range(1, 32)}
@@ -93,6 +101,46 @@ def data_files(root: str) -> dict[str, int]:
     return out
 
 
+def _nullable(t):
+    """Spark type JSON with every field, array element and map value
+    nullable: Spark reads every file column as nullable
+    (``HadoopFsRelation`` applies ``asNullable``)."""
+    if isinstance(t, list):
+        return [_nullable(x) for x in t]
+    if isinstance(t, dict):
+        return {k: True if k in _NULLABLE else v if k == "metadata" else _nullable(v)
+                for k, v in t.items()}
+    return t
+
+
+@functools.lru_cache(maxsize=4096)
+def _file_schema(path: str, size: int, mtime_ns: int) -> str | None:
+    """The schema Spark wrote into parquet file ``path``, as nullable
+    type JSON; None when the file has no Spark key (another writer) or
+    is not parquet. ``size`` and ``mtime_ns`` key the memo, so a file
+    rewritten in place is read again."""
+    try:
+        meta = pq.read_metadata(path).metadata or {}
+    except (OSError, pa.ArrowInvalid):
+        return None
+    if _SPARK_SCHEMA_KEY not in meta:
+        return None
+    return json.dumps(_nullable(json.loads(meta[_SPARK_SCHEMA_KEY])))
+
+
+def footer_schema(files) -> T.StructType | None:
+    """The one read schema that the Spark footers of ``files`` agree on,
+    or None: no files, a file without the key, or footers that differ
+    (a column added by ALTER or by ``with_metric`` in later files)."""
+    got = set()
+    for f in files:
+        st = os.stat(f)
+        got.add(_file_schema(f, st.st_size, st.st_mtime_ns))
+    if len(got) != 1 or None in got:
+        return None
+    return T.StructType.fromJson(json.loads(got.pop()))
+
+
 @dataclass
 class Table:
     """One partitioned parquet table with a declared sort key."""
@@ -100,7 +148,9 @@ class Table:
     path: str
     partition_by: tuple[str, ...] = ("day",)
     sort_key: tuple[str, ...] = ()
-    schema: object | None = None  # optional StructType pin for reads
+    # optional StructType pin for reads; unset, reads take the schema
+    # from the files' footers (see :meth:`read`)
+    schema: object | None = None
     # ClickHouse skip-index analog (`INDEX x TYPE bloom_filter`): write
     # parquet bloom filters for these columns. Point-lookup filters on
     # them then skip whole row groups whose bloom excludes the value —
@@ -123,14 +173,25 @@ class Table:
     def read(self, spark: SparkSession, partitions: list | None = None) -> DataFrame:
         """The table, or only ``partitions`` (existing ones; tuples, or
         scalars for a 1-column key): then Spark lists just their
-        directories and merges just their files' schemas, so the read's
-        fixed cost does not grow with the rest of the table."""
-        # mergeSchema: files written before an ALTER ADD COLUMN lack the
-        # new column; merged reads surface it as NULL (= neutral state,
-        # SURVEY D5/D6). Footer-merge cost is per-file metadata only.
-        reader = spark.read.option("mergeSchema", "true")
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
+        directories, so the read's fixed cost does not grow with the
+        rest of the table.
+
+        Unpinned (``schema`` None), the read schema comes from the
+        schema Spark wrote into each file's footer (memoized per file),
+        so planning the read runs no Spark job; partition columns are
+        still inferred from the directory names. When the footers
+        disagree — files written before an ALTER ADD COLUMN or a
+        ``with_metric`` lack the new column — or a file has no Spark
+        footer key, the read falls back to ``mergeSchema``, one job
+        that merges every file's footer and surfaces a missing column
+        as NULL (= neutral state, SURVEY D5/D6)."""
+        schema = self.schema
+        if schema is None:
+            schema = footer_schema(f for fs in self.files(partitions).values() for f in fs)
+        if schema is None:
+            reader = spark.read.option("mergeSchema", "true")
+        else:
+            reader = spark.read.schema(schema)
         if partitions is None:
             return reader.parquet(self.path)
         return reader.option("basePath", self.path).parquet(
@@ -287,9 +348,12 @@ class Table:
     def delete_where(self, spark: SparkSession, cond) -> int:
         """Row-level DELETE (``ALTER TABLE … DELETE WHERE cond``): a
         :meth:`_mutate` that keeps the other rows of the partitions
-        holding a match; a partition left empty is dropped. Returns the
+        holding a match (a row whose ``cond`` is NULL is kept, as in
+        ClickHouse); a partition left empty is dropped. Returns the
         number of partitions rewritten or dropped."""
-        return self._mutate(spark, cond, lambda df, c: df.filter(~c))
+        return self._mutate(
+            spark, cond, lambda df, c: df.filter(~F.coalesce(c, F.lit(False)))
+        )
 
     def truncate(self) -> int:
         """``TRUNCATE TABLE`` — filesystem-only removal of every data

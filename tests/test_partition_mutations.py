@@ -185,3 +185,14 @@ def test_listing_equals_spark_file_view(spark, tmp_path):
 
     assert t.drop_partitions(spark, [("2024-01-01", "a b/c:d=%e"), ("2024-01-01", None)]) == 2
     assert sorted(r.v for r in t.read(spark).collect()) == [3, 3, 4, 4]
+
+
+def test_delete_where_keeps_rows_whose_condition_is_null(spark, tmp_path):
+    """ClickHouse's ``DELETE WHERE`` treats a NULL condition as false:
+    the row with a NULL ``uid`` survives ``uid = 1``."""
+    t = Table(str(tmp_path / "t"), ("day",))
+    t.append(spark.createDataFrame(
+        [(1, "a"), (None, "b"), (2, "c")], "uid long, v string"
+    ).withColumn("day", F.lit(dt.date(2024, 1, 1))))
+    assert t.delete_where(spark, "uid = 1") == 1
+    assert sorted(r["v"] for r in t.read(spark).collect()) == ["b", "c"]
