@@ -25,6 +25,14 @@ AggregateFunction(
   groupBitmap, UInt32)    sorted ArrayType(LongType) id-set      ``bitmap``
 count                     LongType                               ``count``
 min / max                 same type as source                    ``min``/``max``
+AggregateFunction(
+  quantileExactWeighted)  sorted value→count pairs               ``quantile``
+AggregateFunction(
+  quantile, Float64)      sorted DDSketch bucket→count pairs     ``quantile_sketch``
+AggregateFunction(
+  topK(k), String)        value→count pairs, ≤ reserve entries   ``topk``
+AggregateFunction(
+  sumMap, Map)            sorted key→sum pairs                   ``summap``
 ========================  =====================================  ==========
 
 Plain-value sum states follow the reference's own finding that
@@ -33,10 +41,17 @@ Plain-value sum states follow the reference's own finding that
 
 Exact medians keep every value in the state (as the reference's
 ``medianExactState`` does); this is documented as memory-heavy — at
-100 TB prefer ``kind="quantile_sketch"`` (t-digest-style
-``percentile_approx``-compatible state is not exposed by Spark, so the
-sketch kind finalizes per-query from raw values with
-``percentile_approx``; exactness trade-off documented in README).
+100 TB prefer ``kind="quantile"`` (exact, O(distinct values) per state)
+or ``kind="quantile_sketch"`` (DDSketch: values are log-bucketed, the
+state holds bucket→count pairs, O(occupied buckets) per state, and the
+answer is within relative error ``alpha`` of the exact quantile).
+
+The four value→count kinds (``MetricSpec.PRECOUNT_KINDS``) share one
+re-sum: :func:`build_states` counts a raw batch per ``(dims, value)``
+and collects the counted rows into states; :func:`resum_states` does the
+same for stored states, exploded into ``(dims, value, count)`` rows, so
+a merged state has one entry per value (topk: the ``reserve``
+highest-count ones), like a freshly built one.
 
 Bitmap states default to exact sorted id-arrays (Roaring-equivalent set
 algebra via ``array_intersect``/``array_union``/``size``) — fully
@@ -49,7 +64,9 @@ roaring-compressed ``BinaryType`` states instead (the reference's actual
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column
@@ -267,9 +284,16 @@ class MetricSpec:
             return F.sum(_as_col(self.weight).cast("long"))
         return F.count(F.lit(1))
 
+    @property
+    def entry_key(self) -> str:
+        """Field naming the value of a value→count state's entries."""
+        return "k" if self.kind == "summap" else "v"
+
     def state_from_counts(self, v: Column, c: Column, skip_null: bool = False) -> Column:
         """Aggregate expression building the state from pre-aggregated
-        (value, count/sum) rows; use under ``groupBy(dims)``.
+        (value, count/sum) rows; use under ``groupBy(dims)``. Entries
+        come out sorted by value (``topk``: by descending count, capped
+        at ``reserve``).
 
         ``skip_null=True`` is the single-pass contract used by
         :func:`build_states`' fast path: NULL-value entries are excluded
@@ -280,19 +304,15 @@ class MetricSpec:
             return topk_state_from_counts(
                 v, c, self.topk_reserve, skip_null=skip_null
             ).alias(self.name)
-        if self.kind == "summap":
-            pair = F.struct(v.alias("k"), c.cast("long").alias("c"))
-            if skip_null:
-                arr = F.collect_list(F.when(v.isNotNull(), pair)).cast(SUMMAP_STATE_TYPE)
-                return F.when(F.size(arr) > 0, arr).alias(self.name)
-            return F.collect_list(pair).cast(SUMMAP_STATE_TYPE).alias(self.name)
-        if self.kind in ("quantile", "quantile_sketch"):
-            pair = F.struct(v.alias("v"), c.cast("long").alias("c"))
-            if skip_null:
-                arr = F.collect_list(F.when(v.isNotNull(), pair)).cast(QUANTILE_STATE_TYPE)
-                return F.when(F.size(arr) > 0, arr).alias(self.name)
-            return F.collect_list(pair).cast(QUANTILE_STATE_TYPE).alias(self.name)
-        raise AssertionError(self.kind)
+        if self.kind not in ("summap", "quantile", "quantile_sketch"):
+            raise AssertionError(self.kind)
+        pair = F.struct(v.alias(self.entry_key), c.cast("long").alias("c"))
+        if skip_null:
+            pair = F.when(v.isNotNull(), pair)
+        arr = F.array_sort(F.collect_list(pair)).cast(
+            SUMMAP_STATE_TYPE if self.kind == "summap" else QUANTILE_STATE_TYPE
+        )
+        return (F.when(F.size(arr) > 0, arr) if skip_null else arr).alias(self.name)
 
     # -- partial: raw rows -> state (the reference's -State) ------------------
     def partial(self) -> Column:
@@ -334,9 +354,9 @@ class MetricSpec:
             return F.collect_list(x).alias(self.name)
         if self.kind == "quantile":
             # value→count pairs; per-batch entries carry c=weight
-            # (default 1; compaction re-sums to O(distinct) via
-            # compress_quantile_states — the same lazy-merge contract as
-            # every other state here)
+            # (default 1; merge_states re-sums them to O(distinct) via
+            # resum_states — the same lazy-merge contract as every other
+            # state here)
             v = x.cast("long")
             w = _as_col(self.weight).cast("long")
             pair = F.when(v.isNotNull(), F.struct(v.alias("v"), w.alias("c")))
@@ -603,55 +623,6 @@ def weighted_quantile(c: Column, level: float = 0.5) -> Column:
     return F.when(total > 0, walk["ans"])
 
 
-def compress_quantile_states(df, dims, names):
-    """Re-sum value→count quantile states to one entry per distinct value
-    — the compaction step that makes the ``quantile`` kind O(distinct)
-    instead of O(rows). Expressed as explode → two-level groupBy →
-    re-collect: fully codegen'd shuffles, no interpreted lambdas in the
-    per-entry path (this repo's rule for hot loops).
-
-    ``df`` must already be one row per ``dims`` key (i.e. post
-    ``merge_states``); finalize results are unchanged, only the state
-    representation shrinks.
-    """
-    import functools
-    import operator
-
-    out = df
-    for name in names:
-        q = (
-            out.select(*dims, F.explode_outer(F.col(name)).alias("_e"))
-            .groupBy(*dims, F.col("_e.v").alias("_v"))
-            .agg(F.sum("_e.c").alias("_c"))
-            .groupBy(*dims)
-            .agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            F.col("_v").isNotNull(),
-                            F.struct(
-                                F.col("_v").alias("v"), F.col("_c").alias("c")
-                            ),
-                        )
-                    )
-                )
-                .cast(QUANTILE_STATE_TYPE)
-                .alias(name)
-            )
-        )
-        keyed = q.select(
-            *[F.col(d).alias(f"_k_{d}") for d in dims], name
-        )
-        out = out.drop(name)
-        # eqNullSafe: dims added by with_dimension backfill NULL for old rows
-        cond = functools.reduce(
-            operator.and_,
-            [out[d].eqNullSafe(keyed[f"_k_{d}"]) for d in dims],
-        )
-        out = out.join(keyed, cond, "left").drop(*[f"_k_{d}" for d in dims])
-    return out
-
-
 def dd_gamma(alpha: float) -> float:
     return (1.0 + alpha) / (1.0 - alpha)
 
@@ -678,64 +649,58 @@ def dd_value(b: Column, alpha: float = 0.01) -> Column:
     return F.round(F.when(b == DD_ZERO_BUCKET, F.lit(0.0)).otherwise(rep), 4)
 
 
-def topk_from_state(c: Column, k: int) -> Column:
-    """Finalize a ``topk`` value→count state: re-sum duplicate values
-    (states merged but not yet compacted carry one entry per batch), then
-    take the ``k`` highest-count values, ties broken on the smaller
-    value. Returns ``array<source type>`` ordered most-frequent-first;
-    empty array on empty input (ClickHouse ``topK`` does the same).
+def _resum_entries(c: Column, key: str) -> Column:
+    """The entries of a value→count state array re-summed per ``key``
+    field (states merged but not yet compacted carry one entry per
+    batch), sorted by ``key``.
 
-    The duplicate re-sum is an O(n²) higher-order expression over the
-    state array — n is bounded by writers·reserve (and by reserve alone
-    after compaction), so this stays off the hot path by construction;
-    the per-row write path never runs it.
-    """
+    An O(n²) higher-order expression over the state array — n is
+    bounded by writers·reserve for ``topk`` and writers·distinct keys
+    for ``summap`` (one writer's worth after compaction), so it stays
+    off the hot path by construction; the per-row write path never runs
+    it."""
     e = F.array_sort(c)
-    dedup = F.array_distinct(
+    return F.array_distinct(
         F.transform(
             e,
             lambda s: F.struct(
-                s["v"].alias("v"),
+                s[key].alias(key),
                 F.aggregate(
-                    F.filter(e, lambda t: t["v"] == s["v"]),
+                    F.filter(e, lambda t: t[key] == s[key]),
                     F.lit(0).cast("long"),
                     lambda a, t: a + t["c"],
                 ).alias("c"),
             ),
         )
     )
+
+
+def topk_from_state(c: Column, k: int) -> Column:
+    """Finalize a ``topk`` value→count state: re-sum duplicate values,
+    then take the ``k`` highest-count values, ties broken on the smaller
+    value. Returns ``array<source type>`` ordered most-frequent-first;
+    empty array on empty input (ClickHouse ``topK`` does the same)."""
     ranked = F.sort_array(
-        F.transform(dedup, lambda s: F.struct((-s["c"]).alias("nc"), s["v"].alias("v")))
+        F.transform(
+            _resum_entries(c, "v"),
+            lambda s: F.struct((-s["c"]).alias("nc"), s["v"].alias("v")),
+        )
     )
     return F.transform(F.slice(ranked, 1, k), lambda s: s["v"])
 
 
 def summap_from_state(c: Column) -> Column:
-    """Finalize a ``summap`` key→sum state: re-sum duplicate keys
-    (merged-but-uncompacted states carry one entry per batch) and emit
-    ``k1:v1|k2:v2`` sorted by key — ClickHouse ``sumMap``'s sorted
+    """Finalize a ``summap`` key→sum state: re-sum duplicate keys and
+    emit ``k1:v1|k2:v2`` sorted by key — ClickHouse ``sumMap``'s sorted
     key/value arrays, flattened to a canonicalizer-safe string. NULL
     state (no row passed the -If filter) → empty string, matching
-    sumMap's empty map. The per-key re-sum is the same bounded
-    O(entries²) HOF as topk_from_state — off the hot path by
-    construction."""
-    e = F.array_sort(c)
-    dedup = F.array_distinct(
-        F.transform(
-            e,
-            lambda s: F.struct(
-                s["k"].alias("k"),
-                F.aggregate(
-                    F.filter(e, lambda t: t["k"] == s["k"]),
-                    F.lit(0).cast("long"),
-                    lambda a, t: a + t["c"],
-                ).alias("c"),
-            ),
-        )
-    )
+    sumMap's empty map."""
     return F.coalesce(
         F.array_join(
-            F.transform(dedup, lambda s: F.concat_ws(":", s["k"], s["c"])), "|"
+            F.transform(
+                _resum_entries(c, "k"), lambda s: F.concat_ws(":", s["k"], s["c"])
+            ),
+            "|",
         ),
         F.lit(""),
     )
@@ -767,6 +732,34 @@ def topk_state_from_counts(
     return out
 
 
+def _join_on_dims(base, states, dims):
+    """``base`` left-joined with the state columns of ``states`` on
+    ``dims``. NULL-safe: dims added by with_dimension are NULL for older
+    rows, and such a key must still find its states."""
+    keyed = states.select(
+        *[F.col(d).alias(f"_k_{d}") for d in dims],
+        *[c for c in states.columns if c not in dims],
+    )
+    cond = functools.reduce(
+        operator.and_, [base[d].eqNullSafe(keyed[f"_k_{d}"]) for d in dims]
+    )
+    return base.join(keyed, cond, "left").drop(*[f"_k_{d}" for d in dims])
+
+
+def _states_from_counts(counts, dims, ms):
+    """States of the value→count metrics ``ms`` from pre-counted
+    ``(dims, _v, _c)`` rows, one row per ``dims`` key that has a
+    non-NULL value. The NULL-value group is dropped: the one-expression
+    partial() path builds these states with collect_list, which skips
+    NULLs — the v=NULL group would otherwise inflate count totals and
+    shift weighted-quantile ranks."""
+    return (
+        counts.filter(F.col("_v").isNotNull())
+        .groupBy(*dims)
+        .agg(*[m.state_from_counts(F.col("_v"), F.col("_c")) for m in ms])
+    )
+
+
 def build_states(batch, dims, metrics):
     """Aggregate one batch of raw rows to one state row per ``dims`` key
     (the -State half of the combinator algebra) — the shared write path
@@ -781,9 +774,6 @@ def build_states(batch, dims, metrics):
     out of the main groupBy also keeps it codegen: one collect_* in an
     aggregate forces ObjectHashAggregate and evicts every sibling
     expression from whole-stage codegen."""
-    import functools
-    import operator
-
     plain = [m for m in metrics if m.kind not in MetricSpec.PRECOUNT_KINDS]
     counted = [m for m in metrics if m.kind in MetricSpec.PRECOUNT_KINDS]
     # metrics sharing (cond, value-expression) — e.g. p50/p95/p99 of the
@@ -794,6 +784,13 @@ def build_states(batch, dims, metrics):
         key = (str(m.cond), str(m.precount_value()), str(m.precount_agg()))
         shared.setdefault(key, []).append(m)
     groups = list(shared.values())
+
+    def counts(lead):
+        src = batch if lead.cond is None else batch.filter(_as_col(lead.cond))
+        return src.groupBy(*dims, lead.precount_value().alias("_v")).agg(
+            lead.precount_agg().alias("_c")
+        )
+
     if plain:
         base = batch.groupBy(*dims).agg(*[m.partial() for m in plain])
     else:
@@ -808,127 +805,41 @@ def build_states(batch, dims, metrics):
         # maps to NULL, the exact join-miss contract of the general path.
         for i, ms in enumerate(groups):
             if ms[0].cond is None:
-                lead = ms[0]
-                base = (
-                    batch.groupBy(*dims, lead.precount_value().alias("_v"))
-                    .agg(lead.precount_agg().alias("_c"))
-                    .groupBy(*dims)
-                    .agg(
-                        *[
-                            m.state_from_counts(
-                                F.col("_v"), F.col("_c"), skip_null=True
-                            )
-                            for m in ms
-                        ]
-                    )
+                base = counts(ms[0]).groupBy(*dims).agg(
+                    *[m.state_from_counts(F.col("_v"), F.col("_c"), skip_null=True)
+                      for m in ms]
                 )
                 groups = groups[:i] + groups[i + 1 :]
                 break
         if base is None:
             base = batch.select(*dims).distinct()
     for ms in groups:
-        lead = ms[0]
-        src = batch
-        if lead.cond is not None:
-            src = src.filter(_as_col(lead.cond))
-        state = (
-            src.groupBy(*dims, lead.precount_value().alias("_v"))
-            .agg(lead.precount_agg().alias("_c"))
-            # drop the NULL-value group: the one-expression partial()
-            # path builds these states with collect_list, which skips
-            # NULLs — the v=NULL group would otherwise inflate count
-            # totals and shift weighted-quantile ranks
-            .filter(F.col("_v").isNotNull())
-            .groupBy(*dims)
-            .agg(*[m.state_from_counts(F.col("_v"), F.col("_c")) for m in ms])
-        )
-        names = [m.name for m in ms]
-        keyed = state.select(*[F.col(d).alias(f"_k_{d}") for d in dims], *names)
-        cond = functools.reduce(
-            operator.and_,
-            [base[d].eqNullSafe(keyed[f"_k_{d}"]) for d in dims],
-        )
-        base = base.join(keyed, cond, "left").drop(*[f"_k_{d}" for d in dims])
         # groups where no row passed the -If filter carry NULL = the
         # merge-neutral state, same as every other kind
+        base = _join_on_dims(base, _states_from_counts(counts(ms[0]), dims, ms), dims)
     # preserve declared metric order for a stable storage schema
     return base.select(*dims, *[m.name for m in metrics])
 
 
-def compress_summap_states(df, dims, specs):
-    """Compaction for ``summap`` states: explode → re-sum per key →
-    re-collect sorted, shrinking merged states to one entry per distinct
-    key (same codegen explode/two-level-groupBy shape as
-    :func:`compress_quantile_states`)."""
-    import functools
-    import operator
-
-    out = df
-    for spec in specs:
-        q = (
-            out.select(*dims, F.explode_outer(F.col(spec.name)).alias("_e"))
-            .groupBy(*dims, F.col("_e.k").alias("_k"))
+def resum_states(states, base, dims, metrics):
+    """``base`` (one row per ``dims`` key) with the value→count
+    ``metrics`` of ``states`` merged per key: each state is exploded
+    into ``(dims, value, count)`` rows, the counts are summed per value,
+    and the state is rebuilt by :func:`build_states`' own pre-counted
+    rows → ``state_from_counts`` → join-back path, so ``topk``
+    re-truncates to its reserve. A key with no entry gets ``[]``, as
+    merging its empty or NULL states does."""
+    types = dict(states.dtypes)
+    for m in metrics:
+        counts = (
+            states.select(*dims, F.explode(m.name).alias("_e"))
+            .groupBy(*dims, F.col(f"_e.{m.entry_key}").alias("_v"))
             .agg(F.sum("_e.c").alias("_c"))
-            .groupBy(*dims)
-            .agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            F.col("_k").isNotNull(),
-                            F.struct(F.col("_k").alias("k"), F.col("_c").alias("c")),
-                        )
-                    )
-                )
-                .cast(SUMMAP_STATE_TYPE)
-                .alias(spec.name)
-            )
         )
-        keyed = q.select(*[F.col(d).alias(f"_j_{d}") for d in dims], spec.name)
-        out = out.drop(spec.name)
-        cond = functools.reduce(
-            operator.and_,
-            [out[d].eqNullSafe(keyed[f"_j_{d}"]) for d in dims],
-        )
-        out = out.join(keyed, cond, "left").drop(*[f"_j_{d}" for d in dims])
-    return out
-
-
-def compress_topk_states(df, dims, specs):
-    """Compaction for ``topk`` states: explode → re-sum counts per value →
-    re-collect capped at reserve. Same explode/two-level-groupBy shape as
-    :func:`compress_quantile_states` — codegen shuffles, no interpreted
-    per-entry lambdas. Truncation to reserve is where the approximation
-    lives (identical to the per-batch cap); finalize results over the
-    compacted state equal the pre-compaction ones whenever per-group
-    distinct counts stayed under reserve.
-    """
-    import functools
-    import operator
-
-    out = df
-    for spec in specs:
-        q = (
-            out.select(*dims, F.explode_outer(F.col(spec.name)).alias("_e"))
-            .groupBy(*dims, F.col("_e.v").alias("_v"))
-            .agg(F.sum("_e.c").alias("_c"))
-            .groupBy(*dims)
-            .agg(
-                F.filter(
-                    topk_state_from_counts(
-                        F.col("_v"), F.coalesce(F.col("_c"), F.lit(0)), spec.topk_reserve
-                    ),
-                    lambda s: s["v"].isNotNull(),
-                ).alias(spec.name)
-            )
-        )
-        keyed = q.select(*[F.col(d).alias(f"_k_{d}") for d in dims], spec.name)
-        out = out.drop(spec.name)
-        cond = functools.reduce(
-            operator.and_,
-            [out[d].eqNullSafe(keyed[f"_k_{d}"]) for d in dims],
-        )
-        out = out.join(keyed, cond, "left").drop(*[f"_k_{d}" for d in dims])
-    return out
+        base = _join_on_dims(base, _states_from_counts(counts, dims, [m]), dims)
+    return base.withColumns(
+        {m.name: F.coalesce(m.name, F.array().cast(types[m.name])) for m in metrics}
+    )
 
 
 # -- bitmap set algebra (the reference's bitmapAnd / bitmapOr / cardinality,

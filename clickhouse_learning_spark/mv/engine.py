@@ -35,12 +35,7 @@ from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from clickhouse_learning_spark.functions.metrics import (
-    MetricSpec,
-    compress_quantile_states,
-    compress_summap_states,
-    compress_topk_states,
-)
+from clickhouse_learning_spark.functions.metrics import MetricSpec, resum_states
 from clickhouse_learning_spark.streaming.epochs import observed
 from clickhouse_learning_spark.tables import Table, expired
 
@@ -78,8 +73,8 @@ class MaterializedView:
     def materialize_batch(self, batch: DataFrame) -> DataFrame:
         """Aggregate ONE insert batch to partial states (insert-trigger MV
         semantics: docs/…md:298-301). One shuffle, map-side partials;
-        value→count state kinds (topk / quantile / quantile_sketch) take
-        the relational pre-count side path — see
+        value→count state kinds (topk / quantile / quantile_sketch /
+        summap) take the relational pre-count side path — see
         :func:`~clickhouse_learning_spark.functions.metrics.build_states`."""
         from clickhouse_learning_spark.functions.metrics import build_states
 
@@ -109,9 +104,22 @@ class MaterializedView:
     def merge_states(self, df: DataFrame, group_by: list[str]) -> DataFrame:
         """Re-merge states WITHOUT finalizing (the -MergeState combinator,
         dwm.mainpage_stat_mv_dis.sql:282-287) — for funnel algebra over
-        bitmap states or for compaction."""
+        bitmap states or for compaction. A merged state is as compact as
+        a freshly built one: value→count states (topk, quantile,
+        quantile_sketch, summap) are re-summed to one entry per value,
+        topk re-truncated to its reserve — see
+        :func:`~clickhouse_learning_spark.functions.metrics.resum_states`."""
         names = tuple(m.name for m in self.metrics)
-        return df.groupBy(*group_by).agg(*self._aggregates("merge", names))
+        plain = tuple(m.name for m in self.metrics
+                      if m.kind not in MetricSpec.PRECOUNT_KINDS)
+        if not plain:
+            merged = df.select(*group_by).distinct()
+        else:
+            merged = df.groupBy(*group_by).agg(*self._aggregates("merge", plain))
+        if plain == names:
+            return merged
+        counted = [m for m in self.metrics if m.name not in plain]
+        return resum_states(df, merged, group_by, counted).select(*group_by, *names)
 
     # -- maintenance ---------------------------------------------------------------
     def compact(
@@ -125,8 +133,9 @@ class MaterializedView:
         the only sane form: merges are per-partition (recent days churn,
         history is already merged), so it reads and rewrites ONLY the
         named partitions. Pick candidates with
-        :meth:`partitions_needing_compaction`. The merge re-sums and
-        re-truncates the value→count states (quantile, topk, summap).
+        :meth:`partitions_needing_compaction`. The merge is
+        :meth:`merge_states`, which also re-sums the value→count states
+        (topk, quantile, quantile_sketch, summap) to one entry per value.
 
         ``group``: the dims to merge at (default: every dim), which must
         include the partition columns; the other dims are written as
@@ -166,18 +175,6 @@ class MaterializedView:
                     if d in stored.columns]
             stored, seen["in"] = view._observe_totals(stored, parts)
             merged = view.merge_states(stored, keys)
-            qnames = [m.name for m in view.metrics
-                      if m.kind in ("quantile", "quantile_sketch")]
-            if qnames:
-                # quantile states deduplicate by value, shrinking them to
-                # O(distinct values) — O(occupied buckets) for the sketch
-                merged = compress_quantile_states(merged, keys, qnames)
-            if tspecs := [m for m in view.metrics if m.kind == "topk"]:
-                # topk states re-sum per value and re-truncate to reserve
-                merged = compress_topk_states(merged, keys, tspecs)
-            if mspecs := [m for m in view.metrics if m.kind == "summap"]:
-                # summap states re-sum per key (one entry per distinct key)
-                merged = compress_summap_states(merged, keys, mspecs)
             types = dict(stored.dtypes)
             merged = merged.withColumns({
                 d: F.lit(None).cast(types[d]) for d in view.dims if d not in keys

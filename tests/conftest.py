@@ -1,8 +1,10 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from clickhouse_learning_spark import get_spark
 
@@ -20,6 +22,34 @@ def drop_last_commit(checkpoint: str) -> int:
         if os.path.exists(os.path.join(d, f)):
             os.remove(os.path.join(d, f))
     return n
+
+
+def traced(spark, fn):
+    """``fn()`` under its own Spark job group → (its result, the Spark
+    jobs it ran, the rows those jobs read from data files)."""
+    sc = spark.sparkContext
+    group = f"traced-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = list(tracker.getJobIdsForGroup(group))
+    store = sc._jsc.sc().statusStore()
+    read = 0
+    for j in jobs:
+        gone = 0
+        for s in tracker.getJobInfo(j).stageIds:
+            try:
+                read += store.lastStageAttempt(s).inputRecords()
+            except Py4JJavaError:
+                gone += 1
+        # past spark.ui.retainedStages the status store evicts skipped
+        # stages (no completion time) first; a skipped stage read nothing
+        assert gone <= store.job(j).numSkippedStages(), (j, gone)
+    return out, len(jobs), read
 
 
 @pytest.fixture(scope="session")

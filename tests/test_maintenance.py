@@ -5,7 +5,6 @@ hashing."""
 from __future__ import annotations
 
 import datetime as dt
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,7 +15,7 @@ from clickhouse_learning_spark.mv.engine import MaterializedView
 from clickhouse_learning_spark.mv.mainpage import mainpage_mv, prepare_events
 from clickhouse_learning_spark.tables import Table
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, traced
 
 D0 = dt.date(2024, 1, 1)
 # Spark jobs of one sweep that compacts one partition: the merge's two
@@ -47,27 +46,6 @@ def _history(spark, path, days: int):
     m = Maintainer()
     m.register(mv, ttl=dt.timedelta(days=days - 1))
     return mv, m, D0 + dt.timedelta(days=days)
-
-
-def _traced_sweep(spark, m: Maintainer, now):
-    """``m.run_once`` under its own job group → (report, Spark jobs,
-    rows the jobs read from data files)."""
-    sc = spark.sparkContext
-    group = f"sweep-{uuid.uuid4()}"
-    sc.setJobGroup(group, group)
-    try:
-        report = m.run_once(spark, now=now)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    tracker = sc.statusTracker()
-    jobs = list(tracker.getJobIdsForGroup(group))
-    store = sc._jsc.sc().statusStore()
-    read = sum(
-        store.lastStageAttempt(s).inputRecords()
-        for j in jobs for s in tracker.getJobInfo(j).stageIds
-    )
-    return report, len(jobs), read
 
 
 def test_maintainer_sweep(spark, tmp_path):
@@ -106,7 +84,7 @@ def test_sweep_job_budget_flat_in_history(spark, tmp_path):
     seen = {}
     for days in (4, 40):
         mv, m, now = _history(spark, tmp_path / f"d{days}", days)
-        report, jobs, read = _traced_sweep(spark, m, now)
+        report, jobs, read = traced(spark, lambda: m.run_once(spark, now=now))
         entry = report[mv.name]
         assert entry["partitions_compacted"] == 1
         assert entry["ttl_partitions_kept"] == days - 1

@@ -260,3 +260,55 @@ def test_rollup_ttl_downsamples_old_partitions(spark, tmp_path):
     # rolled-up rows carry NULL fine dims
     old = mv.storage.read(spark).filter(F.col("day") < F.lit(cutoff_day))
     assert old.filter(F.col("segment").isNotNull()).count() == 0
+
+
+def test_compacted_states_equal_an_independent_resum(spark, tmp_path):
+    """Compaction re-sums every value→count state per key and value:
+    each stored row's entries equal a pure-Python re-sum of the appended
+    entries, sorted by value (quantile, quantile_sketch, summap) or, for
+    topk, the reserve highest counts with ties on the smaller value.
+    Covers -If conds, NULL dims, topk states past their reserve and keys
+    whose rows all fail a cond (their state stays [])."""
+    metrics = (
+        MetricSpec("top", "topk", "v", cond="v % 5 <> 0", k=2, reserve=5),
+        MetricSpec("q", "quantile", "v", cond="w > 0"),
+        MetricSpec("dd", "quantile_sketch", "v * 7"),
+        MetricSpec("sm", "summap", "v % 4", weight="w", cond="g IS NULL OR g <> 2"),
+        MetricSpec("cnt", "count"),
+    )
+    mv = MaterializedView(
+        "resum", dims=("day", "g"), metrics=metrics,
+        storage=Table(str(tmp_path / "state"), partition_by=("day",)),
+    )
+    ev = spark.range(2400).selectExpr(
+        "date_add(DATE'2024-01-01', CAST(id % 4 AS INT)) AS day",
+        "CASE WHEN id % 7 = 0 THEN NULL ELSE CAST(id % 3 AS INT) END AS g",
+        "(id DIV 12 + id DIV 300) % 27 AS v",
+        "id % 4 AS w",  # 0 on the first day: its q rows all fail w > 0
+        "id DIV 5 % 3 AS part",
+    )
+    for part in range(3):
+        mv.append_batch(ev.filter(F.col("part") == part))
+    counted = [m for m in metrics if m.kind in MetricSpec.PRECOUNT_KINDS]
+    sums: dict = {}
+    for r in mv.storage.read(spark).collect():
+        for m in counted:
+            per_value = sums.setdefault((r["day"], r["g"]), {}).setdefault(m.name, {})
+            for value, c in r[m.name] or []:
+                per_value[value] = per_value.get(value, 0) + c
+
+    def resum(m, per_value):
+        if m.kind == "topk":
+            return sorted(per_value.items(), key=lambda e: (-e[1], e[0]))[: m.topk_reserve]
+        return sorted(per_value.items())
+
+    top = [len(s["top"]) for s in sums.values()]
+    assert max(top) > 5 and None in {g for _, g in sums}
+    assert any(not s["q"] for s in sums.values())
+
+    mv.compact(spark)
+    got = {(r["day"], r["g"]): r for r in mv.storage.read(spark).collect()}
+    assert got.keys() == sums.keys()
+    for key, row in got.items():
+        for m in counted:
+            assert [tuple(e) for e in row[m.name]] == resum(m, sums[key][m.name]), (key, m.name)

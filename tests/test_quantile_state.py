@@ -15,10 +15,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from clickhouse_learning_spark.functions.metrics import (
-    MetricSpec,
-    compress_quantile_states,
-)
+from clickhouse_learning_spark.functions.metrics import MetricSpec
 from clickhouse_learning_spark.mv.engine import MaterializedView
 from clickhouse_learning_spark.tables import Table
 
@@ -97,15 +94,20 @@ def test_compaction_shrinks_state_to_distinct_values(spark, qmv, data):
     )
 
 
-def test_compress_handles_null_dims_and_empty_states(spark):
+def test_compress_handles_null_dims_and_empty_states(spark, tmp_path):
     """with_dimension backfills NULL dims; a key whose rows all failed a
-    -If cond has an empty state. Both must survive compression."""
+    -If cond has an empty state. Both must survive the re-sum that
+    merge_states (and so compaction) applies to quantile states."""
     spec = MetricSpec("q", "quantile", "v", cond="v >= 0")
     df = spark.createDataFrame(
         [(1, 5), (1, 7), (None, 5), (None, -1), (2, -3)], "g int, v long"
     )
     states = df.groupBy("g").agg(spec.partial())
-    comp = compress_quantile_states(states, ["g"], ["q"])
+    view = MaterializedView(
+        "q", dims=("g",), metrics=(spec,),
+        storage=Table(str(tmp_path / "q"), partition_by=()),
+    )
+    comp = view.merge_states(states, ["g"])
     got = {
         r["g"]: [e.asDict() for e in r["q"]] for r in comp.collect()
     }

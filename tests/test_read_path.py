@@ -9,7 +9,6 @@ from __future__ import annotations
 import datetime as dt
 import os
 import shutil
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -20,24 +19,12 @@ from clickhouse_learning_spark.functions.metrics import MetricSpec
 from clickhouse_learning_spark.mv.mainpage import mainpage_mv
 from clickhouse_learning_spark.tables import Table, footer_schema
 
+from .conftest import traced
 from .test_maintenance import D0, _events
 
 # Spark jobs of merge_query(...).collect() over a small state table; 3
 # while planning its read ran Spark's schema-inference job
 JOBS_PER_MERGE_QUERY = 2
-
-
-def _jobs(spark, fn):
-    """``fn()`` under its own job group → (result, Spark jobs it ran)."""
-    sc = spark.sparkContext
-    group = f"read-{uuid.uuid4()}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture
@@ -61,7 +48,7 @@ def _merged(spark, t: Table, partitions=None):
 
 def _same_read(spark, t: Table, partitions=None):
     """``t.read`` runs no job and equals the ``mergeSchema`` read."""
-    got, jobs = _jobs(spark, lambda: t.read(spark, partitions))
+    got, jobs, _ = traced(spark, lambda: t.read(spark, partitions))
     want = _merged(spark, t, partitions)
     assert jobs == 0
     assert got.schema == want.schema
@@ -99,7 +86,7 @@ def test_evolved_view_falls_back_to_merged_schema(spark, state):
     mv2.append_batch(_events(spark, 4, 100))
     t = state.storage
     assert footer_schema(f for fs in t.files().values() for f in fs) is None
-    got, jobs = _jobs(spark, lambda: t.read(spark))
+    got, jobs, _ = traced(spark, lambda: t.read(spark))
     assert jobs >= 1 and "error_cnt" in got.columns
     assert got.schema == _merged(spark, t).schema
     with pytest.raises(ValueError, match="not in this view"):
@@ -112,7 +99,7 @@ def test_pyarrow_file_falls_back_to_merged_schema(spark, tmp_path):
     os.makedirs(os.path.dirname(path))
     pq.write_table(pa.table({"uid": [1, 2], "v": ["a", "b"]}), path)
     assert footer_schema([path]) is None
-    got, jobs = _jobs(spark, lambda: t.read(spark))
+    got, jobs, _ = traced(spark, lambda: t.read(spark))
     assert jobs >= 1
     assert got.schema == _merged(spark, t).schema
     assert sorted(r["uid"] for r in got.collect()) == [1, 2]
@@ -165,10 +152,30 @@ def test_merge_query_builds_its_columns_once(spark, state, monkeypatch):
     assert sum(r["event_cnt"] for r in rows) == 400 + 133 + 100
 
 
+def test_merge_states_builds_its_columns_once(spark, state, monkeypatch):
+    calls = []
+    orig = MetricSpec.merge
+
+    def counted(self, *a, **k):
+        calls.append(self.name)
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(MetricSpec, "merge", counted)
+    read = state.storage.read(spark)
+    first = state.merge_states(read, ["day"])
+    built = len(calls)
+    assert built == len(state.metrics)
+    second = state.merge_states(read, ["day"])
+    assert len(calls) == built
+    assert first.columns == second.columns == ["day", *(m.name for m in state.metrics)]
+    totals = {r["day"]: r["event_cnt"] for r in first.collect()}
+    assert totals == {r["day"]: r["event_cnt"] for r in second.collect()}
+
+
 def test_read_path_job_budget(spark, state):
     """Planning a read of a Spark-written table runs no job; a
     merge_query runs only its aggregation."""
-    _, jobs = _jobs(spark, lambda: state.storage.read(spark).schema)
+    _, jobs, _ = traced(spark, lambda: state.storage.read(spark).schema)
     assert jobs == 0
-    _, jobs = _jobs(spark, lambda: state.merge_query(spark, ["day"]).collect())
+    _, jobs, _ = traced(spark, lambda: state.merge_query(spark, ["day"]).collect())
     assert jobs <= JOBS_PER_MERGE_QUERY

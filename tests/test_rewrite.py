@@ -8,7 +8,6 @@ from __future__ import annotations
 import contextlib
 import datetime as dt
 import os
-import uuid
 from pathlib import Path
 
 from pyspark.sql import functions as F
@@ -18,33 +17,18 @@ from clickhouse_learning_spark.functions.metrics import MetricSpec
 from clickhouse_learning_spark.mv.engine import MaterializedView, rollup_ttl
 from clickhouse_learning_spark.tables import Table
 
+from .conftest import traced
 from .test_partition_mutations import _files
 
 D0 = dt.date(2024, 1, 1)
+# Spark jobs of compacting a 4-day view holding the four value→count
+# kinds, a bitmap and a count; 20 while each value→count kind was
+# compressed in its own step after the merge
+JOBS_PER_SKETCH_COMPACT = 15
 
 
 def _outside(files: dict, part_dir: str) -> dict:
     return {k: v for k, v in files.items() if not k.startswith(part_dir + os.sep)}
-
-
-def _traced(spark, fn):
-    """``fn()`` under its own job group → (result, rows its jobs read
-    from data files)."""
-    sc = spark.sparkContext
-    group = f"rewrite-{uuid.uuid4()}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    tracker = sc.statusTracker()
-    store = sc._jsc.sc().statusStore()
-    read = sum(
-        store.lastStageAttempt(s).inputRecords()
-        for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds
-    )
-    return out, read
 
 
 def test_whole_table_compact_keeps_the_table_when_a_rename_fails(spark, tmp_path, monkeypatch):
@@ -151,13 +135,13 @@ def test_rollup_ttl_reads_only_expired_partitions(spark, tmp_path):
     """TTL GROUP BY rolls up exactly the expired partitions: its Spark
     stages read their footer rows and nothing else, and the recent
     partitions keep their files. (The metrics are single-pass merges:
-    each compress step of a value→count kind scans its input again.)"""
+    each re-sum of a value→count kind scans its input again.)"""
     mv, _ = _view(spark, str(tmp_path / "state"), 6, SKETCHES[3:])
     expired = [(str(D0 + dt.timedelta(days=i)),) for i in range(3)]
     footer_rows = sum(s["rows"] for s in mv.storage.stats(expired).values())
     recent = {p: fs for p, fs in mv.storage.files().items() if p not in expired}
 
-    n, read = _traced(
+    n, _, read = traced(
         spark, lambda: rollup_ttl(mv, spark, dt.timedelta(days=3), ["day"], now=D0 + dt.timedelta(days=6))
     )
     assert n == 3
@@ -189,3 +173,17 @@ def test_rollup_ttl_keeps_sketch_answers(spark, tmp_path):
         .agg(F.count_distinct("v").alias("n")).collect()
     }
     assert {r.day: r.n for r in old.select("day", F.size("p50").alias("n")).collect()} == distinct
+
+
+def test_compaction_of_value_count_kinds_reads_each_state_once(spark, tmp_path):
+    """Compacting topk, quantile, quantile_sketch, summap, bitmap and
+    count states reads the stored rows once for the plain merge and once
+    for each value→count kind's re-sum, within its job budget."""
+    metrics = (*SKETCHES, MetricSpec("dd", "quantile_sketch", "v"))
+    mv, _ = _view(spark, str(tmp_path / "state"), 4, metrics)
+    footer_rows = sum(s["rows"] for s in mv.storage.stats(list(mv.storage.files())).values())
+
+    done, jobs, read = traced(spark, lambda: mv.compact(spark))
+    assert len(done) == 4
+    assert read == (1 + 4) * footer_rows == 5 * 4 * 2 * 3  # days × parts × g
+    assert jobs <= JOBS_PER_SKETCH_COMPACT, jobs
