@@ -35,6 +35,14 @@ ANSI-compatible in the reference's queries, passes straight through to
 Spark's parser. DDL-only constructs (ENGINE clauses, ``numbers()``
 table function, ``LAYOUT``/``LIFETIME``) are out of scope: tables.py /
 Dictionary own those lifecycles.
+
+Functions with no Spark SQL form translate to calls of Pandas UDFs
+(``ch_xxhash64``, ``ch_seq_match_…``, …). Each emitted call records the
+builder of its UDF in ``_UDFS`` and registers that one UDF on every
+session ``_live_sessions()`` returns (the active session and the
+instantiated default, which differ after a streaming query), so
+``spark.sql(translate(q))`` resolves it at once. ``register_udfs(spark)``
+registers every UDF emitted so far on any other session.
 """
 
 from __future__ import annotations
@@ -1215,15 +1223,15 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     # RFC-4291 byte math; ch_ipv6_* registered on demand)
     m["IPv6CIDRToRange"] = lambda a: (
         lambda ip, n: (
-            f"struct({_ipv6_udf_sqln('ch_ipv6_cidr_lo', ip, n)} "
+            f"struct({_udf_call('ch_ipv6_cidr_lo', _make_ipv6_udfs, ip, n)} "
             f"AS col1, "
-            f"{_ipv6_udf_sqln('ch_ipv6_cidr_hi', ip, n)} AS col2)"
+            f"{_udf_call('ch_ipv6_cidr_hi', _make_ipv6_udfs, ip, n)} AS col2)"
         )
     )(*_two(a, "IPv6CIDRToRange"))
-    m["cutIPv6"] = lambda a: _ipv6_udf_sqln(
-        "ch_ipv6_cut", *_three(a, "cutIPv6"))
-    m["isIPAddressInRange"] = lambda a: _ipv6_udf_sqln(
-        "ch_ip_in_range", *_two(a, "isIPAddressInRange"))
+    m["cutIPv6"] = lambda a: _udf_call(
+        "ch_ipv6_cut", _make_ipv6_udfs, *_three(a, "cutIPv6"))
+    m["isIPAddressInRange"] = lambda a: _udf_call(
+        "ch_ip_in_range", _make_ipv6_udfs, *_two(a, "isIPAddressInRange"))
     # OUI = the first 3 octets ("AA:BB:CC" = chars 1..8)
     m["MACStringToOUI"] = lambda a: (
         lambda s_: (
@@ -1794,18 +1802,19 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
 
     # strict/Or* IPv6 text→binary conversions (= IPv6StringToNum
     # family; the UDFs registered on demand)
-    m["toIPv6"] = lambda a: _ipv6_udf_sqln(
-        "ch_ipv6_string_to_num", _one(a, "toIPv6"))
-    m["toIPv6OrNull"] = lambda a: _ipv6_udf_sqln(
-        "ch_ipv6_string_to_num_or_null", _one(a, "toIPv6OrNull"))
+    m["toIPv6"] = lambda a: _udf_call(
+        "ch_ipv6_string_to_num", _make_ipv6_udfs, _one(a, "toIPv6"))
+    m["toIPv6OrNull"] = lambda a: _udf_call(
+        "ch_ipv6_string_to_num_or_null", _make_ipv6_udfs,
+        _one(a, "toIPv6OrNull"))
     m["toIPv6OrZero"] = lambda a: (
-        f"coalesce({_ipv6_udf_sqln('ch_ipv6_string_to_num_or_null', _one(a, 'toIPv6OrZero'))}, "
+        f"coalesce({m['toIPv6OrNull']([_one(a, 'toIPv6OrZero')])}, "
         f"unhex('{'0' * 32}'))"
     )
     m["toIPv6OrDefault"] = lambda a: (
         m["toIPv6OrZero"]([a[0]])
         if len(a) == 1
-        else f"coalesce({_ipv6_udf_sqln('ch_ipv6_string_to_num_or_null', a[0])}, {a[1]})"
+        else f"coalesce({m['toIPv6OrNull']([a[0]])}, {a[1]})"
     )
     m["toIPv4OrDefault"] = lambda a: (
         m["toIPv4OrZero"]([a[0]])
@@ -2469,14 +2478,16 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             raise ValueError(
                 "geohashEncode expects (longitude, latitude[, precision])"
             )
-        return _geohash_udf_sql(
-            f"ch_geohash_encode(CAST(({a[0]}) AS DOUBLE), "
-            f"CAST(({a[1]}) AS DOUBLE), CAST(({a[2]}) AS BIGINT))"
+        return _udf_call(
+            "ch_geohash_encode", _make_geohash_udfs,
+            f"CAST(({a[0]}) AS DOUBLE)", f"CAST(({a[1]}) AS DOUBLE)",
+            f"CAST(({a[2]}) AS BIGINT)",
         )
 
     m["geohashEncode"] = _geohash_encode
-    m["geohashDecode"] = lambda a: _geohash_udf_sql(
-        f"ch_geohash_decode(CAST(({_one(a, 'geohashDecode')}) AS STRING))"
+    m["geohashDecode"] = lambda a: _udf_call(
+        "ch_geohash_decode", _make_geohash_udfs,
+        f"CAST(({_one(a, 'geohashDecode')}) AS STRING)",
     )
     # null handling / strings
     m["ifNull"] = lambda a: f"coalesce({', '.join(a)})"
@@ -2679,14 +2690,14 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     # ('::ffff:1.2.3.4'), matching CH's documented form, which Python
     # itself would render as '::ffff:102:304'. The binary form is the
     # address's 16 network-order bytes (CH FixedString(16)).
-    m["IPv6NumToString"] = lambda a: _ipv6_udf_sql(
-        "ch_ipv6_num_to_string", _one(a, "IPv6NumToString")
+    m["IPv6NumToString"] = lambda a: _udf_call(
+        "ch_ipv6_num_to_string", _make_ipv6_udfs, _one(a, "IPv6NumToString")
     )
-    m["IPv6StringToNum"] = lambda a: _ipv6_udf_sql(
-        "ch_ipv6_string_to_num", _one(a, "IPv6StringToNum")
+    m["IPv6StringToNum"] = lambda a: _udf_call(
+        "ch_ipv6_string_to_num", _make_ipv6_udfs, _one(a, "IPv6StringToNum")
     )
-    m["IPv6StringToNumOrNull"] = lambda a: _ipv6_udf_sql(
-        "ch_ipv6_string_to_num_or_null",
+    m["IPv6StringToNumOrNull"] = lambda a: _udf_call(
+        "ch_ipv6_string_to_num_or_null", _make_ipv6_udfs,
         _one(a, "IPv6StringToNumOrNull"),
     )
     # NULL input propagates NULL (ADVICE r9: IS NOT NULL would fold
@@ -2694,8 +2705,7 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["isIPv6String"] = lambda a: (
         lambda s: (
             f"CASE WHEN ({s}) IS NULL THEN NULL ELSE "
-            f"CAST({_ipv6_udf_sql('ch_ipv6_string_to_num_or_null', s)}"
-            f" IS NOT NULL AS INT) END"
+            f"CAST({m['toIPv6OrNull']([s])} IS NOT NULL AS INT) END"
         )
     )(_one(a, "isIPv6String"))
     # IPv4 numeric ↔ dotted-quad
@@ -2981,19 +2991,20 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["toValidUTF8"] = lambda a: _one(a, "toValidUTF8")
     # RFC 3492 punycode through the stdlib codec (Arrow UDF — there is
     # no Catalyst form); tryPunycodeDecode yields '' on bad input
-    m["punycodeEncode"] = lambda a: _punycode_udf_sql(
-        "ch_punycode_encode", _one(a, "punycodeEncode"))
-    m["punycodeDecode"] = lambda a: _punycode_udf_sql(
-        "ch_punycode_decode", _one(a, "punycodeDecode"))
-    m["tryPunycodeDecode"] = lambda a: _punycode_udf_sql(
-        "ch_try_punycode_decode", _one(a, "tryPunycodeDecode"))
+    m["punycodeEncode"] = lambda a: _udf_call(
+        "ch_punycode_encode", _make_punycode_udfs, _one(a, "punycodeEncode"))
+    m["punycodeDecode"] = lambda a: _udf_call(
+        "ch_punycode_decode", _make_punycode_udfs, _one(a, "punycodeDecode"))
+    m["tryPunycodeDecode"] = lambda a: _udf_call(
+        "ch_try_punycode_decode", _make_punycode_udfs,
+        _one(a, "tryPunycodeDecode"))
     # Bitcoin-alphabet base58 (Arrow UDF; see _make_base58_udfs)
-    m["base58Encode"] = lambda a: _base58_udf_sql(
-        "ch_base58_encode", _one(a, "base58Encode"))
-    m["base58Decode"] = lambda a: _base58_udf_sql(
-        "ch_base58_decode", _one(a, "base58Decode"))
-    m["tryBase58Decode"] = lambda a: _base58_udf_sql(
-        "ch_try_base58_decode", _one(a, "tryBase58Decode"))
+    m["base58Encode"] = lambda a: _udf_call(
+        "ch_base58_encode", _make_base58_udfs, _one(a, "base58Encode"))
+    m["base58Decode"] = lambda a: _udf_call(
+        "ch_base58_decode", _make_base58_udfs, _one(a, "base58Decode"))
+    m["tryBase58Decode"] = lambda a: _udf_call(
+        "ch_try_base58_decode", _make_base58_udfs, _one(a, "tryBase58Decode"))
 
     # CH left/right accept NEGATIVE lengths (left(s,-n) = all but the
     # last n; right(s,-n) = all but the first n); Spark returns ''.
@@ -3628,12 +3639,10 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
                     "JSONExtractRaw(json, 0): ClickHouse element "
                     "indexes are 1-based (negative = from the end)"
                 )
-            arr = _jsonraw_udf_sql("ch_json_array_raw", j)
+            arr = _udf_call("ch_json_array_raw", _make_jsonraw_udfs, j)
             return f"coalesce(try_element_at({arr}, {ks}), '')"
-        return (
-            f"coalesce({_jsonraw_udf_sql('ch_json_raw_at', f'{j}, {k}')}"
-            f", '')"
-        )
+        raw = _udf_call("ch_json_raw_at", _make_jsonraw_udfs, j, k)
+        return f"coalesce({raw}, '')"
 
     m["JSONExtractRaw"] = _extract_raw
     m["JSONExtractInt"] = _json_extract("BIGINT", "CAST(0 AS BIGINT)")
@@ -3756,11 +3765,13 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             "chain get_json_object(...) explicitly"
         )
 
-    m["JSONExtractArrayRaw"] = lambda a: _jsonraw_udf_sql(
-        "ch_json_array_raw", _json_sub(a, "JSONExtractArrayRaw")
+    m["JSONExtractArrayRaw"] = lambda a: _udf_call(
+        "ch_json_array_raw", _make_jsonraw_udfs,
+        _json_sub(a, "JSONExtractArrayRaw"),
     )
-    m["JSONExtractKeysAndValuesRaw"] = lambda a: _jsonraw_udf_sql(
-        "ch_json_kv_raw", _json_sub(a, "JSONExtractKeysAndValuesRaw")
+    m["JSONExtractKeysAndValuesRaw"] = lambda a: _udf_call(
+        "ch_json_kv_raw", _make_jsonraw_udfs,
+        _json_sub(a, "JSONExtractKeysAndValuesRaw"),
     )
     # JSONType's Int64/UInt64/Double discrimination follows simdjson's
     # numeric-width probe — not pinned offline; gate with the shape
@@ -5470,10 +5481,8 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         # no _bind: Spark rejects Python UDFs inside HOF lambdas, and
         # the duplicated subtrees are pure arithmetic over aggregates
         # Catalyst computes once
-        return (
-            f"named_struct('col1', {t}, "
-            f"'col2', {_t_pvalue_sql(t, df)})"
-        )
+        p = _udf_call("ch_t_pvalue", _make_stats_test_udfs, t, df)
+        return f"named_struct('col1', {t}, 'col2', {p})"
 
     def _welch_ttest(a):
         # welchTTest(v, idx): unpooled variances, Welch-Satterthwaite
@@ -5489,10 +5498,8 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             f"({se0} * {se0} / (({n0}) - 1) + "
             f"{se1} * {se1} / (({n1}) - 1))"
         )
-        return (
-            f"named_struct('col1', {t}, "
-            f"'col2', {_t_pvalue_sql(t, df)})"
-        )
+        p = _udf_call("ch_t_pvalue", _make_stats_test_udfs, t, df)
+        return f"named_struct('col1', {t}, 'col2', {p})"
 
     m["studentTTest"] = _student_ttest
     m["welchTTest"] = _welch_ttest
@@ -5566,11 +5573,11 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             )
         return x
 
-    m["xxHash64"] = lambda a: _xxh_udf_sql(
-        "ch_xxhash64", _xxh_arg(a, "xxHash64")
+    m["xxHash64"] = lambda a: _udf_call(
+        "ch_xxhash64", _make_xxh_udfs, _xxh_arg(a, "xxHash64")
     )
-    m["xxHash32"] = lambda a: _xxh_udf_sql(
-        "ch_xxhash32", _xxh_arg(a, "xxHash32")
+    m["xxHash32"] = lambda a: _udf_call(
+        "ch_xxhash32", _make_xxh_udfs, _xxh_arg(a, "xxHash32")
     )
     # r9: the murmurHash3 family is EXACT — functions/murmur.py
     # implements the public-domain Appleby spec (seed-parametric),
@@ -5583,14 +5590,14 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     # Spark's signed BIGINT view; murmurHash3_128 returns CH's
     # FixedString(16) as BINARY (hex() renders it CH-style). The
     # integer-literal width gate (_xxh_arg) applies as for xxHash.
-    m["murmurHash3_32"] = lambda a: _murmur_udf_sql(
-        "ch_murmur3_32", _xxh_arg(a, "murmurHash3_32")
+    m["murmurHash3_32"] = lambda a: _udf_call(
+        "ch_murmur3_32", _make_murmur_udfs, _xxh_arg(a, "murmurHash3_32")
     )
-    m["murmurHash3_64"] = lambda a: _murmur_udf_sql(
-        "ch_murmur3_64", _xxh_arg(a, "murmurHash3_64")
+    m["murmurHash3_64"] = lambda a: _udf_call(
+        "ch_murmur3_64", _make_murmur_udfs, _xxh_arg(a, "murmurHash3_64")
     )
-    m["murmurHash3_128"] = lambda a: _murmur_udf_sql(
-        "ch_murmur3_128", _xxh_arg(a, "murmurHash3_128")
+    m["murmurHash3_128"] = lambda a: _udf_call(
+        "ch_murmur3_128", _make_murmur_udfs, _xxh_arg(a, "murmurHash3_128")
     )
     # r9: sipHash64 is EXACT — functions/siphash.py implements
     # SipHash-2-4 from the public spec (key-parametric), verified by
@@ -5599,8 +5606,8 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     # binds the fixed key (0, 0). sipHash128 stays gated below — CH's
     # 128-bit variant is historically NON-standard (see
     # sipHash128Reference in CH's own docs) and not pinned offline.
-    m["sipHash64"] = lambda a: _murmur_udf_sql(
-        "ch_siphash64", _xxh_arg(a, "sipHash64")
+    m["sipHash64"] = lambda a: _udf_call(
+        "ch_siphash64", _make_murmur_udfs, _xxh_arg(a, "sipHash64")
     )
     # the remaining families stay gated: their reference constants are
     # not pinned offline (CityHash 1.0.2's CH-vendored variant, CH's
@@ -5690,12 +5697,14 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             "(sources/rowbinary.py) for bit-packed layouts"
         )
     )
-    m["extractAllGroupsVertical"] = lambda a: _extract_groups_udf_sql(
-        *_two(a, "extractAllGroupsVertical"), horizontal=False
+    m["extractAllGroupsVertical"] = lambda a: _udf_call(
+        "ch_extract_groups_v", _make_extract_groups_udfs,
+        *_two(a, "extractAllGroupsVertical")
     )
     m["extractAllGroups"] = m["extractAllGroupsVertical"]
-    m["extractAllGroupsHorizontal"] = lambda a: _extract_groups_udf_sql(
-        *_two(a, "extractAllGroupsHorizontal"), horizontal=True
+    m["extractAllGroupsHorizontal"] = lambda a: _udf_call(
+        "ch_extract_groups_h", _make_extract_groups_udfs,
+        *_two(a, "extractAllGroupsHorizontal")
     )
     m["tupleHammingDistance"] = lambda a: (_ for _ in ()).throw(
         ValueError(
@@ -5708,25 +5717,27 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     # the stdlib — r7: these passed through untranslated before
     for _nf in ("NFC", "NFD", "NFKC", "NFKD"):
         m[f"normalizeUTF8{_nf}"] = (
-            lambda form: lambda a: _normalize_utf8_udf_sql(
-                _one(a, f"normalizeUTF8{form}"), form
+            lambda form: lambda a: _udf_call(
+                f"ch_normalize_utf8_{form.lower()}", _make_textnorm_udfs,
+                _one(a, f"normalizeUTF8{form}"),
             )
         )(_nf)
     # Java String.hashCode over UTF-16 code units — a PUBLISHED exact
     # algorithm (pinned on its public vectors: '' -> 0, 'a' -> 97,
     # 'abc' -> 96354); hiveHash is the same with the sign bit cleared
-    m["javaHash"] = lambda a: _java_hash_udf_sql(
-        _one(a, "javaHash"), hive=False
+    m["javaHash"] = lambda a: _udf_call(
+        "ch_java_hash", _make_textnorm_udfs, _one(a, "javaHash")
     )
-    m["hiveHash"] = lambda a: _java_hash_udf_sql(
-        _one(a, "hiveHash"), hive=True
+    m["hiveHash"] = lambda a: _udf_call(
+        "ch_hive_hash", _make_textnorm_udfs, _one(a, "hiveHash")
     )
     # r9: javaHashUTF16LE = the same published fold over the value's
     # bytes read as little-endian UTF-16 units (odd byte length
     # raises, as CH does); derivation law pinned in
     # test_dialect_semantics: javaHashUTF16LE(utf16le(s)) == javaHash(s)
-    m["javaHashUTF16LE"] = lambda a: _java_hash16le_udf_sql(
-        _one(a, "javaHashUTF16LE")
+    m["javaHashUTF16LE"] = lambda a: _udf_call(
+        "ch_java_hash_utf16le", _make_textnorm_udfs,
+        _one(a, "javaHashUTF16LE"),
     )
     # -- string distances (r7: these used to PASS THROUGH untranslated
     # — the silent-mistranslation class; now mapped where the public
@@ -5739,24 +5750,26 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["levenshteinDistanceUTF8"] = m["editDistanceUTF8"]
     # the plain forms are BYTE-level; identical to codepoint level for
     # ASCII, and the byte DP runs as an Arrow UDF for the general case
-    m["editDistance"] = lambda a: _edit_distance_udf_sql(
-        *_two(a, "editDistance")
+    m["editDistance"] = lambda a: _udf_call(
+        "ch_edit_distance", _make_strdist_udfs, *_two(a, "editDistance")
     )
     m["levenshteinDistance"] = m["editDistance"]
     # textbook Jaro / Jaro–Winkler (Winkler 1990: p=0.1, prefix<=4);
     # empty-edge convention documented at the UDF: both empty -> 1.0,
     # exactly one empty -> 0.0. Differential-fuzzed against DuckDB's
     # independent jaro_similarity/jaro_winkler_similarity.
-    m["jaroSimilarity"] = lambda a: _jaro_udf_sql(
-        *_two(a, "jaroSimilarity"), winkler=False
+    m["jaroSimilarity"] = lambda a: _udf_call(
+        "ch_jaro", _make_strdist_udfs, *_two(a, "jaroSimilarity")
     )
-    m["jaroWinklerSimilarity"] = lambda a: _jaro_udf_sql(
-        *_two(a, "jaroWinklerSimilarity"), winkler=True
+    m["jaroWinklerSimilarity"] = lambda a: _udf_call(
+        "ch_jaro_winkler", _make_strdist_udfs,
+        *_two(a, "jaroWinklerSimilarity")
     )
     # CH documents stringJaccardIndex over BYTE sets; both-empty -> 1.0
     # (|∩|/|∪| with the empty union defined as identity), one-empty ->
     # 0.0. Fuzzed against DuckDB's character-set jaccard on ASCII.
-    m["stringJaccardIndex"] = lambda a: _jaccard_bytes_udf_sql(
+    m["stringJaccardIndex"] = lambda a: _udf_call(
+        "ch_string_jaccard", _make_strdist_udfs,
         *_two(a, "stringJaccardIndex")
     )
     for _sd in ("damerauLevenshteinDistance", "byteHammingDistance"):
@@ -5807,7 +5820,10 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     # fmix64 finalizer — its wrapping uint64 multiplies would raise
     # under ANSI BIGINT arithmetic, so it runs as a vectorized Arrow
     # UDF over numpy uint64 (exact wrap, batch-at-a-time)
-    m["intHash64"] = lambda a: _int_hash64_udf_sql(_one(a, "intHash64"))
+    m["intHash64"] = lambda a: _udf_call(
+        "ch_int_hash64", _make_int_hash64_udfs,
+        f"CAST(({_one(a, 'intHash64')}) AS BIGINT)",
+    )
     m["now64"] = lambda a: "now()"
 
     # toDateTime64 family: CH TRUNCATES the fractional part to the
@@ -6369,33 +6385,6 @@ def _sequence_compile(pattern: str, n_conds: int, fn: str):
     return pat, ([it.cond for it in pat.items] if plain else None)
 
 
-# full-grammar sequence UDFs emitted by translate(): name -> (pattern,
-# n_conds, kind). run() registers them on its session; translate()
-# registers eagerly against the active session so plain
-# spark.sql(translate(…)) works too.
-_SEQ_UDFS: dict[str, tuple[str, int, str]] = {}
-
-# LTTB downsampling UDFs emitted by translate(): name -> n_points
-_LTTB_UDFS: dict[str, int] = {}
-
-
-# set when translate() emits an intHash64 call
-_INT_HASH64_WANTED = False
-_PUNYCODE_WANTED = False
-_BASE58_WANTED = False
-
-# set when translate() emits a geohashEncode/Decode call
-_GEOHASH_WANTED = False
-
-
-def _geohash_udf_sql(expr: str) -> str:
-    global _GEOHASH_WANTED
-    _GEOHASH_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    return expr
-
-
 def _group_array_insert_at(p: list[str], a: list[str]) -> str:
     """Single-expression ``groupArrayInsertAt(default[, size])(x, pos)``
     (semantics note at the _PARAMETERIZED entry)."""
@@ -6429,7 +6418,7 @@ def _group_array_insert_at(p: list[str], a: list[str]) -> str:
     )
 
 
-def _make_int_hash64_udf():
+def _make_int_hash64_udfs():
     """ClickHouse intHash64 = Murmur3 fmix64 (Common/HashTable/Hash.h):
     xorshift-33 / 0xff51afd7ed558ccd / xorshift-33 /
     0xc4ceb9fe1a85ec53 / xorshift-33 over the uint64 view."""
@@ -6454,26 +6443,7 @@ def _make_int_hash64_udf():
         out[null] = pd.NA
         return pd.Series(out)
 
-    return pandas_udf(_f, "bigint")
-
-
-def _int_hash64_udf_sql(x: str) -> str:
-    global _INT_HASH64_WANTED
-    _INT_HASH64_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    return f"ch_int_hash64(CAST(({x}) AS BIGINT))"
-
-
-_XXH_WANTED = False
-
-
-def _xxh_udf_sql(fn: str, x: str) -> str:
-    global _XXH_WANTED
-    _XXH_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    return f"{fn}({x})"
+    return {"ch_int_hash64": pandas_udf(_f, "bigint")}
 
 
 def _arrow_ragged(v):
@@ -6616,51 +6586,21 @@ def _make_xxh_udfs():
 
     import numpy as _np
 
-    return (
-        _make_poly_hash_udf(
+    return {
+        "ch_xxhash64": _make_poly_hash_udf(
             lambda b: _xxh.xxh64(b, 0), _signed64_view, "bigint",
             "ch_xxhash64",
             int_vec=lambda a, w: _hv.xxh64_int_vec(a, w, 0),
             str_vec=lambda d, o: _hv.hash_ragged(
                 d, o, lambda m: _hv.xxh64_mat(m, 0)
             ).view(_np.int64)),
-        _make_poly_hash_udf(
+        "ch_xxhash32": _make_poly_hash_udf(
             lambda b: _xxh.xxh32(b, 0), int, "bigint", "ch_xxhash32",
             int_vec=lambda a, w: _hv.xxh32_int_vec(a, w, 0),
             str_vec=lambda d, o: _hv.hash_ragged(
                 d, o, lambda m: _hv.xxh32_mat(m, 0)
             ).astype(_np.int64)),
-    )
-
-
-_MURMUR_WANTED = False
-
-
-def _murmur_udf_sql(fn: str, x: str) -> str:
-    global _MURMUR_WANTED
-    _MURMUR_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    return f"{fn}({x})"
-
-
-_IPV6_WANTED = False
-
-
-def _ipv6_udf_sql(fn: str, x: str) -> str:
-    global _IPV6_WANTED
-    _IPV6_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    return f"{fn}({x})"
-
-
-def _ipv6_udf_sqln(fn: str, *xs: str) -> str:
-    global _IPV6_WANTED
-    _IPV6_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    return f"{fn}({', '.join(xs)})"
+    }
 
 
 def _make_ipv6_udfs():
@@ -6767,18 +6707,15 @@ def _make_ipv6_udfs():
             dtype="object",
         )
 
-    return n2s, s2n, s2n_null, cidr_lo, cidr_hi, cut6, inrange
-
-
-_JSONRAW_WANTED = False
-
-
-def _jsonraw_udf_sql(fn: str, x: str) -> str:
-    global _JSONRAW_WANTED
-    _JSONRAW_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    return f"{fn}({x})"
+    return {
+        "ch_ipv6_num_to_string": n2s,
+        "ch_ipv6_string_to_num": s2n,
+        "ch_ipv6_string_to_num_or_null": s2n_null,
+        "ch_ipv6_cidr_lo": cidr_lo,
+        "ch_ipv6_cidr_hi": cidr_hi,
+        "ch_ipv6_cut": cut6,
+        "ch_ip_in_range": inrange,
+    }
 
 
 def _make_jsonraw_udfs():
@@ -6818,11 +6755,12 @@ def _make_jsonraw_udfs():
             dtype="object",
         )
 
-    return (
-        pandas_udf(_arr, "array<string>"),
-        pandas_udf(_kv, "array<struct<col1:string,col2:string>>"),
-        pandas_udf(_raw_at, "string"),
-    )
+    return {
+        "ch_json_array_raw": pandas_udf(_arr, "array<string>"),
+        "ch_json_kv_raw": pandas_udf(
+            _kv, "array<struct<col1:string,col2:string>>"),
+        "ch_json_raw_at": pandas_udf(_raw_at, "string"),
+    }
 
 
 def _make_murmur_udfs():
@@ -6860,93 +6798,28 @@ def _make_murmur_udfs():
         h1, h2 = _hv.hash_ragged(d, o, _hv.murmur128_mat)
         return (h1 ^ h2).view(_np.int64)
 
-    return (
-        _make_poly_hash_udf(
+    return {
+        "ch_murmur3_32": _make_poly_hash_udf(
             lambda b: _mm.murmur3_x86_32(b, 0), int, "bigint",
             "ch_murmur3_32",
             int_vec=lambda a, w: _hv.murmur32_int_vec(a, w, 0),
             str_vec=lambda d, o: _hv.hash_ragged(
                 d, o, lambda m: _hv.murmur32_mat(m, 0)
             ).astype(_np.int64)),
-        _make_poly_hash_udf(
+        "ch_murmur3_64": _make_poly_hash_udf(
             _mm.ch_murmur3_64, _signed64_view, "bigint",
             "ch_murmur3_64", int_vec=_hv.murmur64_int_vec,
             str_vec=_m64_str),
-        _make_poly_hash_udf(
+        "ch_murmur3_128": _make_poly_hash_udf(
             lambda b: _mm.murmur3_x64_128_bytes(b, 0), lambda b: b,
             "binary", "ch_murmur3_128", int_vec=_m128_vec,
             str_vec=_m128_str),
-        _make_poly_hash_udf(
+        "ch_siphash64": _make_poly_hash_udf(
             _sh.ch_siphash64, _signed64_view, "bigint",
             "ch_siphash64", int_vec=_hv.siphash64_int_vec,
             str_vec=lambda d, o: _hv.hash_ragged(
                 d, o, _hv.siphash64_mat).view(_np.int64)),
-    )
-
-
-_STRDIST_WANTED = False
-
-
-def _edit_distance_udf_sql(x: str, y: str) -> str:
-    global _STRDIST_WANTED
-    _STRDIST_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    return f"ch_edit_distance({x}, {y})"
-
-
-def _jaro_udf_sql(x: str, y: str, winkler: bool) -> str:
-    global _STRDIST_WANTED
-    _STRDIST_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    fn = "ch_jaro_winkler" if winkler else "ch_jaro"
-    return f"{fn}({x}, {y})"
-
-
-def _jaccard_bytes_udf_sql(x: str, y: str) -> str:
-    global _STRDIST_WANTED
-    _STRDIST_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    return f"ch_string_jaccard({x}, {y})"
-
-
-_TEXTNORM_WANTED = False
-
-
-def _normalize_utf8_udf_sql(x: str, form: str) -> str:
-    global _TEXTNORM_WANTED
-    _TEXTNORM_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    return f"ch_normalize_utf8_{form.lower()}({x})"
-
-
-def _java_hash_udf_sql(x: str, hive: bool) -> str:
-    global _TEXTNORM_WANTED
-    _TEXTNORM_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    return f"{'ch_hive_hash' if hive else 'ch_java_hash'}({x})"
-
-
-def _java_hash16le_udf_sql(x: str) -> str:
-    global _TEXTNORM_WANTED
-    _TEXTNORM_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    return f"ch_java_hash_utf16le({x})"
-
-
-def _extract_groups_udf_sql(x: str, pattern: str, horizontal: bool) -> str:
-    global _TEXTNORM_WANTED
-    _TEXTNORM_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    fn = ("ch_extract_groups_h" if horizontal
-          else "ch_extract_groups_v")
-    return f"{fn}({x}, {pattern})"
+    }
 
 
 def _make_extract_groups_udfs():
@@ -6979,7 +6852,7 @@ def _make_extract_groups_udfs():
                        else [])
         return pd.Series(out)
 
-    return v, h
+    return {"ch_extract_groups_v": v, "ch_extract_groups_h": h}
 
 
 def _make_textnorm_udfs():
@@ -7152,23 +7025,8 @@ def _make_strdist_udfs():
             for x, y in zip(xs, ys)
         ], dtype="Int64")
 
-    return ed, _mk(_jaro), _mk(_jw), _mk(_jac)
-
-
-def _punycode_udf_sql(fn: str, x: str) -> str:
-    global _PUNYCODE_WANTED
-    _PUNYCODE_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    return f"{fn}({x})"
-
-
-def _base58_udf_sql(fn: str, x: str) -> str:
-    global _BASE58_WANTED
-    _BASE58_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    return f"{fn}({x})"
+    return {"ch_edit_distance": ed, "ch_jaro": _mk(_jaro),
+            "ch_jaro_winkler": _mk(_jw), "ch_string_jaccard": _mk(_jac)}
 
 
 _B58_ALPHABET = "123456789ABCDEFGHJKLMNPQRSTUVWXYZ" \
@@ -7224,11 +7082,11 @@ def _make_base58_udfs():
                 return ""
         return v.map(one)
 
-    return (
-        pandas_udf(_enc, "string"),
-        pandas_udf(_dec, "string"),
-        pandas_udf(_try_dec, "string"),
-    )
+    return {
+        "ch_base58_encode": pandas_udf(_enc, "string"),
+        "ch_base58_decode": pandas_udf(_dec, "string"),
+        "ch_try_base58_decode": pandas_udf(_try_dec, "string"),
+    }
 
 
 def _make_punycode_udfs():
@@ -7259,11 +7117,29 @@ def _make_punycode_udfs():
                 return ""
         return v.map(one)
 
-    return (
-        pandas_udf(_enc, "string"),
-        pandas_udf(_dec, "string"),
-        pandas_udf(_try_dec, "string"),
-    )
+    return {
+        "ch_punycode_encode": pandas_udf(_enc, "string"),
+        "ch_punycode_decode": pandas_udf(_dec, "string"),
+        "ch_try_punycode_decode": pandas_udf(_try_dec, "string"),
+    }
+
+
+def _make_geohash_udfs():
+    from clickhouse_learning_spark.functions import geo
+
+    return {"ch_geohash_encode": geo.make_geohash_encode_udf(),
+            "ch_geohash_decode": geo.make_geohash_decode_udf()}
+
+
+def _make_stats_test_udfs():
+    """The unparameterized UDFs of functions/stats_tests.py: two-sided
+    Student-t and normal p-values (from-scratch regularized incomplete
+    beta and erfc) and the two-sample Kolmogorov–Smirnov test."""
+    from clickhouse_learning_spark.functions import stats_tests
+
+    return {"ch_t_pvalue": stats_tests.make_t_pvalue_udf(),
+            "ch_normal_two_sided_p": stats_tests.make_normal_pvalue_udf(),
+            "ch_ks_test": stats_tests.make_ks_udf()}
 
 
 def _live_sessions():
@@ -7287,108 +7163,28 @@ def _live_sessions():
     return out
 
 
-def register_sequence_udfs(spark) -> None:
-    """Idempotently register every Pandas UDF the dialect has emitted
-    on this session (full-grammar sequenceMatch/Count,
-    largestTriangleThreeBuckets, intHash64)."""
-    from clickhouse_learning_spark.functions import lttb, seqmatch
-
-    for name, (pattern, n, kind) in _SEQ_UDFS.items():
-        spark.udf.register(name, seqmatch.make_sequence_udf(pattern, n, kind))
-    for name, n in _LTTB_UDFS.items():
-        spark.udf.register(name, lttb.make_lttb_udf(n))
-    if _INT_HASH64_WANTED:
-        spark.udf.register("ch_int_hash64", _make_int_hash64_udf())
-    if _XXH_WANTED:
-        x64, x32 = _make_xxh_udfs()
-        spark.udf.register("ch_xxhash64", x64)
-        spark.udf.register("ch_xxhash32", x32)
-    if _MURMUR_WANTED:
-        m32, m64, m128, sip64 = _make_murmur_udfs()
-        spark.udf.register("ch_murmur3_32", m32)
-        spark.udf.register("ch_murmur3_64", m64)
-        spark.udf.register("ch_murmur3_128", m128)
-        spark.udf.register("ch_siphash64", sip64)
-    if _JSONRAW_WANTED:
-        jarr, jkv, jraw = _make_jsonraw_udfs()
-        spark.udf.register("ch_json_array_raw", jarr)
-        spark.udf.register("ch_json_kv_raw", jkv)
-        spark.udf.register("ch_json_raw_at", jraw)
-    if _IPV6_WANTED:
-        n2s, s2n, s2n_null, cidr_lo, cidr_hi, cut6, inrange = (
-            _make_ipv6_udfs()
-        )
-        spark.udf.register("ch_ipv6_num_to_string", n2s)
-        spark.udf.register("ch_ipv6_string_to_num", s2n)
-        spark.udf.register("ch_ipv6_string_to_num_or_null", s2n_null)
-        spark.udf.register("ch_ipv6_cidr_lo", cidr_lo)
-        spark.udf.register("ch_ipv6_cidr_hi", cidr_hi)
-        spark.udf.register("ch_ipv6_cut", cut6)
-        spark.udf.register("ch_ip_in_range", inrange)
-    if _PUNYCODE_WANTED:
-        enc, dec, tdec = _make_punycode_udfs()
-        spark.udf.register("ch_punycode_encode", enc)
-        spark.udf.register("ch_punycode_decode", dec)
-        spark.udf.register("ch_try_punycode_decode", tdec)
-    if _STRDIST_WANTED:
-        ed, jr, jw, jac = _make_strdist_udfs()
-        spark.udf.register("ch_edit_distance", ed)
-        spark.udf.register("ch_jaro", jr)
-        spark.udf.register("ch_jaro_winkler", jw)
-        spark.udf.register("ch_string_jaccard", jac)
-    if _TEXTNORM_WANTED:
-        for _n, _u in _make_textnorm_udfs().items():
-            spark.udf.register(_n, _u)
-        _gv, _gh = _make_extract_groups_udfs()
-        spark.udf.register("ch_extract_groups_v", _gv)
-        spark.udf.register("ch_extract_groups_h", _gh)
-    if _BASE58_WANTED:
-        enc, dec, tdec = _make_base58_udfs()
-        spark.udf.register("ch_base58_encode", enc)
-        spark.udf.register("ch_base58_decode", dec)
-        spark.udf.register("ch_try_base58_decode", tdec)
-    if _GEOHASH_WANTED:
-        from clickhouse_learning_spark.functions import geo
-
-        spark.udf.register("ch_geohash_encode",
-                           geo.make_geohash_encode_udf())
-        spark.udf.register("ch_geohash_decode",
-                           geo.make_geohash_decode_udf())
-    if _TTEST_WANTED:
-        from clickhouse_learning_spark.functions import stats_tests
-
-        spark.udf.register("ch_t_pvalue", stats_tests.make_t_pvalue_udf())
-    if _ZTEST_WANTED:
-        from clickhouse_learning_spark.functions import stats_tests
-
-        spark.udf.register(
-            "ch_normal_two_sided_p", stats_tests.make_normal_pvalue_udf()
-        )
-    if _KS_WANTED:
-        from clickhouse_learning_spark.functions import stats_tests
-
-        spark.udf.register("ch_ks_test", stats_tests.make_ks_udf())
-    for name, (alt, cc) in _MW_UDFS.items():
-        from clickhouse_learning_spark.functions import stats_tests
-
-        spark.udf.register(name, stats_tests.make_mann_whitney_udf(alt, cc))
+# Every Pandas UDF translate() has emitted: SQL name -> the builder of
+# the {sql_name: udf} family that holds it (a parameterized UDF is a
+# family of one).
+_UDFS: dict[str, Callable[[], dict]] = {}
 
 
-_TTEST_WANTED = False
-_ZTEST_WANTED = False
-_KS_WANTED = False
-_MW_UDFS: dict[str, tuple[str, bool]] = {}
+def _udf_call(name: str, make: Callable[[], dict], *args: str) -> str:
+    """``name(args…)``, a call to the Pandas UDF ``make()[name]``:
+    records ``make`` in ``_UDFS`` and registers that one UDF on every
+    live session."""
+    _UDFS[name] = make
+    for s in _live_sessions():
+        s.udf.register(name, make()[name])
+    return f"{name}({', '.join(args)})"
 
 
-def _t_pvalue_sql(t: str, df: str) -> str:
-    """Two-sided Student-t p-value via the registered scalar pandas UDF
-    (functions/stats_tests.py — from-scratch regularized incomplete
-    beta; runs post-aggregation, one row per group)."""
-    global _TTEST_WANTED
-    _TTEST_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    return f"ch_t_pvalue({t}, {df})"
+def register_udfs(spark) -> None:
+    """Register every Pandas UDF translate() has emitted so far on
+    ``spark`` — for a session that was neither active nor the default
+    when the query was translated (e.g. one from ``newSession()``)."""
+    for name, make in _UDFS.items():
+        spark.udf.register(name, make()[name])
 
 
 def _ks_test_sql(params: list[str], args: list[str]) -> str:
@@ -7420,11 +7216,8 @@ def _ks_test_sql(params: list[str], args: list[str]) -> str:
                 f"method) parameters; got {len(params)}"
             )
     v, g = _two(args, "kolmogorovSmirnovTest")
-    global _KS_WANTED
-    _KS_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    call = f"ch_ks_test(CAST(({v}) AS DOUBLE), CAST(({g}) AS INT))"
+    call = _udf_call("ch_ks_test", _make_stats_test_udfs,
+                     f"CAST(({v}) AS DOUBLE)", f"CAST(({g}) AS INT)")
     return (
         f"element_at(transform(array({call}), ks -> "
         f"named_struct('col1', ks[0], 'col2', ks[1])), 1)"
@@ -7468,13 +7261,10 @@ def _mean_z_test_sql(params: list[str], args: list[str]) -> str:
     se = f"sqrt({vx!r} / ({n0}) + {vy!r} / ({n1}))"
     z = f"(({m0}) - ({m1})) / {se}"
     diff = f"(({m0}) - ({m1}))"
-    global _ZTEST_WANTED
-    _ZTEST_WANTED = True
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
+    p = _udf_call("ch_normal_two_sided_p", _make_stats_test_udfs, z)
     return (
         f"named_struct('col1', {z}, "
-        f"'col2', ch_normal_two_sided_p({z}), "
+        f"'col2', {p}, "
         f"'col3', {diff} - {zc!r} * {se}, "
         f"'col4', {diff} + {zc!r} * {se})"
     )
@@ -7488,6 +7278,8 @@ def _mw_test_sql(params: list[str], args: list[str]) -> str:
     continuity correction ON by default. Ranks need the whole combined
     sample, so this is a grouped-agg pandas UDF (the seqmatch/LTTB
     slow-complete pattern, state bounded by group size)."""
+    from clickhouse_learning_spark.functions import stats_tests
+
     alternative, cc = "two-sided", True
     if params:
         m_lit = re.fullmatch(r"\s*'([^']*)'\s*", params[0])
@@ -7513,10 +7305,11 @@ def _mw_test_sql(params: list[str], args: list[str]) -> str:
     v, g = _two(args, "mannWhitneyUTest")
     slug = {"two-sided": "ts", "greater": "gt", "less": "lt"}[alternative]
     name = f"ch_mw_{slug}_{1 if cc else 0}"
-    _MW_UDFS[name] = (alternative, cc)
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    call = f"{name}(CAST(({v}) AS DOUBLE), CAST(({g}) AS INT))"
+    call = _udf_call(
+        name,
+        lambda: {name: stats_tests.make_mann_whitney_udf(alternative, cc)},
+        f"CAST(({v}) AS DOUBLE)", f"CAST(({g}) AS INT)",
+    )
     return (
         f"element_at(transform(array({call}), mw -> "
         f"named_struct('col1', mw[0], 'col2', mw[1])), 1)"
@@ -7529,6 +7322,8 @@ def _lttb_udf_sql(p: list[str], a: list[str]) -> str:
     Pandas UDF (functions/lttb.py; the per-bucket selection depends on
     the previous selection, a sequential fold no bounded SQL expression
     covers). Returns ARRAY<ARRAY<DOUBLE>> of [x, y] pairs."""
+    from clickhouse_learning_spark.functions import lttb
+
     n = _int_literal(p[0], "largestTriangleThreeBuckets bucket count")
     if n <= 0:
         raise ValueError(
@@ -7536,10 +7331,8 @@ def _lttb_udf_sql(p: list[str], a: list[str]) -> str:
         )
     x, y = _two(a, "largestTriangleThreeBuckets")
     name = f"ch_lttb_{n}"
-    _LTTB_UDFS[name] = n
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
-    return f"{name}(CAST(({x}) AS DOUBLE), CAST(({y}) AS DOUBLE))"
+    return _udf_call(name, lambda: {name: lttb.make_lttb_udf(n)},
+                     f"CAST(({x}) AS DOUBLE)", f"CAST(({y}) AS DOUBLE)")
 
 
 def _sequence_udf_sql(pattern: str, a: list[str], kind: str) -> str:
@@ -7549,18 +7342,22 @@ def _sequence_udf_sql(pattern: str, a: list[str], kind: str) -> str:
     the documented slow-but-complete path, bounded by group size."""
     import hashlib
 
+    from clickhouse_learning_spark.functions import seqmatch
+
     n = len(a) - 1
     key = hashlib.md5(f"{kind}|{n}|{pattern}".encode()).hexdigest()[:10]
     name = f"ch_seq_{kind}_{key}"
-    _SEQ_UDFS[name] = (pattern, n, kind)
-    for _s in _live_sessions():
-        register_sequence_udfs(_s)
     t = f"unix_seconds(CAST(({a[0]}) AS TIMESTAMP))"
     conds = ", ".join(
         f"coalesce(CAST(({c}) AS BOOLEAN), false)" for c in a[1:]
     )
+    call = _udf_call(
+        name,
+        lambda: {name: seqmatch.make_sequence_udf(pattern, n, kind)},
+        t, conds,
+    )
     out = "INT" if kind == "match" else "BIGINT"
-    return f"CAST({name}({t}, {conds}) AS {out})"
+    return f"CAST({call} AS {out})"
 
 
 # effectively-infinite window for the sequence* folds (ts is epoch

@@ -3407,7 +3407,7 @@ def ch_subseq_net_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from clickhouse_learning_spark.functions.dialect import (
-        register_sequence_udfs,
+        register_udfs,
         translate,
     )
     from clickhouse_learning_spark.schemas import load_table
@@ -3447,7 +3447,7 @@ def ch_subseq_net_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM ch_subseq_docs
     """
     sql = translate(ch)
-    register_sequence_udfs(spark)
+    register_udfs(spark)
     return spark.sql(sql).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("ss_q").cast("long").alias("ss_q"),

@@ -14,7 +14,11 @@ from clickhouse_learning_spark.mv.engine import MaterializedView
 from clickhouse_learning_spark.mv.mainpage import mainpage_mv, prepare_events
 from clickhouse_learning_spark.tables import Table
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, traced
+
+# Spark jobs of one MaterializedView.append_batch of a 2k-row, 3-day
+# batch into the mainpage view, as measured; a budget only goes down
+JOBS_PER_APPEND = 3
 
 
 @pytest.fixture(scope="module")
@@ -312,3 +316,21 @@ def test_compacted_states_equal_an_independent_resum(spark, tmp_path):
     for key, row in got.items():
         for m in counted:
             assert [tuple(e) for e in row[m.name]] == resum(m, sums[key][m.name]), (key, m.name)
+
+
+def test_append_job_budget(spark, tmp_path):
+    """Each of three appends of a 2k-row, 3-day batch into the mainpage
+    view runs at most ``JOBS_PER_APPEND`` Spark jobs."""
+    mv = mainpage_mv(str(tmp_path / "state"))
+    batch = spark.range(2000).selectExpr(
+        "date_add(DATE'2024-01-01', CAST(id % 3 AS INT)) AS day",
+        "CAST(id % 24 AS INT) AS hour",
+        "element_at(array('A', 'B'), CAST(id % 2 AS INT) + 1) AS segment",
+        "element_at(array('view', 'click', 'signup', 'purchase', 'error'),"
+        " CAST(id % 5 AS INT) + 1) AS event_type",
+        "id % 300 AS uid",
+        "CAST(id % 13 AS DOUBLE) AS value",
+    )
+    jobs = [traced(spark, lambda: mv.append_batch(batch))[1]
+            for _ in range(3)]
+    assert max(jobs) <= JOBS_PER_APPEND, jobs
