@@ -38,8 +38,8 @@ Dictionary own those lifecycles.
 
 Functions with no Spark SQL form translate to calls of Pandas UDFs
 (``ch_xxhash64``, ``ch_seq_match_…``, …). Each emitted call records the
-builder of its UDF in ``_UDFS`` and registers that one UDF on every
-session ``_live_sessions()`` returns (the active session and the
+builder of its UDF in ``_UDFS`` and registers that one UDF, once, on
+every session ``_live_sessions()`` returns (the active session and the
 instantiated default, which differ after a streaming query), so
 ``spark.sql(translate(q))`` resolves it at once. ``register_udfs(spark)``
 registers every UDF emitted so far on any other session.
@@ -7165,17 +7165,30 @@ def _live_sessions():
 
 # Every Pandas UDF translate() has emitted: SQL name -> the builder of
 # the {sql_name: udf} family that holds it (a parameterized UDF is a
-# family of one).
+# family of one, its parameters spelled into its name).
 _UDFS: dict[str, Callable[[], dict]] = {}
+
+# (JVM session, SQL name) of every registration made. The session is
+# its py4j object id, which the gateway never hands out twice, so a
+# stopped and recreated session (or a newSession()) registers again.
+_REGISTERED: set[tuple[str, str]] = set()
+
+
+def _register(session, name: str) -> None:
+    """Register the emitted UDF ``name`` on ``session`` unless done."""
+    key = (session._jsparkSession._target_id, name)
+    if key not in _REGISTERED:
+        session.udf.register(name, _UDFS[name]()[name])
+        _REGISTERED.add(key)
 
 
 def _udf_call(name: str, make: Callable[[], dict], *args: str) -> str:
     """``name(args…)``, a call to the Pandas UDF ``make()[name]``:
     records ``make`` in ``_UDFS`` and registers that one UDF on every
-    live session."""
+    live session that does not hold it yet."""
     _UDFS[name] = make
     for s in _live_sessions():
-        s.udf.register(name, make()[name])
+        _register(s, name)
     return f"{name}({', '.join(args)})"
 
 
@@ -7183,8 +7196,8 @@ def register_udfs(spark) -> None:
     """Register every Pandas UDF translate() has emitted so far on
     ``spark`` — for a session that was neither active nor the default
     when the query was translated (e.g. one from ``newSession()``)."""
-    for name, make in _UDFS.items():
-        spark.udf.register(name, make()[name])
+    for name in _UDFS:
+        _register(spark, name)
 
 
 def _ks_test_sql(params: list[str], args: list[str]) -> str:

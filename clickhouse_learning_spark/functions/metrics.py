@@ -309,7 +309,7 @@ class MetricSpec:
         pair = F.struct(v.alias(self.entry_key), c.cast("long").alias("c"))
         if skip_null:
             pair = F.when(v.isNotNull(), pair)
-        arr = F.array_sort(F.collect_list(pair)).cast(
+        arr = F.sort_array(F.collect_list(pair)).cast(
             SUMMAP_STATE_TYPE if self.kind == "summap" else QUANTILE_STATE_TYPE
         )
         return (F.when(F.size(arr) > 0, arr) if skip_null else arr).alias(self.name)
@@ -418,8 +418,8 @@ class MetricSpec:
         if self.kind == "quantile_kll":
             # Spark exposes KLL merge only as a BINARY scalar — fold it
             # over the collected states (state count per group = number
-            # of unmerged batches, small by construction; the fold is
-            # off the hot path like every finalize here)
+            # of unmerged batches, small by construction, so the
+            # interpreted fold runs over a short list)
             lst = F.collect_list(c)
             init = F.get(lst, 0)
             rest = F.slice(lst, 2, F.greatest(F.size(lst) - 1, F.lit(0)))
@@ -431,7 +431,7 @@ class MetricSpec:
                 from clickhouse_learning_spark.functions import roaring
 
                 return roaring.merge_state(c).alias(self.name)
-            return F.array_sort(F.array_distinct(F.flatten(F.collect_list(c)))).alias(self.name)
+            return F.sort_array(_union(c)).alias(self.name)
         if self.kind in ("sum", "count"):
             return F.sum(c).alias(self.name)
         if self.kind == "min":
@@ -501,6 +501,10 @@ class MetricSpec:
         queries must always finalize with -Merge regardless of compaction
         state, docs/物化视图的实战经验分享.md:934-996)."""
         name = self.name
+        if self.kind in ("uniq_exact", "bitmap") and not self._roaring:
+            # a cardinality needs no order: skip the merge's sort
+            c = _as_col(col) if col is not None else F.col(name)
+            return F.coalesce(F.size(_union(c)), F.lit(0)).alias(name)
         m = self.merge(col)
         return self.finalize(m).alias(name)
 
@@ -551,6 +555,20 @@ def uniq_tuple(*cols: str | Column) -> Column:
     return F.xxhash64(F.struct(*cs))
 
 
+# State sorts use ``sort_array``, never the one-argument ``array_sort``:
+# Spark plans the latter with an interpreted comparator lambda, and
+# subexpression elimination skips any expression holding a lambda, so
+# every use of a sorted state would sort it again. The two differ only
+# in where NULL elements go (first vs last), and state arrays hold none:
+# collect_list/collect_set skip NULLs and pairs are gated on a non-NULL
+# value.
+
+def _union(c: Column) -> Column:
+    """Aggregate expression: the distinct elements of the id-set states
+    ``c``, unordered."""
+    return F.array_distinct(F.flatten(F.collect_list(c)))
+
+
 def array_median(c: Column) -> Column:
     """Exact median of an array<numeric> column, JVM-side.
 
@@ -559,27 +577,25 @@ def array_median(c: Column) -> Column:
     upper-middle element — use :func:`array_median_exact_low` for that
     variant).
     """
-    sorted_ = F.array_sort(c)
-    n = F.size(sorted_)
-    # element_at is 1-based; for odd n both indices equal (n+1)/2.
-    # Empty state (every row failed the -If condition) → NULL, matching
-    # SQL median over no rows.
-    lo_i = F.floor((n + F.lit(1)) / 2).cast("int")
-    hi_i = F.ceil((n + F.lit(1)) / 2).cast("int")
-    return F.when(
-        n > 0, (F.element_at(sorted_, lo_i) + F.element_at(sorted_, hi_i)) / 2.0
-    )
+    sorted_ = F.sort_array(c)
+    n = F.size(c)
+    # get is 0-based and NULL out of range; for odd n both indices equal
+    # (n-1)/2. An empty or NULL state (every row failed the -If
+    # condition) → NULL, matching SQL median over no rows. No when():
+    # a subexpression only in a branch value is not shared, and the
+    # sort would run once per read.
+    lo_i = (F.floor((n + F.lit(1)) / 2) - 1).cast("int")
+    hi_i = (F.ceil((n + F.lit(1)) / 2) - 1).cast("int")
+    return (F.get(sorted_, lo_i) + F.get(sorted_, hi_i)) / 2.0
 
 
 def array_median_exact_low(c: Column) -> Column:
     """ClickHouse medianExact semantics: element at index ⌈n/2⌉ (1-based)
     of the sorted values — no interpolation
     (ClickHouse quantileExact, used at
-    /root/reference/scripts/sql/dwm.mainpage_stat_mv_dis.sql:83)."""
-    sorted_ = F.array_sort(c)
-    n = F.size(sorted_)
-    idx = (F.floor(n / 2) + 1).cast("int")
-    return F.when(n > 0, F.element_at(sorted_, idx))
+    /root/reference/scripts/sql/dwm.mainpage_stat_mv_dis.sql:83).
+    An empty or NULL state → NULL."""
+    return F.get(F.sort_array(c), F.floor(F.size(c) / 2).cast("int"))
 
 
 def weighted_quantile(c: Column, level: float = 0.5) -> Column:
@@ -588,19 +604,20 @@ def weighted_quantile(c: Column, level: float = 0.5) -> Column:
     reaches ``max(1, ceil(level·total))`` — ClickHouse
     ``quantileExactWeighted`` / DuckDB ``quantile_disc`` semantics, exact.
 
-    Runs per finalized group over an array bounded by the number of
-    distinct values (post-compaction), so the interpreted higher-order
-    ``aggregate`` here is off the hot path; the per-row write path stays
-    codegen. The target rank rides in the fold's start value so the walk
-    stays O(n) (an outer-expression reference inside the lambda would be
-    re-evaluated per element).
+    Runs once per finalized group, on the query path, over an array
+    bounded by the number of distinct values (post-compaction). The two
+    ``aggregate`` folds are interpreted (``CodegenFallback``), and
+    subexpression elimination does not look inside them, so they cannot
+    share a sort: ``total`` folds the unsorted array and only the walk
+    sorts it, once. The target rank rides in the fold's start value so
+    the walk stays O(n) (an outer-expression reference inside the lambda
+    would be re-evaluated per element).
 
     Duplicate ``v`` entries (states merged but not yet compacted) are
     handled: the array is sorted by ``v``, and the cumulative walk
     crosses the target inside the run at the same ``v``.
     """
-    e = F.array_sort(c)
-    total = F.aggregate(e, F.lit(0).cast("long"), lambda a, s: a + s["c"])
+    total = F.aggregate(c, F.lit(0).cast("long"), lambda a, s: a + s["c"])
     target = F.greatest(
         F.ceil(F.lit(float(level)) * total).cast("long"), F.lit(1).cast("long")
     )
@@ -610,7 +627,7 @@ def weighted_quantile(c: Column, level: float = 0.5) -> Column:
         F.lit(None).cast("bigint").alias("ans"),
     )
     walk = F.aggregate(
-        e,
+        F.sort_array(c),
         zero,
         lambda acc, s: F.struct(
             (acc["cum"] + s["c"]).alias("cum"),
@@ -654,19 +671,20 @@ def _resum_entries(c: Column, key: str) -> Column:
     field (states merged but not yet compacted carry one entry per
     batch), sorted by ``key``.
 
-    An O(n²) higher-order expression over the state array — n is
-    bounded by writers·reserve for ``topk`` and writers·distinct keys
-    for ``summap`` (one writer's worth after compaction), so it stays
-    off the hot path by construction; the per-row write path never runs
-    it."""
-    e = F.array_sort(c)
+    An O(n²) higher-order expression over the state array, run once
+    per finalized group on the query path — n is bounded by
+    writers·reserve for ``topk`` and writers·distinct keys for
+    ``summap`` (one writer's worth after compaction); the per-row write
+    path never runs it. The array is sorted once, for the outer walk:
+    the per-entry sum filters the unsorted ``c``, because an outer
+    expression inside a lambda is re-evaluated per element."""
     return F.array_distinct(
         F.transform(
-            e,
+            F.sort_array(c),
             lambda s: F.struct(
                 s[key].alias(key),
                 F.aggregate(
-                    F.filter(e, lambda t: t[key] == s[key]),
+                    F.filter(c, lambda t: t[key] == s[key]),
                     F.lit(0).cast("long"),
                     lambda a, t: a + t["c"],
                 ).alias("c"),

@@ -12,6 +12,15 @@ the same code runs unchanged on a 1000-executor cluster:
 - UTC session timezone so results are comparable with the DuckDB
   oracle (DuckDB timestamps are UTC-naive).
 - Arrow enabled for the Pandas-UDF slow path.
+- PySpark's per-Column call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every ``Column`` method and ``F.*`` call walks the Python stack and
+  makes about four extra py4j round trips to record where it was called
+  from; building an expression such as
+  ``(F.col(a).cast("long") == F.lit(i)).alias("z")`` is about 3.6×
+  cheaper without it. The cost: a DataFrame error loses its Python
+  call site, i.e. its query context no longer names the Python line
+  that built the failing expression; the error class and message stay.
 """
 
 from __future__ import annotations
@@ -59,6 +68,9 @@ def get_spark(
         # the driver testdata stores TIMESTAMP(NANOS) which Spark's parquet
         # reader rejects; read as long and convert in schemas.load_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # a static conf: it holds for sessions started here, not for one
+        # that getOrCreate finds already running
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

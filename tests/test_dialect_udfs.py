@@ -9,6 +9,7 @@ import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql.udf import UDFRegistration
 
+from clickhouse_learning_spark.functions import dialect
 from clickhouse_learning_spark.functions.dialect import (
     _live_sessions,
     register_udfs,
@@ -88,21 +89,57 @@ def _plain(v):
     return v
 
 
-def test_each_emitted_call_registers_only_its_own_udf(spark, monkeypatch):
-    """After every family has been emitted once, a query with eight UDF
-    calls registers exactly eight UDFs per live session, not every UDF
-    emitted so far."""
-    translate(ALL_FAMILIES)
+def _count_registrations(monkeypatch) -> list:
+    """From now on, (JVM session, name) of every UDF registration."""
     calls = []
     orig = UDFRegistration.register
 
     def counting(self, name, f, returnType=None):
-        calls.append(name)
+        calls.append((self.sparkSession._jsparkSession._target_id, name))
         return orig(self, name, f, returnType)
 
     monkeypatch.setattr(UDFRegistration, "register", counting)
+    return calls
+
+
+def test_each_emitted_call_registers_only_its_own_udf(spark, monkeypatch):
+    """After every family has been emitted once, a query with eight UDF
+    calls registers exactly eight UDFs per live session that does not
+    hold them yet, not every UDF emitted so far."""
+    translate(ALL_FAMILIES)
+    # forget the registrations, as a fresh session would have none
+    monkeypatch.setattr(dialect, "_REGISTERED", set())
+    calls = _count_registrations(monkeypatch)
     translate(EIGHT_CALLS)
     assert len(calls) == 8 * len(_live_sessions()), sorted(calls)
+
+
+# translate(EIGHT_CALLS), which registering once must leave as it was
+EIGHT_CALLS_SQL = (
+    "SELECT ch_xxhash64(s), ch_murmur3_32(s), "
+    "ch_int_hash64(CAST((n) AS BIGINT)), "
+    "ch_punycode_encode(s), ch_base58_encode(s), ch_edit_distance(s, s), "
+    "ch_java_hash(s), ch_ipv6_string_to_num(s) FROM t"
+)
+
+
+def test_each_udf_registers_once_per_session(spark, monkeypatch):
+    """Translating the eight-call query again and again registers each
+    of its UDFs at most once per JVM session; another session (here a
+    ``newSession()``, as after a stop and restart) registers it again.
+    The SQL is the same on every call."""
+    calls = _count_registrations(monkeypatch)
+    sqls = {translate(EIGHT_CALLS) for _ in range(3)}
+    translate(ALL_FAMILIES)
+    sqls.add(translate(EIGHT_CALLS))
+    assert len(calls) == len(set(calls)), sorted(calls)
+    assert sqls == {EIGHT_CALLS_SQL}
+    s2 = spark.newSession()
+    register_udfs(s2)
+    register_udfs(s2)
+    assert len(calls) == len(set(calls)), sorted(calls)
+    theirs = [n for sid, n in calls if sid == s2._jsparkSession._target_id]
+    assert len(theirs) == len(dialect._UDFS)
 
 
 def test_register_udfs_makes_every_emitted_udf_resolve_on_a_new_session(
