@@ -47,11 +47,16 @@ state holds bucket→count pairs, O(occupied buckets) per state, and the
 answer is within relative error ``alpha`` of the exact quantile).
 
 The four value→count kinds (``MetricSpec.PRECOUNT_KINDS``) share one
-re-sum: :func:`build_states` counts a raw batch per ``(dims, value)``
-and collects the counted rows into states; :func:`resum_states` does the
-same for stored states, exploded into ``(dims, value, count)`` rows, so
-a merged state has one entry per value (topk: the ``reserve``
-highest-count ones), like a freshly built one.
+pre-count pass. All of a view's value→count metrics become one long
+frame of ``(dims, _v0…, _w)`` rows, one value field per distinct
+(value, weight) source, so p50 and p90 of one column share a field:
+:func:`build_states` takes it from a raw batch with one ``inline``, and
+:func:`resum_states` from stored states with one ``inline`` over their
+entries. One ``groupBy(dims, _v…)`` sums the weights per value and one
+``groupBy(dims)`` builds every state, so each input is read once
+however many such metrics the view has, as an AggregatingMergeTree
+merge reads each part once. A merged state has one entry per value
+(topk: the ``reserve`` highest-count ones), like a freshly built one.
 
 Bitmap states default to exact sorted id-arrays (Roaring-equivalent set
 algebra via ``array_intersect``/``array_union``/``size``) — fully
@@ -249,70 +254,70 @@ class MetricSpec:
         # every Spark aggregate used here (sketches, sums, collect_*).
         return F.when(_as_col(self.cond), src)
 
-    # -- relational pre-count write path (value→count state kinds) ------------
+    # -- relational pre-count path (value→count state kinds) ------------------
     # These kinds hold (value, count/sum) entries; building them via
     # collect_list(raw row) puts an O(rows) array through an
-    # ObjectHashAggregate. The scale path instead pre-aggregates with a
-    # fully-codegen groupBy(dims, value) and collects the
-    # already-compact per-value rows — state size is O(distinct values)
-    # (quantile/summap), O(occupied log-buckets) (quantile_sketch), or
-    # O(reserve) (topk) per group regardless of batch size.
+    # ObjectHashAggregate. The scale path (build_states, resum_states)
+    # instead pre-aggregates with a fully-codegen groupBy(dims, value)
+    # and collects the already-compact per-value rows — state size is
+    # O(distinct values) (quantile/summap), O(occupied log-buckets)
+    # (quantile_sketch), or O(reserve) (topk) per group regardless of
+    # batch size.
     PRECOUNT_KINDS = ("topk", "quantile", "quantile_sketch", "summap")
 
     def precount_value(self) -> Column:
-        """The value expression grouped on by the pre-count groupBy (the
-        -If condition is applied as a row filter by the caller)."""
-        src = _as_col(self.source)
+        """The value a row adds an entry for, NULL where the row fails
+        the -If condition (or has no value): it then adds none."""
+        x = self._input()
         if self.kind == "topk":
-            return src
+            return x
         if self.kind == "summap":
-            return src.cast("string")
+            return x.cast("string")
         if self.kind == "quantile":
-            return src.cast("long")
+            return x.cast("long")
         if self.kind == "quantile_sketch":
-            return dd_bucket(src, self.alpha)
+            return dd_bucket(x, self.alpha)
         raise AssertionError(self.kind)
 
-    def precount_agg(self) -> Column:
-        """The per-value aggregate of the pre-count groupBy: row count
-        for the count-shaped kinds, summed ``weight`` for ``summap`` and
-        weighted ``topk`` (ClickHouse ``topKWeighted(k)(x, w)`` — the
-        default weight "1" degenerates to the plain count)."""
-        if self.kind in ("summap", "topk", "quantile"):
-            # quantile: ClickHouse quantileExactWeighted's explicit
-            # per-row weight (default "1" = every row counts once)
-            return F.sum(_as_col(self.weight).cast("long"))
-        return F.count(F.lit(1))
+    def precount_weight(self) -> Column:
+        """The weight a row adds to its value's entry: ``weight`` for
+        ``summap``, ``quantile`` (ClickHouse quantileExactWeighted) and
+        ``topk`` (``topKWeighted(k)(x, w)``; the default "1" is the
+        plain count), 1 for ``quantile_sketch``."""
+        if self.kind == "quantile_sketch":
+            return F.lit(1).cast("long")
+        return _as_col(self.weight).cast("long")
 
     @property
     def entry_key(self) -> str:
         """Field naming the value of a value→count state's entries."""
         return "k" if self.kind == "summap" else "v"
 
-    def state_from_counts(self, v: Column, c: Column, skip_null: bool = False) -> Column:
-        """Aggregate expression building the state from pre-aggregated
-        (value, count/sum) rows; use under ``groupBy(dims)``. Entries
-        come out sorted by value (``topk``: by descending count, capped
-        at ``reserve``).
-
-        ``skip_null=True`` is the single-pass contract used by
-        :func:`build_states`' fast path: NULL-value entries are excluded
-        inside the collect (the caller did NOT pre-filter them) and a
-        group whose values were ALL NULL yields a NULL state — exactly
-        the join-miss NULL of the general two-pass path."""
-        if self.kind == "topk":
-            return topk_state_from_counts(
-                v, c, self.topk_reserve, skip_null=skip_null
-            ).alias(self.name)
-        if self.kind not in ("summap", "quantile", "quantile_sketch"):
+    def state_from_counts(self, v: Column, c: Column) -> Column:
+        """Aggregate expression building the state from pre-counted
+        (value, count/sum) rows; use under ``groupBy(dims)``. A row
+        whose value is NULL adds no entry, and a group with no entry
+        gets a NULL state, the merge-neutral one. Entries come out
+        sorted by value; ``topk`` keeps the ``reserve`` highest counts,
+        ties broken on the smaller value (the Space-Saving
+        truncation)."""
+        if self.kind not in self.PRECOUNT_KINDS:
             raise AssertionError(self.kind)
-        pair = F.struct(v.alias(self.entry_key), c.cast("long").alias("c"))
-        if skip_null:
-            pair = F.when(v.isNotNull(), pair)
-        arr = F.sort_array(F.collect_list(pair)).cast(
-            SUMMAP_STATE_TYPE if self.kind == "summap" else QUANTILE_STATE_TYPE
-        )
-        return (F.when(F.size(arr) > 0, arr) if skip_null else arr).alias(self.name)
+        c = c.cast("long")
+        topk = self.kind == "topk"
+        pair = (F.struct((-c).alias("nc"), v.alias("v")) if topk
+                else F.struct(v.alias(self.entry_key), c.alias("c")))
+        entries = F.collect_list(F.when(v.isNotNull(), pair))
+        if topk:
+            state = F.transform(
+                F.slice(F.sort_array(entries), 1, self.topk_reserve),
+                lambda s: F.struct(s["v"].alias("v"), (-s["nc"]).alias("c")),
+            )
+        else:
+            state = F.sort_array(entries).cast(
+                SUMMAP_STATE_TYPE if self.kind == "summap" else QUANTILE_STATE_TYPE
+            )
+        return F.when(F.size(entries) > 0, state).alias(self.name)
 
     # -- partial: raw rows -> state (the reference's -State) ------------------
     def partial(self) -> Column:
@@ -352,49 +357,25 @@ class MetricSpec:
             ).alias(self.name)
         if self.kind == "median":
             return F.collect_list(x).alias(self.name)
-        if self.kind == "quantile":
-            # value→count pairs; per-batch entries carry c=weight
-            # (default 1; merge_states re-sums them to O(distinct) via
-            # resum_states — the same lazy-merge contract as every other
-            # state here)
-            v = x.cast("long")
-            w = _as_col(self.weight).cast("long")
-            pair = F.when(v.isNotNull(), F.struct(v.alias("v"), w.alias("c")))
-            return F.collect_list(pair).cast(QUANTILE_STATE_TYPE).alias(self.name)
-        if self.kind == "quantile_sketch":
-            vals = F.collect_list(dd_bucket(x, self.alpha))
-            ones = F.array_repeat(F.lit(1).cast("long"), F.size(vals))
-            return F.arrays_zip(vals, ones).cast(QUANTILE_STATE_TYPE).alias(self.name)
+        if self.kind in self.PRECOUNT_KINDS:
+            # One-expression fallback: one (value, weight) entry per row,
+            # uncapped, so O(rows) per state. build_states pre-counts to
+            # one entry per value (topk: the reserve highest), and
+            # merge_states re-sums either form.
+            v = self.precount_value()
+            pair = F.struct(v.alias(self.entry_key), self.precount_weight().alias("c"))
+            state = F.collect_list(F.when(v.isNotNull(), pair))
+            if self.kind != "topk":
+                state = state.cast(
+                    SUMMAP_STATE_TYPE if self.kind == "summap" else QUANTILE_STATE_TYPE
+                )
+            return state.alias(self.name)
         if self.kind == "bitmap":
             if self._roaring:
                 from clickhouse_learning_spark.functions import roaring
 
                 return roaring.partial_state(x).alias(self.name)
             return F.sort_array(F.collect_set(x)).alias(self.name)
-        if self.kind == "topk":
-            # One-expression fallback: (value, weight) pairs, uncapped —
-            # correct for modest batch×group sizes. The engine's
-            # materialize_batch pre-aggregates relationally and caps at
-            # topk_reserve (the scale path); compaction re-sums + re-caps
-            # either way. weight="1" (default) = plain topK; otherwise
-            # ClickHouse topKWeighted semantics.
-            w = _as_col(self.weight).cast("long")
-            pair = F.when(x.isNotNull(), F.struct(x.alias("v"), w.alias("c")))
-            return F.collect_list(pair).alias(self.name)
-        if self.kind == "summap":
-            # One-expression fallback: (key, weight) pairs, one entry per
-            # ROW — correct but O(rows) state. The engine's
-            # materialize_batch / build_states pre-aggregates relationally
-            # (groupBy(dims, key).sum(weight)) so states are O(distinct
-            # keys); compaction re-sums either way.
-            k = _as_col(self.source).cast("string")
-            w = _as_col(self.weight).cast("long")
-            pair = F.struct(k.alias("k"), w.alias("c"))
-            if self.cond is not None:
-                pair = F.when(_as_col(self.cond) & k.isNotNull(), pair)
-            else:
-                pair = F.when(k.isNotNull(), pair)
-            return F.collect_list(pair).cast(SUMMAP_STATE_TYPE).alias(self.name)
         if self.kind in ("argmax", "argmin"):
             if self.order_by is None:
                 raise ValueError(f"{self.name}: kind {self.kind} requires order_by")
@@ -645,13 +626,14 @@ def dd_gamma(alpha: float) -> float:
 
 
 def dd_bucket(c: Column, alpha: float = 0.01) -> Column:
-    """DDSketch log bucket: ⌈ln(x)/ln(γ)⌉ for x > 0, else the dedicated
-    zero bucket. γ is computed once driver-side and inlined so Spark and
-    the SQL oracle share the identical double constant."""
+    """DDSketch log bucket: ⌈ln(x)/ln(γ)⌉ for x > 0, the dedicated zero
+    bucket for other values, NULL for NULL (it adds no entry). γ is
+    computed once driver-side and inlined so Spark and the SQL oracle
+    share the identical double constant."""
     g = dd_gamma(alpha)
     return (
         F.when(c > 0, F.ceil(F.log(c.cast("double")) / F.lit(math.log(g))))
-        .otherwise(F.lit(DD_ZERO_BUCKET))
+        .when(c.isNotNull(), F.lit(DD_ZERO_BUCKET))
         .cast("long")
     )
 
@@ -724,32 +706,6 @@ def summap_from_state(c: Column) -> Column:
     )
 
 
-def topk_state_from_counts(
-    v: Column, c: Column, reserve: int, skip_null: bool = False
-) -> Column:
-    """Aggregate expression building a capped ``topk`` state from
-    pre-counted (value, count) rows — the relational write path: the
-    engine first does ``groupBy(dims, value).count()`` (a fully-codegen
-    two-level hash agg), then collects only the ``reserve`` highest-count
-    entries per group (the Space-Saving truncation). Use under
-    ``groupBy(dims)``.
-
-    ``skip_null=True``: NULL-value entries are dropped inside the
-    collect and an all-NULL group yields a NULL state (the single-pass
-    contract of :func:`build_states`' fast path)."""
-    pair = F.struct((-c.cast("long")).alias("nc"), v.alias("v"))
-    if skip_null:
-        pair = F.when(v.isNotNull(), pair)
-    ranked = F.sort_array(F.collect_list(pair))
-    out = F.transform(
-        F.slice(ranked, 1, reserve),
-        lambda s: F.struct(s["v"].alias("v"), (-s["nc"]).alias("c")),
-    )
-    if skip_null:
-        out = F.when(F.size(ranked) > 0, out)
-    return out
-
-
 def _join_on_dims(base, states, dims):
     """``base`` left-joined with the state columns of ``states`` on
     ``dims``. NULL-safe: dims added by with_dimension are NULL for older
@@ -764,18 +720,32 @@ def _join_on_dims(base, states, dims):
     return base.join(keyed, cond, "left").drop(*[f"_k_{d}" for d in dims])
 
 
-def _states_from_counts(counts, dims, ms):
-    """States of the value→count metrics ``ms`` from pre-counted
-    ``(dims, _v, _c)`` rows, one row per ``dims`` key that has a
-    non-NULL value. The NULL-value group is dropped: the one-expression
-    partial() path builds these states with collect_list, which skips
-    NULLs — the v=NULL group would otherwise inflate count totals and
-    shift weighted-quantile ranks."""
-    return (
-        counts.filter(F.col("_v").isNotNull())
-        .groupBy(*dims)
-        .agg(*[m.state_from_counts(F.col("_v"), F.col("_c")) for m in ms])
+def _entry(types: dict, field: str | None = None, v: Column | None = None,
+           w: Column | None = None) -> Column:
+    """One row of the long frame: value ``v`` in the value field
+    ``field``, a typed NULL in every other field of ``types`` (field →
+    type), and weight ``_w``. With no field it is the all-NULL row,
+    which keeps its dims key in the frame and adds no entry."""
+    return F.struct(
+        *[(v if f == field else F.lit(None).cast(t)).alias(f) for f, t in types.items()],
+        (F.lit(None).cast("long") if w is None else w).alias("_w"),
     )
+
+
+def _counted_states(rows, dims, metrics, fields, base=None):
+    """The value→count ``metrics``' states, one row per ``dims`` key of
+    the long frame ``rows`` (``dims``, value fields, ``_w``): one
+    ``groupBy(dims, fields…)`` sums the weights per value, and one
+    ``groupBy(dims)`` builds every state from its field (``fields``:
+    metric name → field). Joined once onto ``base``, the plain kinds'
+    frame, when there is one."""
+    counts = rows.groupBy(*dims, *dict.fromkeys(fields.values())).agg(
+        F.sum("_w").alias("_c")
+    )
+    states = counts.groupBy(*dims).agg(
+        *[m.state_from_counts(F.col(fields[m.name]), F.col("_c")) for m in metrics]
+    )
+    return states if base is None else _join_on_dims(base, states, dims)
 
 
 def build_states(batch, dims, metrics):
@@ -786,76 +756,59 @@ def build_states(batch, dims, metrics):
 
     Plain kinds aggregate in ONE groupBy (one shuffle, map-side
     partials). Value→count kinds (``MetricSpec.PRECOUNT_KINDS``) take
-    the relational side path — ``groupBy(dims, value).count()`` (two
-    fully-codegen hash aggregates) then a per-group collect of the
-    already-compact per-value rows — joined back on dims. Keeping them
-    out of the main groupBy also keeps it codegen: one collect_* in an
-    aggregate forces ObjectHashAggregate and evicts every sibling
-    expression from whole-stage codegen."""
+    the pre-count pass over the same batch: every row becomes one long
+    row per distinct (value, weight) source, whose value is NULL where
+    the row fails the -If condition, so every dims key of the batch
+    survives and a key with no entry gets a NULL state. The states are
+    built by :func:`_counted_states` and joined to the plain frame
+    once. Keeping them out of the main groupBy also keeps it codegen:
+    one collect_* in an aggregate forces ObjectHashAggregate and evicts
+    every sibling expression from whole-stage codegen."""
     plain = [m for m in metrics if m.kind not in MetricSpec.PRECOUNT_KINDS]
     counted = [m for m in metrics if m.kind in MetricSpec.PRECOUNT_KINDS]
-    # metrics sharing (cond, value-expression) — e.g. p50/p95/p99 of the
-    # same source — share ONE pre-count pipeline and ONE join-back:
-    # their states read the same (value, count) rows
-    shared: dict[tuple, list] = {}
-    for m in counted:
-        key = (str(m.cond), str(m.precount_value()), str(m.precount_agg()))
-        shared.setdefault(key, []).append(m)
-    groups = list(shared.values())
-
-    def counts(lead):
-        src = batch if lead.cond is None else batch.filter(_as_col(lead.cond))
-        return src.groupBy(*dims, lead.precount_value().alias("_v")).agg(
-            lead.precount_agg().alias("_c")
-        )
-
-    if plain:
-        base = batch.groupBy(*dims).agg(*[m.partial() for m in plain])
-    else:
-        base = None
-        # single-pass fast path (optimization guide §2.1): with no plain
-        # metrics, a cond-free pre-count pipeline already covers every
-        # dims group — every row lands in some (dims, value) group, NULL
-        # values included — so its state table doubles as the base:
-        # no second scan of the batch for select(dims).distinct() and no
-        # join-back for its own metrics. NULL-value entries are excluded
-        # inside the collect (skip_null) and an all-NULL group's state
-        # maps to NULL, the exact join-miss contract of the general path.
-        for i, ms in enumerate(groups):
-            if ms[0].cond is None:
-                base = counts(ms[0]).groupBy(*dims).agg(
-                    *[m.state_from_counts(F.col("_v"), F.col("_c"), skip_null=True)
-                      for m in ms]
-                )
-                groups = groups[:i] + groups[i + 1 :]
-                break
-        if base is None:
-            base = batch.select(*dims).distinct()
-    for ms in groups:
-        # groups where no row passed the -If filter carry NULL = the
-        # merge-neutral state, same as every other kind
-        base = _join_on_dims(base, _states_from_counts(counts(ms[0]), dims, ms), dims)
+    out = batch.groupBy(*dims).agg(*[m.partial() for m in plain]) if plain else None
+    if counted:
+        # one field per (value, weight) source: p50 and p90 of one
+        # column read the same rows
+        sources, leads, fields = {}, {}, {}
+        for m in counted:
+            key = (str(m.precount_value()), str(m.precount_weight()))
+            fields[m.name] = sources.setdefault(key, f"_v{len(sources)}")
+            leads.setdefault(fields[m.name], m)
+        types = {f.name: f.dataType for f in batch.select(
+            *[m.precount_value().alias(f) for f, m in leads.items()]).schema}
+        rows = batch.select(*dims, F.inline(F.array(*[
+            _entry(types, f, m.precount_value(), m.precount_weight())
+            for f, m in leads.items()
+        ])))
+        out = _counted_states(rows, dims, counted, fields, out)
     # preserve declared metric order for a stable storage schema
-    return base.select(*dims, *[m.name for m in metrics])
+    return out.select(*dims, *[m.name for m in metrics])
 
 
 def resum_states(states, base, dims, metrics):
-    """``base`` (one row per ``dims`` key) with the value→count
-    ``metrics`` of ``states`` merged per key: each state is exploded
-    into ``(dims, value, count)`` rows, the counts are summed per value,
-    and the state is rebuilt by :func:`build_states`' own pre-counted
-    rows → ``state_from_counts`` → join-back path, so ``topk``
-    re-truncates to its reserve. A key with no entry gets ``[]``, as
-    merging its empty or NULL states does."""
+    """The value→count ``metrics`` of ``states`` merged per ``dims`` key,
+    joined onto ``base`` (one row per key, or None): every entry of
+    every such state becomes one long row, field per metric, with one
+    all-NULL row per stored row to keep its key, and
+    :func:`_counted_states` re-sums them to one entry per value, as
+    :func:`build_states` builds them (``topk`` re-truncates to its
+    reserve). The stored frame is read once, whatever the number of
+    metrics. A key with no entry gets ``[]``, as merging its empty or
+    NULL states does."""
     types = dict(states.dtypes)
-    for m in metrics:
-        counts = (
-            states.select(*dims, F.explode(m.name).alias("_e"))
-            .groupBy(*dims, F.col(f"_e.{m.entry_key}").alias("_v"))
-            .agg(F.sum("_e.c").alias("_c"))
-        )
-        base = _join_on_dims(base, _states_from_counts(counts, dims, [m]), dims)
-    return base.withColumns(
+    fields = {m.name: f"_v{i}" for i, m in enumerate(metrics)}
+    values = {
+        fields[m.name]: states.schema[m.name].dataType.elementType[m.entry_key].dataType
+        for m in metrics
+    }
+    keep = F.array(_entry(values))
+    rows = states.select(*dims, F.inline(F.concat(keep, *[
+        F.coalesce(F.transform(m.name, lambda e: _entry(
+            values, fields[m.name], e[m.entry_key], e["c"])), keep)
+        for m in metrics
+    ])))
+    return _counted_states(rows, dims, metrics, fields, base).withColumns(
         {m.name: F.coalesce(m.name, F.array().cast(types[m.name])) for m in metrics}
     )
 

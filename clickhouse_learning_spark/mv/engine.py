@@ -72,9 +72,10 @@ class MaterializedView:
     # -- write path ------------------------------------------------------------
     def materialize_batch(self, batch: DataFrame) -> DataFrame:
         """Aggregate ONE insert batch to partial states (insert-trigger MV
-        semantics: docs/…md:298-301). One shuffle, map-side partials;
-        value→count state kinds (topk / quantile / quantile_sketch /
-        summap) take the relational pre-count side path — see
+        semantics: docs/…md:298-301). The plain kinds take one groupBy
+        with map-side partials. The value→count kinds (topk / quantile /
+        quantile_sketch / summap) all take one pre-count pass over the
+        batch, joined on once — see
         :func:`~clickhouse_learning_spark.functions.metrics.build_states`."""
         from clickhouse_learning_spark.functions.metrics import build_states
 
@@ -105,17 +106,16 @@ class MaterializedView:
         """Re-merge states WITHOUT finalizing (the -MergeState combinator,
         dwm.mainpage_stat_mv_dis.sql:282-287) — for funnel algebra over
         bitmap states or for compaction. A merged state is as compact as
-        a freshly built one: value→count states (topk, quantile,
+        a freshly built one: the value→count states (topk, quantile,
         quantile_sketch, summap) are re-summed to one entry per value,
-        topk re-truncated to its reserve — see
-        :func:`~clickhouse_learning_spark.functions.metrics.resum_states`."""
+        topk re-truncated to its reserve, all in one pre-count pass over
+        ``df`` that is joined onto the plain kinds' merge once — see
+        :func:`~clickhouse_learning_spark.functions.metrics.resum_states`.
+        ``df`` is read twice: once for that merge, once for the pass."""
         names = tuple(m.name for m in self.metrics)
         plain = tuple(m.name for m in self.metrics
                       if m.kind not in MetricSpec.PRECOUNT_KINDS)
-        if not plain:
-            merged = df.select(*group_by).distinct()
-        else:
-            merged = df.groupBy(*group_by).agg(*self._aggregates("merge", plain))
+        merged = df.groupBy(*group_by).agg(*self._aggregates("merge", plain)) if plain else None
         if plain == names:
             return merged
         counted = [m for m in self.metrics if m.name not in plain]
@@ -135,7 +135,9 @@ class MaterializedView:
         named partitions. Pick candidates with
         :meth:`partitions_needing_compaction`. The merge is
         :meth:`merge_states`, which also re-sums the value→count states
-        (topk, quantile, quantile_sketch, summap) to one entry per value.
+        (topk, quantile, quantile_sketch, summap) to one entry per value
+        in one pass, so the partitions are read twice whatever the
+        number of such metrics.
 
         ``group``: the dims to merge at (default: every dim), which must
         include the partition columns; the other dims are written as

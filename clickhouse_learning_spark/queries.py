@@ -327,7 +327,7 @@ def topk_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     state (beyond-reference completeness; the reference uses no topK but
     ClickHouse users rely on it). Per-(day,hour) capped value→count
     states built through the relational pre-count path
-    (engine.materialize_batch's topk side channel), merged per day,
+    (metrics.build_states, as engine.materialize_batch), merged per day,
     finalized to the 3 most frequent values. Exact — and oracle-able —
     because per-group distinct values (5 event types) stay under the
     reserve cap; beyond it the result degrades to approximate exactly
@@ -338,16 +338,7 @@ def topk_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     array-typed result columns."""
     ev = _events(spark, sf_dir)
     spec = M.MetricSpec("top_types", "topk", "event_type", k=3)
-    states = (
-        ev.groupBy("day", "hour", "event_type")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .groupBy("day", "hour")
-        .agg(
-            M.topk_state_from_counts(
-                F.col("event_type"), F.col("_c"), spec.topk_reserve
-            ).alias("top_types")
-        )
-    )
+    states = M.build_states(ev, ("day", "hour"), (spec,))
     return (
         states.groupBy("day")
         .agg(spec.merged_finalized())

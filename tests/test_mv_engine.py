@@ -5,6 +5,7 @@ merge-correctness pre/post compaction, and ε-bounds for HLL metrics."""
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +20,10 @@ from .conftest import SF_SMOKE, traced
 # Spark jobs of one MaterializedView.append_batch of a 2k-row, 3-day
 # batch into the mainpage view, as measured; a budget only goes down
 JOBS_PER_APPEND = 3
+# the same for a 2.4k-row batch into the MIXED view, which holds every
+# value→count kind; 15 while each (value, weight) source had its own
+# pre-count pass
+JOBS_PER_SKETCH_APPEND = 6
 
 
 @pytest.fixture(scope="module")
@@ -316,6 +321,85 @@ def test_compacted_states_equal_an_independent_resum(spark, tmp_path):
     for key, row in got.items():
         for m in counted:
             assert [tuple(e) for e in row[m.name]] == resum(m, sums[key][m.name]), (key, m.name)
+
+
+MIXED = (
+    MetricSpec("top", "topk", "s", k=2, value_type="string"),
+    MetricSpec("p50", "quantile", "v"),
+    MetricSpec("p90", "quantile", "v", level=0.9),
+    MetricSpec("sm", "summap", "v % 4", weight="w"),
+    MetricSpec("dd", "quantile_sketch", "v * 7", cond="w > 0"),
+    MetricSpec("cnt", "count"),
+)
+
+
+def _mixed(spark, tmp_path):
+    """A (day, g) view over MIXED, and a 2.4k-row batch read from
+    parquet: NULL values of both sources, NULL dims, nine distinct
+    strings per key against a topk reserve of 8, and a day whose rows
+    all fail the quantile_sketch's -If condition."""
+    mv = MaterializedView(
+        "mixed", dims=("day", "g"), metrics=MIXED,
+        storage=Table(str(tmp_path / "state"), partition_by=("day",)),
+    )
+    spark.range(2400).selectExpr(
+        "date_add(DATE'2024-01-01', CAST(id % 4 AS INT)) AS day",
+        "CASE WHEN id % 7 = 0 THEN NULL ELSE CAST(id % 3 AS INT) END AS g",
+        "CASE WHEN id % 11 = 0 THEN NULL ELSE (id DIV 12 + id DIV 300) % 27 END AS v",
+        "CASE WHEN id % 13 = 0 THEN NULL ELSE concat('s', (id DIV 5) % 9) END AS s",
+        "id % 4 AS w",
+        "id DIV 5 % 3 AS part",
+    ).write.parquet(str(tmp_path / "batch"))
+    return mv, spark.read.parquet(str(tmp_path / "batch"))
+
+
+def test_mixed_build_states_equal_partial_then_merge_states(spark, tmp_path):
+    """One pre-count pass over a mixed-type view (p50 and p90 share one
+    value field) builds, entry for entry, the states that the
+    one-expression partial() gives after merge_states' re-sum."""
+    mv, batch = _mixed(spark, tmp_path)
+    built = mv.materialize_batch(batch)
+    plan = built._jdf.queryExecution().optimizedPlan().toString()
+    assert set(re.findall(r"\b_v\d+\b", plan)) == {"_v0", "_v1", "_v2", "_v3"}
+    partial = batch.groupBy(*mv.dims).agg(*[m.partial() for m in MIXED])
+    merged = mv.merge_states(partial, list(mv.dims))
+    got = {(r["day"], r["g"]): r for r in built.collect()}
+    want = {(r["day"], r["g"]): r for r in merged.collect()}
+    assert got.keys() == want.keys() and None in {g for _, g in got}
+    assert any(r["dd"] is None for r in got.values())
+    for key, row in got.items():
+        for m in MIXED:
+            assert (row[m.name] or []) == (want[key][m.name] or []), (key, m.name)
+
+
+def test_mixed_compaction_equals_an_independent_resum(spark, tmp_path):
+    """Appends of the mixed view run at most ``JOBS_PER_SKETCH_APPEND``
+    jobs and read each batch row at most twice; compacting them re-sums
+    every value→count state to a pure-Python re-sum of the appended
+    entries."""
+    mv, batch = _mixed(spark, tmp_path)
+    for part in range(3):
+        rows = batch.filter(F.col("part") == part)
+        _, jobs, read = traced(spark, lambda: mv.append_batch(rows))
+        assert jobs <= JOBS_PER_SKETCH_APPEND, jobs
+        assert read <= 2 * 2400, read
+    counted = [m for m in MIXED if m.kind in MetricSpec.PRECOUNT_KINDS]
+    sums: dict = {}
+    for r in mv.storage.read(spark).collect():
+        for m in counted:
+            per_value = sums.setdefault((r["day"], r["g"]), {}).setdefault(m.name, {})
+            for value, c in r[m.name] or []:
+                per_value[value] = per_value.get(value, 0) + c
+
+    mv.compact(spark)
+    got = {(r["day"], r["g"]): r for r in mv.storage.read(spark).collect()}
+    assert got.keys() == sums.keys()
+    for key, row in got.items():
+        for m in counted:
+            want = sorted(sums[key][m.name].items())
+            if m.kind == "topk":
+                want = sorted(want, key=lambda e: (-e[1], e[0]))[: m.topk_reserve]
+            assert [tuple(e) for e in row[m.name]] == want, (key, m.name)
 
 
 def test_append_job_budget(spark, tmp_path):

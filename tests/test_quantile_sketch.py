@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from clickhouse_learning_spark.functions.metrics import (
     DD_ZERO_BUCKET,
     MetricSpec,
+    build_states,
     dd_gamma,
 )
 from clickhouse_learning_spark.mv.engine import MaterializedView
@@ -89,6 +90,21 @@ def test_zero_and_negative_inputs(spark):
         .collect()[0]["q"]
     )
     assert got == 0.0  # median of (0,-5,0,10) → zero bucket
+
+
+def test_null_inputs_add_no_entry(spark):
+    """A NULL input, or a row failing the -If condition, adds no entry
+    (not a zero-bucket one) on both write paths: the engine's
+    build_states and the one-expression partial()."""
+    df = spark.createDataFrame(
+        [(1, None), (1, None), (1, None), (1, 100), (1, 200)], "g int, x long"
+    )
+    for cond, want in ((None, 100.4946), ("x > 150", 198.3685)):
+        spec = MetricSpec("q", "quantile_sketch", "x", cond=cond)
+        for states in (build_states(df, ("g",), (spec,)),
+                       df.groupBy("g").agg(spec.partial())):
+            got = states.groupBy("g").agg(spec.merged_finalized()).collect()
+            assert got[0]["q"] == want, (cond, got)
 
 
 def test_mv_lifecycle_compaction_invariance(spark, tmp_path):

@@ -148,12 +148,11 @@ def test_quantile_weighted_explicit_weight(spark):
     assert got2 == 99
 
 
-def test_build_states_single_pass_fast_path(spark):
-    """build_states with ONLY pre-count metrics and no -If cond takes the
-    single-pass path (r10 optimization): one scan, no join-back — while
-    keeping the exact two-pass contract: NULL values are excluded from
-    the entries, and a dims group whose values are ALL NULL still
-    appears, with a NULL state (the old join-miss NULL)."""
+def test_build_states_skips_null_values_and_keeps_all_null_groups(spark):
+    """build_states of value→count metrics alone, with or without an -If
+    cond, plans one pre-count pass with no join: NULL values add no
+    entry, and a dims group whose values are ALL NULL still appears,
+    with a NULL state."""
     from clickhouse_learning_spark.functions.metrics import build_states
 
     rows = [
@@ -165,9 +164,10 @@ def test_build_states_single_pass_fast_path(spark):
 
     q = MetricSpec("q", "quantile", "v", level=0.5)
     st = build_states(df, ("g",), (q,))
-    # plan shape: single scan, no join (the fast path)
-    plan = st._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan
+    def plan(states):
+        return states._jdf.queryExecution().executedPlan().toString()
+
+    assert "Join" not in plan(st)
     got = {r["g"]: r["q"] for r in st.collect()}
     assert sorted(got.keys()) == [1, 2, 3]
     assert sorted((e["v"], e["c"]) for e in got[1]) == [(5, 2), (7, 1)]
@@ -190,9 +190,10 @@ def test_build_states_single_pass_fast_path(spark):
     assert [(e["v"], e["c"]) for e in gott[1]][0] == (5, 2)
     assert gott[2] is None
 
-    # a -If cond still takes the general join path with the same output
+    # a -If cond gates the value: the same pass, no join
     qc = MetricSpec("q", "quantile", "v", level=0.5, cond="w >= 2")
     stc = build_states(df, ("g",), (qc,))
+    assert "Join" not in plan(stc)
     gotc = {r["g"]: r["q"] for r in stc.collect()}
     assert sorted((e["v"], e["c"]) for e in gotc[1]) == [(5, 1)]
     assert gotc[2] is None and gotc[3] is not None
