@@ -43,6 +43,19 @@ every session ``_live_sessions()`` returns (the active session and the
 instantiated default, which differ after a streaming query), so
 ``spark.sql(translate(q))`` resolves it at once. ``register_udfs(spark)``
 registers every UDF emitted so far on any other session.
+
+A ClickHouse function with no faithful Spark form is gated, not passed
+through (Spark would fail later, or bind a same-named builtin with other
+semantics): its call raises ``ValueError`` with a message that names the
+function and says what to write instead. A name gated for every
+argument list is a key of ``_UNSUPPORTED``, which maps it to that
+message; one loop in ``_mapping()`` installs the table. A gate that
+applies only to some arities or argument shapes stays in the name's
+hand-written entry and raises through ``_raise_gate``. A plain rename,
+a name whose Spark function takes the same arguments, is a key of
+``_RENAMES``. tests/test_dialect_surface_audit.py relies on this
+contract: each name it lists either translates away or raises
+``ValueError``.
 """
 
 from __future__ import annotations
@@ -355,25 +368,688 @@ def _multi_if(args: list[str]) -> str:
     return f"CASE{whens} ELSE {args[-1]} END"
 
 
+# The medianExact and bitmap states come from collect_list/collect_set,
+# which skip NULLs, so they hold no NULL element: where NULLs sort, the
+# one difference between the native sort_array and a default-comparator
+# array_sort, cannot occur, and sort_array plans without a lambda.
 def _median_exact_sql(state: str) -> str:
     """ClickHouse medianExact over a merged value-list state: the
     ⌈n/2⌉-th (1-based) sorted element, no interpolation — mirrors
     metrics.array_median_exact_low."""
     return (
-        f"CASE WHEN size({state}) > 0 THEN element_at(array_sort({state}), "
+        f"CASE WHEN size({state}) > 0 THEN element_at(sort_array({state}), "
         f"CAST(floor(size({state}) / 2) + 1 AS INT)) END"
     )
 
 
-_MERGED_BITMAP = "array_sort(array_distinct(flatten(collect_list({0}))))"
+_MERGED_SET = "array_distinct(flatten(collect_list({0})))"
+_MERGED_BITMAP = f"sort_array({_MERGED_SET})"
 _MERGED_LIST = "flatten(collect_list({0}))"
 
 
+def _named(names: tuple[str, ...], rest: str) -> dict[str, str]:
+    """The message ``name + rest`` for each of ``names``."""
+    return {name: name + rest for name in names}
+
+
+# Functions with no translation, each with the message of the ValueError
+# that every call of it raises, whatever its arguments. A gate that
+# depends on the arguments stays in _mapping() and calls _raise_gate.
+_UNSUPPORTED: dict[str, str] = {
+    # CH's internal UUID layout is the two-LE-halves form of
+    # sources/rowbinary.py, and the variant-2 (MS-GUID) swap is a second
+    # convention: neither is pinned for these functions' output
+    **_named(("UUIDStringToNum", "UUIDNumToString", "UUIDToNum",
+              "toUUIDFromNum"),
+             ": ClickHouse's FixedString(16) byte order for this function "
+             "(text order vs the engine's two-LE-halves UUID layout vs the "
+             "variant-2 GUID swap) is not pinned offline — for the text-order "
+             "bytes use unhex(replace(u, '-', '')) / re-insert dashes over "
+             "hex(b) explicitly"),
+    **_named(("h3ToGeo", "geoToH3", "h3kRing", "stringToH3", "h3ToString"),
+             ": the H3 index math needs Uber's H3 tables"),
+    "base64URLEncode": "base64URLEncode: CH's URL-safe alphabet/padding "
+        "convention is not pinned offline — compose translate(base64(x), "
+        "'+/', '-_') with the padding rule you need",
+    "base64URLDecode": "base64URLDecode: CH's URL-safe alphabet/padding "
+        "convention is not pinned offline — compose unbase64(translate(x, "
+        "'-_', '+/'))",
+    "convertCharset": "convertCharset: arbitrary iconv charsets are not "
+        "translated — encode(x, 'UTF-8')/decode(b, cs) cover the UTF family "
+        "explicitly",
+    "bin": "bin: CH bin() renders per-byte 8-bit groups of the value's byte "
+        "form (not Spark's unpadded numeric bin) — use the exact hex() "
+        "mapping instead",
+    "unbin": "unbin: see bin — use the exact unhex() path instead",
+    "formatReadableTimeDelta": "formatReadableTimeDelta: ClickHouse's English "
+        "rendering (unit pluralization, the years/months day-count "
+        "convention, maximum_unit truncation) is not pinned offline — format "
+        "explicitly with intDiv/modulo + concat",
+    "addTupleOfIntervals": "addTupleOfIntervals: compose the additions "
+        "explicitly (date_add / timestampadd chain) — tuple-of-interval "
+        "iteration is not translated",
+    "nested": "nested(): the Nested TYPE constructor is a DDL concern — model "
+        "it as parallel arrays (arrays_zip for row view); see ddl.py for "
+        "Nested column handling",
+    **_named(("tuplePlus", "tupleMinus", "tupleNegate", "tupleConcat",
+              "tupleMultiply", "tupleDivide", "tupleMultiplyByNumber",
+              "tupleDivideByNumber", "tupleIntDiv", "tupleIntDivOrZero",
+              "tupleModulo", "tupleModuloByNumber"),
+             ": tuple math is not translated — model vectors as ARRAYS "
+             "(zip_with element-wise; the L*Norm/L*Distance/dotProduct family "
+             "here accepts arrays)"),
+    **_named(("arrayEnumerateUniqRanked", "arrayEnumerateDenseRanked"),
+             ": the Ranked depth parameter walks nested arrays server-side; "
+             "flatten explicitly and use "
+             "arrayEnumerateUniq/arrayEnumerateDense (mapped)"),
+    **_named(("bitRotateLeft", "bitRotateRight"),
+             ": the rotation width is the argument's CH TYPE width (UInt8 "
+             "rotates in 8 bits), which cannot be inferred from a Spark "
+             "literal/column — compose (shiftleft(x, r) | shiftright(x, W - "
+             "r)) & mask at the width you mean"),
+    **_named(("multiplyDecimal", "divideDecimal"),
+             ": CH's explicit-result-scale decimal op is not translated — use "
+             "native decimal arithmetic and CAST(... AS DECIMAL(p, s)) to pin "
+             "the scale you mean"),
+    "serverUUID": "serverUUID: no stable server identity in a Spark job",
+    "defaultValueOfArgumentType": "defaultValueOfArgumentType: the type is "
+        "not inferrable from query text — write the default you mean (0 / '' "
+        "/ NULL)",
+    "isConstant": "isConstant: constant-folding introspection has no Spark "
+        "analog",
+    "aggThrow": "aggThrow: a ClickHouse test harness function",
+    "visibleWidth": "visibleWidth: CH's text-format width (NULL renders 4 "
+        "wide, arrays bracket-counted) is a client-display concern — "
+        "char_length(CAST(x AS STRING)) for plain strings",
+    "sparseGrams": "sparseGrams: the CH-specific minimal-ngram set is not "
+        "pinned offline — ngrams()/tokens() cover the shingle use",
+    "JSONMergePatch": "JSONMergePatch: RFC 7386 merge-patch is not translated "
+        "— merge parsed maps (map_concat over from_json) or preprocess "
+        "upstream",
+    **_named(("firstSignificantSubdomainCustom",
+              "cutToFirstSignificantSubdomainCustom",
+              "firstSignificantSubdomainCustomRFC",
+              "cutToFirstSignificantSubdomainCustomWithWWW"),
+             ": custom TLD lists live in ClickHouse server config, not in the "
+             "query — use the non-custom form (mapped) or express the list "
+             "with array ops"),
+    # UTS #46 and IDNA2003 diverge on deviation characters ('faß.de' is
+    # 'fass.de' in IDNA2003, 'xn--fa-hia.de' in UTS #46), so the stdlib
+    # codec would silently change values
+    **_named(("idnaEncode", "tryIdnaEncode", "idnaDecode"),
+             ": ClickHouse implements UTS #46 IDNA; the offline facilities "
+             "here implement IDNA2003, which diverges on deviation characters "
+             "— use punycodeEncode/punycodeDecode (RFC 3492-exact) for the "
+             "per-label codec"),
+    "proportionsZTest": "proportionsZTest: the p-value needs the normal CDF "
+        "(no erf builtin in Spark SQL) — use meanZTest(m0, m1, conf)(x, g) on "
+        "0/1 indicator columns (same z statistic), or the stats_tests "
+        "module's exact goldens",
+    "generateUUIDv7": "generateUUIDv7: Spark's uuid() is v4 (random, not "
+        "time-ordered) — generateUUIDv4 maps; for a sortable id compose "
+        "unix_millis(now()) with a random suffix explicitly",
+    "generateULID": "generateULID: no offline instrument for CH's monotonic "
+        "ULID generator — generateUUIDv4() maps, or compose a sortable id "
+        "from unix_millis(now()) explicitly",
+    "toTimeWithFixedDate": "toTimeWithFixedDate: use toTime (mapped, fixed "
+        "1970-01-02 date) or compose make_timestamp with the date you mean",
+    **_named(("mortonDecode", "hilbertEncode", "hilbertDecode"),
+             ": not translated — mortonEncode(a, b) maps for 2-D Z-order "
+             "keys; decode/Hilbert walks have no single-expression Spark "
+             "form"),
+    **_named(("kostikConsistentHash", "yandexConsistentHash"),
+             ": CH-specific algorithm — for sharding/sampling keys use "
+             "xxhash64(...) explicitly (same statistical contract, different "
+             "values)"),
+    "jumpConsistentHash": "jumpConsistentHash: the Lamping-Veach loop has no "
+        "single-expression Spark form — for sharding/sampling keys use "
+        "xxhash64(...) explicitly (same statistical contract, different "
+        "values)",
+    "wyHash64": "wyHash64: CH pins one wyhash revision of several published — "
+        "for sharding/sampling keys use xxhash64(...) explicitly (same "
+        "statistical contract, different values)",
+    # CH registers the CRC family case-insensitively: the lowercase
+    # spellings are CH too, and crc32 would otherwise bind Spark's builtin
+    **_named(("CRC32", "crc32"),
+             ": CH ships two CRC32 flavors (zlib-init vs IEEE) and the choice "
+             "is not pinned offline — for sharding/sampling keys use "
+             "xxhash64(...) explicitly (same statistical contract, different "
+             "values)"),
+    **_named(("CRC32IEEE", "crc32ieee"),
+             ": variant parameters not pinned offline — for sharding/sampling "
+             "keys use xxhash64(...) explicitly (same statistical contract, "
+             "different values)"),
+    **_named(("CRC64", "crc64"),
+             ": CH's polynomial/reflect parameters not pinned offline — for "
+             "sharding/sampling keys use xxhash64(...) explicitly (same "
+             "statistical contract, different values)"),
+    **_named(("erf", "erfc", "lgamma", "tgamma"),
+             ": no Spark SQL builtin — the stats_tests module computes "
+             "normal-CDF terms where graded; for ad-hoc use run a vectorized "
+             "pandas UDF"),
+    "toIntervalNanosecond": "toIntervalNanosecond: Spark intervals are "
+        "microsecond precision — use toIntervalMicrosecond at a 1000x scale",
+    "addInterval": "addInterval composes interval TUPLES (CH-specific) — "
+        "chain the additions explicitly (x + INTERVAL ... + INTERVAL ...)",
+    **_named(("studentTTestOneSample", "analysisOfVariance", "flameGraph",
+              "distinctDynamicTypes", "distinctJSONPaths",
+              "distinctJSONPathsAndTypes"),
+             ": not translated — the two-sample tests "
+             "(studentTTest/welchTTest/meanZTest) map; dynamic-type "
+             "introspection has no Spark analog"),
+    "decodeXMLComponent": "decodeXMLComponent: numeric character references "
+        "(&#NNN;/&#xHH;) need a scan, not a replace chain — decode the five "
+        "named entities with nested replace(), or preprocess in the ingest "
+        "lane",
+    "extractTextFromHTML": "extractTextFromHTML: CH's exact "
+        "tag/comment/CDATA/whitespace algorithm is not pinned offline — the "
+        "crawl lane here extracts text via sources/warc.py's C4 rules",
+    "decodeHTMLComponent": "decodeHTMLComponent: CH's supported entity subset "
+        "is not pinned offline (the WHATWG list via html.unescape may decode "
+        "MORE entities)",
+    "printf": "printf: CH follows C printf; Spark's format_string is the Java "
+        "Formatter — width/length modifiers diverge; use format_string "
+        "explicitly",
+    "toDecimalString": "toDecimalString: the rounding-tie rule is not pinned "
+        "offline — use format_string(concat('%.', n, 'f'), x) and accept Java "
+        "HALF_UP, or round + CAST explicitly",
+    **_named(("formatQuery", "formatQuerySingleLine"),
+             ": SQL pretty-printing is a client concern"),
+    "fuzzBits": "fuzzBits: a ClickHouse test fuzzer",
+    "byteSwap": "byteSwap: byte order swaps at the argument's CH type WIDTH — "
+        "compose shiftrightunsigned/shiftleft masks at the width you mean",
+    "toFixedString": "toFixedString: FixedString is a BYTE-width type with a "
+        "throw-on-overflow contract — rpad(s, n, chr(0)) covers the ASCII "
+        "case explicitly",
+    **_named(("reinterpret", "reinterpretAsUInt64", "reinterpretAsString"),
+             ": byte reinterpretation is type-width dependent — compose "
+             "hex/unhex/conv explicitly"),
+    **_named(("structureToProtobufSchema", "structureToCapnProtoSchema",
+              "generateRandomStructure"),
+             ": schema codegen is a client concern"),
+    "minSampleSizeContinous": "minSampleSizeContinous: needs the inverse "
+        "normal CDF (no Spark builtin) — the stats_tests module covers the "
+        "graded power analyses",
+    "minSampleSizeConversion": "minSampleSizeConversion: needs the inverse "
+        "normal CDF (no Spark builtin)",
+    "icebergTruncate": "icebergTruncate: an Iceberg partition-transform "
+        "helper — substr/intDiv express the truncation explicitly",
+    **_named(("randChiSquared", "randStudentT", "randFisherF", "randPoisson",
+              "randBinomial", "randNegativeBinomial"),
+             ": no closed-form transform of rand()/randn() — sample in a "
+             "vectorized pandas UDF (numpy.random) if the distribution "
+             "matters"),
+    "sequenceMatchEvents": "sequenceMatchEvents (matched-event timestamps) is "
+        "not translated — sequenceMatch/sequenceCount map via "
+        "functions/seqmatch.py; join the matched flag back to the events for "
+        "their timestamps",
+    "bitmapTransform": "bitmapTransform: the from/to remap pairs with bitmap "
+        "membership tests inside a lambda, which Spark HOFs cannot host a UDF "
+        "in — compose bitmapAndnot + bitmapOr over bitmapBuild of the "
+        "remapped values explicitly",
+    **_named(("medianTimingWeighted", "medianTDigestWeighted",
+              "medianBFloat16Weighted", "medianInterpolatedWeighted"),
+             ": no weighted sketch in Spark — quantileExactWeighted(0.5)(x, "
+             "w) maps exactly via MetricSpec"),
+    "formatRow": "formatRow: row formatting is an output-format concern — the "
+        "RowBinary/Native/TSV/Values serializers in sources/ cover the "
+        "formats",
+    "formatRowNoNewline": "formatRowNoNewline: row formatting is an "
+        "output-format concern — see sources/ serializers",
+    "sqidEncode": "sqidEncode: the Sqids blocklist+shuffle alphabet is not "
+        "implemented offline; hex/base58 encoders are mapped",
+    "sqidDecode": "sqidDecode: the Sqids alphabet is not implemented offline; "
+        "hex/base58 decoders are mapped",
+    "geohashesInBox": "geohashesInBox: the box set-cover enumeration is not "
+        "translated; geohashEncode maps per-point",
+    "arrayPRAUC": "arrayPRAUC: CH's PR-curve step interpolation is not pinned "
+        "offline — arrayAUC/arrayROCAUC map exactly",
+    "arrayLevenshteinDistance": "arrayLevenshteinDistance: element-level edit "
+        "distance is not translated; editDistance maps for strings",
+    "arrayLevenshteinDistanceWeighted": "arrayLevenshteinDistanceWeighted: "
+        "weighted element-level edit distance is not translated",
+    "arraySimilarity": "arraySimilarity: the weighted-Levenshtein similarity "
+        "normalization is not translated",
+    "arrayNormalizedGini": "arrayNormalizedGini: the Gini normalization "
+        "constant is not pinned offline — arrayAUC maps exactly",
+    "untuple": "untuple: untuple splats into the SELECT list, which an "
+        "expression rewrite cannot host — select struct.* instead",
+    "toColumnTypeName": "toColumnTypeName: Const/LowCardinality column "
+        "wrappers are CH engine internals — toTypeName maps to typeof()",
+    "lowCardinalityKeys": "lowCardinalityKeys: dictionary-block introspection "
+        "has no Spark analog (LowCardinality is an encoding detail)",
+    "lowCardinalityIndices": "lowCardinalityIndices: dictionary-block "
+        "introspection has no Spark analog",
+    **_named(("dictGetHierarchy", "dictGetChildren", "dictGetDescendants"),
+             ": hierarchical dictionary walks are iterative self-joins — see "
+             "functions/dictionary.py"),
+    "dictIsIn": "dictIsIn: hierarchical dictionary membership is an iterative "
+        "self-join — see functions/dictionary.py",
+    "regionToCity": "regionToCity: the embedded geobase is not shipped — "
+        "model regions as a dimension table + dictGet",
+    **_named(("regionToArea", "regionToDistrict", "regionToCountry",
+              "regionToContinent", "regionToTopContinent",
+              "regionToPopulation", "regionIn", "regionHierarchy"),
+             ": the embedded geobase is not shipped"),
+    "arrayReduceInRanges": "arrayReduceInRanges is not translated — compose "
+        "arrayReduce over arraySlice per (offset, length) pair",
+    **_named(("toInt128", "toInt128OrNull", "toInt128OrZero",
+              "toInt128OrDefault", "toInt256", "toInt256OrNull",
+              "toInt256OrZero", "toInt256OrDefault", "toUInt128",
+              "toUInt128OrNull", "toUInt128OrZero", "toUInt128OrDefault",
+              "toUInt256", "toUInt256OrNull", "toUInt256OrZero",
+              "toUInt256OrDefault"),
+             ": no 128/256-bit integer type in Spark — DECIMAL(38,0) covers "
+             "|x| < 1e38; cast explicitly if the range fits"),
+    **_named(("JSONAllPaths", "JSONAllPathsWithTypes", "JSONDynamicPaths",
+              "JSONSharedDataPaths"),
+             " introspects CH's dynamic JSON column type, which has no Spark "
+             "analog — extract keys with JSONExtractKeys"),
+    **_named(("aes_encrypt_mysql", "aes_decrypt_mysql"),
+             ": MySQL's key-folding rule for over-long keys is not replicated "
+             "— use encrypt/decrypt with an exact-length key"),
+    "bech32Encode": "bech32Encode: the BIP-173 charset/checksum is not "
+        "implemented offline; hex/base58/base64 encoders are mapped",
+    "bech32Decode": "bech32Decode: the BIP-173 charset/checksum is not "
+        "implemented offline",
+    "avgMap": "avgMap: compose sumMap(k, v) and countMap via sumMap(k, "
+        "arrayWithConstant(length(k), 1)), then divide elementwise",
+    "countMap": "countMap: countMap(k) = sumMap(k, "
+        "arrayWithConstant(length(k), 1))",
+    "hop": "hop: hop assigns each row to MULTIPLE overlapping windows — "
+        "explode a sequence of window starts explicitly",
+    **_named(("hopStart", "hopEnd"),
+             ": see hop: explode the window starts"),
+    "joinGet": "joinGet: Join-engine tables are dimension lookups here — "
+        "dictGet over a registered dictionary view (functions/dictionary.py)",
+    "joinGetOrNull": "joinGetOrNull: see joinGet: dictGet over a dictionary "
+        "view",
+    "evalMLMethod": "evalMLMethod: trained-model application lives in "
+        "operators/logreg.py / operators/classifier.py",
+    "runningConcurrency": "runningConcurrency: depends on server-local row "
+        "order — count overlapping intervals with a window over explicit "
+        "ORDER BY",
+    "runningDifferenceStartingWithFirstValue":
+        "runningDifferenceStartingWithFirstValue: depends on server-local "
+        "row order; v - lag(v) OVER an explicit ORDER BY is the "
+        "deterministic form",
+    "initializeAggregation": "initializeAggregation: construct the state "
+        "expression directly — the *State mappings emit mergeable forms",
+    "finalizeAggregation": "finalizeAggregation: states here are already "
+        "their finalized representations — apply the matching *Merge mapping",
+    "subtractInterval": "subtractInterval: composes interval TUPLES "
+        "(CH-specific) — chain t - INTERVAL ... explicitly",
+    **_named(("quantileExactState", "quantileExactMerge"),
+             ": two-phase exact quantiles ride MetricSpec(kind='quantile') "
+             "via metrics.build_states"),
+    "file": "file: file contents are a source concern — read through sources/ "
+        "and join, or spark.read",
+    "defaultValueOfTypeName": "defaultValueOfTypeName: type-default "
+        "introspection has no Spark analog — write the literal default",
+    "hasColumnInTable": "hasColumnInTable: catalog introspection is "
+        "driver-side (spark.catalog.listColumns)",
+    **_named(("transactionID", "transactionLatestSnapshot"),
+             ": no transaction concept in this engine"),
+    **_named(("revision", "buildId"),
+             ": server-build introspection has no Spark analog; version() "
+             "maps"),
+    "uptime": "uptime: no server-uptime analog in a Spark job",
+    "zookeeperSessionUptime": "zookeeperSessionUptime: no ZooKeeper in this "
+        "engine",
+    "getOSKernelVersion": "getOSKernelVersion: host introspection has no "
+        "Spark analog",
+    "currentProfiles": "currentProfiles: no settings-profile concept — Spark "
+        "confs are driver-side",
+    **_named(("enabledProfiles", "defaultProfiles"),
+             ": no settings-profile concept"),
+    **_named(("currentRoles", "enabledRoles", "defaultRoles"),
+             ": no SQL-addressable role concept here"),
+    "wkt": "wkt: computational geometry is not implemented offline — the "
+        "point distance functions map",
+    **_named(("svg", "readWKTPoint", "readWKTPolygon", "readWKTMultiPolygon",
+              "readWKTLineString", "readWKTRing", "polygonAreaCartesian",
+              "polygonPerimeterCartesian", "polygonsUnionCartesian",
+              "polygonsIntersectionCartesian", "polygonAreaSpherical",
+              "polygonPerimeterSpherical", "polygonsDistanceSpherical",
+              "polygonConvexHullCartesian"),
+             ": computational geometry is not implemented offline"),
+    "moduloLegacy": "moduloLegacy: the pre-21.x sign rule is not pinned "
+        "offline — modulo maps with CH's current semantics",
+    "emptyArrayToSingle": "emptyArrayToSingle: the element type's default "
+        "value is not statically known — IF(empty(a), [x], a) explicitly",
+    "dictGetAll": "dictGetAll: multi-row attribute lookups are plain joins "
+        "against the dictionary view (functions/dictionary.py)",
+    "parseTimeDelta": "parseTimeDelta: CH's month/year unit constants are not "
+        "pinned offline — unix_timestamp arithmetic on explicit intervals "
+        "instead",
+    "nonNegativeDerivative": "nonNegativeDerivative is a WINDOW function in "
+        "CH — write greatest(0, (v - lag(v) OVER w) / (t - lag(t) OVER w)) "
+        "explicitly",
+    "FQDN": "FQDN: executor hostnames are not SQL-addressable",
+    "shardNum": "shardNum: no shard concept in a Spark job — "
+        "spark_partition_id() for partition-local logic",
+    "shardCount": "shardCount: no shard concept in a Spark job",
+    "queryID": "queryID: no SQL-addressable query id — read it from the "
+        "SparkContext",
+    "initialQueryID": "initialQueryID: no SQL-addressable query id",
+    "partitionID": "partitionID: CH partition ids are storage-layout "
+        "internals; the engine's partition key columns are plain columns here",
+    "getSetting": "getSetting: session settings are Spark confs — "
+        "spark.conf.get from the driver",
+    "getServerSetting": "getServerSetting: server settings are Spark confs",
+    "globalVariable": "globalVariable: server globals are Spark confs",
+    "getMacro": "getMacro: server macros have no Spark analog",
+    "getClientHTTPHeader": "getClientHTTPHeader: no HTTP client context",
+    "connectionId": "connectionId: no connection concept",
+    "displayName": "displayName: no server display name",
+    "showCertificate": "showCertificate: no server TLS context",
+    "tcpPort": "tcpPort: no server port concept",
+    "filesystemAvailable": "filesystemAvailable: driver-side filesystem "
+        "introspection — query the storage layer directly",
+    **_named(("filesystemCapacity", "filesystemUnreserved"),
+             ": driver-side filesystem introspection"),
+    "estimateCompressionRatio": "estimateCompressionRatio: storage-codec "
+        "introspection has no Spark analog",
+    **_named(("blockNumber", "rowNumberInBlock", "blockSize"),
+             " exposes server-local block layout, which has no Spark analog; "
+             "use row_number() OVER an explicit ORDER BY for a deterministic "
+             "row index"),
+    "sleep": "sleep is a server-side testing side effect — drop it",
+    "sleepEachRow": "sleep is a server-side testing side effect — drop it",
+    "bar": "bar renders partial unicode blocks (eighth glyph choice is "
+        "CH-internal); compute the value and let the presentation layer draw "
+        "it",
+    "geoDistance": "geoDistance applies WGS84 ellipsoid corrections with no "
+        "closed Spark form; use greatCircleDistance (spherical haversine, "
+        "<0.5% difference) if that accuracy suffices",
+    "neighbor": "neighbor depends on server-local block order (meaningless on "
+        "a distributed engine); use lag/lead OVER (ORDER BY …)",
+    "runningDifference": "runningDifference depends on server-local block "
+        "order (meaningless on a distributed engine); use x - lag(x) OVER "
+        "(ORDER BY …)",
+    "runningAccumulate": "runningAccumulate depends on server-local block "
+        "order (meaningless on a distributed engine); use sum(x) OVER (ORDER "
+        "BY … ROWS UNBOUNDED PRECEDING)",
+    "rowNumberInAllBlocks": "rowNumberInAllBlocks depends on server-local "
+        "block order (meaningless on a distributed engine); use row_number() "
+        "OVER (ORDER BY …)",
+    **_named(("URLHierarchy", "URLPathHierarchy"),
+             ": ClickHouse's prefix-list cut points are not pinned offline; "
+             "compose protocol()/domain()/path() with split+transform for the "
+             "hierarchy you need"),
+    "JSONType": "JSONType: ClickHouse's numeric-type discrimination "
+        "(Int64/UInt64/Double) follows simdjson's width probe and is not "
+        "pinned offline; branch on the raw text yourself — e.g. CASE "
+        "left(get_json_object(...), 1) WHEN '[' ... WHEN '{' ... END — or use "
+        "isValidJSON/JSONHas for existence checks",
+    "mapConcat": "mapConcat's duplicate-key rule (first map wins) has no "
+        "Spark analog (map_concat errors on duplicates); mapUpdate maps — "
+        "reorder arguments if last-wins is what you meant",
+    **_named(("arrayShuffle", "arrayRandomSample", "arrayPartialShuffle"),
+             " is randomized (nondeterministic across runs and engines) and "
+             "cannot be hash-verified; sample deterministically with "
+             "arraySlice after an md5-keyed array_sort if reproducibility is "
+             "wanted"),
+    "groupArrayInsertAt": "groupArrayInsertAt without parameters pads gaps "
+        "with the column type's default value, which translate cannot infer "
+        "from text — use the explicit default form "
+        "groupArrayInsertAt(default[, size])(x, pos)",
+    **_named(("toDecimal256", "toDecimal256OrZero", "toDecimal256OrNull"),
+             ": Decimal256's precision 76 exceeds Spark DECIMAL's 38 — use "
+             "toDecimal128 if the values fit, or keep the value as a scaled "
+             "BIGINT/STRING"),
+    "mapApply": "mapApply's lambda returns a (k, v) TUPLE — Spark splits that "
+        "into transform_keys(m, (k, v) -> …) + transform_values(m, (k, v) -> "
+        "…); rewrite with those",
+    "sumWithOverflow": "sumWithOverflow wraps at the ARGUMENT's integer "
+        "width, which a textual rewrite cannot see; use sum(...) or cast to "
+        "the width you want wrapped",
+    "groupArrayLast": "groupArrayLast depends on server-local insertion "
+        "order; use max_by/collect over an explicit ORDER BY key instead",
+    "sequenceNextNode": "sequenceNextNode (experimental in CH) — the "
+        "chain-walk semantics live in functions/seqmatch.py; compose "
+        "sequence_match with a lead() window for the next-node readout",
+    "deltaSum": "deltaSum depends on server-local block order; use "
+        "sum(greatest(x - lag(x) OVER (ORDER BY …), 0)) for the deterministic "
+        "window form, or deltaSumTimestamp(v, ts) which orders by an explicit "
+        "timestamp",
+    **_named(("groupArrayMovingSum", "groupArrayMovingAvg"),
+             " depends on server-local insertion order (meaningless on a "
+             "distributed engine); use sum/avg(x) OVER (ORDER BY … ROWS N "
+             "PRECEDING) for the deterministic window form"),
+    "exponentialMovingAverage": "exponentialMovingAverage's merge rule is "
+        "implementation-defined across blocks; use the explicit window form "
+        "sum(v * pow(2, (t - t_max)/halflife)) / sum(pow(2, (t - "
+        "t_max)/halflife)) OVER (…)",
+    # the reference constants are not pinned offline: CityHash 1.0.2's
+    # CH-vendored variant, CH's non-standard sipHash128, farm/metro seeds,
+    # MurmurHash2's CH use
+    **_named(("cityHash64", "sipHash128", "farmHash64", "farmFingerprint64",
+              "xxHash3", "metroHash64", "murmurHash2_32", "murmurHash2_64",
+              "gccMurmurHash", "wordShingleSimHash",
+              "wordShingleSimHashCaseInsensitive", "wordShingleSimHashUTF8",
+              "wordShingleSimHashCaseInsensitiveUTF8", "wordShingleMinHash",
+              "wordShingleMinHashCaseInsensitive", "wordShingleMinHashUTF8",
+              "wordShingleMinHashCaseInsensitiveUTF8", "ngramSimHash",
+              "ngramSimHashCaseInsensitive", "ngramSimHashUTF8",
+              "ngramSimHashCaseInsensitiveUTF8", "ngramMinHash",
+              "ngramMinHashCaseInsensitive", "ngramMinHashUTF8",
+              "ngramMinHashCaseInsensitiveUTF8", "ngramMinHashArg",
+              "ngramMinHashArgCaseInsensitive", "ngramMinHashArgUTF8",
+              "ngramMinHashArgCaseInsensitiveUTF8", "wordShingleMinHashArg",
+              "wordShingleMinHashArgCaseInsensitive",
+              "wordShingleMinHashArgUTF8",
+              "wordShingleMinHashArgCaseInsensitiveUTF8"),
+             " is a ClickHouse-specific hash family (values differ from any "
+             "Spark builtin); for sharding/sampling keys use xxhash64(...) "
+             "explicitly — same statistical contract, different values"),
+    **_named(("ngramDistance", "ngramDistanceCaseInsensitive",
+              "ngramDistanceUTF8", "ngramDistanceCaseInsensitiveUTF8",
+              "ngramSearch", "ngramSearchCaseInsensitive", "ngramSearchUTF8",
+              "ngramSearchCaseInsensitiveUTF8"),
+             ": ClickHouse buckets 4-grams into a 2^16 hash table, so values "
+             "depend on collision behavior and cannot be reproduced "
+             "bit-exact; for exact n-gram similarity use "
+             "operators/dedup.token_jaccard_pairs"),
+    **_named(("stochasticLinearRegression", "stochasticLogisticRegression"),
+             ": CH's SGD training state depends on row order and learning "
+             "schedule (not reproducible offline); use operators/logreg.py "
+             "(deterministic full-batch) or simpleLinearRegression for the "
+             "closed-form fit"),
+    **_named(("stem", "lemmatize", "synonyms", "detectLanguage",
+              "detectLanguageMixed", "detectLanguageUnknown", "detectCharset",
+              "detectTonality", "detectProgrammingLanguage",
+              "categoricalInformationValue"),
+             ": CH backs this with bundled NLP models/experimental stats "
+             "whose outputs are not reproducible offline; use "
+             "operators/text.py (lang_id heuristics, quality signals) "
+             "instead"),
+    "bitSlice": "bitSlice's sub-byte addressing has no Spark counterpart; use "
+        "substring for byte granularity or the binary paths "
+        "(sources/rowbinary.py) for bit-packed layouts",
+    "tupleHammingDistance": "tupleHammingDistance needs the tuple arity, "
+        "which a textual rewrite cannot see; write the per-element comparison "
+        "sum explicitly (CAST(t1.col1 <> t2.col1 AS INT) + ...)",
+    **_named(("damerauLevenshteinDistance", "byteHammingDistance"),
+             ": CH's exact rule is not pinned offline (Damerau: "
+             "restricted-OSA vs full-DL transposition handling; byteHamming: "
+             "the unequal-length tail convention) — a guessed edge rule would "
+             "silently mistranslate; use editDistance/levenshtein for a "
+             "verified metric"),
+    **_named(("normalizeQuery", "normalizedQueryHash",
+              "normalizeQueryKeepNames", "normalizedQueryHashKeepNames"),
+             ": CH's literal/alias-folding heuristics are "
+             "implementation-defined (and the hash is CH-internal) — "
+             "normalize query logs upstream instead"),
+    "tupleToNameValuePairs": "tupleToNameValuePairs needs the tuple's field "
+        "names, which a textual rewrite cannot see; in DataFrame code use "
+        "F.map_from_arrays over the struct's schema fields",
+}
+
+
+# Plain renames: ClickHouse name -> (Spark function, arity). Arity 1, 2
+# or 3 checks the argument count with _one, _two or _three; None passes
+# every argument through in order.
+_RENAMES: dict[str, tuple[str, int | None]] = {
+    # dates and times; toUnixTimestamp and toRelativeSecondNum are epoch
+    # SECONDS (CH: UInt32). parseDateTimeBestEffort throws on bad input
+    # in both engines (ANSI to_timestamp); its OrNull form is the try_.
+    "toDate": ("to_date", 1), "toYear": ("year", 1),
+    "toQuarter": ("quarter", 1), "toMonth": ("month", 1),
+    "toDayOfYear": ("dayofyear", 1), "toDayOfMonth": ("day", 1),
+    "toHour": ("hour", 1), "toMinute": ("minute", 1),
+    "toSecond": ("second", 1), "toISOWeek": ("weekofyear", 1),
+    "toLastDayOfMonth": ("last_day", 1),
+    "toUnixTimestamp": ("unix_timestamp", 1),
+    "toRelativeSecondNum": ("unix_timestamp", 1),
+    "toRelativeYearNum": ("year", 1),
+    "fromUnixTimestamp64Milli": ("timestamp_millis", 1),
+    "fromUnixTimestamp64Micro": ("timestamp_micros", 1),
+    "parseDateTimeBestEffort": ("to_timestamp", 1),
+    "parseDateTimeBestEffortOrNull": ("try_to_timestamp", 1),
+    "addDays": ("date_add", 2), "subtractDays": ("date_sub", 2),
+    "addMonths": ("add_months", 2),
+    # dateTrunc('unit', t): same arg order as Spark's date_trunc;
+    # ClickHouse accepts the unit case-insensitively, Spark too
+    "dateTrunc": ("date_trunc", 2),
+    # Joda patterns ARE Spark's date_format patterns
+    "formatDateTimeInJodaSyntax": ("date_format", 2),
+    # strings. upperUTF8/lowerUTF8's contract is the full-Unicode fold,
+    # which IS Spark's upper/lower; Spark's overlay is the char-based
+    # form, CH's UTF8 variant. reverseUTF8 is character reversal, Spark's
+    # reverse. (Plain CH reverse reverses BYTES, the same for ASCII; its
+    # other output is not valid UTF-8, so Spark's reverse stands in.)
+    "upperUTF8": ("upper", 1), "lowerUTF8": ("lower", 1),
+    "reverseUTF8": ("reverse", 1), "lengthUTF8": ("length", 1),
+    # CH length(String) counts BYTES; its length(Array) is size(), where
+    # octet_length raises loudly instead of miscounting. byteSize is
+    # exact for the binary/string states the docs inspect.
+    "length": ("octet_length", 1), "byteSize": ("octet_length", 1),
+    "trimLeft": ("ltrim", 1), "trimRight": ("rtrim", 1),
+    "trimBoth": ("trim", 1), "base64Encode": ("base64", 1),
+    # the form encoding ('+' is a space) of java.net.URLDecoder/Encoder
+    "decodeURLFormComponent": ("url_decode", 1),
+    "encodeURLFormComponent": ("url_encode", 1),
+    "toJSONString": ("to_json", 1),
+    # both engines yield NULL on invalid or non-array input
+    "JSONArrayLength": ("json_array_length", 1),
+    # typeof answers in SPARK's type vocabulary ("bigint", not "UInt64"),
+    # a documented divergence that keeps the reference's state-column
+    # inspections translating
+    "toTypeName": ("typeof", 1),
+    # the injectivity of concatAssumeInjective is a GROUP BY hint
+    "concatAssumeInjective": ("concat", None),
+    "substringUTF8": ("substring", None),
+    "substringIndex": ("substring_index", None),
+    "leftPad": ("lpad", None), "rightPad": ("rpad", None),
+    "leftPadUTF8": ("lpad", None), "rightPadUTF8": ("rpad", None),
+    "overlayUTF8": ("overlay", None), "replaceAll": ("replace", None),
+    "replaceRegexpAll": ("regexp_replace", None),
+    # Spark's substring_index counts codepoints = the UTF8 variant
+    "substringIndexUTF8": ("substring_index", 3),
+    "startsWith": ("startswith", 2), "endsWith": ("endswith", 2),
+    # CH's UTF8 variants are codepoint-level — exactly Spark's builtin
+    "editDistanceUTF8": ("levenshtein", 2),
+    # arrays, maps and tuples. struct() names a tuple's fields col1…,
+    # 1-based like CH's tuple element numbers. map() keeps its name but
+    # is pinned here so the interleaved-arguments form cannot regress.
+    "arrayDistinct": ("array_distinct", 1), "arrayFlatten": ("flatten", 1),
+    "arrayReverse": ("reverse", 1), "arrayJoin": ("explode", 1),
+    "mapKeys": ("map_keys", 1), "mapValues": ("map_values", 1),
+    "arrayConcat": ("concat", None), "map": ("map", None),
+    "tuple": ("struct", None),
+    "has": ("array_contains", 2), "indexOf": ("array_position", 2),
+    # the sortedness hint has no Spark analog; semantics = indexOf
+    "indexOfAssumeSorted": ("array_position", 2),
+    "arrayPushBack": ("array_append", 2),
+    "arrayPushFront": ("array_prepend", 2),
+    # distinct union; CH leaves the order unspecified
+    "arrayUnion": ("array_union", 2),
+    "mapContains": ("map_contains_key", 2),
+    "mapFromArrays": ("map_from_arrays", 2),
+    # CH round() is BANKER'S rounding for floats (round(2.5) = 2), Spark's
+    # round is half away from zero. CH rounds DECIMALs half away from
+    # zero, but pasted analytics SQL rounds floats.
+    "round": ("bround", None), "roundBankers": ("bround", None),
+    "ifNull": ("coalesce", None), "nullIf": ("nullif", None),
+    "isNaN": ("isnan", 1), "bitCount": ("bit_count", 1),
+    "bitShiftLeft": ("shiftleft", None), "bitShiftRight": ("shiftright", None),
+    "positiveModulo": ("pmod", 2),
+    # lagInFrame/leadInFrame are CH's OVER-clause forms of lag/lead
+    "lagInFrame": ("lag", None), "leadInFrame": ("lead", None),
+    # any/anyLast pick an arbitrary value, any_value's contract. Spark's
+    # first/last RESPECT nulls by default, the *_respect_nulls contract.
+    "any": ("any_value", 1), "anyLast": ("any_value", 1),
+    "anyHeavy": ("mode", 1),
+    "any_respect_nulls": ("first", 1), "anyLast_respect_nulls": ("last", 1),
+    "first_value_respect_nulls": ("first", 1),
+    "last_value_respect_nulls": ("last", 1),
+    # -OrNull: Spark aggregates already give NULL when no rows aggregate
+    "anyOrNull": ("any_value", 1), "anyLastOrNull": ("any_value", 1),
+    "sumOrNull": ("sum", 1), "minOrNull": ("min", 1),
+    "maxOrNull": ("max", 1), "avgOrNull": ("avg", 1),
+    "argMax": ("max_by", 2), "argMin": ("min_by", 2),
+    "argMaxOrNull": ("max_by", 2), "argMinOrNull": ("min_by", 2),
+    # bit_and/bit_or/bit_xor are the exact two's-complement folds
+    "groupBitAnd": ("bit_and", 1), "groupBitOr": ("bit_or", 1),
+    "groupBitXor": ("bit_xor", 1),
+    "groupArray": ("collect_list", 1), "groupUniqArray": ("collect_set", 1),
+    "varPop": ("var_pop", 1), "varSamp": ("var_samp", 1),
+    "stddevPop": ("stddev_pop", 1), "stddevSamp": ("stddev_samp", 1),
+    "varPopStable": ("var_pop", 1), "varSampStable": ("var_samp", 1),
+    "stddevPopStable": ("stddev_pop", 1),
+    "stddevSampStable": ("stddev_samp", 1), "skewPop": ("skewness", 1),
+    "covarPop": ("covar_pop", 2), "covarSamp": ("covar_samp", 2),
+    # *Stable variants: identical math with a numerically-stable
+    # accumulator — Spark's builtins already use the two-pass/merge
+    # formulations, so they map to the same functions.
+    "corrStable": ("corr", 2), "covarPopStable": ("covar_pop", 2),
+    "covarSampStable": ("covar_samp", 2),
+    # -State/-Merge pairs whose state is the value itself; count states
+    # merge by sum. SimpleAggregateFunction takes only the simply
+    # mergeable aggregates (sum/min/max/any/anyLast).
+    "sumState": ("sum", 1), "sumSimpleState": ("sum", 1),
+    "sumMerge": ("sum", 1), "countMerge": ("sum", 1),
+    "minState": ("min", 1), "minSimpleState": ("min", 1),
+    "minMerge": ("min", 1), "maxState": ("max", 1),
+    "maxSimpleState": ("max", 1), "maxMerge": ("max", 1),
+    "anyState": ("any_value", 1), "anySimpleState": ("any_value", 1),
+    "anyMerge": ("any_value", 1), "anyLastState": ("any_value", 1),
+    "anyLastSimpleState": ("any_value", 1), "anyLastMerge": ("any_value", 1),
+    "groupArrayState": ("collect_list", 1),
+    "groupUniqArrayState": ("collect_set", 1),
+    "medianExactState": ("collect_list", 1),
+    "uniqCombinedState": ("hll_sketch_agg", 1),
+    "uniqThetaState": ("theta_sketch_agg", 1),
+    "bitmapCardinality": ("size", 1),
+    "bitmapMin": ("array_min", 1), "bitmapMax": ("array_max", 1),
+    "bitmapAnd": ("array_intersect", 2), "bitmapOr": ("array_union", 2),
+    "bitmapAndnot": ("array_except", 2),
+    "bitmapContains": ("array_contains", 2),
+    "bitmapHasAny": ("arrays_overlap", 2),
+}
+
+
+def _rename(name: str, fn: str, arity: int | None, a: list[str]) -> str:
+    """The call of ``fn`` that ``name(a…)`` renames to."""
+    if arity == 1:
+        return f"{fn}({_one(a, name)})"
+    if arity == 2:
+        return f"{fn}({', '.join(_two(a, name))})"
+    if arity == 3:
+        return f"{fn}({', '.join(_three(a, name))})"
+    return f"{fn}({', '.join(a)})"
+
+
 def _mapping() -> dict[str, Callable[[list[str]], str]]:
-    m: dict[str, Callable[[list[str]], str]] = {}
+    m: dict[str, Callable[[list[str]], str]] = {
+        name: lambda a, msg=msg: _raise_gate(msg)
+        for name, msg in _UNSUPPORTED.items()
+    }
+    for name, (fn, arity) in _RENAMES.items():
+        m[name] = functools.partial(_rename, name, fn, arity)
 
     # -- scalars ------------------------------------------------------------
-    m["toDate"] = lambda a: f"to_date({_one(a, 'toDate')})"
     m["toStartOfHour"] = lambda a: f"date_trunc('HOUR', {_one(a, 'toStartOfHour')})"
     # Plain integer casts reproduce ClickHouse's MODULAR semantics
     # (toUInt32(-5) = 4294967291, toInt8(200) = -56 — two's-complement
@@ -416,28 +1092,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     # subquery evaluates once
     m["randConstant"] = lambda a: "(SELECT CAST(rand() * 4294967296 AS BIGINT))"
     m["generateUUIDv4"] = lambda a: "uuid()"
-    # r9 audit: the UUID text↔FixedString(16) pair used to PASS
-    # THROUGH. ClickHouse's internal UUID byte layout is the
-    # two-LE-halves form (see sources/rowbinary.py), and the variant-2
-    # (MS-GUID) swap adds a second convention — neither is pinned
-    # offline for these functions' exact output, so they GATE with the
-    # unambiguous composition instead of guessing a byte order.
-    for _uu in ("UUIDStringToNum", "UUIDNumToString",
-                "UUIDToNum", "toUUIDFromNum"):  # r10: same byte-order
-        # ambiguity for the typed-UUID spellings
-        m[_uu] = (lambda nm: lambda a: (_ for _ in ()).throw(ValueError(
-            f"{nm}: ClickHouse's FixedString(16) byte order for this "
-            "function (text order vs the engine's two-LE-halves UUID "
-            "layout vs the variant-2 GUID swap) is not pinned offline "
-            "— for the text-order bytes use "
-            "unhex(replace(u, '-', '')) / re-insert dashes over hex(b) "
-            "explicitly"
-        )))(_uu)
-    # r9 audit batch 3 (geo/encoding/string sweep):
-    # upperUTF8/lowerUTF8's contract is the full-Unicode fold — that
-    # IS Spark's upper/lower
-    m["upperUTF8"] = lambda a: f"upper({_one(a, 'upperUTF8')})"
-    m["lowerUTF8"] = lambda a: f"lower({_one(a, 'lowerUTF8')})"
     # toStringCutToZero: the prefix before the first NUL byte
     m["toStringCutToZero"] = lambda a: (
         lambda x: (
@@ -469,58 +1123,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         )
         + ")), 'UTF-8')"
     )
-    for _g, _why in (
-        ("h3ToGeo", "the H3 index math needs Uber's H3 tables"),
-        ("geoToH3", "the H3 index math needs Uber's H3 tables"),
-        ("h3kRing", "the H3 index math needs Uber's H3 tables"),
-        ("base64URLEncode",
-         "CH's URL-safe alphabet/padding convention is not pinned "
-         "offline — compose translate(base64(x), '+/', '-_') with the "
-         "padding rule you need"),
-        ("base64URLDecode",
-         "CH's URL-safe alphabet/padding convention is not pinned "
-         "offline — compose unbase64(translate(x, '-_', '+/'))"),
-        ("convertCharset",
-         "arbitrary iconv charsets are not translated — encode(x, "
-         "'UTF-8')/decode(b, cs) cover the UTF family explicitly"),
-        ("bin",
-         "CH bin() renders per-byte 8-bit groups of the value's byte "
-         "form (not Spark's unpadded numeric bin) — use the exact "
-         "hex() mapping instead"),
-        ("unbin", "see bin — use the exact unhex() path instead"),
-    ):
-        m[_g] = (lambda name, why: lambda a: (_ for _ in ()).throw(
-            ValueError(f"{name}: {why}")
-        ))(_g, _why)
-    # r9 audit gates: English-prose renderers and the tuple-iteration
-    # helpers whose exact forms aren't pinned offline
-    m["formatReadableTimeDelta"] = lambda a: (_ for _ in ()).throw(
-        ValueError(
-            "formatReadableTimeDelta: ClickHouse's English rendering "
-            "(unit pluralization, the years/months day-count "
-            "convention, maximum_unit truncation) is not pinned "
-            "offline — format explicitly with intDiv/modulo + concat"
-        )
-    )
-    m["addTupleOfIntervals"] = lambda a: (_ for _ in ()).throw(
-        ValueError(
-            "addTupleOfIntervals: compose the additions explicitly "
-            "(date_add / timestampadd chain) — tuple-of-interval "
-            "iteration is not translated"
-        )
-    )
-    m["nested"] = lambda a: (_ for _ in ()).throw(ValueError(
-        "nested(): the Nested TYPE constructor is a DDL concern — "
-        "model it as parallel arrays (arrays_zip for row view); see "
-        "ddl.py for Nested column handling"
-    ))
-    # ---- r10 sweep batch (VERDICT r9 item 5): the wide candidate
-    # sweep flagged ~50 silent passthroughs across the vector-math,
-    # tuple-math, datetime-corner, string-corner, bit, JSON-lite and
-    # respect-nulls families. Exact maps below; width-/config-/
-    # server-dependent names gate with pointers. Pinned in
-    # tests/test_dialect_surface_audit.py + test_dialect_semantics.
-
     # vector normalize over ARRAYS (the engine's vector convention,
     # same as the L*Norm/L*Distance family): x / norm, IEEE semantics
     # (zero vector -> inf/NaN lanes, matching CH Float64 division)
@@ -534,35 +1136,15 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         f"sqrt(aggregate({v}, CAST(0 AS DOUBLE), (l2n_acc, l2n_e) -> "
         f"l2n_acc + CAST(l2n_e AS DOUBLE) * CAST(l2n_e AS DOUBLE))))"
     ))(_one(a, "L2Normalize"))
-    # tuple math: not translated — vectors are ARRAYS here
-    for _tm in ("tuplePlus", "tupleMinus", "tupleNegate",
-                "tupleConcat", "tupleMultiply", "tupleDivide",
-                "tupleMultiplyByNumber", "tupleDivideByNumber",
-                "tupleIntDiv", "tupleIntDivOrZero", "tupleModulo",
-                "tupleModuloByNumber"):
-        m[_tm] = (lambda name: lambda a: (_ for _ in ()).throw(
-            ValueError(
-                f"{name}: tuple math is not translated — model "
-                "vectors as ARRAYS (zip_with element-wise; the "
-                "L*Norm/L*Distance/dotProduct family here accepts "
-                "arrays)"
-            )))(_tm)
-    for _er in ("arrayEnumerateUniqRanked", "arrayEnumerateDenseRanked"):
-        m[_er] = (lambda name: lambda a: (_ for _ in ()).throw(
-            ValueError(
-                f"{name}: the Ranked depth parameter walks nested "
-                "arrays server-side; flatten explicitly and use "
-                "arrayEnumerateUniq/arrayEnumerateDense (mapped)"
-            )))(_er)
     # datetime corners
     m["makeDateTime64"] = lambda a: (
         f"make_timestamp({', '.join(a[:6])})" if len(a) == 6
-        else (_ for _ in ()).throw(ValueError(
+        else _raise_gate(
             "makeDateTime64 with fraction/precision/timezone "
             "arguments is not translated — Spark timestamps are "
             "fixed microsecond precision; compose make_timestamp(y, "
             "mo, d, h, mi, s) + an interval for the fraction"
-        ))
+        )
     )
     m["YYYYMMDDToDate"] = lambda a: (lambda x: (
         f"coalesce(try_to_date(CAST(CAST(({x}) AS BIGINT) AS STRING), "
@@ -591,15 +1173,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         f"CAST({_one(a, 'toStartOfNanosecond')} AS TIMESTAMP)"
     )
     # string corners
-    m["concatAssumeInjective"] = lambda a: (
-        f"concat({', '.join(a)})"  # the injectivity is a GROUP BY
-    )                              # optimization hint, not semantics
-    m["leftPadUTF8"] = lambda a: f"lpad({', '.join(a)})"
-    m["rightPadUTF8"] = lambda a: f"rpad({', '.join(a)})"
-    # Spark's overlay IS the SQL-standard char-based form = CH's UTF8
-    # variant (plain overlay is name-shared and whitelisted)
-    m["overlayUTF8"] = lambda a: f"overlay({', '.join(a)})"
-
     def _string_compare(a):
         # 2-arg strcmp; Spark string ordering is byte-wise on UTF-8
         # (UTF8String), exactly CH's memcmp contract
@@ -630,25 +1203,14 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         "(" + " AND ".join(
             f"((shiftright({a[0]}, {p}) & 1) = 1)" for p in a[1:]
         ) + ")" if len(a) >= 2
-        else (_ for _ in ()).throw(
-            ValueError("bitTestAll(x, pos, ...)"))
+        else _raise_gate("bitTestAll(x, pos, ...)")
     )
     m["bitTestAny"] = lambda a: (
         "(" + " OR ".join(
             f"((shiftright({a[0]}, {p}) & 1) = 1)" for p in a[1:]
         ) + ")" if len(a) >= 2
-        else (_ for _ in ()).throw(
-            ValueError("bitTestAny(x, pos, ...)"))
+        else _raise_gate("bitTestAny(x, pos, ...)")
     )
-    for _br in ("bitRotateLeft", "bitRotateRight"):
-        m[_br] = (lambda name: lambda a: (_ for _ in ()).throw(
-            ValueError(
-                f"{name}: the rotation width is the argument's CH "
-                "TYPE width (UInt8 rotates in 8 bits), which cannot "
-                "be inferred from a Spark literal/column — compose "
-                "(shiftleft(x, r) | shiftright(x, W - r)) & mask at "
-                "the width you mean"
-            )))(_br)
     m["roundDown"] = lambda a: (lambda x, arr: (
         f"coalesce(array_max(filter({arr}, rd_e -> rd_e <= ({x}))), "
         f"array_min({arr}))"
@@ -666,82 +1228,7 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         return f"(CASE ({a[0]}) {whens} ELSE {a[-1]} END)"
 
     m["caseWithExpression"] = _case_with_expression
-    # decimal explicit-scale arithmetic
-    for _dm in ("multiplyDecimal", "divideDecimal"):
-        m[_dm] = (lambda name: lambda a: (_ for _ in ()).throw(
-            ValueError(
-                f"{name}: CH's explicit-result-scale decimal op is "
-                "not translated — use native decimal arithmetic and "
-                "CAST(... AS DECIMAL(p, s)) to pin the scale you mean"
-            )))(_dm)
-    # respect-nulls aggregate variants: Spark first/last RESPECT
-    # nulls by default (isIgnoreNull=false) — the exact CH contract
-    m["any_respect_nulls"] = lambda a: (
-        f"first({_one(a, 'any_respect_nulls')})"
-    )
-    m["anyLast_respect_nulls"] = lambda a: (
-        f"last({_one(a, 'anyLast_respect_nulls')})"
-    )
-    m["first_value_respect_nulls"] = lambda a: (
-        f"first({_one(a, 'first_value_respect_nulls')})"
-    )
-    m["last_value_respect_nulls"] = lambda a: (
-        f"last({_one(a, 'last_value_respect_nulls')})"
-    )
     m["nothing"] = lambda a: "any_value(NULL)"  # type Nothing = NULL
-    # server/introspection gates
-    for _sv, _alt in (
-        ("uptime", "no server-uptime analog in a Spark job"),
-        ("serverUUID", "no stable server identity in a Spark job"),
-        ("zookeeperSessionUptime", "no ZooKeeper in this engine"),
-        ("defaultValueOfArgumentType",
-         "the type is not inferrable from query text — write the "
-         "default you mean (0 / '' / NULL)"),
-        ("isConstant", "constant-folding introspection has no Spark "
-         "analog"),
-        ("aggThrow", "a ClickHouse test harness function"),
-        ("visibleWidth", "CH's text-format width (NULL renders 4 "
-         "wide, arrays bracket-counted) is a client-display concern "
-         "— char_length(CAST(x AS STRING)) for plain strings"),
-        ("sparseGrams", "the CH-specific minimal-ngram set is not "
-         "pinned offline — ngrams()/tokens() cover the shingle use"),
-        ("JSONMergePatch", "RFC 7386 merge-patch is not translated — "
-         "merge parsed maps (map_concat over from_json) or "
-         "preprocess upstream"),
-    ):
-        m[_sv] = (lambda name, why: lambda a: (_ for _ in ()).throw(
-            ValueError(f"{name}: {why}")))(_sv, _alt)
-    for _cu in ("firstSignificantSubdomainCustom",
-                "cutToFirstSignificantSubdomainCustom",
-                "firstSignificantSubdomainCustomRFC",
-                "cutToFirstSignificantSubdomainCustomWithWWW"):
-        m[_cu] = (lambda name: lambda a: (_ for _ in ()).throw(
-            ValueError(
-                f"{name}: custom TLD lists live in ClickHouse server "
-                "config, not in the query — use the non-custom form "
-                "(mapped) or express the list with array ops"
-            )))(_cu)
-    # IDNA: CH implements the UTS #46 flavor; Python's stdlib codec is
-    # IDNA2003 — they DIVERGE on deviation characters ('faß.de' →
-    # 'fass.de' in 2003, 'xn--fa-hia.de' in UTS46), so mapping the
-    # stdlib would silently change values. The label codec itself
-    # (punycode, RFC 3492) is unambiguous and mapped.
-    for _idna in ("idnaEncode", "tryIdnaEncode", "idnaDecode"):
-        m[_idna] = (lambda name: lambda a: (_ for _ in ()).throw(
-            ValueError(
-                f"{name}: ClickHouse implements UTS #46 IDNA; the "
-                "offline facilities here implement IDNA2003, which "
-                "diverges on deviation characters — use "
-                "punycodeEncode/punycodeDecode (RFC 3492-exact) for "
-                "the per-label codec"
-            )))(_idna)
-    m["proportionsZTest"] = lambda a: (_ for _ in ()).throw(ValueError(
-        "proportionsZTest: the p-value needs the normal CDF (no erf "
-        "builtin in Spark SQL) — use meanZTest(m0, m1, conf)(x, g) on "
-        "0/1 indicator columns (same z statistic), or the stats_tests "
-        "module's exact goldens"
-    ))
-    # ---- r10 sweep batch 2: ids/curves/datetime-component/math ----
     # UUID family: this engine's UUID convention is the canonical
     # lowercase 36-char text form (Spark has no UUID type)
     _UUID_RE = ("'^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-"
@@ -763,16 +1250,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         f"timestamp_millis(CAST(conv(substr(replace(lower({u}), '-', "
         f"''), 1, 12), 16, 10) AS BIGINT))"
     ))(_one(a, "UUIDv7ToDateTime"))
-    m["generateUUIDv7"] = lambda a: (_ for _ in ()).throw(ValueError(
-        "generateUUIDv7: Spark's uuid() is v4 (random, not "
-        "time-ordered) — generateUUIDv4 maps; for a sortable id "
-        "compose unix_millis(now()) with a random suffix explicitly"
-    ))
-    m["generateULID"] = lambda a: (_ for _ in ()).throw(ValueError(
-        "generateULID: no offline instrument for CH's monotonic ULID "
-        "generator — generateUUIDv4() maps, or compose a sortable id "
-        "from unix_millis(now()) explicitly"
-    ))
     # ULID: chars 1-10 are 48-bit unix ms in Crockford base32, whose
     # alphabet (0-9, ABCDEFGHJKMNPQRSTVWXYZ — I/L/O/U skipped) is
     # ORDER-preserving onto conv()'s base-32 digits 0-9a-v
@@ -807,12 +1284,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         f"(CAST(pmod(unix_micros(CAST({t} AS TIMESTAMP)), 1000000) "
         f"AS BIGINT) * 1000)"
     ))(_one(a, "toNanosecond"))
-    m["toTimeWithFixedDate"] = lambda a: (_ for _ in ()).throw(
-        ValueError(
-            "toTimeWithFixedDate: use toTime (mapped, fixed "
-            "1970-01-02 date) or compose make_timestamp with the "
-            "date you mean"
-        ))
 
     # changeYear/Month/Day/Hour/Minute/Second: recompose via
     # make_timestamp, preserving the sub-second µs; an INVALID
@@ -854,57 +1325,12 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         f"({_morton_spread(a[0])} | "
         f"shiftleft({_morton_spread(a[1])}, 1))"
         if len(a) == 2
-        else (_ for _ in ()).throw(ValueError(
+        else _raise_gate(
             "mortonEncode maps for exactly 2 coordinates (the Z-order "
             "layout case, functions/layout.py) — N-ary and "
             "range-masked forms are not translated"
-        ))
+        )
     )
-    for _sf in ("mortonDecode", "hilbertEncode", "hilbertDecode"):
-        m[_sf] = (lambda name: lambda a: (_ for _ in ()).throw(
-            ValueError(
-                f"{name}: not translated — mortonEncode(a, b) maps "
-                "for 2-D Z-order keys; decode/Hilbert walks have no "
-                "single-expression Spark form"
-            )))(_sf)
-    # consistent-hash / unpinned-hash gates (same class as cityHash:
-    # no decisive offline instrument for CH's exact variant)
-    for _chash, _why in (
-        ("kostikConsistentHash", "CH-specific algorithm"),
-        ("yandexConsistentHash", "CH-specific algorithm"),
-        ("jumpConsistentHash", "the Lamping-Veach loop has no "
-         "single-expression Spark form"),
-        ("wyHash64", "CH pins one wyhash revision of several "
-         "published"),
-        # the CRC family is registered CASE-INSENSITIVELY in CH, so
-        # the lowercase pastes are valid CH too — gate both casings
-        # (lowercase crc32 would otherwise silently bind Spark's
-        # builtin, the xxHash64 trap class)
-        ("CRC32", "CH ships two CRC32 flavors (zlib-init vs IEEE) "
-         "and the choice is not pinned offline"),
-        ("crc32", "CH ships two CRC32 flavors (zlib-init vs IEEE) "
-         "and the choice is not pinned offline"),
-        ("CRC32IEEE", "variant parameters not pinned offline"),
-        ("crc32ieee", "variant parameters not pinned offline"),
-        ("CRC64", "CH's polynomial/reflect parameters not pinned "
-         "offline"),
-        ("crc64", "CH's polynomial/reflect parameters not pinned "
-         "offline"),
-    ):
-        m[_chash] = (lambda name, why: lambda a: (_ for _ in ()).throw(
-            ValueError(
-                f"{name}: {why} — for sharding/sampling keys use "
-                "xxhash64(...) explicitly (same statistical contract, "
-                "different values)"
-            )))(_chash, _why)
-    # math without a Spark builtin
-    for _mg in ("erf", "erfc", "lgamma", "tgamma"):
-        m[_mg] = (lambda name: lambda a: (_ for _ in ()).throw(
-            ValueError(
-                f"{name}: no Spark SQL builtin — the stats_tests "
-                "module computes normal-CDF terms where graded; for "
-                "ad-hoc use run a vectorized pandas UDF"
-            )))(_mg)
     # sub-second intervals: Spark day-time intervals carry µs
     m["toIntervalMillisecond"] = lambda a: (
         f"(INTERVAL '0.001' SECOND * ({a[0]}))"
@@ -912,30 +1338,11 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["toIntervalMicrosecond"] = lambda a: (
         f"(INTERVAL '0.000001' SECOND * ({a[0]}))"
     )
-    m["toIntervalNanosecond"] = lambda a: (_ for _ in ()).throw(
-        ValueError(
-            "toIntervalNanosecond: Spark intervals are microsecond "
-            "precision — use toIntervalMicrosecond at a 1000x scale"
-        ))
-    m["addInterval"] = lambda a: (_ for _ in ()).throw(ValueError(
-        "addInterval composes interval TUPLES (CH-specific) — chain "
-        "the additions explicitly (x + INTERVAL ... + INTERVAL ...)"
-    ))
     m["groupArrayIntersect"] = lambda a: (lambda x: (
         f"aggregate(slice(collect_list({x}), 2, "
         f"size(collect_list({x}))), try_element_at(collect_list({x}), "
         f"1), (gai_acc, gai_e) -> array_intersect(gai_acc, gai_e))"
     ))(_one(a, "groupArrayIntersect"))
-    for _ig in ("studentTTestOneSample", "analysisOfVariance",
-                "flameGraph", "distinctDynamicTypes",
-                "distinctJSONPaths", "distinctJSONPathsAndTypes"):
-        m[_ig] = (lambda name: lambda a: (_ for _ in ()).throw(
-            ValueError(
-                f"{name}: not translated — the two-sample tests "
-                "(studentTTest/welchTTest/meanZTest) map; dynamic-"
-                "type introspection has no Spark analog"
-            )))(_ig)
-    # ---- r10 sweep batch 3: HTML/XML, rand distributions, misc ----
     # encodeXMLComponent: XML 1.0 predefines exactly five entities —
     # unambiguous. '&' FIRST or the later replacements double-escape.
     m["encodeXMLComponent"] = lambda a: (lambda x: (
@@ -943,58 +1350,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         f"'&', '&amp;'), '<', '&lt;'), '>', '&gt;'), "
         f"'\"', '&quot;'), '''', '&apos;')"
     ))(_one(a, "encodeXMLComponent"))
-    m["decodeXMLComponent"] = lambda a: (_ for _ in ()).throw(
-        ValueError(
-            "decodeXMLComponent: numeric character references "
-            "(&#NNN;/&#xHH;) need a scan, not a replace chain — "
-            "decode the five named entities with nested replace(), "
-            "or preprocess in the ingest lane"
-        ))
-    for _hg, _hwhy in (
-        ("extractTextFromHTML", "CH's exact tag/comment/CDATA/"
-         "whitespace algorithm is not pinned offline — the crawl "
-         "lane here extracts text via sources/warc.py's C4 rules"),
-        ("decodeHTMLComponent", "CH's supported entity subset is "
-         "not pinned offline (the WHATWG list via html.unescape "
-         "may decode MORE entities)"),
-        ("printf", "CH follows C printf; Spark's format_string is "
-         "the Java Formatter — width/length modifiers diverge; use "
-         "format_string explicitly"),
-        ("toDecimalString", "the rounding-tie rule is not pinned "
-         "offline — use format_string(concat('%.', n, 'f'), x) and "
-         "accept Java HALF_UP, or round + CAST explicitly"),
-        ("formatQuery", "SQL pretty-printing is a client concern"),
-        ("formatQuerySingleLine", "SQL pretty-printing is a client "
-         "concern"),
-        ("fuzzBits", "a ClickHouse test fuzzer"),
-        ("byteSwap", "byte order swaps at the argument's CH type "
-         "WIDTH — compose shiftrightunsigned/shiftleft masks at the "
-         "width you mean"),
-        ("toFixedString", "FixedString is a BYTE-width type with a "
-         "throw-on-overflow contract — rpad(s, n, chr(0)) covers "
-         "the ASCII case explicitly"),
-        ("reinterpret", "byte reinterpretation is type-width "
-         "dependent — compose hex/unhex/conv explicitly"),
-        ("reinterpretAsUInt64", "byte reinterpretation is type-"
-         "width dependent — compose hex/unhex/conv explicitly"),
-        ("reinterpretAsString", "byte reinterpretation is type-"
-         "width dependent — compose hex/unhex/conv explicitly"),
-        ("structureToProtobufSchema", "schema codegen is a client "
-         "concern"),
-        ("structureToCapnProtoSchema", "schema codegen is a client "
-         "concern"),
-        ("generateRandomStructure", "schema codegen is a client "
-         "concern"),
-        ("minSampleSizeContinous", "needs the inverse normal CDF "
-         "(no Spark builtin) — the stats_tests module covers the "
-         "graded power analyses"),
-        ("minSampleSizeConversion", "needs the inverse normal CDF "
-         "(no Spark builtin)"),
-        ("icebergTruncate", "an Iceberg partition-transform helper "
-         "— substr/intDiv express the truncation explicitly"),
-    ):
-        m[_hg] = (lambda name, why: lambda a: (_ for _ in ()).throw(
-            ValueError(f"{name}: {why}")))(_hg, _hwhy)
     # rand distributions with closed-form transforms of rand()/randn()
     # (the distributional CONTRACT maps; values are RNG-fresh, the
     # same class as the mapped rand()/randCanonical)
@@ -1014,14 +1369,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["randLogNormal"] = lambda a: (lambda mu, s: (
         f"exp(({mu}) + randn() * ({s}))"
     ))(*_two(a, "randLogNormal"))
-    for _rd in ("randChiSquared", "randStudentT", "randFisherF",
-                "randPoisson", "randBinomial", "randNegativeBinomial"):
-        m[_rd] = (lambda name: lambda a: (_ for _ in ()).throw(
-            ValueError(
-                f"{name}: no closed-form transform of rand()/randn() "
-                "— sample in a vectorized pandas UDF (numpy.random) "
-                "if the distribution matters"
-            )))(_rd)
     # arrayShingles(arr, n): consecutive length-n windows; CH throws
     # on a non-positive or oversized shingle length
     m["clamp"] = lambda a: (
@@ -1030,29 +1377,19 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             f"IS NULL THEN NULL ELSE least(greatest(({x}), ({lo})), "
             f"({hi})) END"
         ))(*a) if len(a) == 3
-        else (_ for _ in ()).throw(ValueError("clamp(x, lo, hi)"))
+        else _raise_gate("clamp(x, lo, hi)")
     )
-    m["positiveModulo"] = lambda a: (lambda x, y: (
-        f"pmod({x}, {y})"
-    ))(*_two(a, "positiveModulo"))
     m["positive_modulo"] = m["positiveModulo"]
     m["negate"] = lambda a: f"(-({_one(a, 'negate')}))"
-    # ---- r10 sweep batch 4: combinator-suffix corners ----
-    # -OrNull / -OrDefault on the basic aggregates: Spark aggregates
-    # already yield NULL over an empty/all-null group, so OrNull maps
-    # to the plain form; count is the exception (0, never NULL) and
+    # -OrNull / -OrDefault on the basic aggregates: the OrNull forms
+    # are plain renames (_RENAMES) except count's (0, never NULL), and
     # sumOrDefault restores CH's 0-on-empty
-    m["anyOrNull"] = lambda a: f"any_value({_one(a, 'anyOrNull')})"
     m["countOrNull"] = lambda a: (
         f"nullif(count({_one(a, 'countOrNull')}), 0)"
     )
     m["sumOrDefault"] = lambda a: (
         f"coalesce(sum({_one(a, 'sumOrDefault')}), 0)"
     )
-    m["argMinOrNull"] = lambda a: (
-        lambda x, y: f"min_by({x}, {y})")(*_two(a, "argMinOrNull"))
-    m["argMaxOrNull"] = lambda a: (
-        lambda x, y: f"max_by({x}, {y})")(*_two(a, "argMaxOrNull"))
     # avgWeightedIf: the avgWeighted fold with both lanes gated on
     # the condition (same NaN-on-zero-weight contract as avgWeighted)
     m["avgWeightedIf"] = lambda a: (
@@ -1060,29 +1397,8 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             f"(sum(CASE WHEN {c} THEN ({x}) * ({w}) END) / "
             f"sum(CASE WHEN {c} THEN ({w}) END))"
         ))(*a) if len(a) == 3
-        else (_ for _ in ()).throw(
-            ValueError("avgWeightedIf(x, w, cond)"))
+        else _raise_gate("avgWeightedIf(x, w, cond)")
     )
-    # bitwise aggregates: Spark's bit_and/bit_or/bit_xor are the
-    # exact two's-complement folds
-    m["groupBitAnd"] = lambda a: f"bit_and({_one(a, 'groupBitAnd')})"
-    m["groupBitOr"] = lambda a: f"bit_or({_one(a, 'groupBitOr')})"
-    m["groupBitXor"] = lambda a: f"bit_xor({_one(a, 'groupBitXor')})"
-    m["sequenceMatchEvents"] = lambda a: (_ for _ in ()).throw(
-        ValueError(
-            "sequenceMatchEvents (matched-event timestamps) is not "
-            "translated — sequenceMatch/sequenceCount map via "
-            "functions/seqmatch.py; join the matched flag back to "
-            "the events for their timestamps"
-        ))
-    m["bitmapTransform"] = lambda a: (_ for _ in ()).throw(ValueError(
-        "bitmapTransform: the from/to remap pairs with bitmap "
-        "membership tests inside a lambda, which Spark HOFs cannot "
-        "host a UDF in — compose bitmapAndnot + bitmapOr over "
-        "bitmapBuild of the remapped values explicitly"
-    ))
-    # ---- r10 sweep batch 6: subsequence/token search, range(),
-    # IPv6 CIDR algebra, null classifiers, datetime arithmetic ------
     def _subseq_fold(h: str, n: str, byte: bool) -> str:
         # hasSubsequence core: a left fold advancing a cursor into
         # the needle whenever the current haystack unit matches.
@@ -1147,10 +1463,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             f"size(regexp_extract_all({s_}, concat('(?i)', {p}), 0))"
         )
     )(*_two(a, "countMatchesCaseInsensitive"))
-    # Spark's substring_index counts codepoints = the UTF8 variant
-    m["substringIndexUTF8"] = lambda a: (
-        f"substring_index({', '.join(_three(a, 'substringIndexUTF8'))})"
-    )
     m["firstLine"] = lambda a: (
         f"regexp_extract({_one(a, 'firstLine')}, '^[^\\\\n\\\\r]*', 0)"
     )
@@ -1198,9 +1510,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     )(*_two(a, "isNotDistinctFrom"))
 
     # aggregate/alias corners
-    m["anyLastOrNull"] = lambda a: (
-        f"any_value({_one(a, 'anyLastOrNull')})"
-    )
     # median* sketch aliases = quantile*(0.5); the sketches map to
     # approx_percentile like their quantile forms
     for _md in ("medianTiming", "medianTDigest", "medianBFloat16",
@@ -1208,16 +1517,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         m[_md] = (lambda name: lambda a: (
             f"approx_percentile({_one(a, name)}, 0.5)"
         ))(_md)
-    # their weighted forms gate like the quantile*Weighted sketches
-    for _mw in ("medianTimingWeighted", "medianTDigestWeighted",
-                "medianBFloat16Weighted",
-                "medianInterpolatedWeighted"):
-        m[_mw] = (lambda name: lambda a: (_ for _ in ()).throw(
-            ValueError(
-                f"{name}: no weighted sketch in Spark — "
-                "quantileExactWeighted(0.5)(x, w) maps exactly via "
-                "MetricSpec"
-            )))(_mw)
 
     # IPv6 CIDR algebra rides the ipaddress-module UDF family (exact
     # RFC-4291 byte math; ch_ipv6_* registered on demand)
@@ -1321,61 +1620,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["mapPartialReverseSort"] = _map_partial_sort(
         "mapPartialReverseSort", True)
 
-    for _g6, _g6why in (
-        ("formatRow", "row formatting is an output-format concern — "
-         "the RowBinary/Native/TSV/Values serializers in sources/ "
-         "cover the formats"),
-        ("formatRowNoNewline", "row formatting is an output-format "
-         "concern — see sources/ serializers"),
-        ("sqidEncode", "the Sqids blocklist+shuffle alphabet is not "
-         "implemented offline; hex/base58 encoders are mapped"),
-        ("sqidDecode", "the Sqids alphabet is not implemented "
-         "offline; hex/base58 decoders are mapped"),
-        ("geohashesInBox", "the box set-cover enumeration is not "
-         "translated; geohashEncode maps per-point"),
-        ("arrayPRAUC", "CH's PR-curve step interpolation is not "
-         "pinned offline — arrayAUC/arrayROCAUC map exactly"),
-        ("arrayLevenshteinDistance", "element-level edit distance "
-         "is not translated; editDistance maps for strings"),
-        ("arrayLevenshteinDistanceWeighted", "weighted element-level "
-         "edit distance is not translated"),
-        ("arraySimilarity", "the weighted-Levenshtein similarity "
-         "normalization is not translated"),
-        ("arrayNormalizedGini", "the Gini normalization constant is "
-         "not pinned offline — arrayAUC maps exactly"),
-        ("untuple", "untuple splats into the SELECT list, which an "
-         "expression rewrite cannot host — select struct.* instead"),
-        ("toColumnTypeName", "Const/LowCardinality column wrappers "
-         "are CH engine internals — toTypeName maps to typeof()"),
-        ("lowCardinalityKeys", "dictionary-block introspection has "
-         "no Spark analog (LowCardinality is an encoding detail)"),
-        ("lowCardinalityIndices", "dictionary-block introspection "
-         "has no Spark analog"),
-        ("dictGetHierarchy", "hierarchical dictionary walks are "
-         "iterative self-joins — see functions/dictionary.py"),
-        ("dictGetChildren", "hierarchical dictionary walks are "
-         "iterative self-joins — see functions/dictionary.py"),
-        ("dictGetDescendants", "hierarchical dictionary walks are "
-         "iterative self-joins — see functions/dictionary.py"),
-        ("dictIsIn", "hierarchical dictionary membership is an "
-         "iterative self-join — see functions/dictionary.py"),
-        ("regionToCity", "the embedded geobase is not shipped — "
-         "model regions as a dimension table + dictGet"),
-        ("regionToArea", "the embedded geobase is not shipped"),
-        ("regionToDistrict", "the embedded geobase is not shipped"),
-        ("regionToCountry", "the embedded geobase is not shipped"),
-        ("regionToContinent", "the embedded geobase is not shipped"),
-        ("regionToTopContinent", "the embedded geobase is not "
-         "shipped"),
-        ("regionToPopulation", "the embedded geobase is not shipped"),
-        ("regionIn", "the embedded geobase is not shipped"),
-        ("regionHierarchy", "the embedded geobase is not shipped"),
-    ):
-        m[_g6] = (lambda name, why: lambda a: (_ for _ in ()).throw(
-            ValueError(f"{name}: {why}")))(_g6, _g6why)
-
-    # ---- r10 sweep batch 7: array split corners, OrDefault
-    # conversions, typed JSONExtract, AES-ECB, misc -----------------
     def _array_split(name: str, rev: bool):
         # arraySplit cuts BEFORE matching elements (never before the
         # first); arrayReverseSplit cuts AFTER (never after the
@@ -1423,25 +1667,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["arrayLastOrNull"] = lambda a: (
         f"try_element_at({_hof('filter', 'arrayLastOrNull')(a)}, -1)"
     )
-    # the sortedness hint has no Spark analog; semantics = indexOf
-    m["indexOfAssumeSorted"] = lambda a: (
-        f"array_position({', '.join(_two(a, 'indexOfAssumeSorted'))})"
-    )
-    m["arrayReduceInRanges"] = lambda a: (_ for _ in ()).throw(
-        ValueError(
-            "arrayReduceInRanges is not translated — compose "
-            "arrayReduce over arraySlice per (offset, length) pair"
-        ))
-
-    # 128/256-bit integer widths have no Spark type
-    for _w128 in ("toInt128", "toInt256", "toUInt128", "toUInt256"):
-        for _wsuf in ("", "OrNull", "OrZero", "OrDefault"):
-            m[_w128 + _wsuf] = (lambda name: lambda a: (
-                _ for _ in ()).throw(ValueError(
-                    f"{name}: no 128/256-bit integer type in Spark — "
-                    "DECIMAL(38,0) covers |x| < 1e38; cast explicitly "
-                    "if the range fits"
-                )))(_w128 + _wsuf)
 
     # toXOrDefault(x[, default]) = coalesce(toXOrNull(x), default);
     # the 1-arg form falls back to the OrZero mapping
@@ -1492,14 +1717,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         return m[base](a[:-1])
 
     m["JSONExtract"] = _json_extract_generic
-    for _jp in ("JSONAllPaths", "JSONAllPathsWithTypes",
-                "JSONDynamicPaths", "JSONSharedDataPaths"):
-        m[_jp] = (lambda name: lambda a: (_ for _ in ()).throw(
-            ValueError(
-                f"{name} introspects CH's dynamic JSON column type, "
-                "which has no Spark analog — extract keys with "
-                "JSONExtractKeys"
-            )))(_jp)
 
     # AES: only the deterministic ECB lane is byte-exact — Spark's
     # CBC/GCM prepend a (random) IV to the ciphertext while CH
@@ -1526,13 +1743,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["encrypt"] = _aes("encrypt", "aes_encrypt", False)
     m["decrypt"] = _aes("decrypt", "aes_decrypt", True)
     m["tryDecrypt"] = _aes("tryDecrypt", "try_aes_decrypt", True)
-    for _am in ("aes_encrypt_mysql", "aes_decrypt_mysql"):
-        m[_am] = (lambda name: lambda a: (_ for _ in ()).throw(
-            ValueError(
-                f"{name}: MySQL's key-folding rule for over-long "
-                "keys is not replicated — use encrypt/decrypt with "
-                "an exact-length key"
-            )))(_am)
 
     m["appendTrailingCharIfAbsent"] = lambda a: (
         lambda s_, c: (
@@ -1545,43 +1755,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["isValidUTF8"] = lambda a: (
         lambda s_: f"(CASE WHEN ({s_}) IS NULL THEN NULL ELSE 1 END)"
     )(_one(a, "isValidUTF8"))
-
-    for _g7, _g7why in (
-        ("bech32Encode", "the BIP-173 charset/checksum is not "
-         "implemented offline; hex/base58/base64 encoders are "
-         "mapped"),
-        ("bech32Decode", "the BIP-173 charset/checksum is not "
-         "implemented offline"),
-        ("stringToH3", "the H3 index math needs Uber's H3 tables"),
-        ("h3ToString", "the H3 index math needs Uber's H3 tables"),
-        ("avgMap", "compose sumMap(k, v) and countMap via "
-         "sumMap(k, arrayWithConstant(length(k), 1)), then divide "
-         "elementwise"),
-        ("countMap", "countMap(k) = sumMap(k, "
-         "arrayWithConstant(length(k), 1))"),
-    ):
-        m[_g7] = (lambda name, why: lambda a: (_ for _ in ()).throw(
-            ValueError(f"{name}: {why}")))(_g7, _g7why)
-
-    # ---- r10 sweep batch 8: best-effort parse aliases, map-state
-    # combinators, tumble windows, geometry/ML/txn gates ------------
-    # parseDateTimeBestEffort: strict form throws on bad input in
-    # both engines (ANSI to_timestamp); OrNull = try; OrZero mapped
-    # above. The 32/64 spellings are width aliases.
-    m["parseDateTimeBestEffort"] = lambda a: (
-        f"to_timestamp({_one(a, 'parseDateTimeBestEffort')})"
-    )
-    m["parseDateTimeBestEffortOrNull"] = lambda a: (
-        f"try_to_timestamp({_one(a, 'parseDateTimeBestEffortOrNull')})"
-    )
-    for _pa, _pb in (
-        ("parseDateTime32BestEffort", "parseDateTimeBestEffort"),
-        ("parseDateTime32BestEffortOrNull",
-         "parseDateTimeBestEffortOrNull"),
-        ("parseDateTime32BestEffortOrZero",
-         "parseDateTimeBestEffortOrZero"),
-    ):
-        m[_pa] = (lambda base: lambda a: m[base](a))(_pb)
 
     def _parse_dt64(base: str):
         def impl(a):
@@ -1598,15 +1771,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
                  "parseDateTime64BestEffortOrNull",
                  "parseDateTime64BestEffortOrZero"):
         m[_p64] = _parse_dt64(_p64)
-
-    # sumMap/minMap/maxMap State/Merge: the state here IS the
-    # finalized (keys, values) tuple, so State = the aggregate and
-    # Merge re-aggregates the tuple's arrays
-    for _ms in ("sumMap", "minMap", "maxMap"):
-        m[_ms + "State"] = (lambda base: lambda a: m[base](a))(_ms)
-        m[_ms + "Merge"] = (lambda base, nm: lambda a: (
-            lambda st: m[base]([f"{st}.col1", f"{st}.col2"])
-        )(_one(a, nm)))(_ms, _ms + "Merge")
 
     # tumble: epoch-aligned fixed windows as pure arithmetic (CH
     # aligns to the epoch in session tz; session zone is UTC here).
@@ -1654,94 +1818,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         f"regexp_extract({_one(a, 'basename')}, '[^/\\\\\\\\]*$', 0)"
     )
 
-    for _g8, _g8why in (
-        ("hop", "hop assigns each row to MULTIPLE overlapping "
-         "windows — explode a sequence of window starts explicitly"),
-        ("hopStart", "see hop: explode the window starts"),
-        ("hopEnd", "see hop: explode the window starts"),
-        ("joinGet", "Join-engine tables are dimension lookups here — "
-         "dictGet over a registered dictionary view "
-         "(functions/dictionary.py)"),
-        ("joinGetOrNull", "see joinGet: dictGet over a dictionary "
-         "view"),
-        ("evalMLMethod", "trained-model application lives in "
-         "operators/logreg.py / operators/classifier.py"),
-        ("runningConcurrency", "depends on server-local row order — "
-         "count overlapping intervals with a window over explicit "
-         "ORDER BY"),
-        ("runningDifferenceStartingWithFirstValue", "depends on "
-         "server-local row order; v - lag(v) OVER an explicit ORDER "
-         "BY is the deterministic form"),
-        ("initializeAggregation", "construct the state expression "
-         "directly — the *State mappings emit mergeable forms"),
-        ("finalizeAggregation", "states here are already their "
-         "finalized representations — apply the matching *Merge "
-         "mapping"),
-        ("subtractInterval", "composes interval TUPLES "
-         "(CH-specific) — chain t - INTERVAL ... explicitly"),
-        ("quantileExactState", "two-phase exact quantiles ride "
-         "MetricSpec(kind='quantile') via metrics.build_states"),
-        ("quantileExactMerge", "two-phase exact quantiles ride "
-         "MetricSpec(kind='quantile') via metrics.build_states"),
-        ("file", "file contents are a source concern — read through "
-         "sources/ and join, or spark.read"),
-        ("defaultValueOfTypeName", "type-default introspection has "
-         "no Spark analog — write the literal default"),
-        ("hasColumnInTable", "catalog introspection is driver-side "
-         "(spark.catalog.listColumns)"),
-        ("transactionID", "no transaction concept in this engine"),
-        ("transactionLatestSnapshot", "no transaction concept in "
-         "this engine"),
-        ("revision", "server-build introspection has no Spark "
-         "analog; version() maps"),
-        ("buildId", "server-build introspection has no Spark "
-         "analog; version() maps"),
-        ("uptime", "no server-uptime analog in a Spark job"),
-        ("zookeeperSessionUptime", "no ZooKeeper in this engine"),
-        ("getOSKernelVersion", "host introspection has no Spark "
-         "analog"),
-        ("currentProfiles", "no settings-profile concept — Spark "
-         "confs are driver-side"),
-        ("enabledProfiles", "no settings-profile concept"),
-        ("defaultProfiles", "no settings-profile concept"),
-        ("currentRoles", "no SQL-addressable role concept here"),
-        ("enabledRoles", "no SQL-addressable role concept here"),
-        ("defaultRoles", "no SQL-addressable role concept here"),
-        ("wkt", "computational geometry is not implemented offline — "
-         "the point distance functions map"),
-        ("svg", "computational geometry is not implemented offline"),
-        ("readWKTPoint", "computational geometry is not implemented "
-         "offline"),
-        ("readWKTPolygon", "computational geometry is not "
-         "implemented offline"),
-        ("readWKTMultiPolygon", "computational geometry is not "
-         "implemented offline"),
-        ("readWKTLineString", "computational geometry is not "
-         "implemented offline"),
-        ("readWKTRing", "computational geometry is not implemented "
-         "offline"),
-        ("polygonAreaCartesian", "computational geometry is not "
-         "implemented offline"),
-        ("polygonPerimeterCartesian", "computational geometry is "
-         "not implemented offline"),
-        ("polygonsUnionCartesian", "computational geometry is not "
-         "implemented offline"),
-        ("polygonsIntersectionCartesian", "computational geometry "
-         "is not implemented offline"),
-        ("polygonAreaSpherical", "computational geometry is not "
-         "implemented offline"),
-        ("polygonPerimeterSpherical", "computational geometry is "
-         "not implemented offline"),
-        ("polygonsDistanceSpherical", "computational geometry is "
-         "not implemented offline"),
-        ("polygonConvexHullCartesian", "computational geometry is "
-         "not implemented offline"),
-    ):
-        m[_g8] = (lambda name, why: lambda a: (_ for _ in ()).throw(
-            ValueError(f"{name}: {why}")))(_g8, _g8why)
-
-    # ---- r10 sweep batch 10: arithmetic leftovers, IPv6 strict
-    # conversions, readable-size parsing, norm variants ------------
     m["moduloOrZero"] = lambda a: (
         lambda x, y: f"coalesce(({x} % nullif({y}, 0)), 0)"
     )(*_two(a, "moduloOrZero"))
@@ -1796,8 +1872,7 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["toUUIDOrDefault"] = lambda a: (
         f"coalesce({m['toUUIDOrNull']([a[0]])}, {a[1]})"
         if len(a) == 2
-        else (_ for _ in ()).throw(
-            ValueError("toUUIDOrDefault(s, default)"))
+        else _raise_gate("toUUIDOrDefault(s, default)")
     )
 
     # strict/Or* IPv6 text→binary conversions (= IPv6StringToNum
@@ -1894,33 +1969,9 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["parseReadableSizeOrZero"] = _readable_size(
         "parseReadableSizeOrZero", "zero")
 
-    for _g10, _g10why in (
-        ("moduloLegacy", "the pre-21.x sign rule is not pinned "
-         "offline — modulo maps with CH's current semantics"),
-        ("emptyArrayToSingle", "the element type's default value is "
-         "not statically known — IF(empty(a), [x], a) explicitly"),
-        ("dictGetAll", "multi-row attribute lookups are plain joins "
-         "against the dictionary view (functions/dictionary.py)"),
-        ("parseTimeDelta", "CH's month/year unit constants are not "
-         "pinned offline — unix_timestamp arithmetic on explicit "
-         "intervals instead"),
-    ):
-        m[_g10] = (lambda name, why: lambda a: (_ for _ in ()).throw(
-            ValueError(f"{name}: {why}")))(_g10, _g10why)
-
-    # ---- r10 sweep batch 5: array set ops + server introspection --
-    m["arrayUnion"] = lambda a: (lambda x, y: (
-        f"array_union({x}, {y})"  # distinct union; CH leaves the
-    ))(*_two(a, "arrayUnion"))    # order unspecified
     m["arraySymmetricDifference"] = lambda a: (lambda x, y: (
         f"array_union(array_except({x}, {y}), array_except({y}, {x}))"
     ))(*_two(a, "arraySymmetricDifference"))
-    m["nonNegativeDerivative"] = lambda a: (_ for _ in ()).throw(
-        ValueError(
-            "nonNegativeDerivative is a WINDOW function in CH — "
-            "write greatest(0, (v - lag(v) OVER w) / (t - lag(t) "
-            "OVER w)) explicitly"
-        ))
     # hostName(): CH returns the name of the server executing the
     # function — the per-executor JVM hostname IS that semantics
     # (reflect() evaluates row-side on the executor; the reference's
@@ -1931,37 +1982,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         "element_at(split(reflect('java.net.InetAddress', "
         "'getLocalHost'), '/'), 1)"
     )
-    for _si, _siwhy in (
-        ("FQDN", "executor hostnames are not SQL-addressable"),
-        ("shardNum", "no shard concept in a Spark job — "
-         "spark_partition_id() for partition-local logic"),
-        ("shardCount", "no shard concept in a Spark job"),
-        ("queryID", "no SQL-addressable query id — read it from the "
-         "SparkContext"),
-        ("initialQueryID", "no SQL-addressable query id"),
-        ("partitionID", "CH partition ids are storage-layout "
-         "internals; the engine's partition key columns are plain "
-         "columns here"),
-        ("getSetting", "session settings are Spark confs — "
-         "spark.conf.get from the driver"),
-        ("getServerSetting", "server settings are Spark confs"),
-        ("globalVariable", "server globals are Spark confs"),
-        ("getMacro", "server macros have no Spark analog"),
-        ("getClientHTTPHeader", "no HTTP client context"),
-        ("connectionId", "no connection concept"),
-        ("displayName", "no server display name"),
-        ("showCertificate", "no server TLS context"),
-        ("tcpPort", "no server port concept"),
-        ("filesystemAvailable", "driver-side filesystem introspection"
-         " — query the storage layer directly"),
-        ("filesystemCapacity", "driver-side filesystem introspection"),
-        ("filesystemUnreserved", "driver-side filesystem "
-         "introspection"),
-        ("estimateCompressionRatio", "storage-codec introspection "
-         "has no Spark analog"),
-    ):
-        m[_si] = (lambda name, why: lambda a: (_ for _ in ()).throw(
-            ValueError(f"{name}: {why}")))(_si, _siwhy)
     # regexpQuoteMeta: CH documents the exact escape set — \0 \\ | ( )
     # ^ $ . [ ] ? * + { : -  (note: '}' is NOT escaped). NUL can't
     # ride a SQL literal here, so it is handled via chr(0) replace.
@@ -1973,16 +1993,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         )
     )(_one(a, "regexpQuoteMeta"))
     m["currentUser"] = lambda a: "current_user()"
-    m["currentDatabase"] = lambda a: "current_database()"
-    # blockNumber/rowNumberInBlock/blockSize: block-order introspection
-    for _blk in ("blockNumber", "rowNumberInBlock", "blockSize"):
-        m[_blk] = (
-            lambda name: lambda a: (_ for _ in ()).throw(ValueError(
-                f"{name} exposes server-local block layout, which has "
-                "no Spark analog; use row_number() OVER an explicit "
-                "ORDER BY for a deterministic row index"
-            ))
-        )(_blk)
     m["isNotNull"] = lambda a: f"({_one(a, 'isNotNull')} IS NOT NULL)"
     m["toIntervalDay"] = lambda a: f"(INTERVAL '1' DAY * ({a[0]}))"
     m["toIntervalSecond"] = lambda a: f"(INTERVAL '1' SECOND * ({a[0]}))"
@@ -1995,10 +2005,10 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["parseDateTimeBestEffortOrZero"] = lambda a: (
         f"coalesce(try_to_timestamp({a[0]}), TIMESTAMP '1970-01-01 00:00:00')"
     )
-    m["arrayJoin"] = lambda a: f"explode({_one(a, 'arrayJoin')})"
-    # ClickHouse tuples → Spark structs: struct() names fields col1…
-    # (1-based, matching tuple element numbering)
-    m["tuple"] = lambda a: f"struct({', '.join(a)})"
+    # the 32 spellings are width aliases
+    for _pb in ("parseDateTimeBestEffort", "parseDateTimeBestEffortOrNull",
+                "parseDateTimeBestEffortOrZero"):
+        m[_pb.replace("DateTime", "DateTime32")] = m[_pb]
     # index form (tupleElement(t, 2)) → .col2; CH also accepts a NAMED
     # element (tupleElement(t, 'name')) for named tuples → plain field
     # access (r4 — the index form used to emit t.col'name')
@@ -2030,17 +2040,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["toMonday"] = lambda a: (
         f"to_date(trunc({_one(a, 'toMonday')}, 'WEEK'))"
     )
-    # date/time parts and arithmetic (direct Spark equivalents)
-    for _ch, _sp in (
-        ("toYear", "year"), ("toMonth", "month"), ("toQuarter", "quarter"),
-        ("toDayOfYear", "dayofyear"),
-        ("toISOWeek", "weekofyear"), ("toSecond", "second"),
-        ("toUnixTimestamp", "unix_timestamp"),
-        ("fromUnixTimestamp", "from_unixtime"),
-        ("toStartOfQuarter", None), ("toStartOfYear", None),
-    ):
-        if _sp is not None:
-            m[_ch] = (lambda sp, ch: lambda a: f"{sp}({_one(a, ch)})")(_sp, _ch)
     m["toWeek"] = lambda a: _to_week_sql(a)
     m["toYearWeek"] = lambda a: _to_year_week_sql(a)
 
@@ -2073,15 +2072,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["toStartOfYear"] = lambda a: (
         f"to_date(date_trunc('YEAR', {_one(a, 'toStartOfYear')}))"
     )
-    m["addDays"] = lambda a: (
-        lambda d, n: f"date_add({d}, {n})"
-    )(*_two(a, "addDays"))
-    m["subtractDays"] = lambda a: (
-        lambda d, n: f"date_sub({d}, {n})"
-    )(*_two(a, "subtractDays"))
-    m["addMonths"] = lambda a: (
-        lambda d, n: f"add_months({d}, {n})"
-    )(*_two(a, "addMonths"))
     m["addHours"] = lambda a: (
         lambda d, n: f"({d} + make_interval(0, 0, 0, 0, {n}))"
     )(*_two(a, "addHours"))
@@ -2151,12 +2141,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["subtractQuarters"] = lambda a: (
         lambda d, n: f"add_months({d}, -3 * ({n}))"
     )(*_two(a, "subtractQuarters"))
-    m["toQuarter"] = lambda a: f"quarter({_one(a, 'toQuarter')})"
-    # dateTrunc('unit', t): same arg order as Spark's date_trunc;
-    # ClickHouse accepts the unit case-insensitively, Spark too
-    m["dateTrunc"] = lambda a: (
-        lambda u, t: f"date_trunc({u}, {t})"
-    )(*_two(a, "dateTrunc"))
     m["toMillisecond"] = lambda a: (
         # millisecond component (CH 22.x+); Spark has no MILLISECONDS
         # extract field — format the fractional part instead
@@ -2171,15 +2155,12 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         f"unix_millis(CAST({_one(a, 'toUnixTimestamp64Milli')} "
         f"AS TIMESTAMP))"
     )
-    m["toUnixTimestamp64Second"] = lambda a: (  # r10 sweep 5
+    m["toUnixTimestamp64Second"] = lambda a: (
         f"unix_seconds(CAST({_one(a, 'toUnixTimestamp64Second')} "
         f"AS TIMESTAMP))"
     )
-    # toUnixTimestamp returns epoch SECONDS (CH: UInt32);
-    # fromUnixTimestamp is its inverse (CH: DateTime)
-    m["toUnixTimestamp"] = lambda a: (
-        f"unix_timestamp({_one(a, 'toUnixTimestamp')})"
-    )
+    # fromUnixTimestamp is the inverse of toUnixTimestamp's epoch
+    # SECONDS (CH: DateTime)
     def _from_unix_ts(a: list[str]) -> str:
         if len(a) == 1:
             return f"timestamp_seconds({a[0]})"
@@ -2222,9 +2203,8 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
                 f"date_trunc('{u}', {e}))"
             )
         )(unit.strip(chr(39)).upper())
-    )(*(a if len(a) == 3 else (_ for _ in ()).throw(
-        ValueError("dateDiff expects (unit, start, end)")
-    )))
+    )(*(a if len(a) == 3
+        else _raise_gate("dateDiff expects (unit, start, end)")))
     m["yesterday"] = lambda a: "date_sub(current_date(), 1)"
     m["currentDatabase"] = lambda a: "current_database()"
 
@@ -2275,7 +2255,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
 
     # float classification: Spark only ships isnan — finite/infinite
     # compose from it (NULL propagates like CH Nullable)
-    m["isNaN"] = lambda a: f"isnan({_one(a, 'isNaN')})"
     m["isInfinite"] = lambda a: (
         lambda x: f"(abs({x}) = double('Infinity'))"
     )(_one(a, "isInfinite"))
@@ -2329,22 +2308,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         return "(" + " OR ".join(terms) + ")"
 
     m["pointInEllipses"] = _point_in_ellipses
-    m["sleep"] = lambda a: (_ for _ in ()).throw(ValueError(
-        "sleep is a server-side testing side effect — drop it"
-    ))
-    m["sleepEachRow"] = m["sleep"]
-    m["bar"] = lambda a: (_ for _ in ()).throw(ValueError(
-        "bar renders partial unicode blocks (eighth glyph choice is "
-        "CH-internal); compute the value and let the presentation "
-        "layer draw it"
-    ))
-    # toTypeName: the reference docs use it to inspect state-column
-    # types (docs/物化视图的实战经验分享.md) — maps to typeof(), which
-    # serves the same introspection with SPARK's type vocabulary
-    # ("bigint", not "UInt64"); a documented honest divergence rather
-    # than a gate, so the reference transcripts keep translating.
-    m["toTypeName"] = lambda a: f"typeof({_one(a, 'toTypeName')})"
-    m["toLastDayOfMonth"] = lambda a: f"last_day({_one(a, 'toLastDayOfMonth')})"
 
     def _date_addsub(sign: str, name: str):
         # CH dateAdd/dateSub(unit, n, d) — unit as keyword or 'string'.
@@ -2368,9 +2331,7 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         lambda unit, s, e: (
             f"timestampdiff({unit.strip(chr(39)).upper()}, {s}, {e})"
         )
-    )(*(a if len(a) == 3 else (_ for _ in ()).throw(
-        ValueError("age expects (unit, start, end)")
-    )))
+    )(*(a if len(a) == 3 else _raise_gate("age expects (unit, start, end)")))
     m["monthName"] = lambda a: f"date_format({_one(a, 'monthName')}, 'MMMM')"
 
     def _date_name(a):
@@ -2412,13 +2373,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         )
 
     m["greatCircleDistance"] = _great_circle
-    m["geoDistance"] = lambda a: (_ for _ in ()).throw(
-        ValueError(
-            "geoDistance applies WGS84 ellipsoid corrections with no "
-            "closed Spark form; use greatCircleDistance (spherical "
-            "haversine, <0.5% difference) if that accuracy suffices"
-        )
-    )
     # pointInPolygon((x, y), ring[, holes…]) — even-odd ray casting as
     # pure Catalyst: each ring pairs every vertex with its predecessor
     # (zip_with against the rotated array), tests the half-open
@@ -2490,8 +2444,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         f"CAST(({_one(a, 'geohashDecode')}) AS STRING)",
     )
     # null handling / strings
-    m["ifNull"] = lambda a: f"coalesce({', '.join(a)})"
-    m["nullIf"] = lambda a: f"nullif({', '.join(a)})"
     m["assumeNotNull"] = lambda a: _one(a, "assumeNotNull")  # advisory in CH
     m["toNullable"] = lambda a: _one(a, "toNullable")
     m["splitByString"] = lambda a: (
@@ -2508,12 +2460,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             f"ELSE split({s}, concat('\\\\Q', {sep}, '\\\\E')) END)"
         )
     )(*_two(a, "splitByString"))
-    m["startsWith"] = lambda a: (
-        lambda s, p: f"startswith({s}, {p})"
-    )(*_two(a, "startsWith"))
-    m["endsWith"] = lambda a: (
-        lambda s, p: f"endswith({s}, {p})"
-    )(*_two(a, "endsWith"))
     # CH position(haystack, needle) is a 1-based BYTE offset
     # (positionUTF8 is the codepoint form). The first byte-level
     # occurrence of a valid-UTF-8 needle is the first char-level
@@ -2599,29 +2545,15 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         )
 
     m["timeSlots"] = _time_slots
-    m["formatDateTimeInJodaSyntax"] = lambda a: (
-        # Joda patterns ARE Spark's date_format patterns
-        lambda t, f: f"date_format({t}, {f})"
-    )(*_two(a, "formatDateTimeInJodaSyntax"))
 
     # bitwise function forms → operators
     m["bitAnd"] = lambda a: (lambda x, y: f"({x} & {y})")(*_two(a, "bitAnd"))
     m["bitOr"] = lambda a: (lambda x, y: f"({x} | {y})")(*_two(a, "bitOr"))
     m["bitXor"] = lambda a: (lambda x, y: f"({x} ^ {y})")(*_two(a, "bitXor"))
     m["bitNot"] = lambda a: f"(~{_one(a, 'bitNot')})"
-    m["bitShiftLeft"] = lambda a: f"shiftleft({', '.join(a)})"
-    m["bitShiftRight"] = lambda a: f"shiftright({', '.join(a)})"
     m["bitTest"] = lambda a: (
         lambda x, i: f"((shiftright({x}, {i}) & 1) = 1)"
     )(*_two(a, "bitTest"))
-    # rounding / encoding: ClickHouse round() is BANKER'S rounding for
-    # float inputs (round(2.5) = 2, round(-2.5) = −2) — Spark's round()
-    # is half-away-from-zero, so both CH names map to bround (r4
-    # semantics audit). Divergence note: CH rounds DECIMAL inputs
-    # half-away-from-zero; pasted analytics SQL rounds floats, so the
-    # float rule wins the mapping.
-    m["round"] = lambda a: f"bround({', '.join(a)})"
-    m["roundBankers"] = lambda a: f"bround({', '.join(a)})"
 
     # roundDuration / roundAge: documented fixed ladders (session-length
     # and age buckets); roundToExp2: 0 below 1, else the largest power
@@ -2654,7 +2586,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             f"length(conv(CAST({x} AS BIGINT), 10, 2)) - 1) END)"
         )
     )(_one(a, "roundToExp2"))
-    m["base64Encode"] = lambda a: f"base64({_one(a, 'base64Encode')})"
     m["base64Decode"] = lambda a: (
         f"CAST(unbase64({_one(a, 'base64Decode')}) AS STRING)"
     )
@@ -2667,7 +2598,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             f"THEN CAST(unbase64({s}) AS STRING) ELSE '' END"
         )
     )(_one(a, "tryBase64Decode"))
-    m["bitCount"] = lambda a: f"bit_count({_one(a, 'bitCount')})"
     # r9 audit: bitHammingDistance used to PASS THROUGH — it is
     # exactly popcount(xor) on the integer forms
     m["bitHammingDistance"] = lambda a: (
@@ -2911,8 +2841,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["countMatches"] = lambda a: (
         lambda s_, p: f"size(regexp_extract_all({s_}, {p}, 0))"
     )(*_two(a, "countMatches"))
-    m["replaceRegexpAll"] = lambda a: f"regexp_replace({', '.join(a)})"
-    m["replaceAll"] = lambda a: f"replace({', '.join(a)})"
     def _replace_one(a):
         # literal first-occurrence replace (r5): instr locates the
         # span, concat splices. Empty needle leaves the string
@@ -2948,9 +2876,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             f"/ length({n}) AS BIGINT)"
         )
     )(*_two(a, "countSubstrings"))
-    m["trimLeft"] = lambda a: f"ltrim({_one(a, 'trimLeft')})"
-    m["trimRight"] = lambda a: f"rtrim({_one(a, 'trimRight')})"
-    m["trimBoth"] = lambda a: f"trim({_one(a, 'trimBoth')})"
 
     # CH concatWithSeparator (alias concat_ws) returns NULL when ANY
     # argument is NULL; Spark's concat_ws skips NULL pieces — guard
@@ -3054,9 +2979,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
 
     m["initcap"] = _initcap
     m["initcapUTF8"] = _initcap  # same rule; corpus here is UTF-8-safe
-    m["substringIndex"] = lambda a: (
-        f"substring_index({', '.join(a)})"
-    )
     # CH 21.3 (the reference's version): locate is an ALIAS of
     # position — haystack first. Spark's locate is needle-first, so a
     # passthrough silently swaps the roles. (CH 24+ flipped to the
@@ -3074,21 +2996,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         )
 
     m["locate"] = _locate
-    # reverseUTF8 = character reversal, which is exactly Spark's
-    # reverse. (Plain CH reverse is BYTE reversal — identical for
-    # ASCII; its non-ASCII output is invalid UTF-8 and unrepresentable
-    # in a Spark string, so the char-reverse passthrough is the
-    # documented stand-in.)
-    m["reverseUTF8"] = lambda a: f"reverse({_one(a, 'reverseUTF8')})"
-    m["lengthUTF8"] = lambda a: f"length({_one(a, 'lengthUTF8')})"
-    # CH length(String) counts BYTES (lengthUTF8 is the codepoint
-    # form = Spark's length); octet_length is the byte-exact map.
-    # CH's length(Array) is size() — Spark raises loudly there
-    # (octet_length rejects arrays), never silently miscounts.
-    m["length"] = lambda a: f"octet_length({_one(a, 'length')})"
-    m["substringUTF8"] = lambda a: f"substring({', '.join(a)})"
-    m["leftPad"] = lambda a: f"lpad({', '.join(a)})"
-    m["rightPad"] = lambda a: f"rpad({', '.join(a)})"
     # CH intDiv truncates toward zero — Spark's `div` operator, NOT
     # floor() (they differ on negative operands)
     m["intDiv"] = lambda a: (
@@ -3174,9 +3081,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         )
     )(_one(a, "toTime"))
     # toRelative*Num: whole units elapsed since the unix epoch
-    m["toRelativeSecondNum"] = lambda a: (
-        f"unix_timestamp({_one(a, 'toRelativeSecondNum')})"
-    )
     m["toRelativeMinuteNum"] = lambda a: (
         f"CAST(floor(unix_timestamp({_one(a, 'toRelativeMinuteNum')}) / 60) AS BIGINT)"
     )
@@ -3201,18 +3105,9 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["toRelativeQuarterNum"] = lambda a: (
         lambda x: f"(year({x}) * 4 + quarter({x}) - 1)"
     )(_one(a, "toRelativeQuarterNum"))
-    m["toRelativeYearNum"] = lambda a: (
-        f"year({_one(a, 'toRelativeYearNum')})"
-    )
 
     # sub-second unix timestamp family (DateTime64 ticks). Nano forms
     # truncate/scale at Spark's microsecond timestamp precision.
-    m["fromUnixTimestamp64Milli"] = lambda a: (
-        f"timestamp_millis({_one(a, 'fromUnixTimestamp64Milli')})"
-    )
-    m["fromUnixTimestamp64Micro"] = lambda a: (
-        f"timestamp_micros({_one(a, 'fromUnixTimestamp64Micro')})"
-    )
     m["fromUnixTimestamp64Nano"] = lambda a: (
         f"timestamp_micros(CAST(floor({_one(a, 'fromUnixTimestamp64Nano')}"
         f" / 1000) AS BIGINT))"
@@ -3313,9 +3208,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         return f"date_add(to_date(trunc({x}, 'WEEK')), 6)"
 
     m["toLastDayOfWeek"] = _last_day_of_week
-    m["toHour"] = lambda a: f"hour({_one(a, 'toHour')})"
-    m["toMinute"] = lambda a: f"minute({_one(a, 'toMinute')})"
-    m["toDayOfMonth"] = lambda a: f"day({_one(a, 'toDayOfMonth')})"
     # ClickHouse toDayOfWeek: Monday=1..Sunday=7; Spark dayofweek:
     # Sunday=1. Mode argument (r4): 0 = Mon 1–7 (default), 1 = Mon 0–6,
     # 2 = Sun 1–7, 3 = Sun 0–6 — CH's documented table.
@@ -3369,10 +3261,8 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["arrayStringConcat"] = lambda a: (
         f"array_join({a[0]}, {a[1] if len(a) > 1 else chr(39) + chr(39)})"
     )
-    m["has"] = lambda a: (lambda arr, x: f"array_contains({arr}, {x})")(*_two(a, "has"))
     m["empty"] = lambda a: f"(size({_one(a, 'empty')}) = 0)"
     m["notEmpty"] = lambda a: f"(size({_one(a, 'notEmpty')}) > 0)"
-    m["arrayDistinct"] = lambda a: f"array_distinct({_one(a, 'arrayDistinct')})"
     # higher-order array functions: ClickHouse writes the lambda FIRST
     # (arrayMap(x -> e, arr)); Spark writes it LAST (transform(arr,
     # x -> e)). The lambda syntax itself is identical, so the rewrite
@@ -3402,31 +3292,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
 
     m["arrayMap"] = _array_map
 
-    # state-size introspection (the docs' byteSize(state) checks):
-    # exact for binary/string states; other types have no Spark
-    # byte-size reflection, so the mapping stays on the honest subset
-    m["byteSize"] = lambda a: f"octet_length({_one(a, 'byteSize')})"
-
-    # window functions: lagInFrame/leadInFrame are ClickHouse's proper
-    # OVER-clause forms — same semantics as lag/lead
-    m["lagInFrame"] = lambda a: f"lag({', '.join(a)})"
-    m["leadInFrame"] = lambda a: f"lead({', '.join(a)})"
-    # block-order-dependent functions have no deterministic distributed
-    # meaning; the window formulation is the correct translation
-    for _bad, _alt in (
-        ("neighbor", "lag/lead OVER (ORDER BY …)"),
-        ("runningDifference", "x - lag(x) OVER (ORDER BY …)"),
-        ("runningAccumulate", "sum(x) OVER (ORDER BY … ROWS UNBOUNDED PRECEDING)"),
-        ("rowNumberInAllBlocks", "row_number() OVER (ORDER BY …)"),
-    ):
-        m[_bad] = (
-            lambda alt, name: lambda a: (_ for _ in ()).throw(
-                ValueError(
-                    f"{name} depends on server-local block order (meaningless "
-                    f"on a distributed engine); use {alt}"
-                )
-            )
-        )(_alt, _bad)
     m["arrayFilter"] = _hof("filter", "arrayFilter")
     m["arrayExists"] = _hof("exists", "arrayExists")
     m["arrayAll"] = _hof("forall", "arrayAll")
@@ -3537,17 +3402,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             f"'AUTHORITY'), ':(\\\\d+)$', 1) AS INT), 0)"
         )
     )(_one(a, "port"))
-    # decodeURLFormComponent: application/x-www-form-urlencoded — '+'
-    # IS a space; that is exactly java.net.URLDecoder, i.e. Spark's
-    # bare url_decode (the percent-only variant above pre-escapes '+').
-    m["decodeURLFormComponent"] = lambda a: (
-        f"url_decode({_one(a, 'decodeURLFormComponent')})"
-    )
-    # encodeURLFormComponent: form-encodes space as '+' — exactly
-    # java.net.URLEncoder / Spark's bare url_encode.
-    m["encodeURLFormComponent"] = lambda a: (
-        f"url_encode({_one(a, 'encodeURLFormComponent')})"
-    )
     # extractURLParameters: the raw 'name=value' fragments of the
     # param region, in order, empties dropped (CH returns [] when
     # there are no params). ADVICE r8: CH's scanner starts at the
@@ -3571,16 +3425,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         f"transform({_url_param_segments(_one(a, 'extractURLParameterNames'))}, "
         f"x -> element_at(split(x, '\\\\Q=\\\\E'), 1))"
     )
-    # URLHierarchy/URLPathHierarchy return prefix LISTS whose exact
-    # cut points (protocol, host, every path element, query) follow
-    # CH's own tokenizer — not pinned offline; gate with the
-    # composition that covers the common use.
-    for _nm in ("URLHierarchy", "URLPathHierarchy"):
-        m[_nm] = (lambda nm: lambda a: (_ for _ in ()).throw(ValueError(
-            f"{nm}: ClickHouse's prefix-list cut points are not pinned "
-            "offline; compose protocol()/domain()/path() with "
-            "split+transform for the hierarchy you need"
-        )))(_nm)
 
     # JSON extraction → get_json_object; ClickHouse passes the key as a
     # plain string argument, Spark as a '$.key' JSONPath — literal keys
@@ -3625,7 +3469,7 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
 
     m["JSONExtractString"] = _json_extract(None, "''")
 
-    # JSONExtractRaw (r10): EXACT raw slices via the jsonraw scanner —
+    # JSONExtractRaw: EXACT raw slices via the jsonraw scanner —
     # get_json_object would UNQUOTE string scalars and re-serialize,
     # while CH returns the slice verbatim (quotes and escapes kept).
     # A bare integer key is a 1-based element index (ADVICE r9 rule):
@@ -3654,12 +3498,11 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     )(*_two(a, "JSONHas"))
     m["simpleJSONExtractString"] = _json_extract(None, "''")
     m["visitParamExtractString"] = _json_extract(None, "''")
-    # r10 sweep: the rest of the simpleJSON/visitParam family used to
-    # PASS THROUGH. CH's simpleJSON* scan for the first `"key":`
-    # occurrence without a full parse — on well-formed single-level
-    # documents (the family's documented contract) that agrees with
-    # the parsed forms mapped here, same precedent as
-    # simpleJSONExtractString above.
+    # The rest of the simpleJSON/visitParam family. CH's simpleJSON*
+    # scan for the first `"key":` occurrence without a full parse — on
+    # well-formed single-level documents (the family's documented
+    # contract) that agrees with the parsed forms mapped here, same
+    # precedent as simpleJSONExtractString above.
     m["simpleJSONExtractInt"] = _json_extract(
         "BIGINT", "CAST(0 AS BIGINT)")
     m["simpleJSONExtractUInt"] = _json_extract(
@@ -3672,7 +3515,7 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             f" false)"
         )
     )(*_two(a, "simpleJSONExtractBool"))
-    m["simpleJSONExtractRaw"] = _extract_raw  # raw-exact (r10)
+    m["simpleJSONExtractRaw"] = _extract_raw  # raw-exact
     m["simpleJSONHas"] = lambda a: (
         lambda j, k: f"(get_json_object({j}, {_json_path(k)}) IS NOT NULL)"
     )(*_two(a, "simpleJSONHas"))
@@ -3684,9 +3527,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
                      ("visitParamExtractRaw", "simpleJSONExtractRaw"),
                      ("visitParamHas", "simpleJSONHas")):
         m[_vp] = m[_sj]
-    m["JSONArrayLength"] = lambda a: (
-        f"json_array_length({_one(a, 'JSONArrayLength')})"
-    )  # both engines yield NULL on invalid/non-array input
 
     # JSON structure family (r5 late). CH's simdjson functions yield
     # defaults on unparseable input — coalesce matches that.
@@ -3773,17 +3613,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         "ch_json_kv_raw", _make_jsonraw_udfs,
         _json_sub(a, "JSONExtractKeysAndValuesRaw"),
     )
-    # JSONType's Int64/UInt64/Double discrimination follows simdjson's
-    # numeric-width probe — not pinned offline; gate with the shape
-    # alternative
-    m["JSONType"] = lambda a: (_ for _ in ()).throw(ValueError(
-        "JSONType: ClickHouse's numeric-type discrimination "
-        "(Int64/UInt64/Double) follows simdjson's width probe and is "
-        "not pinned offline; branch on the raw text yourself — e.g. "
-        "CASE left(get_json_object(...), 1) WHEN '[' ... WHEN '{' ... "
-        "END — or use isValidJSON/JSONHas for existence checks"
-    ))
-    m["toJSONString"] = lambda a: f"to_json({_one(a, 'toJSONString')})"
 
     # Map algebra completion. mapSort orders by key (struct compare
     # hits the key field first); the lambda overloads gate.
@@ -3820,11 +3649,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             f"map_filter({mp}, (mk_k, mk_v) -> mk_k LIKE {pat})"
         )
     )(*_two(a, "mapExtractKeyLike"))
-    m["mapConcat"] = lambda a: (_ for _ in ()).throw(ValueError(
-        "mapConcat's duplicate-key rule (first map wins) has no Spark "
-        "analog (map_concat errors on duplicates); mapUpdate maps — "
-        "reorder arguments if last-wins is what you meant"
-    ))
 
     # regex capture groups: group count read from the literal pattern
     def _regex_group_count(pat: str) -> int | None:
@@ -3868,8 +3692,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
                 f"vg_i -> array({elems}))")
 
     m["extractGroups"] = lambda a: _extract_groups(a, None)
-    m["extractAllGroupsHorizontal"] = lambda a: _extract_groups(a, False)
-    m["extractAllGroupsVertical"] = lambda a: _extract_groups(a, True)
     m["regexpExtract"] = lambda a: f"regexp_extract({', '.join(a)})" \
         if len(a) in (2, 3) else _raise_gate(
             "regexpExtract(haystack, pattern[, index])")
@@ -3899,7 +3721,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
                 f"az_t -> struct({fields}))")
 
     m["arrayZip"] = _array_zip
-    m["arrayFlatten"] = lambda a: f"flatten({_one(a, 'arrayFlatten')})"
 
     def _lam_apply(lam: str, value: str) -> str:
         """Evaluate a textual single-param CH lambda on one value (the
@@ -4103,8 +3924,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         f"reverse(array_sort({a[0]}))" if len(a) == 1
         else _sort_by_key(a, True, "arrayReverseSort")
     )
-    m["arrayReverse"] = lambda a: f"reverse({_one(a, 'arrayReverse')})"
-    m["arrayConcat"] = lambda a: f"concat({', '.join(a)})"
     def _array_slice(a):
         # CH arraySlice(arr, offset[, length]) — the 2-arg form takes
         # everything from offset to the end (Spark's slice REQUIRES a
@@ -4114,12 +3933,8 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         return f"slice({', '.join(a)})"
 
     m["arraySlice"] = _array_slice
-    m["indexOf"] = lambda a: (
-        lambda arr, x: f"array_position({arr}, {x})"
-    )(*_two(a, "indexOf"))
     # arraySum/Min/Max/Avg([func,] arr): CH's optional leading lambda
-    # (r10 sweep — the 2-arg form used to be rejected) applies
-    # element-wise first, which is exactly transform()
+    # applies element-wise first, which is exactly transform()
     def _arr_maybe_map(a, name):
         if len(a) == 2:
             return f"transform({a[1]}, {a[0]})"
@@ -4326,9 +4141,7 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         # callers that need an order sort anyway)
         functools.reduce(lambda acc, nxt: f"array_intersect({acc}, {nxt})", a)
         if len(a) >= 2
-        else (_ for _ in ()).throw(
-            ValueError("arrayIntersect takes at least two arrays")
-        )
+        else _raise_gate("arrayIntersect takes at least two arrays")
     )
     m["arrayJaccardIndex"] = lambda a: (
         # |distinct ∩| / |distinct ∪|; both empty → 0/0 → NaN like CH
@@ -4382,12 +4195,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         )
     )(_one(a, "tokens"))
     # -- array mutation / fold surface (r4 late) ------------------------------
-    m["arrayPushBack"] = lambda a: (
-        lambda arr, x: f"array_append({arr}, {x})"
-    )(*_two(a, "arrayPushBack"))
-    m["arrayPushFront"] = lambda a: (
-        lambda arr, x: f"array_prepend({arr}, {x})"
-    )(*_two(a, "arrayPushFront"))
     m["arrayPopBack"] = lambda a: (
         lambda arr: f"slice({arr}, 1, greatest(size({arr}) - 1, 0))"
     )(_one(a, "arrayPopBack"))
@@ -4485,15 +4292,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["arrayPartialReverseSort"] = lambda a: _partial_sort(
         a, "arrayPartialReverseSort", True)
 
-    for _nd in ("arrayShuffle", "arrayRandomSample",
-                "arrayPartialShuffle"):
-        m[_nd] = (lambda name: lambda a: _raise_gate(
-            f"{name} is randomized (nondeterministic across runs and "
-            "engines) and cannot be hash-verified; sample "
-            "deterministically with arraySlice after an md5-keyed "
-            "array_sort if reproducibility is wanted"
-        ))(_nd)
-
     m["arrayCompact"] = lambda a: (
         # collapse CONSECUTIVE duplicates (run-length heads)
         lambda arr: (
@@ -4511,11 +4309,9 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             *_three(a, "arrayFold")
         )
         if len(a) == 3
-        else (_ for _ in ()).throw(
-            ValueError(
-                "arrayFold over multiple arrays: zip the arrays first "
-                "(Spark aggregate folds one array)"
-            )
+        else _raise_gate(
+            "arrayFold over multiple arrays: zip the arrays first "
+            "(Spark aggregate folds one array)"
         )
     )
     m["arrayLast"] = lambda a: (
@@ -4561,8 +4357,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["arrayROCAUC"] = _array_auc  # post-24.x name for the same function
 
     # -- aggregate equivalents ----------------------------------------------
-    m["argMax"] = lambda a: (lambda x, o: f"max_by({x}, {o})")(*_two(a, "argMax"))
-    m["argMin"] = lambda a: (lambda x, o: f"min_by({x}, {o})")(*_two(a, "argMin"))
     # argMax/argMin -If: wrapping the ORDER argument is the row filter
     # (max_by/min_by skip NULL orderings); empty-match returns NULL
     # where CH returns the type default — same documented class as
@@ -4585,7 +4379,7 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         f"count(DISTINCT {_one(a, 'countDistinct')})"
     )
     m["avgDistinct"] = lambda a: f"avg(DISTINCT {_one(a, 'avgDistinct')})"
-    # r10 sweep 9: -Distinct cross products. uniqExact over distinct
+    # -Distinct cross products. uniqExact over distinct
     # values IS uniqExact; the If×Distinct orders both reduce to
     # agg(DISTINCT CASE WHEN cond THEN x END) — the CASE's NULL arm
     # is skipped by DISTINCT aggregation in both engines
@@ -4636,7 +4430,7 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["maxForEach"] = _foreach("greatest(coalesce(p, q), coalesce(q, p))",
                                "maxForEach")
 
-    # r10 sweep 9: countForEach (per-position presence count) and
+    # countForEach (per-position presence count) and
     # avgForEach (= sumForEach / countForEach elementwise)
     def _count_foreach_body(arr: str) -> str:
         s = f"collect_list({arr})"
@@ -4678,24 +4472,12 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         f"{_one(a, 'anyArray')})), 1)"
     )
 
-    # -OrNull combinator: NULL instead of the type default when no rows
-    # aggregated — Spark aggregates already return NULL there, so the
-    # plain form IS the OrNull form (sum is the one whose plain mapping
-    # would otherwise coalesce to 0 in the -If path)
-    for _base in ("sum", "max", "min", "avg"):
-        m[f"{_base}OrNull"] = (
-            lambda b: lambda a: f"{b}({_one(a, b + 'OrNull')})"
-        )(_base)
     m["uniqExactOrNull"] = lambda a: (
         lambda x: (
             f"CASE WHEN count({x}) > 0 "
             f"THEN count(DISTINCT {x}) END"
         )
     )(_one(a, "uniqExactOrNull"))
-    # ClickHouse any/anyLast pick an arbitrary encountered value — Spark's
-    # any_value has the same non-deterministic contract
-    m["any"] = lambda a: f"any_value({_one(a, 'any')})"
-    m["anyLast"] = lambda a: f"any_value({_one(a, 'anyLast')})"
     # -Array combinator (r4): the aggregate runs over every element of
     # every array in the group
     m["sumArray"] = lambda a: (
@@ -4724,29 +4506,14 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["groupArrayArray"] = lambda a: (
         f"flatten(collect_list({_one(a, 'groupArrayArray')}))"
     )
-    m["groupArray"] = lambda a: f"collect_list({_one(a, 'groupArray')})"
-    # r10 sweep: plain groupConcat(x) — empty separator; the
+    # plain groupConcat(x) — empty separator; the
     # parameterized groupConcat(sep)(x) lives in _PARAMETERIZED
     m["groupConcat"] = lambda a: (
         f"concat_ws('', collect_list(CAST({_one(a, 'groupConcat')} "
         f"AS STRING)))"
     )
-    # plain groupArrayInsertAt pads gaps with the column TYPE's default
-    # value, which text-level translation cannot infer — the
-    # parameterized form (in _PARAMETERIZED) is the supported one
-    m["groupArrayInsertAt"] = lambda a: _raise_gate(
-        "groupArrayInsertAt without parameters pads gaps with the "
-        "column type's default value, which translate cannot infer "
-        "from text — use the explicit default form "
-        "groupArrayInsertAt(default[, size])(x, pos)"
-    )
-    m["groupUniqArray"] = lambda a: f"collect_set({_one(a, 'groupUniqArray')})"
-    m["groupArrayState"] = lambda a: f"collect_list({_one(a, 'groupArrayState')})"
     m["groupArrayMerge"] = lambda a: _MERGED_LIST.format(
         _one(a, "groupArrayMerge")
-    )
-    m["groupUniqArrayState"] = lambda a: (
-        f"collect_set({_one(a, 'groupUniqArrayState')})"
     )
     m["groupUniqArrayMerge"] = lambda a: (
         f"array_distinct({_MERGED_LIST.format(_one(a, 'groupUniqArrayMerge'))})"
@@ -4873,13 +4640,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         m[_nm] = _to_decimal(_p, None, _nm)
         m[_nm + "OrZero"] = _to_decimal(_p, "zero", _nm + "OrZero")
         m[_nm + "OrNull"] = _to_decimal(_p, "null", _nm + "OrNull")
-    for _nm in ("toDecimal256", "toDecimal256OrZero",
-                "toDecimal256OrNull"):
-        m[_nm] = (lambda nm: lambda a: (_ for _ in ()).throw(ValueError(
-            f"{nm}: Decimal256's precision 76 exceeds Spark DECIMAL's "
-            "38 — use toDecimal128 if the values fit, or keep the "
-            "value as a scaled BIGINT/STRING"
-        )))(_nm)
     # toBool: the true/false/1/0 core is identical; Spark's cast also
     # accepts t/f/y/n/yes/no (inputs CH would REJECT with an
     # exception) and yields NULL instead of throwing on garbage —
@@ -4887,17 +4647,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["toBool"] = lambda a: f"CAST({_one(a, 'toBool')} AS BOOLEAN)"
 
     # -- Map type functions ---------------------------------------------------
-    m["mapKeys"] = lambda a: f"map_keys({_one(a, 'mapKeys')})"
-    m["mapValues"] = lambda a: f"map_values({_one(a, 'mapValues')})"
-    m["mapContains"] = lambda a: (
-        lambda mm, k: f"map_contains_key({mm}, {k})"
-    )(*_two(a, "mapContains"))
-    # map constructors / transforms (r4 late). map() is name-identical
-    # but pinned here so the interleaved-args form can't regress.
-    m["map"] = lambda a: f"map({', '.join(a)})"
-    m["mapFromArrays"] = lambda a: (
-        lambda ks, vs: f"map_from_arrays({ks}, {vs})"
-    )(*_two(a, "mapFromArrays"))
 
     # mapAdd/mapSubtract over Map-typed args: map_zip_with unions the
     # key sets, missing values count as 0 (CH's summing semantics).
@@ -4954,13 +4703,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             f"NOT array_contains(map_keys({m2}), k)), {m2})"
         )
     )(*_two(a, "mapUpdate"))
-    m["mapApply"] = lambda a: (_ for _ in ()).throw(
-        ValueError(
-            "mapApply's lambda returns a (k, v) TUPLE — Spark splits "
-            "that into transform_keys(m, (k, v) -> …) + "
-            "transform_values(m, (k, v) -> …); rewrite with those"
-        )
-    )
 
     # -- sums (plain-value states: the reference's own 8B finding) ----------
     m["sumIf"] = lambda a: (
@@ -4969,24 +4711,9 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     # CH allows bare count(); Spark requires an argument
     m["count"] = lambda a: f"count({', '.join(a) or '*'})"
     m["countIf"] = lambda a: f"count(CASE WHEN {_one(a, 'countIf')} THEN 1 END)"
-    m["sumState"] = lambda a: f"sum({_one(a, 'sumState')})"
-    m["sumSimpleState"] = lambda a: f"sum({_one(a, 'sumSimpleState')})"
-    m["sumMerge"] = lambda a: f"sum({_one(a, 'sumMerge')})"
-    # min/max states are their own values; count states merge by sum
-    for _fn, _agg in (
-        ("minState", "min"), ("minSimpleState", "min"), ("minMerge", "min"),
-        ("maxState", "max"), ("maxSimpleState", "max"), ("maxMerge", "max"),
-        ("anyState", "any_value"), ("anyMerge", "any_value"),
-        # SimpleAggregateFunction supports only simple-mergeable
-        # aggregates (sum/min/max/any/anyLast — no avg/count)
-        ("anySimpleState", "any_value"),
-        ("anyLastSimpleState", "any_value"),
-    ):
-        m[_fn] = (lambda agg, fn: lambda a: f"{agg}({_one(a, fn)})")(_agg, _fn)
     m["countState"] = lambda a: (
         f"count({_tuple_or_one(a)})" if a else "count(*)"
     )
-    m["countMerge"] = lambda a: f"sum({_one(a, 'countMerge')})"
     # avg state = mergeable (sum, count) pair (metrics.py kind='avg')
     m["avgState"] = lambda a: (
         lambda x: f"named_struct('s', sum({x}), 'c', count({x}))"
@@ -5001,15 +4728,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["uniqExactMerge"] = lambda a: (
         f"CAST(size(array_distinct(flatten(collect_list("
         f"{_one(a, 'uniqExactMerge')})))) AS BIGINT)"
-    )
-    # r10 sweep 9: more State/Merge pairs.
-    # anyLast states are their own values (non-deterministic pick,
-    # same contract as any)
-    m["anyLastState"] = lambda a: (
-        f"any_value({_one(a, 'anyLastState')})"
-    )
-    m["anyLastMerge"] = lambda a: (
-        f"any_value({_one(a, 'anyLastMerge')})"
     )
     # argMax/argMin states carry (arg, ordering value) so merges can
     # re-compare; Merge picks the arg of the extreme value
@@ -5031,7 +4749,7 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     )(_one(a, "argMinMerge"))
     # If×State compositions (both combinator orders): the CASE's NULL
     # arm is the row filter, the state shape is the base State's
-    for _ifs in ("sum", "min", "max", "avg", "count", "anyLast"):
+    for _ifs in ("sum", "min", "max", "avg", "anyLast"):
         for _ifsn in (f"{_ifs}IfState", f"{_ifs}StateIf"):
             m[_ifsn] = (lambda base, nm: lambda a: (
                 lambda x, c: m[base + "State"](
@@ -5129,20 +4847,7 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         lambda x, c: f"any_value(CASE WHEN {c} THEN {x} END, true)"
     )(*_two(a, "anyLastIf"))
 
-    # -- uniq family --------------------------------------------------------
-    # statistical aggregates (camelCase → snake_case builtins)
-    for _ch, _sp in (
-        ("varPop", "var_pop"), ("varSamp", "var_samp"),
-        ("stddevPop", "stddev_pop"), ("stddevSamp", "stddev_samp"),
-    ):
-        m[_ch] = (lambda sp, ch: lambda a: f"{sp}({_one(a, ch)})")(_sp, _ch)
-    for _ch, _sp in (("covarPop", "covar_pop"), ("covarSamp", "covar_samp")):
-        m[_ch] = (
-            lambda sp, ch: lambda a: (
-                lambda x, y: f"{sp}({x}, {y})"
-            )(*_two(a, ch))
-        )(_sp, _ch)
-    m["skewPop"] = lambda a: f"skewness({_one(a, 'skewPop')})"
+    # -- statistical aggregates ---------------------------------------------
     # CH kurtPop is the RAW Pearson kurtosis mu4/sigma^4 (normal = 3);
     # Spark's kurtosis subtracts 3 (excess, normal = 0) — the bare
     # passthrough was wrong by exactly 3 (caught r5-late)
@@ -5181,39 +4886,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["corrMatrix"] = _stat_matrix("corr", "corrMatrix")
     m["covarPopMatrix"] = _stat_matrix("covar_pop", "covarPopMatrix")
     m["covarSampMatrix"] = _stat_matrix("covar_samp", "covarSampMatrix")
-
-    # named gates: shapes a textual rewrite cannot make faithful
-    m["sumWithOverflow"] = lambda a: (_ for _ in ()).throw(ValueError(
-        "sumWithOverflow wraps at the ARGUMENT's integer width, which "
-        "a textual rewrite cannot see; use sum(...) or cast to the "
-        "width you want wrapped"
-    ))
-    m["groupArrayLast"] = lambda a: (_ for _ in ()).throw(ValueError(
-        "groupArrayLast depends on server-local insertion order; use "
-        "max_by/collect over an explicit ORDER BY key instead"
-    ))
-    m["sequenceNextNode"] = lambda a: (_ for _ in ()).throw(ValueError(
-        "sequenceNextNode (experimental in CH) — the chain-walk "
-        "semantics live in functions/seqmatch.py; compose "
-        "sequence_match with a lead() window for the next-node readout"
-    ))
-    # *Stable variants: identical math with a numerically-stable
-    # accumulator — Spark's builtins already use the two-pass/merge
-    # formulations, so they map to the same functions.
-    for _ch, _sp in (("corrStable", "corr"),
-                     ("covarPopStable", "covar_pop"),
-                     ("covarSampStable", "covar_samp")):
-        m[_ch] = (
-            lambda sp, ch: lambda a: (
-                lambda x, y: f"{sp}({x}, {y})"
-            )(*_two(a, ch))
-        )(_sp, _ch)
-    for _ch, _sp in (("varPopStable", "var_pop"),
-                     ("varSampStable", "var_samp"),
-                     ("stddevPopStable", "stddev_pop"),
-                     ("stddevSampStable", "stddev_samp")):
-        m[_ch] = (lambda sp, ch: lambda a: f"{sp}({_one(a, ch)})")(_sp, _ch)
-    m["anyHeavy"] = lambda a: f"mode({_one(a, 'anyHeavy')})"
     # sumKahan: compensated summation — Spark's DOUBLE sum is plain
     # IEEE accumulation (partial sums per partition actually REDUCE
     # rounding vs a serial scan); the contract (sum of doubles) is the
@@ -5240,14 +4912,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             f"'col2', regr_intercept({y}, {x}))"
         )
     )(*_two(a, "simpleLinearRegression"))
-    m["deltaSum"] = lambda a: (_ for _ in ()).throw(
-        ValueError(
-            "deltaSum depends on server-local block order; use "
-            "sum(greatest(x - lag(x) OVER (ORDER BY …), 0)) for the "
-            "deterministic window form, or deltaSumTimestamp(v, ts) "
-            "which orders by an explicit timestamp"
-        )
-    )
     # deltaSumTimestamp(v, ts): Σ max(vᵢ − vᵢ₋₁, 0) over rows sorted by
     # ts — CH's order-FREE form of deltaSum (the explicit timestamp
     # makes it deterministic on a distributed engine). One sorted fold
@@ -5506,26 +5170,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["mannWhitneyUTest"] = lambda a: _mw_test_sql([], a)
     m["kolmogorovSmirnovTest"] = lambda a: _ks_test_sql([], a)
 
-    for _bad_mov in ("groupArrayMovingSum", "groupArrayMovingAvg"):
-        m[_bad_mov] = (
-            lambda name: lambda a: (_ for _ in ()).throw(
-                ValueError(
-                    f"{name} depends on server-local insertion order "
-                    "(meaningless on a distributed engine); use "
-                    "sum/avg(x) OVER (ORDER BY … ROWS N PRECEDING) "
-                    "for the deterministic window form"
-                )
-            )
-        )(_bad_mov)
-    m["exponentialMovingAverage"] = lambda a: (_ for _ in ()).throw(
-        ValueError(
-            "exponentialMovingAverage's merge rule is implementation-"
-            "defined across blocks; use the explicit window form "
-            "sum(v * pow(2, (t - t_max)/halflife)) / "
-            "sum(pow(2, (t - t_max)/halflife)) OVER (…)"
-        )
-    )
-
     # plain uniq()/uniqHLL12(): ClickHouse's default approximate
     # distinct — the same contract as approx_count_distinct
     m["uniq"] = lambda a: f"approx_count_distinct({_tuple_or_one(a)})"
@@ -5609,94 +5253,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["sipHash64"] = lambda a: _udf_call(
         "ch_siphash64", _make_murmur_udfs, _xxh_arg(a, "sipHash64")
     )
-    # the remaining families stay gated: their reference constants are
-    # not pinned offline (CityHash 1.0.2's CH-vendored variant, CH's
-    # non-standard sipHash128, farm/metro seeds, MurmurHash2's CH use)
-    for _h in ("cityHash64", "sipHash128", "farmHash64",
-               "farmFingerprint64", "xxHash3",
-               "metroHash64", "murmurHash2_32", "murmurHash2_64",
-               "gccMurmurHash",
-               "wordShingleSimHash", "wordShingleSimHashCaseInsensitive",
-               "wordShingleSimHashUTF8",
-               "wordShingleSimHashCaseInsensitiveUTF8",
-               "wordShingleMinHash", "wordShingleMinHashCaseInsensitive",
-               "wordShingleMinHashUTF8",
-               "wordShingleMinHashCaseInsensitiveUTF8",
-               "ngramSimHash", "ngramSimHashCaseInsensitive",
-               "ngramSimHashUTF8", "ngramSimHashCaseInsensitiveUTF8",
-               "ngramMinHash", "ngramMinHashCaseInsensitive",
-               "ngramMinHashUTF8", "ngramMinHashCaseInsensitiveUTF8",
-               "ngramMinHashArg", "ngramMinHashArgCaseInsensitive",
-               "ngramMinHashArgUTF8",
-               "ngramMinHashArgCaseInsensitiveUTF8",
-               "wordShingleMinHashArg",
-               "wordShingleMinHashArgCaseInsensitive",
-               "wordShingleMinHashArgUTF8",
-               "wordShingleMinHashArgCaseInsensitiveUTF8"):
-        m[_h] = (
-            lambda name: lambda a: (_ for _ in ()).throw(
-                ValueError(
-                    f"{name} is a ClickHouse-specific hash family (values "
-                    "differ from any Spark builtin); for sharding/sampling "
-                    "keys use xxhash64(...) explicitly — same statistical "
-                    "contract, different values"
-                )
-            )
-        )(_h)
-    # ngramDistance/Search hash 4-grams into a 2^16 table, so the
-    # result depends on CRC collisions — not reproducible bit-exact
-    # from the docs; gate to the exact-set alternative
-    for _ng in ("ngramDistance", "ngramDistanceCaseInsensitive",
-                "ngramDistanceUTF8", "ngramDistanceCaseInsensitiveUTF8",
-                "ngramSearch", "ngramSearchCaseInsensitive",
-                "ngramSearchUTF8", "ngramSearchCaseInsensitiveUTF8"):
-        m[_ng] = (
-            lambda name: lambda a: (_ for _ in ()).throw(
-                ValueError(
-                    f"{name}: ClickHouse buckets 4-grams into a 2^16 "
-                    "hash table, so values depend on collision behavior "
-                    "and cannot be reproduced bit-exact; for exact "
-                    "n-gram similarity use "
-                    "operators/dedup.token_jaccard_pairs"
-                )
-            )
-        )(_ng)
-    # r9: the SGD-trained regression states join this class — their
-    # results depend on iteration order/learning schedule, not
-    # reproducible offline; operators/logreg.py is the deterministic
-    # alternative
-    for _sgd in ("stochasticLinearRegression",
-                 "stochasticLogisticRegression"):
-        m[_sgd] = (lambda name: lambda a: (_ for _ in ()).throw(
-            ValueError(
-                f"{name}: CH's SGD training state depends on row order "
-                "and learning schedule (not reproducible offline); use "
-                "operators/logreg.py (deterministic full-batch) or "
-                "simpleLinearRegression for the closed-form fit"
-            )
-        ))(_sgd)
-    for _nlp in ("stem", "lemmatize", "synonyms", "detectLanguage",
-                 "detectLanguageMixed", "detectLanguageUnknown",
-                 "detectCharset", "detectTonality",
-                 "detectProgrammingLanguage",
-                 "categoricalInformationValue"):
-        m[_nlp] = (
-            lambda name: lambda a: (_ for _ in ()).throw(
-                ValueError(
-                    f"{name}: CH backs this with bundled NLP models/"
-                    "experimental stats whose outputs are not "
-                    "reproducible offline; use operators/text.py "
-                    "(lang_id heuristics, quality signals) instead"
-                )
-            )
-        )(_nlp)
-    m["bitSlice"] = lambda a: (_ for _ in ()).throw(
-        ValueError(
-            "bitSlice's sub-byte addressing has no Spark counterpart; "
-            "use substring for byte granularity or the binary paths "
-            "(sources/rowbinary.py) for bit-packed layouts"
-        )
-    )
     m["extractAllGroupsVertical"] = lambda a: _udf_call(
         "ch_extract_groups_v", _make_extract_groups_udfs,
         *_two(a, "extractAllGroupsVertical")
@@ -5705,13 +5261,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["extractAllGroupsHorizontal"] = lambda a: _udf_call(
         "ch_extract_groups_h", _make_extract_groups_udfs,
         *_two(a, "extractAllGroupsHorizontal")
-    )
-    m["tupleHammingDistance"] = lambda a: (_ for _ in ()).throw(
-        ValueError(
-            "tupleHammingDistance needs the tuple arity, which a textual "
-            "rewrite cannot see; write the per-element comparison sum "
-            "explicitly (CAST(t1.col1 <> t2.col1 AS INT) + ...)"
-        )
     )
     # UTF8 normalization forms are spec-exact (Unicode UAX #15) via
     # the stdlib — r7: these passed through untranslated before
@@ -5739,14 +5288,9 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         "ch_java_hash_utf16le", _make_textnorm_udfs,
         _one(a, "javaHashUTF16LE"),
     )
-    # -- string distances (r7: these used to PASS THROUGH untranslated
-    # — the silent-mistranslation class; now mapped where the public
-    # definition is unambiguous, gated with pointers where CH's edge
-    # rules aren't pinned offline) ------------------------------------
-    # CH's UTF8 variants are codepoint-level — exactly Spark's builtin
-    m["editDistanceUTF8"] = lambda a: (
-        lambda x, y: f"levenshtein({x}, {y})"
-    )(*_two(a, "editDistanceUTF8"))
+    # -- string distances: mapped where the public definition is
+    # unambiguous, gated with pointers where CH's edge rules aren't
+    # pinned offline ------------------------------------------------------
     m["levenshteinDistanceUTF8"] = m["editDistanceUTF8"]
     # the plain forms are BYTE-level; identical to codepoint level for
     # ASCII, and the byte DP runs as an Arrow UDF for the general case
@@ -5771,37 +5315,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["stringJaccardIndex"] = lambda a: _udf_call(
         "ch_string_jaccard", _make_strdist_udfs,
         *_two(a, "stringJaccardIndex")
-    )
-    for _sd in ("damerauLevenshteinDistance", "byteHammingDistance"):
-        m[_sd] = (
-            lambda name: lambda a: (_ for _ in ()).throw(
-                ValueError(
-                    f"{name}: CH's exact rule is not pinned offline "
-                    "(Damerau: restricted-OSA vs full-DL transposition "
-                    "handling; byteHamming: the unequal-length tail "
-                    "convention) — a guessed edge rule would silently "
-                    "mistranslate; use editDistance/levenshtein for a "
-                    "verified metric"
-                )
-            )
-        )(_sd)
-    for _nq in ("normalizeQuery", "normalizedQueryHash",
-                "normalizeQueryKeepNames", "normalizedQueryHashKeepNames"):
-        m[_nq] = (
-            lambda name: lambda a: (_ for _ in ()).throw(
-                ValueError(
-                    f"{name}: CH's literal/alias-folding heuristics are "
-                    "implementation-defined (and the hash is CH-internal) "
-                    "— normalize query logs upstream instead"
-                )
-            )
-        )(_nq)
-    m["tupleToNameValuePairs"] = lambda a: (_ for _ in ()).throw(
-        ValueError(
-            "tupleToNameValuePairs needs the tuple's field names, which "
-            "a textual rewrite cannot see; in DataFrame code use "
-            "F.map_from_arrays over the struct's schema fields"
-        )
     )
     # halfMD5: big-endian UInt64 of MD5's first 8 bytes — MD5 is a
     # standard digest, so this one IS bit-exact: assemble from two
@@ -5868,7 +5381,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         lambda x, c: f"approx_count_distinct(CASE WHEN {c} THEN {x} END)"
     )(*_two(a, "uniqCombinedIf"))
     m["uniqExact"] = lambda a: f"count(DISTINCT {_tuple_or_one(a)})"
-    m["uniqCombinedState"] = lambda a: f"hll_sketch_agg({_one(a, 'uniqCombinedState')})"
     m["uniqCombinedStateIf"] = lambda a: (
         lambda x, c: f"hll_sketch_agg(CASE WHEN {c} THEN {x} END)"
     )(*_two(a, "uniqCombinedStateIf"))
@@ -5877,9 +5389,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["uniqTheta"] = lambda a: (
         f"CAST(round(theta_sketch_estimate(theta_sketch_agg("
         f"{_one(a, 'uniqTheta')}))) AS BIGINT)"
-    )
-    m["uniqThetaState"] = lambda a: (
-        f"theta_sketch_agg({_one(a, 'uniqThetaState')})"
     )
     m["uniqThetaStateIf"] = lambda a: (
         lambda x, c: f"theta_sketch_agg(CASE WHEN {c} THEN {x} END)"
@@ -5911,7 +5420,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["medianExact"] = lambda a: _median_exact_sql(
         f"collect_list({_one(a, 'medianExact')})"
     )
-    m["medianExactState"] = lambda a: f"collect_list({_one(a, 'medianExactState')})"
     m["medianExactMerge"] = lambda a: _median_exact_sql(
         _MERGED_LIST.format(_one(a, "medianExactMerge"))
     )
@@ -5928,15 +5436,8 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         _one(a, "groupBitmapMergeState")
     )
     m["groupBitmapMerge"] = lambda a: (
-        f"size({_MERGED_BITMAP.format(_one(a, 'groupBitmapMerge'))})"
+        f"size({_MERGED_SET.format(_one(a, 'groupBitmapMerge'))})"
     )
-    m["bitmapAnd"] = lambda a: (
-        lambda x, y: f"array_intersect({x}, {y})"
-    )(*_two(a, "bitmapAnd"))
-    m["bitmapOr"] = lambda a: (lambda x, y: f"array_union({x}, {y})")(
-        *_two(a, "bitmapOr")
-    )
-    m["bitmapCardinality"] = lambda a: f"size({_one(a, 'bitmapCardinality')})"
     m["bitmapAndCardinality"] = lambda a: (
         lambda x, y: f"size(array_intersect({x}, {y}))"
     )(*_two(a, "bitmapAndCardinality"))
@@ -5952,9 +5453,6 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
             f"array_except({y}, {x})))"
         )
     )(*_two(a, "bitmapXor"))
-    m["bitmapAndnot"] = lambda a: (
-        lambda x, y: f"array_except({x}, {y})"
-    )(*_two(a, "bitmapAndnot"))
     m["bitmapXorCardinality"] = lambda a: (
         lambda x, y: (
             f"(size(array_except({x}, {y})) + "
@@ -5964,17 +5462,9 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["bitmapAndnotCardinality"] = lambda a: (
         lambda x, y: f"size(array_except({x}, {y}))"
     )(*_two(a, "bitmapAndnotCardinality"))
-    m["bitmapContains"] = lambda a: (
-        lambda x, v: f"array_contains({x}, {v})"
-    )(*_two(a, "bitmapContains"))
-    m["bitmapHasAny"] = lambda a: (
-        lambda x, y: f"arrays_overlap({x}, {y})"
-    )(*_two(a, "bitmapHasAny"))
     m["bitmapHasAll"] = lambda a: (
         lambda x, y: f"(size(array_except({y}, {x})) = 0)"
     )(*_two(a, "bitmapHasAll"))
-    m["bitmapMin"] = lambda a: f"array_min({_one(a, 'bitmapMin')})"
-    m["bitmapMax"] = lambda a: f"array_max({_one(a, 'bitmapMax')})"
     # subBitmap(b, offset, limit): slice by POSITION in ascending order
     # (CH offset is 0-based; slice is 1-based)
     m["subBitmap"] = lambda a: (
@@ -6008,7 +5498,7 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
         )
     )(_one(a, "groupBitmapAnd"))
     m["groupBitmapOr"] = lambda a: (
-        f"size({_MERGED_BITMAP.format(_one(a, 'groupBitmapOr'))})"
+        f"size({_MERGED_SET.format(_one(a, 'groupBitmapOr'))})"
     )
     m["groupBitmapXor"] = lambda a: (
         # elements present in an ODD number of the group's bitmaps
@@ -6155,6 +5645,14 @@ def _mapping() -> dict[str, Callable[[list[str]], str]]:
     m["sumMap"] = _map_agg("sum", "sumMap")
     m["minMap"] = _map_agg("min", "minMap")
     m["maxMap"] = _map_agg("max", "maxMap")
+    # sumMap/minMap/maxMap State/Merge: the state here IS the
+    # finalized (keys, values) tuple, so State = the aggregate and
+    # Merge re-aggregates the tuple's arrays
+    for _ms in ("sumMap", "minMap", "maxMap"):
+        m[_ms + "State"] = m[_ms]
+        m[_ms + "Merge"] = (lambda base, nm: lambda a: (
+            lambda st: m[base]([f"{st}.col1", f"{st}.col2"])
+        )(_one(a, nm)))(_ms, _ms + "Merge")
 
     # -If forms: the condition filters ROWS — rows failing it
     # contribute empty key/value arrays, which the fold ignores
@@ -7564,9 +7062,7 @@ _PARAMETERIZED: dict[str, Callable[[list[str], list[str]], str]] = {
         f"approx_count_distinct({a[0]}, "
         f"{1.04 / (2.0 ** (int(p[0]) / 2)):.6f})"
         if p[0].strip().isdigit()
-        else (_ for _ in ()).throw(
-            ValueError("uniqCombined(K)(x): K must be an integer literal")
-        )
+        else _raise_gate("uniqCombined(K)(x): K must be an integer literal")
     ),
     # uniqCombined64(K)(x): same precision parameter, 64-bit hash — the
     # rsd mapping is identical
@@ -7574,9 +7070,7 @@ _PARAMETERIZED: dict[str, Callable[[list[str], list[str]], str]] = {
         f"approx_count_distinct({a[0]}, "
         f"{1.04 / (2.0 ** (int(p[0]) / 2)):.6f})"
         if p[0].strip().isdigit()
-        else (_ for _ in ()).throw(
-            ValueError("uniqCombined64(K)(x): K must be an integer literal")
-        )
+        else _raise_gate("uniqCombined64(K)(x): K must be an integer literal")
     ),
     # quantileDeterministic(p)(x, det): ClickHouse's reservoir sampler
     # with a deterministic seed — exact percentile is strictly stronger
@@ -7587,12 +7081,10 @@ _PARAMETERIZED: dict[str, Callable[[list[str], list[str]], str]] = {
     "uniqUpTo": lambda p, a: (
         f"least(count(DISTINCT {a[0]}), CAST({p[0]} AS BIGINT) + 1)"
     ),
-    "histogram": lambda p, a: (_ for _ in ()).throw(
-        ValueError(
-            "histogram(N)(x) is adaptive-binned (nondeterministic bin "
-            "edges); use the deterministic fixed-bin value_histogram "
-            "query shape (queries.value_histogram)"
-        )
+    "histogram": lambda p, a: _raise_gate(
+        "histogram(N)(x) is adaptive-binned (nondeterministic bin "
+        "edges); use the deterministic fixed-bin value_histogram "
+        "query shape (queries.value_histogram)"
     ),
     # exact-low/high variants (Python statistics.median_low/high
     # generalized): low takes the (n-1)th 0-based element when
@@ -7611,7 +7103,7 @@ _PARAMETERIZED: dict[str, Callable[[list[str], list[str]], str]] = {
         f"least(CAST(floor(({p[0]}) * count({a[0]})) AS INT) + 1, "
         f"CAST(count({a[0]}) AS INT)))"
     ),
-    # r10 sweep 4: the PLURAL low/high forms — one pick per level,
+    # the PLURAL low/high forms — one pick per level,
     # returned as an array (the quantilesExact convention)
     "quantilesExactLow": lambda p, a: (
         "array(" + ", ".join(
@@ -7678,7 +7170,7 @@ _PARAMETERIZED: dict[str, Callable[[list[str], list[str]], str]] = {
         "no Spark analog; quantileExactWeighted(p)(x, w) per level "
         "maps exactly via MetricSpec"
     ),
-    # r10 sweep 9: parameterized State/Merge forms
+    # parameterized State/Merge forms
     "topKState": lambda p, a: _raise_gate(
         "topKState: the count-weighted heavy-hitter sketch state is "
         "not SQL-mergeable here — MetricSpec(kind='topk') via "
@@ -7807,7 +7299,7 @@ _PARAMETERIZED: dict[str, Callable[[list[str], list[str]], str]] = {
     # two-phase path (topk_heavy_hitters).
     "topK": lambda p, a: _topk_sql(a[0], p[0]),
     "topKWeighted": lambda p, a: _topk_sql(a[0], p[0], weight=a[1]),
-    # r10 sweep 2: the approx_top_* spellings are CH aliases of
+    # the approx_top_* spellings are CH aliases of
     # topK/topKWeighted
     "approx_top_k": lambda p, a: _topk_sql(a[0], p[0]),
     "approx_top_count": lambda p, a: _topk_sql(a[0], p[0]),
@@ -7834,12 +7326,10 @@ _PARAMETERIZED: dict[str, Callable[[list[str], list[str]], str]] = {
         "rank rule has no Spark analog — quantileExactWeighted(p)"
         "(x, w) maps exactly via MetricSpec"
     ),
-    "quantileExactWeighted": lambda p, a: (_ for _ in ()).throw(
-        ValueError(
-            "quantileExactWeighted(p)(x, w) maps to MetricSpec("
-            "kind='quantile', level=p, weight=w) via metrics.build_states "
-            "(see quantile_weighted_state)"
-        )
+    "quantileExactWeighted": lambda p, a: _raise_gate(
+        "quantileExactWeighted(p)(x, w) maps to MetricSpec("
+        "kind='quantile', level=p, weight=w) via metrics.build_states "
+        "(see quantile_weighted_state)"
     ),
     # windowFunnel(w)(ts, cond1..condN): ClickHouse's exact base-mode
     # algorithm (AggregateFunctionWindowFunnel semantics, public docs:
@@ -7866,27 +7356,21 @@ _PARAMETERIZED: dict[str, Callable[[list[str], list[str]], str]] = {
     "sequenceCount": lambda p, a: _sequence_count_sql(p, a),
     # order-dependent moving aggregates: same gates as the plain forms
     # (insertion order is meaningless on a distributed engine)
-    "groupArrayMovingSum": lambda p, a: (_ for _ in ()).throw(
-        ValueError(
-            "groupArrayMovingSum depends on server-local insertion "
-            "order; use sum(x) OVER (ORDER BY … ROWS N PRECEDING) for "
-            "the deterministic window form"
-        )
+    "groupArrayMovingSum": lambda p, a: _raise_gate(
+        "groupArrayMovingSum depends on server-local insertion "
+        "order; use sum(x) OVER (ORDER BY … ROWS N PRECEDING) for "
+        "the deterministic window form"
     ),
-    "groupArrayMovingAvg": lambda p, a: (_ for _ in ()).throw(
-        ValueError(
-            "groupArrayMovingAvg depends on server-local insertion "
-            "order; use avg(x) OVER (ORDER BY … ROWS N PRECEDING) for "
-            "the deterministic window form"
-        )
+    "groupArrayMovingAvg": lambda p, a: _raise_gate(
+        "groupArrayMovingAvg depends on server-local insertion "
+        "order; use avg(x) OVER (ORDER BY … ROWS N PRECEDING) for "
+        "the deterministic window form"
     ),
-    "exponentialMovingAverage": lambda p, a: (_ for _ in ()).throw(
-        ValueError(
-            "exponentialMovingAverage's merge rule is implementation-"
-            "defined across blocks; use the explicit window form "
-            "sum(v * pow(2, (t - t_max)/halflife)) / "
-            "sum(pow(2, (t - t_max)/halflife)) OVER (…)"
-        )
+    "exponentialMovingAverage": lambda p, a: _raise_gate(
+        "exponentialMovingAverage's merge rule is implementation-"
+        "defined across blocks; use the explicit window form "
+        "sum(v * pow(2, (t - t_max)/halflife)) / "
+        "sum(pow(2, (t - t_max)/halflife)) OVER (…)"
     ),
     "largestTriangleThreeBuckets": lambda p, a: _lttb_udf_sql(p, a),
     "mannWhitneyUTest": lambda p, a: _mw_test_sql(p, a),

@@ -268,9 +268,10 @@ def _dd_sql(expr: str, alpha: float = 0.01) -> tuple[str, str]:
     from clickhouse_learning_spark.functions.metrics import DD_ZERO_BUCKET, dd_gamma
 
     g = dd_gamma(alpha)
+    # a NULL value gets no bucket, as in metrics.dd_bucket
     bucket = (
         f"CASE WHEN {expr} > 0 THEN CAST(ceil(ln(CAST({expr} AS DOUBLE)) / {_m.log(g)!r}) AS BIGINT) "
-        f"ELSE {DD_ZERO_BUCKET} END"
+        f"WHEN {expr} IS NOT NULL THEN {DD_ZERO_BUCKET} END"
     )
     rep = (
         f"round(CASE WHEN {{b}} = {DD_ZERO_BUCKET} THEN 0.0 "

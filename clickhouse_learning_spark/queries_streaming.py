@@ -433,15 +433,18 @@ def _slq_oracle() -> str:
 
     g = dd_gamma(0.01)
     lng = math.log(g)
+    # a NULL value gets no bucket and no count, as in metrics.dd_bucket
     return f"""
     WITH b AS (
       SELECT event_type AS k,
              CASE WHEN value > 0
                   THEN CAST(ceil(ln(value) / {lng!r}) AS BIGINT)
-                  ELSE CAST({DD_ZERO_BUCKET} AS BIGINT) END AS bucket
+                  WHEN value IS NOT NULL
+                  THEN CAST({DD_ZERO_BUCKET} AS BIGINT) END AS bucket
       FROM events
     ), h AS (
-      SELECT k, bucket, count(*) AS cnt FROM b GROUP BY 1, 2
+      SELECT k, bucket, count(*) AS cnt FROM b
+      WHERE bucket IS NOT NULL GROUP BY 1, 2
     ), c AS (
       SELECT k, bucket, cnt,
              sum(cnt) OVER (PARTITION BY k ORDER BY bucket) AS cum,

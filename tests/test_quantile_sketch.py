@@ -107,6 +107,41 @@ def test_null_inputs_add_no_entry(spark):
             assert got[0]["q"] == want, (cond, got)
 
 
+def test_dd_oracles_skip_null_values_as_the_engine_does(spark, tmp_path):
+    """On events whose ``value`` is NULL in every third row and in every
+    'error' row, quantile_sketch_dd and stream_latency_quantiles answer
+    as their DuckDB oracles do: a NULL value gets no bucket and no count,
+    and an event type with only NULL values has no quantile."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from clickhouse_learning_spark.queries import ORACLES, quantile_sketch_dd
+    from clickhouse_learning_spark.queries_streaming import (
+        stream_latency_quantiles,
+    )
+    from tools.check_oracle import norm_rows
+
+    from .conftest import SF_SMOKE
+
+    ev = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    null = pa.array([i % 3 == 0 or t == "error" for i, t in
+                     enumerate(ev.column("event_type").to_pylist())])
+    value = pc.if_else(null, pa.scalar(None, pa.float64()), ev["value"])
+    ev = ev.set_column(ev.schema.get_field_index("value"), "value", value)
+    pq.write_table(ev, str(tmp_path / "events.parquet"))
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    for name, run in (("quantile_sketch_dd", quantile_sketch_dd),
+                      ("stream_latency_quantiles", stream_latency_quantiles)):
+        df = run(spark, str(tmp_path))
+        got = norm_rows(df.columns, [tuple(r) for r in df.collect()])
+        rel = con.sql(ORACLES[name])
+        assert got == norm_rows(list(rel.columns), rel.fetchall()), name
+
+
 def test_mv_lifecycle_compaction_invariance(spark, tmp_path):
     mv = MaterializedView(
         name="qs",

@@ -62,6 +62,20 @@ def test_state_kernels_use_no_default_comparator_array_sort():
     assert not any(found.values()), found
 
 
+def test_dialect_state_sql_sorts_with_sort_array():
+    """The SQL ``translate`` writes over medianExact and bitmap states
+    follows the same rule: it sorts with ``sort_array``, and a bitmap
+    cardinality does not sort at all."""
+    from clickhouse_learning_spark.functions import dialect
+
+    for sql in (dialect._MERGED_BITMAP, dialect._median_exact_sql("s")):
+        assert "sort_array(" in sql and "array_sort(" not in sql, sql
+    assert "sort" not in dialect._MERGED_SET
+    for name in ("groupBitmapMerge", "groupBitmapOr"):
+        assert dialect._MAPPING[name](["b"]) == (
+            "size(array_distinct(flatten(collect_list(b))))")
+
+
 def _sort_calls(plan: str) -> list[str]:
     """The argument text of every ``array_sort(`` call in ``plan``."""
     out, i = [], plan.find("array_sort(")
